@@ -16,11 +16,17 @@ positions explode to ``(file, word_idx, bit mask)`` and one
 state, no UDF, cost one shuffle keyed by (file, word). The sidecar
 stores ``file, col, word_idx, bits`` rows (m/64 longs per file·col).
 
-Probing hashes the VALUES through the same Spark expressions (a
-values-sized local job — the probe set is driver-small by
-definition), then one aggregation over the sidecar keeps files where
-EVERY bit of at least one probed value is present. The advisory
-contract matches the zone map's: files not covered by the index are
+Probing hashes the VALUES through the same Spark expressions and
+keeps files where EVERY bit of at least one probed value is present.
+A sidecar within ``spark.sql.autoBroadcastJoinThreshold`` on a
+memo-eligible table is held in the driver as ``{file: {word_idx:
+bits}}`` plus its ``(m, k)`` (zonemap.sidecar_memo: dropped on every
+commit-token change, keyed on the sidecar's file listing so a
+rewrite never serves stale words), and the bits are tested there;
+the probe's positions come from a job-free local relation, so a warm
+probe runs no Spark job. A larger sidecar (or a remote / token-less
+table) keeps one aggregation over the sidecar against the broadcast
+probe. The advisory contract matches the zone map's: files not covered by the index are
 always read, the residual filter always applies, so the result is
 EXACTLY the full-scan filter regardless of index state; only I/O
 differs. False positives cost a read, never correctness.
@@ -28,13 +34,18 @@ differs. False positives cost a read, never correctness.
 
 from __future__ import annotations
 
+import logging
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from rds_to_datalake_project_spark.operators.zonemap import (
     _norm,
     _resolve_table,
+    sidecar_memo,
 )
+
+_LOG = logging.getLogger(__name__)
 
 _FILE = "__file"
 # Fixed sidecar layout (what _filter_rows emits): supplying it to the
@@ -260,6 +271,46 @@ def _probe_relation(spark, order: list, dtype, m_bits: int, k: int):
     return out
 
 
+def _probe_positions(spark, order: list, dtype, m_bits: int, k: int) -> list:
+    """Each value's k bit positions, evaluated by the build's own
+    expression (_positions) over one literal array per chunk. The
+    projection sits on an inline ``VALUES`` row, so the optimizer folds
+    it into a local relation and the collect runs no Spark job."""
+    out: list = []
+    step = 4096  # bounded literal arrays, as in _probe_relation
+    for i0 in range(0, len(order), step):
+        vals = F.array(*[F.lit(v).cast(dtype) for v in order[i0 : i0 + step]])
+        row = (
+            spark.sql("VALUES (0)")
+            .select(F.transform(vals, lambda v: _positions(v, m_bits, k)))
+            .collect()
+        )
+        out.extend(row[0][0])
+    return out
+
+
+def _warn_fallback(idx: str, what: str, exc: Exception) -> None:
+    msg = str(exc)
+    _LOG.warning(
+        "bloom sidecar %s %s (%s: %s) — lookups fall back to full scans",
+        idx,
+        what,
+        type(exc).__name__,
+        msg.splitlines()[0] if msg else "",
+    )
+
+
+def _load_words(spark: SparkSession, idx: str):
+    """``((m, k), {col: {normalized path: {word_idx: bits}}})`` from
+    one collect of the sidecar (the driver memo's contents)."""
+    mk = _stored_mk(spark, idx)
+    words: dict = {}
+    for f, c, w, b in spark.read.schema(_SIDECAR_SCHEMA).parquet(idx).collect():
+        per_file = words.setdefault(c, {}).setdefault(_norm(f), {})
+        per_file[w] = per_file.get(w, 0) | b
+    return mk, words
+
+
 def bloom_value_survivors(
     spark: SparkSession,
     table_path: str,
@@ -268,18 +319,43 @@ def bloom_value_survivors(
     index_dir: str | None = None,
     _resolved=None,
 ) -> tuple[set | None, dict]:
-    """Per-VALUE file survivorship from ONE sidecar aggregation:
-    ``(covered, survives)`` where ``covered`` is the set of indexed
-    (normalized) file paths — files outside it must always be read —
-    and ``survives[value]`` is the subset whose filter MAY contain
-    that value. ``covered is None`` means no readable index (callers
-    fall back to a full scan). Batched lookups
-    (KeyedTable.lookup_many) intersect these per key with the zone
-    intervals instead of re-running the aggregation per key."""
+    """Per-VALUE file survivorship: ``(covered, survives)`` where
+    ``covered`` is the set of indexed (normalized) file paths — files
+    outside it must always be read — and ``survives[value]`` is the
+    subset whose filter MAY contain that value. ``covered is None``
+    means no readable index (callers fall back to a full scan).
+    Batched lookups (KeyedTable.lookup_many) intersect these per key
+    with the zone intervals.
+
+    Two routes, same answer. A small sidecar of a memo-eligible table
+    is held in the driver (zonemap.sidecar_memo): the probe's bit
+    positions come from a job-free local relation (_probe_positions)
+    and the words are tested driver-side — a file survives when all k
+    bits are set. Otherwise one in-Spark aggregation meets the sidecar
+    with the broadcast probe."""
     idx = index_dir or _index_dir(table_path)
     full, _live = _resolved or _resolve_table(spark, table_path)
-    m_bits, k = _stored_mk(spark, idx)
     order = list(dict.fromkeys(values))
+    dtype = full.schema[col].dataType
+    memo = sidecar_memo(spark, table_path, idx, lambda: _load_words(spark, idx))
+    if memo is not None:
+        (m_bits, k), words = memo
+        files = words.get(col, {})
+        try:
+            positions = _probe_positions(spark, order, dtype, m_bits, k)
+        except Exception as exc:
+            _warn_fallback(idx, "probe failed", exc)
+            return None, {}
+        survives = {
+            v: {
+                p
+                for p, w in files.items()
+                if all((w.get(pos // 64, 0) >> (pos % 64)) & 1 for pos in ps)
+            }
+            for v, ps in zip(order, positions)
+        }
+        return set(files), survives
+    m_bits, k = _stored_mk(spark, idx)
     try:
         # resolves the sidecar path BEFORE any probe work: a table
         # with no bloom index (the common un-indexed case) must cost
@@ -293,22 +369,13 @@ def bloom_value_survivors(
         # visible (r12 ADVICE).
         msg = str(exc)
         if "PATH_NOT_FOUND" not in msg and "Path does not exist" not in msg:
-            import logging
-
-            logging.getLogger(__name__).warning(
-                "bloom sidecar %s unreadable (%s: %s) — lookups fall "
-                "back to full scans until the index is rebuilt",
-                idx,
-                type(exc).__name__,
-                msg.splitlines()[0] if msg else "",
-            )
+            _warn_fallback(idx, "unreadable", exc)
         return None, {}
     # In-plan probe (see _probe_relation): the values hash through the
     # build's own expressions and the sidecar meets the broadcast
     # probe in ONE job, independent of probe-set size — also the
     # 100-TB shape: a sidecar of millions of (file, word) rows meets
     # any probe set in one shuffle-free pass.
-    dtype = full.schema[col].dataType
     probe = _probe_relation(spark, order, dtype, m_bits, k)
     try:
         rows = (
@@ -328,8 +395,9 @@ def bloom_value_survivors(
             )
             .collect()
         )
-    except Exception:
-        return None, {}  # no readable index → callers full-scan
+    except Exception as exc:
+        _warn_fallback(idx, "probe failed", exc)
+        return None, {}
     covered = {_norm(r[0]) for r in rows}
     survives: dict = {v: set() for v in order}
     for r in rows:

@@ -336,13 +336,17 @@ def _zone_pruned_rows(
         _record_prune,
         _resolve_table,
         zone_intervals,
+        zone_overlaps,
     )
 
     # specs: table column to prune on -> (touched column to read, fn
-    # mapping a touched value to a closed (lo, hi) source interval).
-    # Physical group columns prune point-wise; derived date_trunc keys
-    # prune through their source column's bucket interval.
-    specs: dict = {c: (c, lambda v: (v, v)) for c in cols}
+    # mapping a touched value to a closed (lo, hi) source interval, or
+    # None when the value cannot prune). Physical group columns prune
+    # point-wise; derived date_trunc keys prune through their source
+    # column's bucket interval.
+    specs: dict = {
+        c: (c, lambda v: None if v is None else (v, v)) for c in cols
+    }
     for b, (src, fn) in (bucket_cols or {}).items():
         specs.setdefault(src, (b, fn))
     if not specs:
@@ -382,11 +386,9 @@ def _zone_pruned_rows(
                 z = zonemaps[c]
                 if p not in z:
                     continue  # uncovered file: advisory, must read
-                zlo, zhi = z[p]
-                if zlo is None or zhi is None:
-                    keep = False  # all-NULL zone; NULL groups handled above
-                    break
-                if not any(lo <= zhi and hi >= zlo for lo, hi in ivals):
+                # an all-NULL zone overlaps nothing; NULL groups
+                # disabled this column's pruning above
+                if not any(zone_overlaps(*z[p], lo, hi) for lo, hi in ivals):
                     keep = False
                     break
             if keep:

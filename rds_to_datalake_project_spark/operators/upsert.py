@@ -1707,15 +1707,21 @@ class KeyedTable:
     def lookup(self, key_value) -> DataFrame:
         """Point lookup by the leading record-key column.
 
-        File pruning composes BOTH indexes when present: the zone map
-        cuts by key RANGE (O(1) files on a key-clustered layout), and
-        a bloom sidecar (operators/bloomfilter — attach via
-        attach_bloom_maintenance) cuts by MEMBERSHIP, which is what
-        survives on unclustered layouts where every file's key range
-        spans the table. The candidate set is the intersection; both
+        On a table with a bloom sidecar (operators/bloomfilter — attach
+        via attach_bloom_maintenance) this is the one-key case of
+        :meth:`lookup_many`: the candidate files are the zone map's
+        RANGE cut (O(1) files on a key-clustered layout) intersected
+        with the bloom's MEMBERSHIP cut, which is what survives on
+        unclustered layouts where every file's key range spans the
+        table. Both sidecars are held in a driver memo keyed on the
+        commit token and on each sidecar's file listing
+        (zonemap.sidecar_memo), so a warm lookup runs one Spark job,
+        the data read: the probe's bit positions fold into a local
+        relation evaluated on the driver. A table with no bloom
+        sidecar takes the zone-pruned :meth:`read_where` route. Both
         indexes are advisory, so the result is exactly the full-scan
-        filter. Composite keys: filter the result on the remaining
-        key columns."""
+        filter. Composite keys: filter the result on the remaining key
+        columns."""
         key_col = self.spec.record_key[0]
         if self.spec.hash_buckets and len(self.spec.record_key) == 1:
             # Bucket layout IS the index: the key names its dir.
@@ -1725,35 +1731,13 @@ class KeyedTable:
         from rds_to_datalake_project_spark.operators.bloomfilter import (
             _index_dir as _bloom_dir,
         )
-        from rds_to_datalake_project_spark.operators.bloomfilter import (
-            bloom_prune_files,
-        )
-        from rds_to_datalake_project_spark.operators.zonemap import (
-            _resolve_table,
-            prune_files,
-        )
 
         fs, bloom_p = self._fs(_bloom_dir(self.path))
         if not fs.exists(bloom_p):
             return self.read_where({key_col: (key_value, key_value)})
-        resolved = _resolve_table(self.spark, self.path)
-        zone_files, _ = prune_files(
-            self.spark, self.path, {key_col: (key_value, key_value)},
-            _resolved=resolved,
+        return self._indexed_read(
+            [key_value], F.col(key_col) == F.lit(key_value)
         )
-        bloom_files, _ = bloom_prune_files(
-            self.spark, self.path, key_col, [key_value], _resolved=resolved
-        )
-        files = sorted(set(zone_files) & set(bloom_files))
-        residual = F.col(key_col) == F.lit(key_value)
-        full, _live = resolved
-        if not files:
-            return full.filter(residual).limit(0)
-        return self._mask_dv(
-            self.spark.read.option("basePath", self.path)
-            .schema(full.schema)
-            .parquet(*files)
-        ).filter(residual)
 
     def _bucket_pruned_read(self, key_values: list) -> DataFrame | None:
         """Rows of the buckets owning ``key_values`` on a hash-bucketed
@@ -1808,38 +1792,39 @@ class KeyedTable:
 
     def lookup_many(self, key_values: list) -> DataFrame:
         """Batched point lookups by the leading record-key column —
-        the multi-get form of :meth:`lookup`. One zone-sidecar read,
-        one bloom-sidecar aggregation, and ONE candidate-file read
-        serve the whole key set; per-key pruning is evaluated
-        driver-side against the collected intervals/survivor sets, so
-        the candidate files are ``∪_k (zone(k) ∩ bloom(k))`` — as
-        tight as k separate lookups at the job cost of one (k
-        sequential lookups pay ~4 Spark jobs each; at 51 keys that is
-        a 40s-vs-2s difference at sf0.1, see bench indexed_point_
-        lookup). Advisory like every index path: uncovered files are
-        always read and the IN residual always applies, so the result
-        is exactly the full-scan filter."""
+        the multi-get form of :meth:`lookup`. ONE candidate-file read
+        serves the whole key set; per-key pruning is evaluated
+        driver-side against the zone intervals and bloom survivor sets
+        (both from the driver memo when warm — see :meth:`lookup`), so
+        the candidate files are ``∪_k (zone(k) ∩ bloom(k))``: as tight
+        as k separate lookups at the job cost of one. Advisory like
+        every index path: uncovered files are always read and the IN
+        residual always applies, so the result is exactly the full-scan
+        filter."""
         key_col = self.spec.record_key[0]
-        from rds_to_datalake_project_spark.operators import (
-            bloomfilter as _bf,
-        )
-        from rds_to_datalake_project_spark.operators import zonemap as _zm
-        from rds_to_datalake_project_spark.operators.zonemap import (
-            _resolve_table,
-            zone_intervals,
-        )
-
         key_values = list(key_values)
         if key_values and self.spec.hash_buckets and len(self.spec.record_key) == 1:
             out = self._bucket_pruned_read(key_values)
             if out is not None:
                 return out.filter(F.col(key_col).isin(key_values))
-        resolved = _resolve_table(self.spark, self.path)
-        full, live = resolved
-        residual = F.col(key_col).isin(key_values)
+        return self._indexed_read(key_values, F.col(key_col).isin(key_values))
+
+    def _indexed_read(self, key_values: list, residual) -> DataFrame:
+        """Rows matching ``residual`` from the files that may hold one
+        of ``key_values`` (leading record-key column): per key, the
+        live files whose zone overlaps it (zonemap.zone_overlaps) and
+        whose bloom filter may contain it. Records one zone verdict
+        and one bloom verdict per key in the LAST_PRUNE counters."""
+        from rds_to_datalake_project_spark.operators import (
+            bloomfilter as _bf,
+        )
+        from rds_to_datalake_project_spark.operators import zonemap as _zm
+
+        key_col = self.spec.record_key[0]
+        full, live = resolved = _zm._resolve_table(self.spark, self.path)
         if not key_values:
             return full.filter(residual).limit(0)
-        zones = zone_intervals(self.spark, self.path, key_col)
+        zones = _zm.zone_intervals(self.spark, self.path, key_col)
         covered, survives = _bf.bloom_value_survivors(
             self.spark, self.path, key_col, key_values, _resolved=resolved
         )
@@ -1850,11 +1835,7 @@ class KeyedTable:
                 for p, orig in live.items()
                 if zones is None
                 or p not in zones
-                or (
-                    zones[p][0] is not None
-                    and zones[p][1] is not None
-                    and zones[p][0] <= k <= zones[p][1]
-                )
+                or _zm.zone_overlaps(*zones[p], k, k)
             ]
             cand = [
                 orig

@@ -25,9 +25,12 @@ Correctness stance — the index is ADVISORY:
 - Pruning drops a file only when the predicate interval provably
   misses [min, max]. An all-null zone (min/max NULL) is droppable for
   range predicates: a comparison with NULL is never true.
-- Bounds are evaluated by Spark expressions over the stats frame (not
-  Python comparisons), so type coercion matches the main scan's
-  semantics exactly.
+- Range reads evaluate bounds by Spark expressions over the stats
+  frame, so type coercion matches the main scan's semantics exactly.
+  Point probes planned on the driver (lookup, lookup_many, matview
+  recompute scans) use zone_overlaps, which follows Spark's ordering
+  (NaN largest) and keeps a file whenever Python and Spark could
+  disagree (mismatched types, a comparison that raises).
 
 The build is one column-pruned distributed aggregation (only the
 indexed columns are read) grouped by ``input_file_name()`` — no data
@@ -38,6 +41,9 @@ file, the same driver-side footprint as Delta's log replay.
 from __future__ import annotations
 
 import json
+import logging
+import math
+import os
 from urllib.parse import urlparse
 
 from pyspark.sql import DataFrame, SparkSession
@@ -163,6 +169,103 @@ def _resolve_table(spark: SparkSession, table_path: str):
     return out
 
 
+def sidecar_memo(spark: SparkSession, table_path: str, idx: str, load):
+    """Driver-held copy of a small sidecar's collected contents:
+    ``load()``'s result, reused across probes until the sidecar
+    changes, or None when it cannot be memoized (the caller then runs
+    its in-Spark path).
+
+    The memo lives in the table's ``resolve_cache_entry`` slot, so it
+    has the plan cache's eligibility (local, token-bearing tables) and
+    is dropped on every commit-token change. Inside the slot it is
+    keyed on the sidecar directory's listing — name, length and mtime
+    of every non-hidden file in it (part files and markers such as the
+    bloom's ``_PARAMS``): maintenance hooks rewrite a sidecar AFTER the
+    token bump, and every ``mode("overwrite")`` writes fresh part-file
+    names, so a rewritten sidecar never serves from a stale entry.
+    Only a sidecar whose on-disk size is within
+    ``spark.sql.autoBroadcastJoinThreshold`` — Spark's own bound on
+    what is small enough to collect and ship — is memoized; larger
+    ones stay on the in-Spark path. A failing load is logged and
+    memoized as None for that listing (one warning, not one per
+    probe)."""
+    from rds_to_datalake_project_spark.operators.upsert import (
+        resolve_cache_entry,
+    )
+
+    if not fsio.is_local(idx):
+        return None
+    ent = resolve_cache_entry(spark, table_path)
+    if ent is None:
+        return None
+    try:
+        listing = tuple(
+            sorted(
+                (s.getPath().getName(), s.getLen(), s.getModificationTime())
+                for s in fsio.native_fs().listStatus(idx)
+                if not s.getPath().getName().startswith(".")
+            )
+        )
+    except OSError:
+        return None  # no sidecar: the caller's own path handles it
+    limit = spark._jsparkSession.sessionState().conf().autoBroadcastJoinThreshold()
+    if sum(size for _name, size, _mtime in listing) > limit:
+        return None
+    slot = ("sidecar", os.path.normpath(idx))
+    hit = ent["frames"].get(slot)
+    if hit is not None and hit[0] == listing:
+        return hit[1]
+    try:
+        value = load()
+    except Exception as exc:
+        msg = str(exc)
+        logging.getLogger(__name__).warning(
+            "sidecar %s could not be loaded into the driver memo (%s: %s)"
+            " — probes use the in-Spark path until it is rewritten",
+            idx,
+            type(exc).__name__,
+            msg.splitlines()[0] if msg else "",
+        )
+        value = None
+    ent["frames"][slot] = (listing, value)
+    return value
+
+
+def _spark_order(v):
+    """Sort key following Spark's ordering of doubles: NaN is larger
+    than every other value (and equal to itself)."""
+    if isinstance(v, float) and math.isnan(v):
+        return (1, 0.0)
+    return (0, v)
+
+
+def zone_overlaps(zlo, zhi, lo, hi) -> bool:
+    """Driver-side zone test: False only when the zone ``[zlo, zhi]``
+    provably misses ``[lo, hi]`` (either bound None = unbounded) in
+    Spark's ordering. An all-NULL zone (``zlo``/``zhi`` None) misses
+    every bound, as in _zone_intersects. NaN sorts above every double,
+    so a zone whose max is NaN still holds 5.0. A comparison between
+    different Python types — where Spark would coerce and Python would
+    compare exactly, or raise — keeps the file: the residual filter
+    decides."""
+    if zlo is None or zhi is None:
+        return False
+    try:
+        if lo is not None:
+            if type(lo) is not type(zhi):
+                return True
+            if _spark_order(zhi) < _spark_order(lo):
+                return False
+        if hi is not None:
+            if type(hi) is not type(zlo):
+                return True
+            if _spark_order(hi) < _spark_order(zlo):
+                return False
+    except (TypeError, ArithmeticError):  # unorderable: let Spark decide
+        return True
+    return True
+
+
 def _read_small(spark: SparkSession, path: str) -> str | None:
     """Tiny marker-file read — fsio routes local paths to native I/O
     and real schemes (hdfs://, s3a://) through Hadoop."""
@@ -272,19 +375,30 @@ def zone_intervals(
     (KeyedTable.lookup_many) evaluate many point predicates against
     it driver-side instead of re-aggregating the sidecar per key.
     (None, None) zones mean the file holds only NULLs in ``col`` —
-    skippable for equality/range probes, same as _zone_intersects."""
+    skippable for equality/range probes, same as _zone_intersects.
+    Test a zone with zone_overlaps. On a memo-eligible table the
+    collected zones of every indexed column are kept in the driver
+    (see sidecar_memo), so repeat probes read no sidecar at all."""
     idx = index_dir or _index_dir(table_path)
-    try:
-        stats = spark.read.parquet(idx)
-    except Exception:
-        return None
-    if f"min_{col}" not in stats.columns or f"max_{col}" not in stats.columns:
-        return None
+    zones = sidecar_memo(spark, table_path, idx, lambda: _load_zones(spark, idx))
+    if zones is None:
+        try:
+            zones = _load_zones(spark, idx)
+        except Exception:
+            return None  # no readable index
+    return zones.get(col)
+
+
+def _load_zones(spark: SparkSession, idx: str) -> dict:
+    """``{col: {normalized path: (min, max)}}`` for every indexed
+    column, from one collect of the sidecar."""
+    stats = spark.read.parquet(idx)
+    names = set(stats.columns)
+    cols = [c[4:] for c in names if c.startswith("min_") and f"max_{c[4:]}" in names]
+    rows = stats.collect() if cols else []
     return {
-        _norm(r[0]): (r[1], r[2])
-        for r in stats.select(
-            F.col(_FILE), F.col(f"min_{col}"), F.col(f"max_{col}")
-        ).collect()
+        c: {_norm(r[_FILE]): (r[f"min_{c}"], r[f"max_{c}"]) for r in rows}
+        for c in cols
     }
 
 

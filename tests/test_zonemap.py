@@ -8,6 +8,8 @@ files — the read's inputFiles set shrinks.
 
 from __future__ import annotations
 
+from contextlib import contextmanager
+
 import pytest
 from pyspark.sql import Row, functions as F
 
@@ -751,3 +753,208 @@ def test_bloom_probe_empty_and_absent_values(spark, sf_dir, tmp_path):
     )
     assert len(covered2) == 4
     assert len(survives2[present]) >= 1  # no false negatives, ever
+
+
+# -- driver-held sidecar memo (zonemap.sidecar_memo) -------------------------
+
+
+def _indexed_table(spark, path, n=400, **kw):
+    """A committed (token-bearing) unpartitioned table whose commits
+    maintain a zone map and a bloom index on ``id``; string ids hash
+    across files, so every zone spans the key range and the bloom does
+    the pruning."""
+    from rds_to_datalake_project_spark.operators.bloomfilter import (
+        attach_bloom_maintenance,
+    )
+    from rds_to_datalake_project_spark.operators.upsert import KeyedTable
+    from rds_to_datalake_project_spark.schema import TableSpec
+
+    spec = TableSpec("memo", record_key=("id",), precombine_key="update_at",
+                     partition_granularity=None)
+    t = KeyedTable(spark, str(path), spec, zonemap_columns=["id"], **kw)
+    attach_bloom_maintenance(t, ["id"])
+    with _uncoalesced(spark):
+        t.initial_load(_kv_rows(spark, range(n), "v0"))
+    assert len(t.read().inputFiles()) > 1
+    return t
+
+
+@contextmanager
+def _uncoalesced(spark):
+    """AQE coalesces a test-sized shuffle into one file; keep the
+    shuffle partitions so the table has several files to prune."""
+    key = "spark.sql.adaptive.coalescePartitions.enabled"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "false")
+    try:
+        yield
+    finally:
+        spark.conf.set(key, old)
+
+
+def _jobs(spark, fn) -> int:
+    """Spark jobs ``fn`` runs, counted through a job group."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"budget-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "job budget")
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _rows(df):
+    return sorted((r.id, r.val) for r in df.collect())
+
+
+def test_zone_overlaps_follows_spark_ordering():
+    """NaN sorts above every double; mismatched types and comparisons
+    that raise keep the file; an all-NULL zone overlaps nothing."""
+    import datetime as dt
+    from decimal import Decimal
+
+    from rds_to_datalake_project_spark.operators.zonemap import zone_overlaps
+
+    nan = float("nan")
+    assert zone_overlaps(1.0, nan, 5.0, 5.0)
+    assert zone_overlaps(1.0, nan, nan, nan)
+    assert not zone_overlaps(10.0, 20.0, nan, nan)
+    assert not zone_overlaps(10.0, 20.0, 5.0, 5.0)
+    assert zone_overlaps(10.0, 20.0, None, 10.0)
+    assert not zone_overlaps(None, None, 5.0, 5.0)
+    # Spark would coerce these before comparing: keep the file
+    assert zone_overlaps(Decimal("0.1"), Decimal("0.1"), 0.1, 0.1)
+    assert zone_overlaps(2**53 + 1, 2**53 + 1, float(2**53), float(2**53))
+    naive = dt.datetime(2024, 1, 1)
+    aware = dt.datetime(2020, 1, 1, tzinfo=dt.timezone.utc)
+    assert zone_overlaps(naive, naive, aware, aware)
+    assert not zone_overlaps("k5", "k7", "k8", "k9")
+
+
+def test_nan_zone_keeps_file_on_driver_side_tests(spark, tmp_path):
+    """Spark's max over {1.0, 5.0, NaN} is NaN. The driver-side zone
+    test must keep that file for 5.0 and for NaN, as the plain filter
+    does."""
+    from rds_to_datalake_project_spark.operators.bloomfilter import (
+        build_bloom_index,
+    )
+    from rds_to_datalake_project_spark.operators.matview import (
+        _zone_pruned_rows,
+    )
+    from rds_to_datalake_project_spark.operators.upsert import KeyedTable
+    from rds_to_datalake_project_spark.schema import TableSpec
+
+    path = str(tmp_path / "nan")
+    for ids in ([1.0, 5.0, float("nan")], [10.0, 20.0]):
+        spark.createDataFrame(
+            [Row(id=i, update_at="2024-01-01", val=f"v{i}") for i in ids],
+            "id double, update_at string, val string",
+        ).coalesce(1).write.mode("append").parquet(path)
+    build_zonemap(spark, path, ["id"])
+    build_bloom_index(spark, path, ["id"])
+    spec = TableSpec("nan", record_key=("id",), precombine_key="update_at",
+                     partition_granularity=None)
+    t = KeyedTable(spark, path, spec, zonemap_columns=["id"])
+    for k in (5.0, float("nan")):
+        want = spark.read.parquet(path).filter(F.col("id") == F.lit(k)).count()
+        assert want == 1
+        assert t.lookup_many([k]).count() == want
+        assert t.lookup(k).count() == want
+        # the matview recompute scan prunes through the same test
+        touched = spark.createDataFrame([(k,)], "id double")
+        scan = _zone_pruned_rows(t, touched, ["id"])
+        assert scan.filter(F.col("id") == F.lit(k)).count() == want
+
+
+def test_warm_lookups_run_one_job(spark, tmp_path):
+    """Job budget: with both sidecars memoized, a lookup runs the data
+    read and nothing else (the probe's bit positions fold into a local
+    relation), and so does a 5-key lookup_many. The first lookup after
+    a sidecar rewrite reloads the memos: today's cost, no more."""
+    from rds_to_datalake_project_spark.operators import bloomfilter
+    from rds_to_datalake_project_spark.operators import zonemap as zm
+
+    t = _indexed_table(spark, tmp_path / "t")
+    assert _jobs(spark, lambda: t.lookup("k7").collect()) <= 5
+    assert _jobs(spark, lambda: t.lookup("k11").collect()) <= 1
+    keys = ["k1", "k42", "k99", "absent-1", "k300"]
+    assert _jobs(spark, lambda: t.lookup_many(keys).collect()) <= 1
+    assert _rows(t.lookup("k11")) == [("k11", "v0")]
+    zm.reset_prune_stats()
+    bloomfilter.reset_prune_stats()
+    assert [r[0] for r in _rows(t.lookup_many(keys))] == [
+        "k1", "k300", "k42", "k99"
+    ]
+    # one zone verdict and one bloom verdict per probed key
+    assert zm.LAST_PRUNE["probes"] == bloomfilter.LAST_PRUNE["probes"] == 5
+
+
+def test_memo_follows_commits_and_out_of_band_rebuilds(spark, tmp_path):
+    """A commit whose hooks rewrite both sidecars serves its new keys;
+    an out-of-band bloom rebuild (same table token) replaces the memo
+    instead of being shadowed by it."""
+    from rds_to_datalake_project_spark.operators import bloomfilter
+
+    t = _indexed_table(spark, tmp_path / "t")
+    assert _rows(t.lookup("k5")) == [("k5", "v0")]
+    with _uncoalesced(spark):
+        t.upsert(_kv_rows(spark, range(400, 420), "v1"))
+    assert _rows(t.lookup("k410")) == [("k410", "v1")]
+    assert _rows(t.lookup_many(["k405", "k5"])) == [
+        ("k405", "v1"), ("k5", "v0")
+    ]
+
+    # a 64-bit filter per file saturates: every file survives
+    bloomfilter.build_bloom_index(spark, t.path, ["id"], m_bits=64)
+    n_files = len(t.read().inputFiles())
+    bloomfilter.reset_prune_stats()
+    assert _rows(t.lookup("k7")) == [("k7", "v0")]
+    assert bloomfilter.LAST_PRUNE["files_read"] == n_files > 1
+    # a properly sized rebuild prunes again on the very next lookup
+    bloomfilter.build_bloom_index(spark, t.path, ["id"])
+    bloomfilter.reset_prune_stats()
+    assert _rows(t.lookup("k7")) == [("k7", "v0")]
+    assert bloomfilter.LAST_PRUNE["files_read"] < n_files
+
+
+@pytest.mark.parametrize("deletes", [False, True])
+def test_memo_path_matches_in_spark_aggregation(spark, tmp_path, deletes):
+    """The driver memo and the in-Spark aggregation (forced by a
+    broadcast threshold below the sidecar size) return identical
+    ``(covered, survives)`` for present and absent keys, and identical
+    lookup rows — deletion vectors included."""
+    from rds_to_datalake_project_spark.operators.bloomfilter import (
+        _index_dir,
+        _load_words,
+        bloom_value_survivors,
+    )
+    from rds_to_datalake_project_spark.operators.zonemap import sidecar_memo
+
+    t = _indexed_table(spark, tmp_path / "t", deletion_vectors=deletes)
+    if deletes:
+        assert t.delete_where("id LIKE 'k1%'", strategy="vector") > 0
+    keys = [f"k{i}" for i in range(0, 400, 4)] + [f"absent-{i}" for i in range(100)]
+    idx = _index_dir(t.path)
+
+    def probe():
+        memo = sidecar_memo(spark, t.path, idx, lambda: _load_words(spark, idx))
+        surv = bloom_value_survivors(spark, t.path, "id", keys)
+        rows = [_rows(t.lookup(k)) for k in ("k12", "k13", "k200", "absent-3")]
+        return memo is not None, surv, rows, _rows(t.lookup_many(keys))
+
+    memo_used, *memo_out = probe()
+    old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "1")
+    try:
+        spark_used, *spark_out = probe()
+    finally:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
+    assert memo_used and not spark_used
+    assert memo_out == spark_out
+    (covered, survives), lookups, _many = memo_out
+    assert len(covered) > 1 and all(survives[k] for k in keys[:100])
+    # k12 is masked by the vector delete; absent-3 never existed
+    assert (lookups[0] == []) == deletes and lookups[3] == []
