@@ -52,6 +52,8 @@ from __future__ import annotations
 
 import re
 
+from rds_to_datalake_project_spark import fsio
+
 # Capture switch: flip off to make the rewriter stop reporting shapes
 # (existing observations are kept until reset()).
 CAPTURE: bool = True
@@ -249,21 +251,19 @@ def _scan_estimate(tables: list) -> tuple[int, int] | None:
     """(files, bytes) a base-plan scan of the cluster's tables costs —
     the price every unserved query pays that the recommended view
     would not. Driver-side metadata walk of the CURRENT snapshot
+    through each table's fsio handle, so any scheme works
     (dot/underscore dirs — retired versions, sidecars, markers — are
-    not data); None for non-local paths."""
-    import os
-
+    not data); None when a table has no path or its root is
+    missing."""
     files = size = 0
     for t in tables:
-        path = getattr(t, "path", None)
-        if not path or "://" in str(path) or not os.path.isdir(path):
+        path, spark = getattr(t, "path", None), getattr(t, "spark", None)
+        if not path or spark is None:
             return None
-        for root, dirs, names in os.walk(path):
-            dirs[:] = [d for d in dirs if not d.startswith((".", "_"))]
-            for n in names:
-                if n.endswith(".parquet"):
-                    files += 1
-                    size += os.path.getsize(os.path.join(root, n))
+        est = fsio.live_data_size(fsio.fs_for(spark, path), path)
+        if est is None:
+            return None
+        files, size = files + est[0], size + est[1]
     return files, size
 
 

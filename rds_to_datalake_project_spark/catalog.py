@@ -13,6 +13,8 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 
+from rds_to_datalake_project_spark import fsio
+
 TESTDATA_TABLES = (
     "region",
     "nation",
@@ -146,9 +148,9 @@ def drop_lake_table(
     (rds_to_datalake/glue_catalog.py:48-86) plus the lake-data wipe in
     rds_to_datalake/cleanup.py:11-33. The catalog entry is EXTERNAL
     (``sync_lake_table``), so ``DROP TABLE`` removes only metadata;
-    the data dir is deleted through the Hadoop FileSystem API
-    (portable across local/HDFS/S3A schemes — an O(1) metadata call
-    plus the store's recursive delete, no data is read). Idempotent;
+    the data dir is deleted through its fsio handle (portable across
+    local/HDFS/S3A schemes — an O(1) metadata call plus the store's
+    recursive delete, no data is read). Idempotent;
     returns True if anything was removed.
 
     ``path=None`` resolves the location from the catalog entry before
@@ -165,10 +167,6 @@ def drop_lake_table(
         spark.sql(f"DROP TABLE {qname}")
         removed = True
     if delete_data and path:
-        jvm = spark._jvm
-        p = jvm.org.apache.hadoop.fs.Path(path)
-        fs = p.getFileSystem(spark._jsc.hadoopConfiguration())
-        if fs.exists(p):
-            fs.delete(p, True)
+        if fsio.fs_for(spark, path).delete(path, True):
             removed = True
     return removed

@@ -1,40 +1,53 @@
-"""Filesystem metadata I/O: native fast path for local paths.
+"""The engine's single metadata-I/O layer.
 
-Every engine metadata operation (flag files, markers, manifests,
-rename-swap publishes) goes through the Hadoop FileSystem API so a
-lake can live on hdfs://-/s3a://-style storage. From Python each
-Hadoop call costs several py4j round trips (~10-50 ms of driver wall
-each), and a lifecycle commit makes hundreds of them: a round-12
-event-log profile of one matview build measured 14.9 s of driver-side
-gaps between jobs against 13.8 s of actual job time — more than half
-the build was metadata chatter.
+Every metadata operation the engine makes — flag and marker files,
+manifests, listings, rename-swap publishes — goes through one handle
+from ``fs_for(spark, path)``, and no other module knows how a path
+string turns into a filesystem call. Handles take plain string paths
+(or a path taken from one of their own listing results) and expose
+the same ten FileSystem-shaped methods: ``exists``, ``getFileStatus``,
+``listStatus``, ``listFiles``, ``delete``, ``mkdirs``, ``create``,
+``open``, ``getContentSummary``, ``rename``; plus ``read_text``,
+``write_text`` and ``publish_text`` for small marker files.
 
-On scheme-less (plain local) paths Hadoop's LocalFileSystem is itself
-only a checksummed wrapper over the OS, so this module provides a
-drop-in native implementation of the small FileSystem/Path/FileStatus
-API subset the engine uses. ``KeyedTable._fs`` (and the marker-file
-helpers) route local paths here and keep the Hadoop handle for any
-real scheme — semantics, not performance, decide nothing.
+- Scheme-less (plain local) paths get the ``NativeFS`` singleton.
+  Hadoop's LocalFileSystem is itself only a checksummed wrapper over
+  the OS, while each Hadoop call from Python costs several py4j round
+  trips (~10-50 ms of driver wall each) and a lifecycle commit makes
+  hundreds of them: a round-12 event-log profile of one matview build
+  measured 14.9 s of driver-side gaps between jobs against 13.8 s of
+  job time.
+- Every other scheme (``hdfs://``, ``s3a://``, ``file:``) gets a
+  ``HadoopFS`` adapter over the Hadoop FileSystem for the path, so a
+  lake can live on any store Hadoop reaches.
 
-Semantics matched to Hadoop LocalFileSystem where the engine relies
-on them:
+Both handles keep the semantics the engine relies on (those of HDFS,
+which ``tests/test_fsio.py`` runs against both routes):
 
-- ``rename`` returns False instead of raising; renaming onto an
-  existing directory moves the source INTO it; onto an existing file
-  fails. Same-filesystem ``os.rename`` keeps the publish protocol's
-  atomic-swap guarantee.
-- ``delete``/``exists``/``mkdirs`` are idempotent.
+- ``rename`` returns False instead of raising: from a missing source,
+  onto an existing file, into a missing parent. Renaming onto an
+  existing directory moves the source INTO it. Same-filesystem
+  ``os.rename`` keeps the publish protocol's atomic-swap guarantee.
+- ``delete`` of a missing path returns False; a non-recursive delete
+  of a non-empty directory raises; ``mkdirs`` is idempotent.
+- ``create(p, overwrite=False)`` raises ``FileExistsError`` on an
+  existing file; natively it is one atomic O_EXCL open (Hadoop's
+  LocalFileSystem emulates it with a non-atomic exists() + create).
+  ``create`` makes parents.
 - ChecksumFileSystem writes ``.<name>.crc`` siblings next to files it
   creates. Native create/rename/delete keep those siblings consistent
-  (drop a stale one, move it with the file) so a later Hadoop-path
-  read of a natively (re)written file can never fail checksum
-  verification.
+  (drop a stale one, move it with the file), so a Hadoop-route read of
+  a natively (re)written file never fails checksum verification.
+  Hadoop listings hide the siblings; native listings show them, and
+  callers skip dot-names anyway.
 """
 
 from __future__ import annotations
 
 import os
 import shutil
+
+from py4j.protocol import Py4JJavaError
 
 
 def is_local(path: str) -> bool:
@@ -65,12 +78,6 @@ class NativePath:
 
     def getName(self) -> str:
         return os.path.basename(self._p.rstrip("/"))
-
-    def getParent(self) -> "NativePath":
-        return NativePath(os.path.dirname(self._p.rstrip("/")))
-
-    def toString(self) -> str:
-        return self._p
 
     def __str__(self) -> str:  # f-string call sites
         return self._p
@@ -112,13 +119,15 @@ class _NativeOut:
     __slots__ = ("_f",)
 
     def __init__(self, path: str, overwrite: bool):
-        if not overwrite and os.path.exists(path):
-            raise IOError(f"create failed, exists: {path}")
         parent = os.path.dirname(path)
         if parent:
             os.makedirs(parent, exist_ok=True)
-        _drop_crc(path)  # a Hadoop-era checksum no longer describes us
-        self._f = open(path, "wb")
+        if overwrite:
+            _drop_crc(path)  # a Hadoop-era checksum no longer describes us
+            self._f = open(path, "wb")
+        else:
+            self._f = open(path, "xb")  # O_EXCL: FileExistsError if taken
+            _drop_crc(path)
 
     def write(self, data: bytes) -> None:
         self._f.write(data)
@@ -168,8 +177,28 @@ def _status(p: str) -> NativeStatus:
     return NativeStatus(p, st, os.path.isdir(p))
 
 
-class NativeFS:
-    """The FileSystem API subset the engine calls, natively."""
+class _Publish:
+    """The small-file publish both handles share."""
+
+    def publish_text(self, path: str, text: str) -> None:
+        """Replace ``path`` with ``text`` so a reader sees the old or
+        the new content, never a torn file: write a dot-named tmp
+        sibling (``create`` makes the parents), delete the target,
+        rename the tmp into place. Raises when the rename fails."""
+        path = path.rstrip("/")
+        parent, name = path.rsplit("/", 1)
+        tmp = f"{parent}/.{name}.tmp"
+        out = self.create(tmp, True)
+        out.write(text.encode("utf-8"))
+        out.close()
+        self.delete(path, True)
+        if not self.rename(tmp, path):
+            raise IOError(f"rename {tmp} -> {path} failed")
+
+
+class NativeFS(_Publish):
+    """The handle for plain local paths: the FileSystem API subset the
+    engine calls, natively."""
 
     @staticmethod
     def _s(p) -> str:
@@ -294,48 +323,157 @@ class NativeFS:
         except OSError:
             pass
 
+    def read_text(self, p) -> str | None:
+        try:
+            with open(self._s(p), "r", encoding="utf-8") as f:
+                return f.read()
+        except OSError:
+            return None
+
+    def write_text(self, p, text: str) -> None:
+        sp = self._s(p)
+        parent = os.path.dirname(sp)
+        if parent:
+            os.makedirs(parent, exist_ok=True)
+        _drop_crc(sp)
+        with open(sp, "w", encoding="utf-8") as f:
+            f.write(text)
+
 
 _NATIVE_FS = NativeFS()
 
 
-def native_fs() -> NativeFS:
-    return _NATIVE_FS
+class _HadoopIn:
+    """``open`` return shape over a Hadoop input stream: ``read()``
+    returns the whole remaining content, as the native one does."""
+
+    __slots__ = ("_jvm", "_s")
+
+    def __init__(self, jvm, stream):
+        self._jvm, self._s = jvm, stream
+
+    def read(self) -> bytes:
+        return bytes(self._jvm.org.apache.commons.io.IOUtils.toByteArray(self._s))
+
+    def close(self) -> None:
+        self._s.close()
+
+
+class HadoopFS(_Publish):
+    """The handle for every other scheme: ``NativeFS``'s methods over
+    the Hadoop FileSystem that serves ``root``. Listing results are
+    the JVM ``FileStatus``/``Path`` objects themselves."""
+
+    def __init__(self, spark, root: str):
+        self._jvm = spark._jvm
+        self._Path = self._jvm.org.apache.hadoop.fs.Path
+        self._fs = self._Path(root).getFileSystem(
+            spark._jsc.hadoopConfiguration()
+        )
+
+    def _p(self, p):
+        return self._Path(p) if isinstance(p, str) else p
+
+    def exists(self, p) -> bool:
+        return self._fs.exists(self._p(p))
+
+    def getFileStatus(self, p):
+        return self._fs.getFileStatus(self._p(p))
+
+    def listStatus(self, p):
+        return self._fs.listStatus(self._p(p))
+
+    def listFiles(self, p, recursive: bool = False):
+        return self._fs.listFiles(self._p(p), recursive)
+
+    def delete(self, p, recursive: bool = False) -> bool:
+        return self._fs.delete(self._p(p), recursive)
+
+    def mkdirs(self, p) -> bool:
+        return self._fs.mkdirs(self._p(p))
+
+    def create(self, p, overwrite: bool = False):
+        try:
+            return self._fs.create(self._p(p), overwrite)
+        except Py4JJavaError as exc:
+            if "FileAlreadyExistsException" in str(exc):
+                raise FileExistsError(f"create failed, exists: {p}") from exc
+            raise
+
+    def open(self, p) -> _HadoopIn:
+        return _HadoopIn(self._jvm, self._fs.open(self._p(p)))
+
+    def getContentSummary(self, p):
+        return self._fs.getContentSummary(self._p(p))
+
+    def rename(self, src, dst) -> bool:
+        # Stores differ at the edges (LocalFileSystem raises on a
+        # missing source, creates a missing parent, and replaces an
+        # EMPTY destination dir), so the HDFS semantics NativeFS keeps
+        # are checked here first.
+        fs, s, d = self._fs, self._p(src), self._p(dst)
+        if not fs.exists(s):
+            return False
+        if fs.exists(d):
+            if not fs.getFileStatus(d).isDirectory():
+                return False
+            d = self._Path(d, s.getName())
+            if fs.exists(d):
+                return False
+        elif not fs.exists(d.getParent()):
+            return False
+        return fs.rename(s, d)
+
+    def read_text(self, p) -> str | None:
+        if not self.exists(p):
+            return None
+        stream = self.open(p)
+        try:
+            return stream.read().decode("utf-8")
+        finally:
+            stream.close()
+
+    def write_text(self, p, text: str) -> None:
+        out = self.create(p, True)
+        out.write(text.encode("utf-8"))
+        out.close()
+
+
+def fs_for(spark, path: str):
+    """The metadata-I/O handle for ``path``'s filesystem: the native
+    singleton on local paths, a Hadoop adapter otherwise."""
+    if is_local(path):
+        return _NATIVE_FS
+    return HadoopFS(spark, path)
 
 
 def read_text(spark, path: str) -> str | None:
-    """Contents of a small marker file, or None when absent. Native on
-    local paths; Hadoop (portable) otherwise."""
-    if is_local(path):
-        try:
-            with open(path, "r", encoding="utf-8") as f:
-                return f.read()
-        except OSError:
-            return None
-    jvm = spark._jvm
-    p = jvm.org.apache.hadoop.fs.Path(path)
-    fs = p.getFileSystem(spark._jsc.hadoopConfiguration())
-    if not fs.exists(p):
-        return None
-    stream = fs.open(p)
-    try:
-        return jvm.org.apache.commons.io.IOUtils.toString(stream, "UTF-8")
-    finally:
-        stream.close()
+    """Contents of a small marker file, or None when absent."""
+    return fs_for(spark, path).read_text(path)
 
 
 def write_text(spark, path: str, text: str) -> None:
     """Overwrite a small marker file (parents created)."""
-    if is_local(path):
-        parent = os.path.dirname(path)
-        if parent:
-            os.makedirs(parent, exist_ok=True)
-        _drop_crc(path)
-        with open(path, "w", encoding="utf-8") as f:
-            f.write(text)
-        return
-    jvm = spark._jvm
-    p = jvm.org.apache.hadoop.fs.Path(path)
-    fs = p.getFileSystem(spark._jsc.hadoopConfiguration())
-    out = fs.create(p, True)
-    out.write(text.encode("utf-8"))
-    out.close()
+    fs_for(spark, path).write_text(path, text)
+
+
+def live_data_size(fs, root: str) -> tuple[int, int] | None:
+    """``(files, bytes)`` of the parquet files in a table's live tree,
+    or None when ``root`` is absent. Dot/underscore names (retired
+    versions, ``.meta``, sidecar indexes, staging, markers) are not
+    live data and are never descended into."""
+    if not fs.exists(root):
+        return None
+    files = size = 0
+    stack = [root]
+    while stack:
+        for st in fs.listStatus(stack.pop()):
+            name = st.getPath().getName()
+            if name.startswith((".", "_")):
+                continue
+            if st.isDirectory():
+                stack.append(st.getPath())
+            elif name.endswith(".parquet"):
+                files += 1
+                size += st.getLen()
+    return files, size

@@ -148,12 +148,6 @@ def _read_centroids(table: KeyedTable) -> list[tuple[int, list[float]]] | None:
     ]
 
 
-def _delete_part(table: KeyedTable, part: str) -> None:
-    jvm = table.spark._jvm
-    p = jvm.org.apache.hadoop.fs.Path(f"{_idx(table)}/{part}")
-    p.getFileSystem(table.spark._jsc.hadoopConfiguration()).delete(p, True)
-
-
 def build_ann_index(
     table: KeyedTable,
     id_col: str = "vec_id",
@@ -205,7 +199,7 @@ def build_ann_index(
     else:
         # a lingering centroids dir from an earlier IVF build would
         # look torn forever — a non-IVF build removes it outright
-        _delete_part(table, "centroids")
+        table._fs.delete(f"{_idx(table)}/centroids", True)
     coded = write_part(
         spark,
         _idx(table),

@@ -30,13 +30,10 @@ import json
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from rds_to_datalake_project_spark import fsio
 from rds_to_datalake_project_spark.operators.compare import (
     strip_meta_columns,
     table_checksum,
-)
-from rds_to_datalake_project_spark.operators.zonemap import (
-    _read_small,
-    _write_small,
 )
 
 _MANIFEST = "_SNAPSHOT_MANIFEST.json"
@@ -77,7 +74,7 @@ def export_snapshot(table, dest: str, version: int | None = None) -> dict:
         "columns": sorted(written.columns),
         "slices": _checksums(written, keys),
     }
-    _write_small(table.spark, f"{dest}/{_MANIFEST}", json.dumps(manifest))
+    fsio.write_text(table.spark, f"{dest}/{_MANIFEST}", json.dumps(manifest))
     return manifest
 
 
@@ -88,7 +85,7 @@ def import_snapshot(spark: SparkSession, src: str, spec, dest_path: str, **kw):
     becomes a table."""
     from rds_to_datalake_project_spark.operators.upsert import KeyedTable
 
-    raw = _read_small(spark, f"{src}/{_MANIFEST}")
+    raw = fsio.read_text(spark, f"{src}/{_MANIFEST}")
     if not raw:
         raise ValueError(f"no snapshot manifest at {src}")
     manifest = json.loads(raw)

@@ -39,6 +39,7 @@ import logging
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from rds_to_datalake_project_spark import fsio
 from rds_to_datalake_project_spark.operators.zonemap import (
     _norm,
     _resolve_table,
@@ -166,16 +167,12 @@ def build_bloom_index(
     )
     out.write.mode("overwrite").parquet(idx)
     # params ride a marker so probes use the same (m, k)
-    from rds_to_datalake_project_spark.operators.zonemap import _write_small
-
-    _write_small(spark, f"{idx}/_PARAMS", f"{m_bits} {k_hashes}")
+    fsio.write_text(spark, f"{idx}/_PARAMS", f"{m_bits} {k_hashes}")
     return out.count()
 
 
 def _stored_mk(spark: SparkSession, idx: str) -> tuple[int, int]:
-    from rds_to_datalake_project_spark.operators.zonemap import _read_small
-
-    txt = _read_small(spark, f"{idx}/_PARAMS")
+    txt = fsio.read_text(spark, f"{idx}/_PARAMS")
     if not txt:
         return (M_BITS_DEFAULT, K_HASHES_DEFAULT)
     m, k = txt.split()
@@ -490,9 +487,7 @@ def refresh_bloom_index(
         )
     out = kept.localCheckpoint(eager=True)  # derived from the dir it replaces
     out.write.mode("overwrite").parquet(idx)
-    from rds_to_datalake_project_spark.operators.zonemap import _write_small
-
-    _write_small(spark, f"{idx}/_PARAMS", f"{m_bits} {k_hashes}")
+    fsio.write_text(spark, f"{idx}/_PARAMS", f"{m_bits} {k_hashes}")
     return (len(new), len(stale))
 
 

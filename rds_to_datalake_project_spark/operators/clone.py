@@ -52,11 +52,8 @@ import json
 
 from pyspark.sql import DataFrame, SparkSession
 
+from rds_to_datalake_project_spark import fsio
 from rds_to_datalake_project_spark.operators.upsert import KeyedTable
-from rds_to_datalake_project_spark.operators.zonemap import (
-    _read_small,
-    _write_small,
-)
 from rds_to_datalake_project_spark.schema import TableSpec
 
 _CLONE_MARKER = ".meta/_CLONE"
@@ -85,7 +82,7 @@ class ClonedTable(KeyedTable):
     _CLONE_AWARE = True
 
     def _clone_meta(self) -> dict | None:
-        raw = _read_small(self.spark, f"{self.path}/{_CLONE_MARKER}")
+        raw = self._fs.read_text(f"{self.path}/{_CLONE_MARKER}")
         if not raw:
             return None
         return json.loads(raw)
@@ -127,19 +124,13 @@ class ClonedTable(KeyedTable):
         return out
 
     def _read_localized_ledger(self) -> list[str]:
-        raw = _read_small(self.spark, f"{self.path}/.meta/_LOCALIZED")
+        raw = self._fs.read_text(f"{self.path}/.meta/_LOCALIZED")
         return [r for r in (raw or "").split("\n") if r]
 
     def _write_localized_ledger(self, rels: set[str]) -> None:
         # tmp + rename: a torn ledger would silently resurrect source
         # rows for the missing rels
-        fs, tmp = self._fs(f"{self.path}/.meta/._LOCALIZED.tmp")
-        out = fs.create(tmp, True)
-        out.write("\n".join(sorted(rels)).encode("utf-8"))
-        out.close()
-        _, dst = self._fs(f"{self.path}/.meta/_LOCALIZED")
-        fs.delete(dst, True)
-        self._rename(fs, tmp, dst)
+        self._fs.publish_text(f"{self.path}/.meta/_LOCALIZED", "\n".join(sorted(rels)))
 
     def vacuum_versions(self, keep_last: int = 1) -> int:
         """Vacuum, preserving localization evidence: the expiring
@@ -489,7 +480,7 @@ class ClonedTable(KeyedTable):
                 ):
                     raise RuntimeError("detach lost a commit race; re-run")
                 copied = len(src_rels)
-        self._fs_delete(f"{self.path}/{_CLONE_MARKER}")
+        self._fs.delete(f"{self.path}/{_CLONE_MARKER}", True)
         return {"partitions_copied": copied}
 
 
@@ -538,7 +529,7 @@ def clone_table(
     )
     if dest.exists():
         raise ValueError(f"clone destination {dest_path} already exists")
-    _write_small(
+    fsio.write_text(
         src.spark,
         f"{dest_path}/{_CLONE_MARKER}",
         json.dumps(
@@ -562,7 +553,7 @@ def open_table(
     """Open ``path`` as the right table class: a :class:`ClonedTable`
     when the clone marker is present, else a plain
     :class:`KeyedTable`."""
-    raw = _read_small(spark, f"{path}/{_CLONE_MARKER}")
+    raw = fsio.read_text(spark, f"{path}/{_CLONE_MARKER}")
     if raw and not table_kwargs.get("retain_versions"):
         # clones MUST retain versions (localization tracking rides
         # the commit records) — default the floor in, never below it

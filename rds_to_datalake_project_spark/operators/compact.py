@@ -25,6 +25,7 @@ import os
 
 from pyspark.sql import DataFrame, functions as F
 
+from rds_to_datalake_project_spark import fsio
 from rds_to_datalake_project_spark.operators.upsert import (
     CommitConflict,
     KeyedTable,
@@ -47,23 +48,10 @@ def _commit_or_conflict(table: KeyedTable, staging: str, base_token) -> None:
 def _live_bytes(table: "KeyedTable") -> int:
     """Bytes of LIVE data files only — hidden trees (.retired
     snapshots, .meta, .zonemap, staging) are pruned, so a retained
-    table is not sized several-fold too large; Hadoop FileSystem API,
-    so remote paths size correctly instead of returning 0 (which
-    would funnel the whole table into one output file)."""
-    fs, root = table._fs(table.path)
-    if not fs.exists(root):
-        return 0
-
-    def walk(p) -> int:
-        total = 0
-        for st in fs.listStatus(p):
-            name = st.getPath().getName()
-            if name.startswith((".", "_")):
-                continue
-            total += walk(st.getPath()) if st.isDirectory() else st.getLen()
-        return total
-
-    return walk(root)
+    table is not sized several-fold too large; the table's fsio
+    handle, so remote paths size correctly instead of returning 0
+    (which would funnel the whole table into one output file)."""
+    return (fsio.live_data_size(table._fs, table.path) or (0, 0))[1]
 
 
 def plan_target_files(total_bytes: int, target_file_bytes: int) -> int:
@@ -122,7 +110,7 @@ def compact_table(
     point/range predicates on EVERY listed column get file-level
     min/max skipping after the pass.
 
-    Sizing walks live data files through the Hadoop FileSystem API
+    Sizing walks live data files through the table's fsio handle
     (local, HDFS, and object stores alike), skipping hidden trees.
     """
     table.recover()  # a crashed publish owns the next commit number
@@ -256,16 +244,16 @@ def data_file_count(path: str) -> int:
 
 def _leaf_partition_stats(table: KeyedTable) -> list[tuple[str, int, int]]:
     """(rel_path, n_data_files, bytes) per leaf partition dir — a
-    driver-side metadata listing through the Hadoop FileSystem API
+    driver-side metadata listing through the table's fsio handle
     (works on local FS, HDFS, and object stores alike), no file
     reads."""
     depth = len(table.partition_cols)
     out: list[tuple[str, int, int]] = []
-    fs, _ = table._fs(table.path)
+    fs = table._fs
 
     def walk(path: str, level: int, rel: str):
         for st in sorted(
-            fs.listStatus(table._fs(path)[1]),
+            fs.listStatus(path),
             key=lambda s: s.getPath().getName(),
         ):
             name = st.getPath().getName()
@@ -276,7 +264,7 @@ def _leaf_partition_stats(table: KeyedTable) -> list[tuple[str, int, int]]:
             if level == depth - 1:
                 files = [
                     f
-                    for f in fs.listStatus(table._fs(sub)[1])
+                    for f in fs.listStatus(sub)
                     if not f.isDirectory()
                     and f.getPath().getName().endswith(".parquet")
                     and not f.getPath().getName().startswith((".", "_"))
@@ -327,10 +315,9 @@ def compact_partitions(
     table.recover()  # a crashed publish owns the next commit number
     base_token = table.commit_token()  # see compact_table
     if not table.partition_cols:
-        fs, root = table._fs(table.path)
         files = [
             st
-            for st in fs.listStatus(root)
+            for st in table._fs.listStatus(table.path)
             if not st.isDirectory()
             and st.getPath().getName().endswith(".parquet")
             and not st.getPath().getName().startswith((".", "_"))
@@ -348,10 +335,10 @@ def compact_partitions(
         # bounded pass: stat ONLY the named partition dirs (the
         # auto-compact hook passes the last commit's touched set, so
         # per-commit cost follows the commit, not the table)
-        fs, _ = table._fs(table.path)
+        fs = table._fs
         stats = []
         for rel in sorted(only_rels):
-            _, p = table._fs(f"{table.path}/{rel}")
+            p = f"{table.path}/{rel}"
             if not fs.exists(p):
                 continue  # vacated by deletes / dropped since
             files = [

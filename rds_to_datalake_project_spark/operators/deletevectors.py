@@ -50,11 +50,6 @@ from pyspark.sql import functions as F
 
 from rds_to_datalake_project_spark import fsio
 
-from rds_to_datalake_project_spark.operators.zonemap import (
-    _read_small,
-    _write_small,
-)
-
 _DV_DIRNAME = ".dv"
 _DV_FILE = "__dv_file"
 _DV_POS = "__dv_pos"
@@ -66,14 +61,6 @@ _BROADCAST_BYTES = 64 * 1024 * 1024
 
 def dv_root(table_path: str) -> str:
     return f"{table_path}/{_DV_DIRNAME}"
-
-
-def _hadoop(spark: SparkSession, path: str):
-    if fsio.is_local(path):
-        return fsio.native_fs(), fsio.NativePath(path)
-    jvm = spark._jvm
-    p = jvm.org.apache.hadoop.fs.Path(path)
-    return p.getFileSystem(spark._jsc.hadoopConfiguration()), p
 
 
 def _dir_bytes(fs, path) -> int:
@@ -89,11 +76,11 @@ def list_dv_dirs(spark: SparkSession, table_path: str) -> list[dict]:
     order (unversioned ``d*`` dirs last). Cheap no-vector fast path:
     one ``exists`` call when the table never had a vector delete."""
     root = dv_root(table_path)
-    fs, p = _hadoop(spark, root)
-    if not fs.exists(p):
+    fs = fsio.fs_for(spark, root)
+    if not fs.exists(root):
         return []
     out = []
-    for st in fs.listStatus(p):
+    for st in fs.listStatus(root):
         name = st.getPath().getName()
         if not st.isDirectory() or name.startswith((".", "_")):
             continue
@@ -118,12 +105,12 @@ def read_fold_floor(spark: SparkSession, table_path: str) -> int:
     """Vectors of commits < floor are folded into the live data files
     (their basenames no longer exist in the live tree); live reads
     skip them. 0 = never materialized."""
-    raw = _read_small(spark, f"{dv_root(table_path)}/{_FLOOR_FILE}")
+    raw = fsio.read_text(spark, f"{dv_root(table_path)}/{_FLOOR_FILE}")
     return int(raw.strip()) if raw and raw.strip() else 0
 
 
 def write_fold_floor(spark: SparkSession, table_path: str, floor: int) -> None:
-    _write_small(spark, f"{dv_root(table_path)}/{_FLOOR_FILE}", str(floor))
+    fsio.write_text(spark, f"{dv_root(table_path)}/{_FLOOR_FILE}", str(floor))
 
 
 def _select_dirs(

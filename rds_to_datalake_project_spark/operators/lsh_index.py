@@ -42,6 +42,7 @@ import uuid
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from rds_to_datalake_project_spark import fsio
 from rds_to_datalake_project_spark.operators.minhash import band_rows
 from rds_to_datalake_project_spark.operators.sidecar import (
     DEFAULT_COMPACT_THRESHOLD,
@@ -53,10 +54,6 @@ from rds_to_datalake_project_spark.operators.sidecar import (
     write_state,
 )
 from rds_to_datalake_project_spark.operators.upsert import KeyedTable
-from rds_to_datalake_project_spark.operators.zonemap import (
-    _read_small,
-    _write_small,
-)
 
 _DIR = ".lshindex"
 
@@ -77,7 +74,7 @@ def _params(
 
 
 def _stored_params(table: KeyedTable) -> dict | None:
-    txt = _read_small(table.spark, f"{_idx(table)}/_PARAMS")
+    txt = fsio.read_text(table.spark, f"{_idx(table)}/_PARAMS")
     if not txt:
         return None
     try:
@@ -110,7 +107,7 @@ def build_lsh_index(
     clear_delta_log(spark, _idx(table), "bands")
     # Params BEFORE _VERSION: a refresh only trusts the index once the
     # epoch chain closes, and by then the parameter record is in place.
-    _write_small(
+    fsio.write_text(
         spark,
         f"{_idx(table)}/_PARAMS",
         json.dumps(_params(num_hashes, bands, shingle_n, hash_mode)),

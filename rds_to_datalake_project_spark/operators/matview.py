@@ -33,11 +33,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from rds_to_datalake_project_spark.fsio import read_text as _read_small
+from rds_to_datalake_project_spark.fsio import write_text as _write_small
 from rds_to_datalake_project_spark.operators.upsert import KeyedTable
-from rds_to_datalake_project_spark.operators.zonemap import (
-    _read_small,
-    _write_small,
-)
 from rds_to_datalake_project_spark.schema import TableSpec
 
 _SEQ_COL = "_refresh_seq"

@@ -42,10 +42,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from rds_to_datalake_project_spark.operators.upsert import KeyedTable
-from rds_to_datalake_project_spark.operators.zonemap import (
-    _read_small,
-    _write_small,
+from rds_to_datalake_project_spark import fsio
+from rds_to_datalake_project_spark.fsio import read_text as _read_small
+from rds_to_datalake_project_spark.fsio import write_text as _write_small
+from rds_to_datalake_project_spark.operators.upsert import (
+    KeyedTable,
+    _feed_batch_versions,
 )
 
 DEFAULT_PRECOMBINE = "_rep_seq"
@@ -73,19 +75,13 @@ def applied_version(replica: KeyedTable) -> int | None:
 
 
 def _feed_versions(spark, feed_dir: str) -> list[int]:
-    jvm = spark._jvm
-    root = jvm.org.apache.hadoop.fs.Path(feed_dir)
-    fs = root.getFileSystem(spark._jsc.hadoopConfiguration())
-    if not fs.exists(root):
-        return []
-    out = []
-    for st in fs.listStatus(root):
-        name = st.getPath().getName()
-        if st.isDirectory() and name.startswith("v") and name[1:].isdigit():
-            done = jvm.org.apache.hadoop.fs.Path(f"{feed_dir}/{name}/_SUCCESS")
-            if fs.exists(done):  # partial batches are invisible
-                out.append(int(name[1:]))
-    return sorted(out)
+    fs = fsio.fs_for(spark, feed_dir)
+    return [
+        v
+        for v in _feed_batch_versions(fs, feed_dir)
+        # partial batches are invisible
+        if fs.exists(f"{feed_dir}/v{v}/_SUCCESS")
+    ]
 
 
 def bootstrap_replica(

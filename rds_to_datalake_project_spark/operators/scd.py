@@ -36,6 +36,8 @@ from functools import reduce
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from rds_to_datalake_project_spark import fsio
+
 __all__ = ["scd2_history", "pit_join"]
 
 
@@ -205,9 +207,7 @@ class Scd2Store:
         return f"{self.path}/.scd/_BASE_VERSION"
 
     def refreshed_version(self) -> int | None:
-        from rds_to_datalake_project_spark.operators.zonemap import _read_small
-
-        txt = _read_small(self.spark, self._marker_path())
+        txt = fsio.read_text(self.spark, self._marker_path())
         try:
             return int((txt or "").strip())
         except ValueError:
@@ -219,8 +219,6 @@ class Scd2Store:
     def build(self, version: int | None = None) -> int:
         """Full (re)build of the interval table as of base commit
         ``version`` (default latest). Returns the version built."""
-        from rds_to_datalake_project_spark.operators.zonemap import _write_small
-
         latest = (self.base.versions() or [0])[-1]
         v = latest if version is None else int(version)
         vs = [x for x in self.base.readable_versions() if x <= v]
@@ -228,15 +226,13 @@ class Scd2Store:
             _SEQ_COL, F.lit(v).cast("long")
         )
         self.store.initial_load(full)
-        _write_small(self.spark, self._marker_path(), str(v))
+        fsio.write_text(self.spark, self._marker_path(), str(v))
         return v
 
     def refresh(self) -> dict:
         """Advance to the base's latest commit. Full rebuild when the
         cursor is missing or expired; per-commit incremental apply
         otherwise."""
-        from rds_to_datalake_project_spark.operators.zonemap import _write_small
-
         latest = (self.base.versions() or [0])[-1]
         since = self.refreshed_version()
         if since is not None and since == latest:
@@ -246,7 +242,7 @@ class Scd2Store:
             return {"mode": "full", "base_version": latest, "commits_applied": 0}
         for v in range(since + 1, latest + 1):
             self._apply(v)
-            _write_small(self.spark, self._marker_path(), str(v))
+            fsio.write_text(self.spark, self._marker_path(), str(v))
         return {
             "mode": "incremental",
             "base_version": latest,

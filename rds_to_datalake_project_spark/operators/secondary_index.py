@@ -65,6 +65,7 @@ import uuid
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from rds_to_datalake_project_spark import fsio
 from rds_to_datalake_project_spark.operators.sidecar import (
     DEFAULT_COMPACT_THRESHOLD,
     clear_delta_log,
@@ -75,10 +76,6 @@ from rds_to_datalake_project_spark.operators.sidecar import (
     write_state,
 )
 from rds_to_datalake_project_spark.operators.upsert import KeyedTable
-from rds_to_datalake_project_spark.operators.zonemap import (
-    _read_small,
-    _write_small,
-)
 
 N_BUCKETS = 256
 
@@ -176,14 +173,14 @@ def build_secondary_index(table: KeyedTable, value_col: str) -> None:
         checkpoint=False,  # reads the TABLE, writes the index dir
     )
     clear_delta_log(spark, _idir(table, value_col), "entries")
-    _write_small(
+    fsio.write_text(
         spark, f"{_idir(table, value_col)}/_PARAMS", f"{value_col} {key_col}"
     )
     write_state(spark, _idir(table, value_col), latest, epoch)
 
 
 def _stored_params(table: KeyedTable, value_col: str) -> tuple[str, str] | None:
-    txt = _read_small(table.spark, f"{_idir(table, value_col)}/_PARAMS")
+    txt = fsio.read_text(table.spark, f"{_idir(table, value_col)}/_PARAMS")
     parts = (txt or "").split()
     return (parts[0], parts[1]) if len(parts) == 2 else None
 
@@ -447,7 +444,7 @@ def build_secondary_range_index(
         checkpoint=False,  # reads the TABLE, writes the index dir
     )
     clear_delta_log(spark, _rdir(table, value_col), "entries")
-    _write_small(
+    fsio.write_text(
         spark,
         f"{_rdir(table, value_col)}/_PARAMS",
         f"{value_col} {key_col} {n_bands} {lo!r} {width!r}",
@@ -458,7 +455,7 @@ def build_secondary_range_index(
 def _stored_range_params(
     table: KeyedTable, value_col: str
 ) -> tuple[str, str, int, float, float] | None:
-    txt = _read_small(table.spark, f"{_rdir(table, value_col)}/_PARAMS")
+    txt = fsio.read_text(table.spark, f"{_rdir(table, value_col)}/_PARAMS")
     parts = (txt or "").split()
     if len(parts) != 5:
         return None

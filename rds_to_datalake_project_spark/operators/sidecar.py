@@ -44,18 +44,12 @@ the log, and deletes the delta dirs — full-rewrite cost amortized to
 from __future__ import annotations
 
 import json
-import os
 from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from rds_to_datalake_project_spark import fsio
-from rds_to_datalake_project_spark.operators.zonemap import (
-    _delete_dir,
-    _read_small,
-    _write_small,
-)
 
 DEFAULT_COMPACT_THRESHOLD = 8
 
@@ -77,21 +71,12 @@ def _existing_subdirs(
     reads as 'nothing probed exists', which the caller already treats
     as the full-read / skip fallback."""
     try:
-        if fsio.is_local(dir_path):
-            names = (
-                set(os.listdir(dir_path))
-                if os.path.isdir(dir_path)
-                else set()
-            )
-        else:
-            jvm = spark._jvm
-            p = jvm.org.apache.hadoop.fs.Path(dir_path)
-            fs = p.getFileSystem(spark._jsc.hadoopConfiguration())
-            names = (
-                {st.getPath().getName() for st in fs.listStatus(p)}
-                if fs.exists(p)
-                else set()
-            )
+        fs = fsio.fs_for(spark, dir_path)
+        names = (
+            {st.getPath().getName() for st in fs.listStatus(dir_path)}
+            if fs.exists(dir_path)
+            else set()
+        )
     except Exception:
         return []
     return [
@@ -102,7 +87,7 @@ def _existing_subdirs(
 def read_state(spark: SparkSession, index_dir: str) -> tuple[int, str] | None:
     """(base-table version, build epoch) from ``_VERSION``, or None
     when missing/unparsable (pre-epoch layouts rebuild too)."""
-    txt = _read_small(spark, f"{index_dir}/_VERSION")
+    txt = fsio.read_text(spark, f"{index_dir}/_VERSION")
     parts = (txt or "").split()
     if len(parts) != 2:
         return None
@@ -113,11 +98,11 @@ def read_state(spark: SparkSession, index_dir: str) -> tuple[int, str] | None:
 
 
 def write_state(spark: SparkSession, index_dir: str, version: int, epoch: str) -> None:
-    _write_small(spark, f"{index_dir}/_VERSION", f"{version} {epoch}")
+    fsio.write_text(spark, f"{index_dir}/_VERSION", f"{version} {epoch}")
 
 
 def epoch_of(spark: SparkSession, index_dir: str, part: str) -> str | None:
-    txt = _read_small(spark, f"{index_dir}/{part}/_EPOCH")
+    txt = fsio.read_text(spark, f"{index_dir}/{part}/_EPOCH")
     return txt.strip() if txt and txt.strip() else None
 
 
@@ -168,7 +153,7 @@ def write_part(
     w.parquet(f"{index_dir}/{part}")
     # Marker AFTER the data: a partial overwrite has no _EPOCH and the
     # next consumer rebuilds instead of trusting truncated state.
-    _write_small(spark, f"{index_dir}/{part}/_EPOCH", epoch)
+    fsio.write_text(spark, f"{index_dir}/{part}/_EPOCH", epoch)
     return out
 
 
@@ -203,7 +188,7 @@ def read_delta_log(
     """(epoch, generations) from the family's delta log, or None when
     absent/unparsable. Absent = flat layout (base only), which every
     pre-delta index already has — fully back-compatible."""
-    txt = _read_small(spark, f"{index_dir}/{family}_DELTAS")
+    txt = fsio.read_text(spark, f"{index_dir}/{family}_DELTAS")
     if not txt:
         return None
     try:
@@ -216,7 +201,7 @@ def read_delta_log(
 def _write_delta_log(
     spark: SparkSession, index_dir: str, family: str, epoch: str, gens: list[int]
 ) -> None:
-    _write_small(
+    fsio.write_text(
         spark,
         f"{index_dir}/{family}_DELTAS",
         json.dumps({"epoch": epoch, "gens": gens}),
@@ -227,12 +212,13 @@ def clear_delta_log(spark: SparkSession, index_dir: str, family: str) -> None:
     """Reset the family to flat layout (build/compaction) and drop the
     now-unreferenced delta dirs."""
     old = read_delta_log(spark, index_dir, family)
-    _write_small(
+    fsio.write_text(
         spark, f"{index_dir}/{family}_DELTAS", json.dumps({"epoch": "", "gens": []})
     )
+    fs = fsio.fs_for(spark, index_dir)
     for g in old[1] if old else []:
-        _delete_dir(spark, f"{index_dir}/{_delta_name(family, g)}")
-        _delete_dir(spark, f"{index_dir}/{_tomb_name(family, g)}")
+        fs.delete(f"{index_dir}/{_delta_name(family, g)}", True)
+        fs.delete(f"{index_dir}/{_tomb_name(family, g)}", True)
 
 
 def family_consistent(
@@ -423,13 +409,11 @@ def vacuum_family(
     for g in log[1] if log else []:
         live.add(_delta_name(family, g))
         live.add(_tomb_name(family, g))
-    jvm = spark._jvm
-    root = jvm.org.apache.hadoop.fs.Path(index_dir)
-    fs = root.getFileSystem(spark._jsc.hadoopConfiguration())
-    if not fs.exists(root):
+    fs = fsio.fs_for(spark, index_dir)
+    if not fs.exists(index_dir):
         return []
     removed = []
-    for status in fs.listStatus(root):
+    for status in fs.listStatus(index_dir):
         name = status.getPath().getName()
         if (
             status.isDirectory()
@@ -439,7 +423,7 @@ def vacuum_family(
             )
             and name not in live
         ):
-            fs.delete(status.getPath(), True)
+            fs.delete(f"{index_dir}/{name}", True)
             removed.append(name)
     return sorted(removed)
 
@@ -459,13 +443,11 @@ def service_status(table) -> list[dict]:
     typed so this module stays import-light)."""
     spark = table.spark
     head = (table.versions() or [0])[-1]
-    jvm = spark._jvm
-    root = jvm.org.apache.hadoop.fs.Path(table.path)
-    fs = root.getFileSystem(spark._jsc.hadoopConfiguration())
-    if not fs.exists(root):
+    fs = fsio.fs_for(spark, table.path)
+    if not fs.exists(table.path):
         return []
     out = []
-    for st in fs.listStatus(root):
+    for st in fs.listStatus(table.path):
         name = st.getPath().getName()
         if not (st.isDirectory() and name.startswith(".")):
             continue
@@ -474,7 +456,7 @@ def service_status(table) -> list[dict]:
         if state is None:
             continue  # .meta, .replica, staging — not a sidecar service
         families = {}
-        for inner in fs.listStatus(st.getPath()):
+        for inner in fs.listStatus(sdir):
             iname = inner.getPath().getName()
             if iname.endswith("_DELTAS") and not inner.isDirectory():
                 fam = iname[: -len("_DELTAS")]

@@ -57,16 +57,13 @@ import uuid
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from rds_to_datalake_project_spark import fsio
 from rds_to_datalake_project_spark.operators.sidecar import (
     parts_consistent,
     write_part,
     write_state,
 )
 from rds_to_datalake_project_spark.operators.upsert import KeyedTable
-from rds_to_datalake_project_spark.operators.zonemap import (
-    _read_small,
-    _write_small,
-)
 
 _HASH_BITS = 60  # 15 hex chars of md5 — fits a signed long, both engines
 
@@ -254,7 +251,7 @@ def _params_str(col: str, p: int, depth: int, width: int, hash_mode: str) -> str
 
 
 def _stored_params(table: KeyedTable) -> tuple[str, int, int, int, str] | None:
-    txt = _read_small(table.spark, f"{_sdir(table)}/_PARAMS")
+    txt = fsio.read_text(table.spark, f"{_sdir(table)}/_PARAMS")
     parts = (txt or "").split()
     if len(parts) != 5:
         return None
@@ -298,7 +295,7 @@ def build_sketches(
         1,
         checkpoint=False,
     )
-    _write_small(
+    fsio.write_text(
         spark, f"{_sdir(table)}/_PARAMS", _params_str(col, p, depth, width, hash_mode)
     )
     write_state(spark, _sdir(table), latest, epoch)

@@ -36,6 +36,7 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from rds_to_datalake_project_spark import fsio
 from rds_to_datalake_project_spark.operators.sidecar import (
     DEFAULT_COMPACT_THRESHOLD,
     clear_delta_log,
@@ -46,10 +47,6 @@ from rds_to_datalake_project_spark.operators.sidecar import (
     write_state,
 )
 from rds_to_datalake_project_spark.operators.upsert import KeyedTable
-from rds_to_datalake_project_spark.operators.zonemap import (
-    _read_small,
-    _write_small,
-)
 
 _INDEX_DIR = ".textindex"
 N_BUCKETS = 256
@@ -155,12 +152,12 @@ def build_text_index(table: KeyedTable, id_col: str, text_col: str) -> None:
         clear_delta_log(spark, _idir(table), "doclens")
     finally:
         corpus.unpersist()
-    _write_small(spark, f"{_idir(table)}/_PARAMS", f"{id_col} {text_col}")
+    fsio.write_text(spark, f"{_idir(table)}/_PARAMS", f"{id_col} {text_col}")
     write_state(spark, _idir(table), latest, epoch)
 
 
 def _stored_params(table: KeyedTable) -> tuple[str, str] | None:
-    txt = _read_small(table.spark, f"{_idir(table)}/_PARAMS")
+    txt = fsio.read_text(table.spark, f"{_idir(table)}/_PARAMS")
     parts = (txt or "").split()
     return (parts[0], parts[1]) if len(parts) == 2 else None
 

@@ -193,6 +193,20 @@ def _is_vanished_file_error(exc: BaseException) -> bool:
     )
 
 
+def _feed_batch_versions(fs, feed_dir: str) -> list[int]:
+    """Versions of the ``v{k}`` batch dirs under a changes feed,
+    ascending (complete or not — see the ``_SUCCESS`` marker)."""
+    if not fs.exists(feed_dir):
+        return []
+    return sorted(
+        int(st.getPath().getName()[1:])
+        for st in fs.listStatus(feed_dir)
+        if st.isDirectory()
+        and st.getPath().getName().startswith("v")
+        and st.getPath().getName()[1:].isdigit()
+    )
+
+
 class CommitConflict(RuntimeError):
     """A staged merge was computed against a snapshot another writer
     has since replaced — publishing it would silently drop that
@@ -297,7 +311,10 @@ class KeyedTable:
         # vector-enabled peer stays correct through any handle).
         self.deletion_vectors = deletion_vectors
         self._commit_lock_held = False
-        self._fs_handle = None
+        # Every path a KeyedTable touches (staging, .meta, .retired,
+        # partition dirs) lives under self.path, so one fsio handle
+        # serves them all.
+        self._fs = fsio.fs_for(spark, path)
         if spec.hash_buckets and spec.partition_granularity:
             raise ValueError(
                 "hash_buckets and partition_granularity are exclusive — "
@@ -320,8 +337,7 @@ class KeyedTable:
             # a plain handle would silently read partial rows, and its
             # upsert's exists()=False route would static-overwrite the
             # clone markers. Refuse construction instead.
-            fs, cp = self._fs(f"{path}/.meta/_CLONE")
-            if fs.exists(cp):
+            if self._fs.exists(f"{path}/.meta/_CLONE"):
                 raise ValueError(
                     f"{path} is a shallow clone — open it via "
                     "operators.clone.open_table (a plain KeyedTable "
@@ -347,14 +363,14 @@ class KeyedTable:
         # RETAINED table emptied by deletes (every row tombstoned):
         # its commit log (.meta) is the table — routing the next batch
         # through initial_load would silently reset history.
-        # Hadoop FileSystem API, NOT os.path: on hdfs://-/s3a://-style
+        # The table's fsio handle, NOT os.path: on hdfs://-/s3a://-style
         # paths the local check is always False, and a False here
         # routes the next batch through initial_load's static
         # overwrite — destroying the remote table.
-        fs, root = self._fs(self.path)
-        if not fs.exists(root) or not fs.getFileStatus(root).isDirectory():
+        fs = self._fs
+        if not fs.exists(self.path) or not fs.getFileStatus(self.path).isDirectory():
             return False
-        names = [st.getPath().getName() for st in fs.listStatus(root)]
+        names = [st.getPath().getName() for st in fs.listStatus(self.path)]
         return (
             any(not n.startswith(("_", ".")) for n in names)
             or any(n.startswith((".staging-", _ASIDE_PREFIX)) for n in names)
@@ -433,7 +449,7 @@ class KeyedTable:
         one even before the explicit invalidation lands."""
         if type(self) is not KeyedTable or not fsio.is_local(self.path):
             return None
-        tok = fsio.read_text(self.spark, f"{self.path}/{_TOKEN_FILE}")
+        tok = self._fs.read_text(f"{self.path}/{_TOKEN_FILE}")
         tok = tok.strip() if tok else None
         key = _norm_table_path(self.path)
         ent = _PLAN_CACHE.get(key)
@@ -501,11 +517,7 @@ class KeyedTable:
 
         from pyspark.sql import types as T
 
-        from rds_to_datalake_project_spark.operators.zonemap import (
-            _read_small,
-        )
-
-        raw = _read_small(self.spark, f"{self.path}/.meta/_SCHEMA")
+        raw = self._fs.read_text(f"{self.path}/.meta/_SCHEMA")
         if not raw:
             return None
         try:
@@ -523,8 +535,8 @@ class KeyedTable:
         last row of a partition removes its leaf dir but can leave
         empty parent levels (create_year=...), so entry names alone
         can't answer this."""
-        fs, root_p = self._fs(self.path)
-        if not fs.exists(root_p):
+        fs = self._fs
+        if not fs.exists(self.path):
             return False
 
         def has_data(path) -> bool:
@@ -538,17 +550,15 @@ class KeyedTable:
                     return True
             return False
 
-        return not has_data(root_p)
+        return not has_data(self.path)
 
     def _empty_from_retired(self) -> DataFrame | None:
         """Zero-row frame with the table's schema, recovered from the
         newest retired snapshot copy; None when no history has data
         (nothing to borrow a schema from)."""
-        fs = self._fs(self.path)[0]
         for j in reversed(self.versions()):
             rr = f"{self.path}/.retired/v{j}"
-            _, rp = self._fs(rr)
-            if fs.exists(rp) and fs.listStatus(rp):
+            if self._fs.exists(rr) and self._fs.listStatus(rr):
                 return (
                     self.spark.read.option("mergeSchema", "true")
                     .option("basePath", rr)
@@ -631,13 +641,13 @@ class KeyedTable:
             # Snapshot history from a previous incarnation no longer
             # describes this data (static overwrite usually cleared it
             # with the path; be explicit in case of scheme quirks).
-            self._fs_delete(f"{self.path}/.meta")
-            self._fs_delete(f"{self.path}/.retired")
+            self._fs.delete(f"{self.path}/.meta", True)
+            self._fs.delete(f"{self.path}/.retired", True)
         # Deletion vectors of a previous incarnation reference files
         # the reset destroyed; a surviving v{j} dir would mask nothing
         # (fresh basenames) but could shadow a FUTURE commit j's
         # vector name — wipe unconditionally.
-        self._fs_delete(f"{self.path}/.dv")
+        self._fs.delete(f"{self.path}/.dv", True)
         if cons:
             self._write_constraints(cons)  # re-persist past the wipe
         # Token AFTER the table reset (the overwrite clears .meta with
@@ -658,13 +668,7 @@ class KeyedTable:
         # needs no marker and an unversioned table must not grow
         # .meta debris (pinned by tests).
         if self.partition_cols and not self._has_data_files():
-            from rds_to_datalake_project_spark.operators.zonemap import (
-                _write_small,
-            )
-
-            _write_small(
-                self.spark, f"{self.path}/.meta/_SCHEMA", out.schema.json()
-            )
+            self._fs.write_text(f"{self.path}/.meta/_SCHEMA", out.schema.json())
         # Incarnation token: initial_load is a TABLE RESET, and commit
         # versions restart at 0 — derived state living OUTSIDE the
         # table path (externally-stored matviews, the changes feed)
@@ -676,25 +680,14 @@ class KeyedTable:
         self._run_maintenance()
 
     def _write_incarnation(self) -> None:
-        fs, meta_dir = self._fs(f"{self.path}/.meta")
-        fs.mkdirs(meta_dir)
-        _, tmp_p = self._fs(f"{self.path}/.meta/._INCARNATION.tmp")
-        out = fs.create(tmp_p, True)
-        out.write(uuid.uuid4().hex.encode("utf-8"))
-        out.close()
-        _, p = self._fs(f"{self.path}/.meta/_INCARNATION")
-        fs.delete(p, True)
-        self._rename(fs, tmp_p, p)
+        self._fs.publish_text(f"{self.path}/.meta/_INCARNATION", uuid.uuid4().hex)
 
     def incarnation(self) -> str | None:
         """Uuid minted by the LAST initial_load (None on legacy or
         unversioned tables). Derived state stored outside the table
         path records it and full-rebuilds on mismatch — commit version
         numbers alone cannot distinguish a reset from progress."""
-        fs, p = self._fs(f"{self.path}/.meta/_INCARNATION")
-        if not fs.exists(p):
-            return None
-        return self._read_flag_text(f"{self.path}/.meta/_INCARNATION").strip() or None
+        return self._read_marker(f"{self.path}/.meta/_INCARNATION")
 
     # -- S9: incremental upsert (the MERGE) -----------------------------------
 
@@ -850,7 +843,7 @@ class KeyedTable:
             # snapshot. Any other read failure (or an unchanged token,
             # i.e. genuinely missing data) propagates.
             if _is_vanished_file_error(exc) and self.commit_token() != base_token:
-                self._fs_delete(staging)
+                self._fs.delete(staging, True)
                 return False
             raise
         if self.partition_cols:
@@ -868,8 +861,7 @@ class KeyedTable:
             )
             for rel in touched_rels:
                 if rel not in staged_set:
-                    fs, p = self._fs(f"{staging}/{rel}")
-                    fs.mkdirs(p)
+                    self._fs.mkdirs(f"{staging}/{rel}")
         # Flag the staged write as complete. Staging WITHOUT this flag
         # is a dead half-written job output (safe to discard); staging
         # WITH it is a committed merge that recover() must publish.
@@ -893,24 +885,15 @@ class KeyedTable:
         TABLE, not of one pipeline — any handle, any writer."""
         import json as _json
 
-        from rds_to_datalake_project_spark.operators.zonemap import (
-            _read_small,
-        )
-
-        raw = _read_small(self.spark, f"{self.path}/.meta/_CONSTRAINTS")
+        raw = self._fs.read_text(f"{self.path}/.meta/_CONSTRAINTS")
         return _json.loads(raw) if raw else {}
 
     def _write_constraints(self, cons: dict[str, str]) -> None:
         import json as _json
 
-        fs, tmp = self._fs(f"{self.path}/.meta/._CONSTRAINTS.tmp")
-        fs.mkdirs(self._fs(f"{self.path}/.meta")[1])
-        out = fs.create(tmp, True)
-        out.write(_json.dumps(cons, sort_keys=True).encode("utf-8"))
-        out.close()
-        _, dst = self._fs(f"{self.path}/.meta/_CONSTRAINTS")
-        fs.delete(dst, True)
-        self._rename(fs, tmp, dst)
+        self._fs.publish_text(
+            f"{self.path}/.meta/_CONSTRAINTS", _json.dumps(cons, sort_keys=True)
+        )
 
     def add_constraint(self, name: str, check_expr: str) -> None:
         """Add CHECK constraint ``name``: existing rows are validated
@@ -1026,13 +1009,11 @@ class KeyedTable:
         base_v = base_stamp["version"]
         if latest < base_v:
             return False
-        fs = self._fs(self.path)[0]
-        jvm = self.spark._jvm
         for j in self.versions():
             if j <= base_v:
                 continue
             flag = f"{self.path}/.meta/v{j}.flag"
-            if not fs.exists(jvm.org.apache.hadoop.fs.Path(flag)):
+            if not self._fs.exists(flag):
                 return False
             meta = self._flag_meta(flag)
             touched = set(meta["created"]) | set(self._retired_rels(j))
@@ -1075,30 +1056,22 @@ class KeyedTable:
         staged_rels = None
         with self._commit_lock():
             if self.commit_token() != base_token:
-                fs, stage_p = self._fs(staging)
-                if not fs.exists(stage_p):
+                if not self._fs.exists(staging):
                     # an intervening initial_load reset the table and
                     # its static overwrite ate our staging with it —
                     # a plain lost race, nothing to clean up
                     return False
                 if self.partition_cols:
                     staged_rels = set(self._staged_partition_dirs(staging))
-                    fs, dvr = self._fs(f"{staging}/.dv_rels")
-                    if fs.exists(dvr):
-                        staged_rels |= {
-                            r
-                            for r in self._read_flag_text(
-                                f"{staging}/.dv_rels"
-                            ).split("\t")
-                            if r
-                        }
+                    dv_rels = self._fs.read_text(f"{staging}/.dv_rels")
+                    staged_rels |= {r for r in (dv_rels or "").split("\t") if r}
                     staged_rels |= {
                         p.rsplit("/", 1)[0]
                         for p in self._staged_append_files(staging)
                         if "/" in p
                     }
                 if not self._disjoint_since(base_stamp, staged_rels or set()):
-                    self._fs_delete(staging)
+                    self._fs.delete(staging, True)
                     return False
                 self._fault("disjoint_commit")
             # Bake the CURRENT token (== base_token in the no-conflict
@@ -1127,15 +1100,14 @@ class KeyedTable:
             plan_target_files,
         )
 
-        fs = self._fs(self.path)[0]
+        fs = self._fs
 
         def _dir_bytes(path: str) -> int:
-            _, p = self._fs(path)
-            if not fs.exists(p):
+            if not fs.exists(path):
                 return 0
             return sum(
                 st.getLen()
-                for st in fs.listStatus(p)
+                for st in fs.listStatus(path)
                 if not st.isDirectory()
                 and not st.getPath().getName().startswith((".", "_"))
             )
@@ -1197,15 +1169,15 @@ class KeyedTable:
         commit mutex this scan also holds). Runs automatically at the
         start of every upsert. Returns True if anything was repaired.
         """
-        fs, root = self._fs(self.path)
-        if not fs.exists(root):
+        fs = self._fs
+        if not fs.exists(self.path):
             return False
 
         def stagings():
             return [
                 st
                 for st in sorted(
-                    fs.listStatus(root), key=lambda s: s.getPath().getName()
+                    fs.listStatus(self.path), key=lambda s: s.getPath().getName()
                 )
                 if st.getPath().getName().startswith(".staging-")
             ]
@@ -1216,7 +1188,7 @@ class KeyedTable:
                 for st in stagings():
                     name = st.getPath().getName()
                     staging = f"{self.path}/{name}"
-                    if fs.exists(self._fs(f"{staging}/{_READY_FLAG}")[1]):
+                    if fs.exists(f"{staging}/{_READY_FLAG}"):
                         meta = self._flag_meta(f"{staging}/{_READY_FLAG}")
                         if "base_token" in meta and (
                             (meta["base_token"] or None) != self.commit_token()
@@ -1226,7 +1198,7 @@ class KeyedTable:
                                 "against a superseded snapshot)",
                                 staging,
                             )
-                            self._fs_delete(staging)
+                            self._fs.delete(staging, True)
                         else:
                             self._publish_under_lock(staging)
                     else:
@@ -1235,7 +1207,7 @@ class KeyedTable:
                         )
                         if age_ms < self.orphan_staging_grace_s * 1000:
                             continue  # presumed in-flight peer write
-                        self._fs_delete(staging)
+                        self._fs.delete(staging, True)
                     repaired = True
         if repaired:
             self._run_maintenance()
@@ -1257,7 +1229,8 @@ class KeyedTable:
             # always ride a flagged staging handled above
             return False
         latest = (self.versions() or [0])[-1]
-        fs, retired_root = self._fs(f"{self.path}/.retired")
+        fs = self._fs
+        retired_root = f"{self.path}/.retired"
         if not fs.exists(retired_root):
             return False
         rolled = False
@@ -1270,16 +1243,15 @@ class KeyedTable:
                 continue
             vdir = f"{self.path}/.retired/{name}"
             for rel in self._staged_partition_dirs(vdir):
-                _, src_p = self._fs(f"{vdir}/{rel}")
-                _, dst_p = self._fs(f"{self.path}/{rel}")
-                if fs.exists(dst_p):
+                src, dst = f"{vdir}/{rel}", f"{self.path}/{rel}"
+                if fs.exists(dst):
                     # live dir reappeared (should not happen for a
                     # drop-in-flight) — keep live, discard the copy
-                    fs.delete(src_p, True)
+                    fs.delete(src, True)
                 else:
-                    fs.mkdirs(dst_p.getParent())
-                    self._rename(fs, src_p, dst_p)
-            fs.delete(self._fs(vdir)[1], True)
+                    fs.mkdirs(os.path.dirname(dst))
+                    self._rename(fs, src, dst)
+            fs.delete(vdir, True)
             rolled = True
         return rolled
 
@@ -1313,14 +1285,14 @@ class KeyedTable:
             # rename into .dv/ under its flag-assigned permanent name.
             # Idempotent re-entry (recover() after a crash): target
             # already present → the staged copy is a leftover.
-            fs, dv_staged = self._fs(f"{staging}/{_STAGED_DV_NAME}")
-            _, dv_dest = self._fs(f"{self.path}/.dv/{dv_target}")
+            fs = self._fs
+            dv_staged = f"{staging}/{_STAGED_DV_NAME}"
+            dv_dest = f"{self.path}/.dv/{dv_target}"
             if fs.exists(dv_staged):
                 if fs.exists(dv_dest):
                     fs.delete(dv_staged, True)
                 else:
-                    _, dv_root_p = self._fs(f"{self.path}/.dv")
-                    fs.mkdirs(dv_root_p)
+                    fs.mkdirs(f"{self.path}/.dv")
                     self._rename(fs, dv_staged, dv_dest)
             self._fault("dv_published")
         appended = [p for p in meta.get("appended", "").split("\t") if p]
@@ -1329,22 +1301,17 @@ class KeyedTable:
             # (fresh basenames — collision-free). Idempotent re-entry:
             # a file already at its destination was moved by a prior
             # attempt; one absent from staging too is simply done.
-            fs = self._fs(self.path)[0]
-            jvm = self.spark._jvm
+            fs = self._fs
             for relfile in appended:
-                src_p = jvm.org.apache.hadoop.fs.Path(
-                    f"{staging}/{_STAGED_APPEND_NAME}/{relfile}"
-                )
-                dst_p = jvm.org.apache.hadoop.fs.Path(
-                    f"{self.path}/{relfile}"
-                )
-                if not fs.exists(src_p):
+                src = f"{staging}/{_STAGED_APPEND_NAME}/{relfile}"
+                dst = f"{self.path}/{relfile}"
+                if not fs.exists(src):
                     continue
-                if fs.exists(dst_p):
-                    fs.delete(src_p, True)
+                if fs.exists(dst):
+                    fs.delete(src, True)
                     continue
-                fs.mkdirs(dst_p.getParent())
-                self._rename(fs, src_p, dst_p)
+                fs.mkdirs(os.path.dirname(dst))
+                self._rename(fs, src, dst)
             self._fault("appends_published")
         if self.partition_cols:
             rels = self._staged_partition_dirs(staging)
@@ -1384,11 +1351,11 @@ class KeyedTable:
             # holding no data and discards it (the half-published
             # state a flagged staging exists to prevent is impossible
             # here).
-            fs, meta_dir = self._fs(f"{self.path}/.meta")
-            fs.mkdirs(meta_dir)
-            _, rec_p = self._fs(f"{self.path}/.meta/v{version}.flag")
-            fs.delete(rec_p, True)  # re-entry leftovers
-            self._rename(fs, self._fs(f"{staging}/{_READY_FLAG}")[1], rec_p)
+            fs = self._fs
+            fs.mkdirs(f"{self.path}/.meta")
+            rec = f"{self.path}/.meta/v{version}.flag"
+            fs.delete(rec, True)  # re-entry leftovers
+            self._rename(fs, f"{staging}/{_READY_FLAG}", rec)
             self._fault("meta_committed")
         # Advance the commit token: from here on, any staged merge
         # recorded against the previous snapshot is refused. A crash
@@ -1396,7 +1363,7 @@ class KeyedTable:
         # finishes this publish (idempotent swaps); a crash AFTER it
         # leaves a consumed staging that recover() discards.
         self._write_commit_token()
-        self._fs_delete(staging)
+        self._fs.delete(staging, True)
         self._fault("staging_deleted")
         self._sweep_asides(version)
         if version is not None and self.retain_versions:
@@ -1466,30 +1433,21 @@ class KeyedTable:
         record — tmp + rename so readers never see a torn file; a
         clean run deletes the record (stale errors don't outlive the
         run that healed them)."""
-        fs, p = self._fs(f"{self.path}/.meta/_MAINT_ERRORS")
+        p = f"{self.path}/.meta/_MAINT_ERRORS"
         if not failures:
-            fs.delete(p, True)
+            self._fs.delete(p, True)
             return
-        fs, meta_dir = self._fs(f"{self.path}/.meta")
-        fs.mkdirs(meta_dir)
         payload = json.dumps(
             {"version": (self.versions() or [0])[-1], "failures": failures}
         )
-        _, tmp_p = self._fs(f"{self.path}/.meta/._MAINT_ERRORS.tmp")
-        out = fs.create(tmp_p, True)
-        out.write(payload.encode("utf-8"))
-        out.close()
-        fs.delete(p, True)
-        self._rename(fs, tmp_p, p)
+        self._fs.publish_text(p, payload)
 
     def _read_maint_errors(self) -> dict | None:
-        fs, p = self._fs(f"{self.path}/.meta/_MAINT_ERRORS")
-        if not fs.exists(p):
+        raw = self._fs.read_text(f"{self.path}/.meta/_MAINT_ERRORS")
+        if raw is None:
             return None
         try:
-            return json.loads(
-                self._read_flag_text(f"{self.path}/.meta/_MAINT_ERRORS")
-            )
+            return json.loads(raw)
         except ValueError:
             return None
 
@@ -1523,10 +1481,7 @@ class KeyedTable:
     # STALE, never fresher than the tree.
 
     def _read_seq(self) -> str | None:
-        fs, p = self._fs(f"{self.path}/.meta/_SEQ")
-        if not fs.exists(p):
-            return None
-        return self._read_flag_text(f"{self.path}/.meta/_SEQ").strip() or None
+        return self._read_marker(f"{self.path}/.meta/_SEQ")
 
     def _bump_seq(self) -> None:
         # Unversioned plain tables (retain_versions=0, no zone-map
@@ -1536,15 +1491,7 @@ class KeyedTable:
         # manifest" state, so skip the token entirely for them.
         if not (self.retain_versions or self.zonemap_columns):
             return
-        fs, meta_dir = self._fs(f"{self.path}/.meta")
-        fs.mkdirs(meta_dir)
-        _, tmp_p = self._fs(f"{self.path}/.meta/._SEQ.tmp")
-        out = fs.create(tmp_p, True)
-        out.write(uuid.uuid4().hex.encode("utf-8"))
-        out.close()
-        _, seq_p = self._fs(f"{self.path}/.meta/_SEQ")
-        fs.delete(seq_p, True)
-        self._rename(fs, tmp_p, seq_p)
+        self._fs.publish_text(f"{self.path}/.meta/_SEQ", uuid.uuid4().hex)
 
     # -- multi-writer safety (optimistic concurrency) -------------------------
     #
@@ -1565,11 +1512,12 @@ class KeyedTable:
     #     run OUTSIDE the mutex, so concurrent writers pipeline their
     #     expensive work and serialize only the metadata swaps).
     #
-    # The mutex is an exclusive-create lock file. On HDFS/object-store
-    # paths create(overwrite=false) arbitrates at the
-    # NameNode/metadata layer; on local paths O_CREAT|O_EXCL is the
-    # atomic primitive (Hadoop's LocalFileSystem emulates exclusive
-    # create with a non-atomic exists()+create). Abandoned locks (the
+    # The mutex is an exclusive-create lock file: create(overwrite=
+    # false) on the table's fsio handle. On HDFS/object-store paths it
+    # arbitrates at the NameNode/metadata layer; on local paths the
+    # native handle opens with O_CREAT|O_EXCL (Hadoop's LocalFileSystem,
+    # reached through file: URIs, emulates exclusive create with a
+    # non-atomic exists()+create). Abandoned locks (the
     # holding process died inside the critical section) are broken
     # after ``lock_ttl_s`` by age; an in-process failure releases in
     # ``finally``. Token equality (not ordering) is the correctness
@@ -1582,41 +1530,17 @@ class KeyedTable:
         (None on legacy tables that predate the concurrency protocol
         — compared leniently so their staged publishes still
         complete)."""
-        fs, p = self._fs(f"{self.path}/{_TOKEN_FILE}")
-        if not fs.exists(p):
-            return None
-        return self._read_flag_text(f"{self.path}/{_TOKEN_FILE}").strip() or None
+        return self._read_marker(f"{self.path}/{_TOKEN_FILE}")
 
     @_invalidates
     def _write_commit_token(self) -> None:
-        fs, tmp_p = self._fs(f"{self.path}/{_TOKEN_FILE}.tmp")
-        out = fs.create(tmp_p, True)
-        out.write(uuid.uuid4().hex.encode("utf-8"))
-        out.close()
-        _, p = self._fs(f"{self.path}/{_TOKEN_FILE}")
-        fs.delete(p, True)
-        self._rename(fs, tmp_p, p)
-
-    def _lock_is_local(self) -> bool:
-        return "://" not in self.path and not self.path.startswith("file:")
+        self._fs.publish_text(f"{self.path}/{_TOKEN_FILE}", uuid.uuid4().hex)
 
     def _try_lock_create(self, holder: str) -> bool:
         """One atomic exclusive-create attempt on the lock file."""
-        lock = f"{self.path}/{_LOCK_FILE}"
-        if self._lock_is_local():
-            try:
-                fd = os.open(lock, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
-            except FileExistsError:
-                return False
-            try:
-                os.write(fd, holder.encode("utf-8"))
-            finally:
-                os.close(fd)
-            return True
-        fs, p = self._fs(lock)
         try:
-            out = fs.create(p, False)  # FileAlreadyExists → py4j error
-        except Exception:
+            out = self._fs.create(f"{self.path}/{_LOCK_FILE}", False)
+        except FileExistsError:
             return False
         out.write(holder.encode("utf-8"))
         out.close()
@@ -1625,12 +1549,8 @@ class KeyedTable:
     def _lock_age_ms(self) -> float | None:
         """Lock file age (None if it vanished — retry the create)."""
         try:
-            if self._lock_is_local():
-                mtime = os.path.getmtime(f"{self.path}/{_LOCK_FILE}") * 1000
-            else:
-                fs, p = self._fs(f"{self.path}/{_LOCK_FILE}")
-                mtime = fs.getFileStatus(p).getModificationTime()
-            return time.time() * 1000 - mtime
+            st = self._fs.getFileStatus(f"{self.path}/{_LOCK_FILE}")
+            return time.time() * 1000 - st.getModificationTime()
         except Exception:
             return None
 
@@ -1652,10 +1572,7 @@ class KeyedTable:
                     age / 1000,
                 )
                 try:
-                    if self._lock_is_local():
-                        os.unlink(f"{self.path}/{_LOCK_FILE}")
-                    else:
-                        self._fs_delete(f"{self.path}/{_LOCK_FILE}")
+                    self._fs.delete(f"{self.path}/{_LOCK_FILE}")
                 except Exception:
                     pass
                 continue
@@ -1674,18 +1591,8 @@ class KeyedTable:
         release THEIR lock."""
         lock = f"{self.path}/{_LOCK_FILE}"
         try:
-            if self._lock_is_local():
-                with open(lock, "rb") as f:
-                    mine = f.read().decode("utf-8") == holder
-                if mine:
-                    os.unlink(lock)
-            else:
-                fs, p = self._fs(lock)
-                if (
-                    fs.exists(p)
-                    and self._read_flag_text(lock).strip() == holder
-                ):
-                    fs.delete(p, False)
+            if self._fs.read_text(lock) == holder:
+                self._fs.delete(lock)
         except Exception:
             pass  # lock vanished (broken by a waiter) — nothing to release
 
@@ -1732,8 +1639,7 @@ class KeyedTable:
             _index_dir as _bloom_dir,
         )
 
-        fs, bloom_p = self._fs(_bloom_dir(self.path))
-        if not fs.exists(bloom_p):
+        if not self._fs.exists(_bloom_dir(self.path)):
             return self.read_where({key_col: (key_value, key_value)})
         return self._indexed_read(
             [key_value], F.col(key_col) == F.lit(key_value)
@@ -1952,20 +1858,19 @@ class KeyedTable:
         empty shell is removed."""
         self._swap_dir(f"{staging}/{rel}", f"{self.path}/{rel}", rel, retire_version)
         dst = f"{self.path}/{rel}"
-        fs, dst_p = self._fs(dst)
         if not any(
             not s.getPath().getName().startswith((".", "_"))
-            for s in fs.listStatus(dst_p)
+            for s in self._fs.listStatus(dst)
         ):
-            fs.delete(dst_p, True)
+            self._fs.delete(dst, True)
         self._fault("partition_published")
 
     def _staged_append_files(self, staging: str) -> list[str]:
         """``rel/file`` paths (relative to the table root) of a staged
         MOR-update append set; [] when the staging has none."""
         root = f"{staging}/{_STAGED_APPEND_NAME}"
-        fs, p = self._fs(root)
-        if not fs.exists(p):
+        fs = self._fs
+        if not fs.exists(root):
             return []
         out: list[str] = []
 
@@ -1980,7 +1885,7 @@ class KeyedTable:
                 elif name.endswith(".parquet"):
                     out.append(sub)
 
-        walk(p, "")
+        walk(root, "")
         return sorted(out)
 
     def _write_ready_flag(self, staging: str, base_token=_UNSET) -> None:
@@ -1994,23 +1899,20 @@ class KeyedTable:
         committed or discardable. Everything recovery needs to finish
         (or attribute) this publish is in the flag, so re-entry never
         recomputes commit state."""
-        fs, stage_p = self._fs(staging)
+        fs = self._fs
         names = [
             st.getPath().getName()
-            for st in fs.listStatus(stage_p)
+            for st in fs.listStatus(staging)
             if not st.getPath().getName().startswith((".", "_"))
             and not st.isDirectory()
         ]
         lines = []
         if self.retain_versions:
             version = (self.versions() or [0])[-1] + 1
-            jvm = self.spark._jvm
             created = [
                 rel
                 for rel in self._staged_partition_dirs(staging)
-                if not fs.exists(
-                    jvm.org.apache.hadoop.fs.Path(f"{self.path}/{rel}")
-                )
+                if not fs.exists(f"{self.path}/{rel}")
             ]
             lines.append(f"#version={version}")
             lines.append("#created=" + "\t".join(sorted(created)))
@@ -2021,10 +1923,7 @@ class KeyedTable:
             # past it; a flag WITHOUT this line (legacy staging)
             # publishes unconditionally, preserving old semantics.
             lines.append("#base_token=" + (base_token or ""))
-        jvm = self.spark._jvm
-        if fs.exists(
-            jvm.org.apache.hadoop.fs.Path(f"{staging}/{_STAGED_DV_NAME}")
-        ):
+        if fs.exists(f"{staging}/{_STAGED_DV_NAME}"):
             # Deletion-vector commit: the staged vector's PERMANENT
             # name is assigned here (v{version} so snapshot reads can
             # scope the mask by commit; a random d-name on unversioned
@@ -2037,15 +1936,11 @@ class KeyedTable:
                 else f"d{uuid.uuid4().hex}"
             )
             lines.append("#dv_target=" + target)
-            if fs.exists(
-                jvm.org.apache.hadoop.fs.Path(f"{staging}/.dv_rels")
-            ):
+            dv_rels = fs.read_text(f"{staging}/.dv_rels")
+            if dv_rels is not None:
                 # the partitions this vector masks rows in — what a
                 # later writer's disjointness check must intersect
-                lines.append(
-                    "#dv_rels="
-                    + self._read_flag_text(f"{staging}/.dv_rels")
-                )
+                lines.append("#dv_rels=" + dv_rels)
         appended = self._staged_append_files(staging)
         if appended:
             # MOR-update append set: publish renames each file into
@@ -2053,29 +1948,17 @@ class KeyedTable:
             # exactly these basenames (unique per write job).
             lines.append("#appended=" + "\t".join(appended))
         lines.extend(sorted(names))
-        _, tmp_p = self._fs(f"{staging}/.{_READY_FLAG}.tmp")
-        out = fs.create(tmp_p, True)
-        data = "\n".join(lines).encode("utf-8")
-        if data:
-            out.write(data)
-        out.close()
-        _, flag_p = self._fs(f"{staging}/{_READY_FLAG}")
-        self._rename(fs, tmp_p, flag_p)
+        fs.publish_text(f"{staging}/{_READY_FLAG}", "\n".join(lines))
+
+    def _read_marker(self, path: str) -> str | None:
+        """A marker file's stripped text; None when absent or empty."""
+        return (self._fs.read_text(path) or "").strip() or None
 
     def _read_flag_text(self, flag_path: str) -> str:
-        if fsio.is_local(flag_path):
-            text = fsio.read_text(self.spark, flag_path)
-            if text is None:
-                raise IOError(f"not found: {flag_path}")
-            return text
-        fs, flag_p = self._fs(flag_path)
-        stream = fs.open(flag_p)
-        try:
-            return self.spark._jvm.org.apache.commons.io.IOUtils.toString(
-                stream, "UTF-8"
-            )
-        finally:
-            stream.close()
+        text = self._fs.read_text(flag_path)
+        if text is None:
+            raise IOError(f"not found: {flag_path}")
+        return text
 
     def _read_manifest(self, staging: str) -> set[str]:
         """The committed staged-file-name set from the ready flag."""
@@ -2100,11 +1983,11 @@ class KeyedTable:
         """Committed snapshot versions, ascending (0, the initial-load
         state, is implicit and not listed). NOT the readable set once
         vacuuming has run — use ``readable_versions()`` for that."""
-        fs, meta_p = self._fs(f"{self.path}/.meta")
-        if not fs.exists(meta_p):
+        meta = f"{self.path}/.meta"
+        if not self._fs.exists(meta):
             return []
         out = []
-        for st in fs.listStatus(meta_p):
+        for st in self._fs.listStatus(meta):
             n = st.getPath().getName()
             if n.startswith("v") and n.endswith(".flag"):
                 out.append(int(n[1 : -len(".flag")]))
@@ -2115,10 +1998,7 @@ class KeyedTable:
         a vacuum expires history; after one, the persisted ``_FLOOR``
         marker (written BEFORE anything is deleted, so a crashed
         vacuum can only ever be conservative)."""
-        fs, p = self._fs(f"{self.path}/.meta/_FLOOR")
-        if not fs.exists(p):
-            return 0
-        return int(self._read_flag_text(f"{self.path}/.meta/_FLOOR").strip() or 0)
+        return int(self._read_marker(f"{self.path}/.meta/_FLOOR") or 0)
 
     def readable_versions(self) -> list[int]:
         """Snapshot versions ``read_as_of`` will serve EXACTLY —
@@ -2308,13 +2188,10 @@ class KeyedTable:
             parsed = parsed.replace(tzinfo=_dt.timezone.utc)
         ts_ms = parsed.timestamp() * 1000
 
-        fs = self._fs(self.path)[0]
-
         def _mtime(path: str) -> float | None:
-            _, p = self._fs(path)
-            if not fs.exists(p):
+            if not self._fs.exists(path):
                 return None
-            return fs.getFileStatus(p).getModificationTime()
+            return self._fs.getFileStatus(path).getModificationTime()
 
         best = None
         t0 = _mtime(f"{self.path}/.meta/_INCARNATION")
@@ -2372,8 +2249,8 @@ class KeyedTable:
             staged_set = set(self._staged_partition_dirs(staging))
             for rel in self._staged_partition_dirs(self.path):
                 if rel not in staged_set:
-                    fs, p = self._fs(f"{staging}/{rel}")
-                    fs.mkdirs(p)  # live but absent at `version` → retire
+                    # live but absent at `version` → retire
+                    self._fs.mkdirs(f"{staging}/{rel}")
         if not self._commit_staging(staging, base_token):
             raise ConcurrentWriteError(
                 f"a commit landed on {self.path} while the restore "
@@ -2392,10 +2269,9 @@ class KeyedTable:
         if not later:
             return self.read()  # read() handles the emptied-table case
         root = f"{self.path}/.retired/v{later[0]}"
-        fs, p = self._fs(root)
-        has_files = fs.exists(p) and any(
+        has_files = self._fs.exists(root) and any(
             not st.getPath().getName().startswith((".", "_"))
-            for st in fs.listStatus(p)
+            for st in self._fs.listStatus(root)
         )
         if not has_files:  # the table was empty at that version
             return self.read().limit(0)
@@ -2524,7 +2400,7 @@ class KeyedTable:
         # caller acts on must be the number the mask will apply).
         n = staged.count()
         if n == 0:
-            self._fs_delete(staging)
+            self._fs.delete(staging, True)
             return 0
         if self.partition_cols:
             # The partitions this vector masks rows in — a DV commit
@@ -2542,10 +2418,7 @@ class KeyedTable:
                     .collect()
                 }
             )
-            fs, p = self._fs(f"{staging}/.dv_rels")
-            out = fs.create(p, True)
-            out.write("\t".join(rels).encode("utf-8"))
-            out.close()
+            self._fs.write_text(f"{staging}/.dv_rels", "\t".join(rels))
         self._fault("dv_staged")
         ok = self._commit_staging(staging, base_token, base_stamp=base_stamp)
         return n if ok else None
@@ -2630,7 +2503,7 @@ class KeyedTable:
                     dv.write_fold_floor(self.spark, self.path, floor)
                 else:
                     for d in dirs:
-                        self._fs_delete(d["path"])
+                        self._fs.delete(d["path"], True)
                 out.update(
                     folded_dirs=len(dirs),
                     rows=n_rows,
@@ -2661,8 +2534,7 @@ class KeyedTable:
             staged_set = set(self._staged_partition_dirs(staging))
             for rel in touched_rels:
                 if rel not in staged_set:
-                    fs, p = self._fs(f"{staging}/{rel}")
-                    fs.mkdirs(p)
+                    self._fs.mkdirs(f"{staging}/{rel}")
         return self._commit_staging(staging, base_token)
 
     def _validate_assignments(self, assignments: dict) -> None:
@@ -2793,7 +2665,7 @@ class KeyedTable:
             staged = self.spark.read.parquet(f"{staging}/{_STAGED_DV_NAME}")
             n = staged.count()
             if n == 0:
-                self._fs_delete(staging)
+                self._fs.delete(staging, True)
                 return 0
             if self.partition_cols:
                 rels = sorted(
@@ -2806,10 +2678,7 @@ class KeyedTable:
                         .collect()
                     }
                 )
-                fs, p = self._fs(f"{staging}/.dv_rels")
-                out = fs.create(p, True)
-                out.write("\t".join(rels).encode("utf-8"))
-                out.close()
+                self._fs.write_text(f"{staging}/.dv_rels", "\t".join(rels))
             writer = self._assigned(
                 rows, assignments, data_cols
             ).write.mode("overwrite")
@@ -2878,28 +2747,17 @@ class KeyedTable:
             # unaffected (reconstruction only ever looks backwards).
             latest = (self.versions() or [0])[-1]
             self._write_floor(latest)
-            self._fs_delete(f"{self.path}/.retired")
+            self._fs.delete(f"{self.path}/.retired", True)
         if self.changes_feed_dir:
             feed = self.changes_feed_dir
-            jvm = self.spark._jvm
-            root = jvm.org.apache.hadoop.fs.Path(feed)
-            fs = root.getFileSystem(self.spark._jsc.hadoopConfiguration())
-            if fs.exists(root):
-                versions = sorted(
-                    int(st.getPath().getName()[1:])
-                    for st in fs.listStatus(root)
-                    if st.isDirectory()
-                    and st.getPath().getName().startswith("v")
-                    and st.getPath().getName()[1:].isdigit()
-                )
-                if versions:
-                    # floor FIRST (crash posture of vacuum_changes_feed),
-                    # then drop every batch including the delete's own
-                    self._write_feed_floor(feed, max(versions))
-                    for v in versions:
-                        fs.delete(
-                            jvm.org.apache.hadoop.fs.Path(f"{feed}/v{v}"), True
-                        )
+            fs = fsio.fs_for(self.spark, feed)
+            versions = _feed_batch_versions(fs, feed)
+            if versions:
+                # floor FIRST (crash posture of vacuum_changes_feed),
+                # then drop every batch including the delete's own
+                self._write_feed_floor(feed, max(versions))
+                for v in versions:
+                    fs.delete(f"{feed}/v{v}", True)
         return n
 
     # -- history-preserving purge ---------------------------------------------
@@ -2960,8 +2818,7 @@ class KeyedTable:
         return n
 
     def _finish_pending_purge(self) -> None:
-        fs, p = self._fs(f"{self.path}/{self._PURGE_PENDING}")
-        if fs.exists(p):
+        if self._fs.exists(f"{self.path}/{self._PURGE_PENDING}"):
             self._purge_by_pending_keys()
 
     def _purge_by_pending_keys(self) -> int:
@@ -2969,7 +2826,7 @@ class KeyedTable:
         pend = f"{self.path}/{self._PURGE_PENDING}"
         victims = self.spark.read.parquet(pend)
         if victims.isEmpty():
-            self._fs_delete(pend)
+            self._fs.delete(pend, True)
             return 0
         # 2. scrub existing history + feed batches (idempotent)
         self._scrub_history(victims, keys)
@@ -2991,7 +2848,7 @@ class KeyedTable:
         if n:
             self._scrub_history(victims, keys)
         # 5. done — drop the marker
-        self._fs_delete(pend)
+        self._fs.delete(pend, True)
         return n
 
     _PURGE_ASIDE = ".__purge-old-"
@@ -3014,18 +2871,14 @@ class KeyedTable:
         return sorted(names)
 
     def _scrub_history(self, victims: DataFrame, keys: list[str]) -> None:
-        fs, retired_p = self._fs(f"{self.path}/.retired")
-        if fs.exists(retired_p):
-            for name in self._scrub_targets(fs, retired_p):
-                self._scrub_dir(f"{self.path}/.retired/{name}", victims, keys)
+        roots = [f"{self.path}/.retired"]
         if self.changes_feed_dir:
-            feed = self.changes_feed_dir
-            jvm = self.spark._jvm
-            froot = jvm.org.apache.hadoop.fs.Path(feed)
-            ffs = froot.getFileSystem(self.spark._jsc.hadoopConfiguration())
-            if ffs.exists(froot):
-                for name in self._scrub_targets(ffs, froot):
-                    self._scrub_dir(f"{feed}/{name}", victims, keys)
+            roots.append(self.changes_feed_dir)
+        for root in roots:
+            fs = fsio.fs_for(self.spark, root)
+            if fs.exists(root):
+                for name in self._scrub_targets(fs, root):
+                    self._scrub_dir(f"{root}/{name}", victims, keys)
 
     def _scrub_dir(self, root: str, victims: DataFrame, keys: list[str]) -> None:
         """Rewrite one parquet dir minus the victim keys, crash-safe:
@@ -3034,26 +2887,21 @@ class KeyedTable:
         crash at any step converges (the aside is restored first when
         the root is missing), and dot-prefixed stage/aside names are
         invisible to every reader."""
-        jvm = self.spark._jvm
-        rp = jvm.org.apache.hadoop.fs.Path(root)
-        fs = rp.getFileSystem(self.spark._jsc.hadoopConfiguration())
-        parent = root.rsplit("/", 1)[0]
-        name = root.rsplit("/", 1)[1]
+        fs = fsio.fs_for(self.spark, root)
+        parent, name = root.rsplit("/", 1)
         aside = f"{parent}/{self._PURGE_ASIDE}{name}"
         stage = f"{parent}/{self._PURGE_STAGE}{name}"
-        ap = jvm.org.apache.hadoop.fs.Path(aside)
-        sp = jvm.org.apache.hadoop.fs.Path(stage)
-        if fs.exists(ap):
-            if fs.exists(rp):
-                fs.delete(ap, True)  # prior scrub completed its swap
+        if fs.exists(aside):
+            if fs.exists(root):
+                fs.delete(aside, True)  # prior scrub completed its swap
             else:
-                self._rename(fs, ap, rp)  # crashed mid-swap — restore
-        fs.delete(sp, True)
-        if not fs.exists(rp):
+                self._rename(fs, aside, root)  # crashed mid-swap — restore
+        fs.delete(stage, True)
+        if not fs.exists(root):
             return
         has_files = any(
             not st.getPath().getName().startswith((".", "_"))
-            for st in fs.listStatus(rp)
+            for st in fs.listStatus(root)
         )
         if not has_files:
             return
@@ -3064,9 +2912,9 @@ class KeyedTable:
         if part_cols:
             writer = writer.partitionBy(*part_cols)
         writer.parquet(stage)
-        self._rename(fs, rp, ap)
-        self._rename(fs, sp, rp)
-        fs.delete(ap, True)
+        self._rename(fs, root, aside)
+        self._rename(fs, stage, root)
+        fs.delete(aside, True)
 
     def describe_history(self) -> list[dict]:
         """Commit-log introspection (Delta ``DESCRIBE HISTORY``
@@ -3077,7 +2925,6 @@ class KeyedTable:
         retention policy)."""
         floor = self._read_floor()
         merr = self._read_maint_errors()
-        fs = self._fs(self.path)[0]
         out = []
         for v in self.versions():
             rec = f"{self.path}/.meta/v{v}.flag"
@@ -3088,8 +2935,8 @@ class KeyedTable:
                     "readable": v >= floor,
                     # the instant FOR TIMESTAMP AS OF resolves against
                     # (the commit record's mtime, epoch ms UTC)
-                    "commit_time_ms": fs.getFileStatus(
-                        self._fs(rec)[1]
+                    "commit_time_ms": self._fs.getFileStatus(
+                        rec
                     ).getModificationTime(),
                     "created_partitions": sorted(meta["created"]),
                     "retired_partitions": sorted(self._retired_rels(v)),
@@ -3235,14 +3082,12 @@ class KeyedTable:
         byte-identical at both endpoint snapshots."""
         if not self.partition_cols or not self.retain_versions:
             return None
-        fs = self._fs(self.path)[0]
-        jvm = self.spark._jvm
         out: set[str] = set()
         for j in self.versions():
             if j <= v_from or j > v_to:
                 continue
             flag = f"{self.path}/.meta/v{j}.flag"
-            if not fs.exists(jvm.org.apache.hadoop.fs.Path(flag)):
+            if not self._fs.exists(flag):
                 return None
             meta = self._flag_meta(flag)
             out |= set(meta["created"]) | set(self._retired_rels(j))
@@ -3269,16 +3114,8 @@ class KeyedTable:
         ``spark.readStream.parquet(feed_dir)`` consumer can tail (see
         tests/test_table_changes.py). Returns the versions written."""
         # feed_dir may live outside the table root — resolve its own
-        # FileSystem (native for local paths) instead of reusing the
-        # table-scoped handle
-        if fsio.is_local(feed_dir):
-            fs, mkpath = fsio.native_fs(), fsio.NativePath
-        else:
-            jvm = self.spark._jvm
-            mkpath = jvm.org.apache.hadoop.fs.Path
-            fs = mkpath(feed_dir).getFileSystem(
-                self.spark._jsc.hadoopConfiguration()
-            )
+        # handle instead of reusing the table-scoped one
+        fs = fsio.fs_for(self.spark, feed_dir)
         # Incarnation fence: the feed outlives a TABLE RESET, and the
         # _SUCCESS skip below would happily leave the OLD incarnation's
         # v1..vk batches in place while appending the new one's — a
@@ -3288,11 +3125,8 @@ class KeyedTable:
         inc = self.incarnation()
         if inc is not None:
             marker = f"{feed_dir}/_INCARNATION"
-            stored = (
-                self._read_flag_text(marker).strip()
-                if fs.exists(mkpath(marker))
-                else None
-            )
+            stored = fs.read_text(marker)
+            stored = stored.strip() if stored is not None else None
             if stored and stored != inc:
                 raise ValueError(
                     "changes feed belongs to a previous table incarnation "
@@ -3300,13 +3134,7 @@ class KeyedTable:
                     "and re-bootstrap its replicas"
                 )
             if stored != inc:
-                tmp_p = mkpath(f"{feed_dir}/._INCARNATION.tmp")
-                o = fs.create(tmp_p, True)
-                o.write(inc.encode("utf-8"))
-                o.close()
-                dst = mkpath(marker)
-                fs.delete(dst, True)
-                self._rename(fs, tmp_p, dst)
+                fs.publish_text(marker, inc)
         written = []
         floor = self._read_feed_floor(feed_dir)
         for v in self.readable_versions()[1:]:
@@ -3315,8 +3143,7 @@ class KeyedTable:
             # a batch counts as materialized only when its _SUCCESS
             # marker exists — a crash mid-write leaves a partial dir
             # that the next call must overwrite, never skip forever
-            done = mkpath(f"{feed_dir}/v{v}/_SUCCESS")
-            if fs.exists(done):
+            if fs.exists(f"{feed_dir}/v{v}/_SUCCESS"):
                 continue
             self.table_changes(v - 1, v).withColumn(
                 "_commit_version", F.lit(v)
@@ -3332,18 +3159,8 @@ class KeyedTable:
         oldest retained batch. Returns the versions deleted."""
         if keep_last < 1:
             raise ValueError("keep_last must be >= 1")
-        jvm = self.spark._jvm
-        root = jvm.org.apache.hadoop.fs.Path(feed_dir)
-        fs = root.getFileSystem(self.spark._jsc.hadoopConfiguration())
-        if not fs.exists(root):
-            return []
-        versions = sorted(
-            int(st.getPath().getName()[1:])
-            for st in fs.listStatus(root)
-            if st.isDirectory() and st.getPath().getName().startswith("v")
-            and st.getPath().getName()[1:].isdigit()
-        )
-        expired = versions[:-keep_last]
+        fs = fsio.fs_for(self.spark, feed_dir)
+        expired = _feed_batch_versions(fs, feed_dir)[:-keep_last]
         if expired:
             # Persist the retention floor BEFORE deleting anything —
             # the same crash posture as _write_floor for table
@@ -3355,22 +3172,15 @@ class KeyedTable:
             # source would re-deliver as duplicates.
             self._write_feed_floor(feed_dir, max(expired))
         for v in expired:
-            fs.delete(jvm.org.apache.hadoop.fs.Path(f"{feed_dir}/v{v}"), True)
+            fs.delete(f"{feed_dir}/v{v}", True)
         return expired
 
     def _write_feed_floor(self, feed_dir: str, floor: int) -> None:
         """Persist the feed retention floor (tmp + rename, monotonic)."""
         if floor <= self._read_feed_floor(feed_dir):
             return
-        jvm = self.spark._jvm
-        tmp = jvm.org.apache.hadoop.fs.Path(f"{feed_dir}/._floor.tmp")
-        fs = tmp.getFileSystem(self.spark._jsc.hadoopConfiguration())
-        out = fs.create(tmp, True)
-        out.write(str(floor).encode("utf-8"))
-        out.close()
-        dst = jvm.org.apache.hadoop.fs.Path(f"{feed_dir}/_floor")
-        fs.delete(dst, True)
-        self._rename(fs, tmp, dst)
+        fs = fsio.fs_for(self.spark, feed_dir)
+        fs.publish_text(f"{feed_dir}/_floor", str(floor))
 
     def _read_feed_floor(self, feed_dir: str) -> int:
         text = fsio.read_text(self.spark, f"{feed_dir}/_floor")
@@ -3380,15 +3190,7 @@ class KeyedTable:
         """Persist the retention floor (tmp + rename; monotonic)."""
         if floor <= self._read_floor():
             return
-        fs, meta_dir = self._fs(f"{self.path}/.meta")
-        fs.mkdirs(meta_dir)
-        _, tmp_p = self._fs(f"{self.path}/.meta/._FLOOR.tmp")
-        out = fs.create(tmp_p, True)
-        out.write(str(floor).encode("utf-8"))
-        out.close()
-        _, floor_p = self._fs(f"{self.path}/.meta/_FLOOR")
-        fs.delete(floor_p, True)
-        self._rename(fs, tmp_p, floor_p)
+        self._fs.publish_text(f"{self.path}/.meta/_FLOOR", str(floor))
 
     @_invalidates
     def vacuum_older_than(self, hours: float) -> int:
@@ -3406,11 +3208,10 @@ class KeyedTable:
         import time as _time
 
         horizon_ms = (_time.time() - hours * 3600.0) * 1000
-        fs = self._fs(self.path)[0]
-        jvm = self.spark._jvm
+        fs = self._fs
         fresh = 0
         for v in self.versions():
-            p = jvm.org.apache.hadoop.fs.Path(f"{self.path}/.meta/v{v}.flag")
+            p = f"{self.path}/.meta/v{v}.flag"
             if (
                 fs.exists(p)
                 and fs.getFileStatus(p).getModificationTime() >= horizon_ms
@@ -3438,8 +3239,8 @@ class KeyedTable:
         self._write_floor(expired[-1])
         self._fault("floor_written")
         for j in expired:
-            self._fs_delete(f"{self.path}/.retired/v{j}")
-            self._fs_delete(f"{self.path}/.meta/v{j}.flag")
+            self._fs.delete(f"{self.path}/.retired/v{j}", True)
+            self._fs.delete(f"{self.path}/.meta/v{j}.flag", True)
         # Deletion vectors below the fold floor exist only for
         # snapshot readers (their basenames left the live tree at the
         # fold commit). Once the retention floor reaches the fold, no
@@ -3452,24 +3253,23 @@ class KeyedTable:
         if fold and self._read_floor() >= fold:
             for d in _dv.list_dv_dirs(self.spark, self.path):
                 if d["version"] is not None and d["version"] < fold:
-                    self._fs_delete(d["path"])
+                    self._fs.delete(d["path"], True)
         return len(expired)
 
     def _retired_rels(self, version: int) -> list[str]:
         root = f"{self.path}/.retired/v{version}"
-        fs, p = self._fs(root)
-        return self._staged_partition_dirs(root) if fs.exists(p) else []
+        return self._staged_partition_dirs(root) if self._fs.exists(root) else []
 
     def _retire_aside(self, aside: str, rel: str, version: int) -> None:
         """Move a parked pre-publish partition copy into the snapshot
         store (one rename; parent dirs created as needed)."""
-        fs, aside_p = self._fs(aside)
-        if not fs.exists(aside_p):
+        fs = self._fs
+        if not fs.exists(aside):
             return
-        _, dst_p = self._fs(f"{self.path}/.retired/v{version}/{rel}")
-        fs.mkdirs(dst_p.getParent())
-        fs.delete(dst_p, True)  # re-entry leftovers from a crashed retire
-        self._rename(fs, aside_p, dst_p)
+        dst = f"{self.path}/.retired/v{version}/{rel}"
+        fs.mkdirs(os.path.dirname(dst))
+        fs.delete(dst, True)  # re-entry leftovers from a crashed retire
+        self._rename(fs, aside, dst)
         self._fault("aside_retired")
 
     def _partition_key_col(self):
@@ -3520,7 +3320,7 @@ class KeyedTable:
             with self._commit_lock():
                 self._bump_seq()  # live tree mutates — invalidate manifests
                 for rel in to_drop:
-                    self._fs_delete(f"{self.path}/{rel}")
+                    self._fs.delete(f"{self.path}/{rel}", True)
                 # A partition drop is a commit like any other: advance
                 # the token so a concurrent in-flight merge that read
                 # the dropped rows conflicts instead of resurrecting
@@ -3542,68 +3342,36 @@ class KeyedTable:
 
     def _vacuum_partitions_commit(self, to_drop: list[str]) -> None:
         self._bump_seq()  # live tree about to mutate — invalidate manifests
-        fs = self._fs(self.path)[0]
+        fs = self._fs
         version = (self.versions() or [0])[-1] + 1
         for rel in to_drop:
-            _, src_p = self._fs(f"{self.path}/{rel}")
-            _, dst_p = self._fs(f"{self.path}/.retired/v{version}/{rel}")
-            fs.mkdirs(dst_p.getParent())
-            fs.delete(dst_p, True)  # re-entry leftovers
-            self._rename(fs, src_p, dst_p)
+            dst = f"{self.path}/.retired/v{version}/{rel}"
+            fs.mkdirs(os.path.dirname(dst))
+            fs.delete(dst, True)  # re-entry leftovers
+            self._rename(fs, f"{self.path}/{rel}", dst)
             self._fault("vacuum_retired")
         # Commit record (tmp + rename, same shape as a publish flag).
-        _, meta_dir = self._fs(f"{self.path}/.meta")
-        fs.mkdirs(meta_dir)
-        _, tmp_p = self._fs(f"{self.path}/.meta/.v{version}.flag.tmp")
-        out = fs.create(tmp_p, True)
-        out.write(f"#version={version}\n#created=".encode("utf-8"))
-        out.close()
-        _, rec_p = self._fs(f"{self.path}/.meta/v{version}.flag")
-        fs.delete(rec_p, True)
-        self._rename(fs, tmp_p, rec_p)
+        fs.publish_text(
+            f"{self.path}/.meta/v{version}.flag", f"#version={version}\n#created="
+        )
         self._fault("vacuum_committed")
         self._write_commit_token()
         if self.changes_feed_dir:
             self.write_changes_feed(self.changes_feed_dir)
         self.vacuum_versions(keep_last=self.retain_versions)
 
-    # -- filesystem commit layer (Hadoop FileSystem API: portable
-    # across local/HDFS/S3A schemes) ------------------------------------------
+    # -- filesystem commit layer (the table's fsio handle: native on
+    # local paths, Hadoop for HDFS/S3A/file: schemes) -------------------------
 
     def _has_data_files(self) -> bool:
         """True when any parquet data file exists under the table root
         (filesystem walk, no Spark job) — the schema-marker guard for
         empty partitioned loads."""
-        fs, root = self._fs(self.path)
-        it = fs.listFiles(root, True)
+        it = self._fs.listFiles(self.path, True)
         while it.hasNext():
             if it.next().getPath().getName().endswith(".parquet"):
                 return True
         return False
-
-    def _fs(self, path: str):
-        # Every path a KeyedTable touches (staging, .meta, .retired,
-        # partition dirs) lives under self.path, so one FileSystem
-        # handle serves them all. On scheme-less local paths the
-        # handle is the native shim (fsio.NativeFS): each Hadoop call
-        # from Python costs several py4j round trips (~10-50 ms of
-        # driver wall), and a commit makes hundreds of metadata calls
-        # — profiled at more than half of a lifecycle build's wall
-        # (guide §7.3, driver-side work). Any real scheme keeps the
-        # Hadoop FileSystem (portability decides, not performance).
-        if fsio.is_local(self.path):
-            return fsio.native_fs(), fsio.NativePath(path)
-        jvm = self.spark._jvm
-        p = jvm.org.apache.hadoop.fs.Path(path)
-        if self._fs_handle is None:
-            self._fs_handle = jvm.org.apache.hadoop.fs.Path(
-                self.path
-            ).getFileSystem(self.spark._jsc.hadoopConfiguration())
-        return self._fs_handle, p
-
-    def _fs_delete(self, path: str) -> None:
-        fs, p = self._fs(path)
-        fs.delete(p, True)
 
     def _partition_rel_path(self, values: tuple) -> str:
         """Partition-value tuple → the relative dir path Spark's
@@ -3625,12 +3393,12 @@ class KeyedTable:
         return "/".join(segs)
 
     def _delete_partition_dir(self, values: tuple) -> None:
-        self._fs_delete(f"{self.path}/{self._partition_rel_path(values)}")
+        self._fs.delete(f"{self.path}/{self._partition_rel_path(values)}", True)
 
     def _staged_partition_dirs(self, staging: str) -> list[str]:
         """Relative leaf partition paths (``c0=v0/c1=v1/...``) present
         in the staged output — a metadata listing, not a Spark job."""
-        fs, root = self._fs(staging)
+        fs = self._fs
         rels: list[str] = []
 
         def walk(path, depth: int, rel: str):
@@ -3644,7 +3412,7 @@ class KeyedTable:
                 else:
                     walk(st.getPath(), depth + 1, sub)
 
-        walk(root, 0, "")
+        walk(staging, 0, "")
         return rels
 
     def _swap_dir(
@@ -3668,45 +3436,40 @@ class KeyedTable:
         by whichever publish happens to sweep it up (the r4 advisor's
         stale-aside misattribution window) — the destination name
         carries the truth from the first rename."""
-        fs, dst_p = self._fs(dst)
-        fs.mkdirs(dst_p.getParent())
+        fs = self._fs
+        fs.mkdirs(os.path.dirname(dst))
         aside = f"{os.path.dirname(dst)}/{_ASIDE_PREFIX}{os.path.basename(dst)}"
-        _, aside_p = self._fs(aside)
         if retire_version is not None and rel is not None:
-            if fs.exists(aside_p):
+            if fs.exists(aside):
                 # plain aside from a pre-retention-era crash: no
                 # version in history can own it. If a live copy also
                 # exists it supersedes the orphan (the live dir is the
                 # authoritative pre-commit state) — drop it; otherwise
                 # the orphan is the last complete copy — keep it as
                 # this commit's snapshot.
-                if fs.exists(dst_p):
-                    fs.delete(aside_p, True)
+                if fs.exists(dst):
+                    fs.delete(aside, True)
                 else:
                     self._retire_aside(aside, rel, retire_version)
-            if fs.exists(dst_p):
-                _, park_p = self._fs(
-                    f"{self.path}/.retired/v{retire_version}/{rel}"
-                )
-                fs.mkdirs(park_p.getParent())
-                fs.delete(park_p, True)  # re-entry leftovers
-                self._rename(fs, dst_p, park_p)
+            if fs.exists(dst):
+                park = f"{self.path}/.retired/v{retire_version}/{rel}"
+                fs.mkdirs(os.path.dirname(park))
+                fs.delete(park, True)  # re-entry leftovers
+                self._rename(fs, dst, park)
                 self._fault("parked_aside")
-            _, src_p = self._fs(src)
-            self._rename(fs, src_p, dst_p)
+            self._rename(fs, src, dst)
             self._fault("renamed_in")
             return
-        if fs.exists(dst_p):
-            if fs.exists(aside_p):
+        if fs.exists(dst):
+            if fs.exists(aside):
                 # stale aside from an earlier attempt of a PREVIOUS
                 # publish whose cleanup died — superseded, drop it.
-                fs.delete(aside_p, True)
-            self._rename(fs, dst_p, aside_p)
+                fs.delete(aside, True)
+            self._rename(fs, dst, aside)
             self._fault("parked_aside")
-        _, src_p = self._fs(src)
-        self._rename(fs, src_p, dst_p)
+        self._rename(fs, src, dst)
         self._fault("renamed_in")
-        fs.delete(aside_p, True)
+        fs.delete(aside, True)
 
     def _swap_unpartitioned(
         self, staging: str, retire_version: int | None = None
@@ -3734,44 +3497,35 @@ class KeyedTable:
         stage disappears — parquet part-file names are task-UUID
         unique, so every pre-publish file is outside the manifest and
         every parked name is collision-free."""
-        fs, root = self._fs(self.path)
-        _, stage_p = self._fs(staging)
-        jvm = self.spark._jvm
+        fs = self._fs
         manifest = self._read_manifest(staging)
         staged = [
-            st.getPath()
-            for st in fs.listStatus(stage_p)
+            st.getPath().getName()
+            for st in fs.listStatus(staging)
             if not st.getPath().getName().startswith((".", "_"))
         ]
         if retire_version is not None:
             aside = f"{self.path}/.retired/v{retire_version}"
         else:
             aside = f"{self.path}/{_ASIDE_PREFIX}data"
-        _, aside_p = self._fs(aside)
-        fs.mkdirs(aside_p)
-        for st in fs.listStatus(root):
+        fs.mkdirs(aside)
+        for st in fs.listStatus(self.path):
             name = st.getPath().getName()
             if not name.startswith((".", "_")) and name not in manifest:
-                self._rename(
-                    fs,
-                    st.getPath(),
-                    jvm.org.apache.hadoop.fs.Path(f"{aside}/{name}"),
-                )
+                self._rename(fs, f"{self.path}/{name}", f"{aside}/{name}")
                 self._fault("parked_file")
-        for p in staged:
-            self._rename(
-                fs, p, jvm.org.apache.hadoop.fs.Path(f"{self.path}/{p.getName()}")
-            )
+        for name in staged:
+            self._rename(fs, f"{staging}/{name}", f"{self.path}/{name}")
             self._fault("moved_in_file")
         self._fault("files_moved")
         if retire_version is None:
-            fs.delete(aside_p, True)
+            fs.delete(aside, True)
 
     @staticmethod
     def _rename(fs, src, dst) -> None:
-        """Hadoop FileSystem.rename signals failure by RETURNING False
-        (no exception) — surface that, or the publish protocol's
-        invariants silently break."""
+        """A handle's rename signals failure by RETURNING False (no
+        exception, as in Hadoop's FileSystem) — surface that, or the
+        publish protocol's invariants silently break."""
         if not fs.rename(src, dst):
             raise IOError(f"rename failed: {src} -> {dst}")
 
@@ -3785,7 +3539,7 @@ class KeyedTable:
         commit's version (conservative: data preserved, attribution
         approximate) rather than dropped. Without retention, asides
         are superseded copies and are dropped as before."""
-        fs, root = self._fs(self.path)
+        fs = self._fs
 
         def walk(path, rel_prefix: str):
             for st in fs.listStatus(path):
@@ -3794,16 +3548,14 @@ class KeyedTable:
                     if retire_version is not None:
                         leaf = name[len(_ASIDE_PREFIX):]
                         rel = f"{rel_prefix}/{leaf}" if rel_prefix else leaf
-                        self._retire_aside(
-                            f"{path.toString()}/{name}", rel, retire_version
-                        )
+                        self._retire_aside(f"{path}/{name}", rel, retire_version)
                     else:
-                        fs.delete(st.getPath(), True)
+                        fs.delete(f"{path}/{name}", True)
                 elif st.isDirectory() and not name.startswith((".", "_")):
                     sub = f"{rel_prefix}/{name}" if rel_prefix else name
-                    walk(st.getPath(), sub)
+                    walk(f"{path}/{name}", sub)
 
-        walk(root, "")
+        walk(self.path, "")
 
     def _apply_ops(self, df: DataFrame, delete_mode: str) -> DataFrame:
         """Resolve the CDC envelope after the merge has picked winners."""

@@ -51,6 +51,8 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from rds_to_datalake_project_spark import fsio
+from rds_to_datalake_project_spark.fsio import read_text as _read_small
+from rds_to_datalake_project_spark.fsio import write_text as _write_small
 
 _FILE = "file_uri"
 
@@ -202,7 +204,7 @@ def sidecar_memo(spark: SparkSession, table_path: str, idx: str, load):
         listing = tuple(
             sorted(
                 (s.getPath().getName(), s.getLen(), s.getModificationTime())
-                for s in fsio.native_fs().listStatus(idx)
+                for s in fsio.fs_for(spark, idx).listStatus(idx)
                 if not s.getPath().getName().startswith(".")
             )
         )
@@ -264,16 +266,6 @@ def zone_overlaps(zlo, zhi, lo, hi) -> bool:
     except (TypeError, ArithmeticError):  # unorderable: let Spark decide
         return True
     return True
-
-
-def _read_small(spark: SparkSession, path: str) -> str | None:
-    """Tiny marker-file read — fsio routes local paths to native I/O
-    and real schemes (hdfs://, s3a://) through Hadoop."""
-    return fsio.read_text(spark, path)
-
-
-def _write_small(spark: SparkSession, path: str, text: str) -> None:
-    fsio.write_text(spark, path, text)
 
 
 def _index_is_synced(spark: SparkSession, table_path: str, index_dir: str) -> bool:
@@ -524,7 +516,7 @@ def refresh_zonemap(
             n = spark.read.parquet(idx).count()
         except Exception:
             return (0, 0)
-        _delete_dir(spark, idx)
+        fsio.fs_for(spark, idx).delete(idx, True)
         return (0, n)
     try:
         stats = spark.read.parquet(idx)
@@ -577,13 +569,6 @@ def refresh_zonemap(
     out.coalesce(1).write.mode("overwrite").parquet(idx)
     _stamp()
     return (len(new), len(stale))
-
-
-def _delete_dir(spark: SparkSession, path: str) -> None:
-    jvm = spark.sparkContext._jvm
-    hconf = spark.sparkContext._jsc.hadoopConfiguration()
-    p = jvm.org.apache.hadoop.fs.Path(path)
-    p.getFileSystem(hconf).delete(p, True)
 
 
 def fast_count(spark: SparkSession, table_path: str, index_dir: str | None = None) -> int:

@@ -16,6 +16,7 @@ from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
 
+from rds_to_datalake_project_spark import fsio
 from rds_to_datalake_project_spark.functions.localrel import (
     literal_frame as _literal_frame,
 )
@@ -1222,22 +1223,10 @@ def _maintenance_statement(spark: SparkSession, sql: str, known: dict):
         t = _resolve(m.group(1))
         import json as _json
 
-        # Hadoop FS walk (portable to HDFS/object stores), hidden
-        # trees (.meta/.retired/.dv/indexes) skipped — live data only.
-        fs, root_p = t._fs(t.path)
-        n_files = size = 0
-        stack = [root_p]
-        while stack:
-            p = stack.pop()
-            for st in fs.listStatus(p):
-                name = st.getPath().getName()
-                if name.startswith((".", "_")):
-                    continue
-                if st.isDirectory():
-                    stack.append(st.getPath())
-                elif name.endswith(".parquet"):
-                    n_files += 1
-                    size += st.getLen()
+        # walk through the table's fsio handle (portable to HDFS/object
+        # stores), hidden trees (.meta/.retired/.dv/indexes) skipped —
+        # live data only
+        n_files, size = fsio.live_data_size(t._fs, t.path) or (0, 0)
         versions = t.versions() if t.retain_versions else []
         meta = getattr(t, "_clone_meta", lambda: None)()
         return _literal_frame(spark, 
