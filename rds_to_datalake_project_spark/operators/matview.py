@@ -3,29 +3,48 @@
 :class:`~rds_to_datalake_project_spark.operators.rollup.RollupTable`
 maintains the one aggregate shape the reference's consumers ask of
 Athena (time-bucketed rollups); this is the general form — an
-arbitrary GROUP BY over arbitrary SQL aggregate expressions, kept
-fresh against a :class:`KeyedTable`'s commit log.
+arbitrary GROUP BY over SQL aggregate expressions on one table or an
+equi-join of N, kept fresh against the base tables' commit logs.
 
-Maintenance strategy: AFFECTED-GROUP RECOMPUTE. Each refresh reads
-the base's row-level changes since the last refreshed version
-(``KeyedTable.table_changes`` with split pre/post images, so an
-update that MOVES a row between groups refreshes both the group it
-left and the one it joined), reduces them to the DISTINCT group keys
-touched, recomputes exactly those groups from the current snapshot,
-and merges the results into the view's own KeyedTable store (group
-key = record key) — vanished groups become delete tombstones.
-Recomputing instead of retracting keeps every aggregate correct —
-MIN/MAX/COUNT(DISTINCT)/percentiles need no invertibility — at cost
-∝ the touched groups' rows, never the corpus.
+ONE SKELETON. Every view class is ``SELECT group_cols, aggs FROM T0
+[JOIN T1 ON ... JOIN ...] GROUP BY group_cols`` over a tuple of 1..N
+versioned base tables (:class:`_ViewSkeleton`). The skeleton owns the
+refresh cursor (one commit version + incarnation token per base), the
+refresh dispatch (noop / full rebuild / incremental), the full
+rebuild, and the view's own group-keyed KeyedTable store. Each class
+adds only its incremental step.
+
+TWO STRATEGIES on top of it:
+
+- AFFECTED-GROUP RECOMPUTE (:class:`MaterializedView`,
+  :class:`JoinMaterializedView`, :class:`ChainMaterializedView`).
+  Each refresh reads the bases' row-level changes since the cursor
+  (``KeyedTable.table_changes`` with split pre/post images, so an
+  update that MOVES a row between groups refreshes both the group it
+  left and the one it joined), reduces them to the DISTINCT groups
+  touched, recomputes exactly those groups from the current snapshot,
+  and merges them into the store — vanished groups become delete
+  tombstones. Recomputing instead of retracting keeps every aggregate
+  correct — MIN/MAX/COUNT(DISTINCT)/percentiles need no
+  invertibility — at cost ∝ the touched groups' rows, never the
+  corpus. A replayed refresh recomputes the same groups from the same
+  snapshot — idempotent, so the cursor is written after the merge and
+  a crash between the two only repeats work.
+- SIGNED DELTA MERGE (:class:`DeltaMaterializedView`,
+  :class:`DeltaChainMaterializedView` and its two-table spelling
+  :class:`DeltaJoinMaterializedView`; :class:`_SignedDeltaMergeMixin`).
+  The change windows contribute ±1 times each aggregate's inner
+  expression — through inclusion–exclusion terms over a join — grouped
+  once and merged into the stored values arithmetically. Cost ∝ the
+  change window's join neighborhoods; invertible aggregates only; the
+  apply is bracketed by an intent marker because it is not
+  replay-idempotent.
 
 Scale notes: the change scan is two metadata snapshot reads + one
-co-partitioned full-outer join (table_changes' contract); the touched
-key set is broadcast into a semi join so the base scan prunes to
-affected groups before its one aggregation shuffle; the view store
-reuses the KeyedTable merge (partition-pruned, crash-safe publish).
-A replayed refresh recomputes the same groups from the same snapshot
-— idempotent, so the version marker is written after the merge and a
-crash between the two only repeats work, never corrupts the view.
+co-partitioned full-outer join (table_changes' contract); touched key
+sets are broadcast into semi joins so base scans prune to affected
+groups before their one aggregation shuffle; the view store reuses
+the KeyedTable merge (partition-pruned, crash-safe publish).
 """
 
 from __future__ import annotations
@@ -108,14 +127,15 @@ def _pmap(fn, items, workers: int = 3):
         return list(pool.map(fn, items))
 
 
-def _nullsafe_cond(a: DataFrame, b: DataFrame, cols: list[str]):
-    """eqNullSafe conjunction over the group columns: a NULL group is
-    a REAL group (SQL GROUP BY keeps it) — a name-list join would
-    never match it, so the incremental path would silently tombstone
-    it out of the view while full recomputation keeps it."""
+def _nullsafe_eq(pairs):
+    """eqNullSafe conjunction over ``(left_col, right_col)`` pairs of
+    group columns: a NULL group is a REAL group (SQL GROUP BY keeps
+    it) — plain equality would never match it, so the incremental
+    path would silently tombstone it out of the view while full
+    recomputation keeps it."""
     cond = None
-    for c in cols:
-        e = a[c].eqNullSafe(b[c])
+    for a, b in pairs:
+        e = a.eqNullSafe(b)
         cond = e if cond is None else cond & e
     return cond
 
@@ -130,10 +150,7 @@ def _semi_on_groups(
     trips Spark's ambiguous-self-join check. Renaming makes the
     condition unambiguous regardless of lineage."""
     t = touched.select(*[F.col(c).alias(f"__g_{c}") for c in cols])
-    cond = None
-    for c in cols:
-        e = rows[c].eqNullSafe(t[f"__g_{c}"])
-        cond = e if cond is None else cond & e
+    cond = _nullsafe_eq((rows[c], t[f"__g_{c}"]) for c in cols)
     return rows.join(F.broadcast(t), cond, "left_semi")
 
 
@@ -145,10 +162,7 @@ def _merge_touched(store, touched, fresh, group_cols, aggs, seq) -> None:
     fg = fresh.select(
         *[F.col(c).alias(f"__g_{c}") for c in group_cols]
     )  # renamed: same ambiguous-lineage hazard as _semi_on_groups
-    cond = None
-    for c in group_cols:
-        e = touched[c].eqNullSafe(fg[f"__g_{c}"])
-        cond = e if cond is None else cond & e
+    cond = _nullsafe_eq((touched[c], fg[f"__g_{c}"]) for c in group_cols)
     gone = touched.join(fg, cond, "left_anti")
     tombstones = gone.select(
         *group_cols,
@@ -227,6 +241,42 @@ def _inc_token(table: KeyedTable) -> str:
     commit numbering) invalidates the cursor instead of reading as
     noop/incremental over different data."""
     return table.incarnation() or "-"
+
+
+def read_cursor(spark, path: str, tables) -> tuple[int, ...] | None:
+    """Commit versions, one per base table, that the structure whose
+    cursor marker lives at ``path`` reflects. None when the marker is
+    missing, unreadable, written for another number of tables, or when
+    ANY base was reset since: a reset restarts commit numbering, so a
+    bare version cannot tell a reset from progress — the incarnation
+    token can."""
+    parts = (_read_small(spark, path) or "").split()
+    n = len(tables)
+    if len(parts) != 2 * n:
+        return None
+    try:
+        versions = tuple(int(p) for p in parts[:n])
+    except ValueError:
+        return None
+    if any(tok != _inc_token(t) for tok, t in zip(parts[n:], tables)):
+        return None
+    return versions
+
+
+def write_cursor(spark, path: str, tables, versions) -> None:
+    """Publish the marker :func:`read_cursor` reads: ``v… inc…``, a
+    commit version and an incarnation token per base table."""
+    _write_small(
+        spark, path, " ".join([*map(str, versions), *map(_inc_token, tables)])
+    )
+
+
+def _image_sign():
+    """+1 for an added change image (insert / update_postimage), −1 for
+    a removed one (delete / update_preimage)."""
+    return F.when(
+        F.col("_change_type").isin("insert", "update_postimage"), F.lit(1)
+    ).otherwise(F.lit(-1))
 
 
 # Pruned-recompute cap: past this many distinct touched values per
@@ -405,42 +455,55 @@ def _zone_pruned_rows(
         return None  # any metadata/type surprise → full-scan fallback
 
 
-class MaterializedView:
-    """``SELECT group_cols, aggs FROM base GROUP BY group_cols``,
-    incrementally maintained.
+class _ViewSkeleton:
+    """What every view class shares: ``SELECT group_cols, aggs FROM
+    tables[0] JOIN tables[1] ON on[0] ... GROUP BY group_cols`` over
+    1..N versioned base tables, hop j joining ``tables[j+1]`` with
+    ``hows[j]`` (a single-table view has no hops).
 
-    ``aggs`` maps output column name -> SQL aggregate expression over
-    the base table's columns (``{"revenue": "sum(amount)", "n":
-    "count(*)"}``). The base table must retain versions
-    (``retain_versions > 0``) — the refresh cursor is a base commit
-    version and the delta comes from ``table_changes``.
+    It owns the constructor checks, the group-keyed store, the refresh
+    cursor (``.mv/_BASE_VERSIONS``: a commit version and incarnation
+    token per base), the refresh dispatch and the full rebuild. The
+    recompute strategy's ``_aggregate`` / ``read`` live here too;
+    :class:`_SignedDeltaMergeMixin` overrides them for the delta
+    strategy. Subclasses supply ``_incremental(cur, new)`` over
+    version tuples.
 
     ``group_exprs`` makes group keys DERIVED: a mapping from a
     ``group_cols`` name to a SQL scalar expression over base columns
     (``{"h": "date_trunc('hour', ts)"}``) — the time-bucketed rollup
     shape the reference serves through Athena
     (rds_to_datalake/athena.py:16-64). Derived keys are computed on
-    the change window AND the snapshot before grouping, so the
-    affected-group recompute contract is unchanged: touched buckets
-    ∝ the change set, never the corpus.
+    the change window AND the snapshot before grouping, so touched
+    buckets stay ∝ the change set, never the corpus.
     """
+
+    _DEFAULT_NAME = "matview"
 
     def __init__(
         self,
-        base: KeyedTable,
+        tables: list[KeyedTable],
+        on: list[tuple[str, str]],
+        hows: list[str],
         path: str,
         group_cols: list[str],
         aggs: dict[str, str],
-        name: str = "matview",
-        max_broadcast_keys: int = 1_000_000,
-        group_exprs: dict[str, str] | None = None,
-        store_retain_versions: int = 0,
-        store_hash_buckets: int = 0,
+        name: str | None,
+        max_broadcast_keys: int,
+        group_exprs: dict[str, str] | None,
+        store_retain_versions: int,
+        store_hash_buckets: int,
     ):
-        if not base.retain_versions:
+        if not all(t.retain_versions for t in tables):
             raise ValueError(
-                "MaterializedView requires a versioned base table "
-                "(retain_versions > 0) — the refresh cursor is a commit version"
+                f"{type(self).__name__} requires every base table versioned "
+                "(retain_versions > 0) — the refresh cursor is a commit "
+                "version per table"
+            )
+        if len(hows) != len(on) or any(h not in ("inner", "left") for h in hows):
+            raise ValueError(
+                "hows must give 'inner' or 'left' per ON pair, got "
+                f"{list(hows)!r}"
             )
         if not group_cols or not aggs:
             raise ValueError("group_cols and aggs must be non-empty")
@@ -453,8 +516,10 @@ class MaterializedView:
             raise ValueError(
                 f"group_exprs name(s) not in group_cols: {sorted(stray)}"
             )
-        self.base = base
-        self.spark: SparkSession = base.spark
+        self.tables = list(tables)
+        self.on = list(on)
+        self.hows = list(hows)
+        self.spark: SparkSession = tables[0].spark
         self.path = path
         self.group_cols = list(group_cols)
         self.aggs = dict(aggs)
@@ -473,7 +538,7 @@ class MaterializedView:
             self.spark,
             path,
             TableSpec(
-                name,
+                name if name is not None else self._DEFAULT_NAME,
                 record_key=tuple(group_cols),
                 precombine_key=_SEQ_COL,
                 partition_granularity="",  # group-keyed, not time-partitioned
@@ -485,40 +550,55 @@ class MaterializedView:
     # -- refresh cursor ------------------------------------------------------
 
     def _marker_path(self) -> str:
-        return f"{self.path}/.mv/_BASE_VERSION"
+        return f"{self.path}/.mv/_BASE_VERSIONS"
 
-    def refreshed_version(self) -> int | None:
-        """Base commit version the view currently reflects (None =
-        never refreshed, marker unreadable, or the base was RESET —
-        its incarnation token no longer matches → next refresh is
-        full)."""
-        parts = (_read_small(self.spark, self._marker_path()) or "").split()
-        try:
-            v = int(parts[0])
-        except (IndexError, ValueError):
-            return None
-        if len(parts) > 1 and parts[1] != _inc_token(self.base):
-            return None  # cursor predates a table reset
-        return v
+    def refreshed_versions(self) -> tuple[int, ...] | None:
+        """Base commit versions the view reflects, one per table (None =
+        never refreshed, marker unreadable, or a base was RESET)."""
+        return read_cursor(self.spark, self._marker_path(), self.tables)
+
+    def _heads(self) -> tuple[int, ...]:
+        return tuple((t.versions() or [0])[-1] for t in self.tables)
+
+    def _write_cursor(self, heads: tuple[int, ...]) -> None:
+        write_cursor(self.spark, self._marker_path(), self.tables, heads)
+
+    @staticmethod
+    def _result(mode: str, heads: tuple[int, ...], groups: int) -> dict:
+        return {
+            "mode": mode,
+            "versions": heads,
+            # scalar cursor for surfaces that report one number (the
+            # SQL layer's result frames): monotone — each refresh
+            # advances ≥1 head and never regresses another
+            "base_version": sum(heads),
+            "groups_refreshed": groups,
+        }
 
     # -- plans ---------------------------------------------------------------
 
-    def _derive(self, rows: DataFrame) -> DataFrame:
-        """Attach the derived group-key columns (no-op without
-        group_exprs). Applied to every frame the group columns are
-        read from: the aggregation input, the change window, and the
-        snapshot side of the touched-group semi-join."""
+    def _joined(self, frames: list[DataFrame]) -> DataFrame:
+        """Join one frame per table along the ON hops and attach the
+        derived group-key columns — every consumer of group columns
+        reads through here, so derived keys are never missing. A
+        single-table view passes one frame (a snapshot or a change
+        window) and only gets its derived keys."""
+        out = frames[0]
+        for (fk, k), d, how in zip(self.on, frames[1:], self.hows):
+            out = out.join(d, out[fk] == d[k], how)
         for c, e in self.group_exprs.items():
-            rows = rows.withColumn(c, F.expr(e))
-        return rows
+            out = out.withColumn(c, F.expr(e))
+        return out
+
+    def _snapshot(self) -> DataFrame:
+        return self._joined([t.read() for t in self.tables])
 
     def _aggregate(self, rows: DataFrame, seq: int) -> DataFrame:
-        """``rows`` must already be derived (_derive applied exactly
+        """``rows`` must already be derived (_joined applied exactly
         once by the caller) — deriving here too would double-apply a
         self-shadowing group expression (``v + 1 AS v``): incremental
         refresh would group by v+2 while full refresh groups by v+1,
-        tombstoning real groups. JoinMaterializedView has always kept
-        this discipline (derives only in _joined)."""
+        tombstoning real groups."""
         out = rows.groupBy(*self.group_cols).agg(
             *[F.expr(e).alias(c) for c, e in self.aggs.items()]
         )
@@ -530,36 +610,84 @@ class MaterializedView:
     # -- maintenance ---------------------------------------------------------
 
     def refresh(self) -> dict:
-        """Bring the view up to the base's latest commit. Returns a
-        summary dict: {"mode", "base_version", "groups_refreshed"}."""
+        """Bring the view up to every base's latest commit. Returns a
+        summary dict: {"mode", "versions", "base_version",
+        "groups_refreshed"}."""
         return _record_refresh(self, self._refresh())
 
     def _refresh(self) -> dict:
-        latest = (self.base.versions() or [0])[-1]
-        since = self.refreshed_version()
-        if since is not None and since == latest:
-            return {"mode": "noop", "base_version": latest, "groups_refreshed": 0}
-        if since is None or since not in self.base.readable_versions():
-            return self._full(latest)
-        return self._incremental(since, latest)
+        heads = self._heads()
+        cur = self.refreshed_versions()
+        if cur == heads:
+            return self._result("noop", heads, 0)
+        if cur is None or any(
+            c not in t.readable_versions() for c, t in zip(cur, self.tables)
+        ):
+            return self._full(heads)
+        return self._incremental(cur, heads)
 
-    def _write_marker(self, latest: int) -> None:
-        _write_small(
-            self.spark,
-            self._marker_path(),
-            f"{latest} {_inc_token(self.base)}",
-        )
-
-    def _full(self, latest: int) -> dict:
-        full = self._aggregate(self._derive(self.base.read()), latest)
-        self.store.initial_load(full)
+    def _full(self, heads: tuple[int, ...]) -> dict:
+        self.store.initial_load(self._aggregate(self._snapshot(), sum(heads)))
         n = self.store.read().count()
-        self._write_marker(latest)
-        return {"mode": "full", "base_version": latest, "groups_refreshed": n}
+        self._write_cursor(heads)
+        return self._result("full", heads, n)
 
-    def _incremental(self, since: int, latest: int) -> dict:
-        changes = self._derive(
-            self.base.table_changes(since, latest, include_preimage=True)
+
+def _attach(view, tables) -> None:
+    """Enroll ``view.refresh`` in each table's post-commit maintenance
+    slot — the same advisory slot as the zone map / ANN / LSH services
+    (failures are isolated and surfaced by ``describe_history``; the
+    view goes stale, never wrong, and the next refresh catches up).
+    Whichever table commits, the refresh reads every head."""
+
+    def matview_refresh(_table: KeyedTable) -> None:
+        view.refresh()
+
+    for t in tables:
+        t.add_maintenance_hook(matview_refresh)
+
+
+class MaterializedView(_ViewSkeleton):
+    """``SELECT group_cols, aggs FROM base GROUP BY group_cols``,
+    incrementally maintained by affected-group recompute.
+
+    ``aggs`` maps output column name -> SQL aggregate expression over
+    the base table's columns (``{"revenue": "sum(amount)", "n":
+    "count(*)"}``). The base table must retain versions
+    (``retain_versions > 0``) — the refresh cursor is a base commit
+    version and the delta comes from ``table_changes``.
+    ``group_exprs``: derived group keys (:class:`_ViewSkeleton`).
+    """
+
+    def __init__(
+        self,
+        base: KeyedTable,
+        path: str,
+        group_cols: list[str],
+        aggs: dict[str, str],
+        name: str | None = None,
+        max_broadcast_keys: int = 1_000_000,
+        group_exprs: dict[str, str] | None = None,
+        store_retain_versions: int = 0,
+        store_hash_buckets: int = 0,
+    ):
+        super().__init__(
+            [base], [], [], path, group_cols, aggs, name, max_broadcast_keys,
+            group_exprs, store_retain_versions, store_hash_buckets,
+        )
+        self.base = base
+
+    def refreshed_version(self) -> int | None:
+        """Base commit version the view currently reflects (None =
+        never refreshed, marker unreadable, or the base was RESET —
+        its incarnation token no longer matches → next refresh is
+        full)."""
+        cur = self.refreshed_versions()
+        return None if cur is None else cur[0]
+
+    def _incremental(self, cur, new) -> dict:
+        changes = self._joined(
+            [self.base.table_changes(cur[0], new[0], include_preimage=True)]
         )
         # Distinct group keys touched by any image — pre AND post, so
         # group-moving updates refresh both sides. Broadcast: the
@@ -569,13 +697,13 @@ class MaterializedView:
         )
         n_touched = touched.count()
         if not n_touched:
-            self._write_marker(latest)
-            return {"mode": "incremental", "base_version": latest, "groups_refreshed": 0}
+            self._write_cursor(new)
+            return self._result("incremental", new, 0)
         if n_touched > self.max_broadcast_keys:
             # A bulk rewrite (change window ≈ corpus) must degrade to a
             # full recompute, never a corpus-sized driver broadcast —
             # past this point the incremental path saves nothing anyway.
-            return self._full(latest)
+            return self._full(new)
         # Physical (non-derived) group columns prune the snapshot scan
         # through the base's zone-map sidecar point-wise; derived
         # date_trunc keys prune through their source column's bucket
@@ -587,35 +715,25 @@ class MaterializedView:
             [c for c in self.group_cols if c not in self.group_exprs],
             bucket_cols=_bucket_prunable(self.group_exprs),
         )
-        snap = self._derive(
-            base_rows if base_rows is not None else self.base.read()
+        snap = self._joined(
+            [base_rows if base_rows is not None else self.base.read()]
         )
         affected_rows = _semi_on_groups(snap, touched, self.group_cols)
-        fresh = self._aggregate(affected_rows, latest).localCheckpoint(eager=False)
+        seq = sum(new)
+        fresh = self._aggregate(affected_rows, seq).localCheckpoint(eager=False)
         _merge_touched(
-            self.store, touched, fresh, self.group_cols, self.aggs, latest
+            self.store, touched, fresh, self.group_cols, self.aggs, seq
         )
-        self._write_marker(latest)
-        return {
-            "mode": "incremental",
-            "base_version": latest,
-            "groups_refreshed": n_touched,
-        }
+        self._write_cursor(new)
+        return self._result("incremental", new, n_touched)
 
 
 def attach_matview_maintenance(base: KeyedTable, view: MaterializedView) -> None:
-    """Keep the view fresh after every base commit — same advisory
-    post-commit slot as the zone map / ANN / LSH services (failures
-    are isolated and surfaced by ``describe_history``; the view goes
-    stale, never wrong, and the next refresh catches up)."""
-
-    def matview_refresh(_table: KeyedTable) -> None:
-        view.refresh()
-
-    base.add_maintenance_hook(matview_refresh)
+    """Keep the view fresh after every base commit (:func:`_attach`)."""
+    _attach(view, [base])
 
 
-class JoinMaterializedView:
+class JoinMaterializedView(_ViewSkeleton):
     """``SELECT group_cols, aggs FROM left JOIN right ON left.lk =
     right.rk GROUP BY group_cols`` (inner equi-join), incrementally
     maintained from BOTH tables' change feeds — the classic
@@ -656,6 +774,8 @@ class JoinMaterializedView:
     ``aggs`` must be unambiguous across the joined frame (TPC-H-style
     prefixed schemas satisfy this)."""
 
+    _DEFAULT_NAME = "join_matview"
+
     def __init__(
         self,
         left: KeyedTable,
@@ -664,135 +784,21 @@ class JoinMaterializedView:
         on: tuple[str, str],
         group_cols: list[str],
         aggs: dict[str, str],
-        name: str = "join_matview",
+        name: str | None = None,
         how: str = "inner",
         max_broadcast_keys: int = 1_000_000,
         group_exprs: dict[str, str] | None = None,
         store_retain_versions: int = 0,
         store_hash_buckets: int = 0,
     ):
-        if not (left.retain_versions and right.retain_versions):
-            raise ValueError(
-                "JoinMaterializedView requires BOTH tables versioned "
-                "(retain_versions > 0) — the cursor is a commit-version pair"
-            )
-        if how not in ("inner", "left"):
-            raise ValueError(f"how must be 'inner' or 'left', got {how!r}")
-        self.how = how
-        if not group_cols or not aggs:
-            raise ValueError("group_cols and aggs must be non-empty")
-        bad = set(group_cols) & set(aggs)
-        if bad:
-            raise ValueError(f"column(s) both grouped and aggregated: {sorted(bad)}")
-        self.group_exprs = dict(group_exprs or {})
-        stray = set(self.group_exprs) - set(group_cols)
-        if stray:
-            raise ValueError(
-                f"group_exprs name(s) not in group_cols: {sorted(stray)}"
-            )
+        super().__init__(
+            [left, right], [on], [how], path, group_cols, aggs, name,
+            max_broadcast_keys, group_exprs, store_retain_versions,
+            store_hash_buckets,
+        )
         self.left, self.right = left, right
-        self.spark: SparkSession = left.spark
-        self.path = path
         self.l_on, self.r_on = on
-        self.group_cols = list(group_cols)
-        self.aggs = dict(aggs)
-        self.max_broadcast_keys = max_broadcast_keys
-        self.store = KeyedTable(
-            self.spark,
-            path,
-            TableSpec(
-                name,
-                record_key=tuple(group_cols),
-                precombine_key=_SEQ_COL,
-                partition_granularity="",
-                hash_buckets=store_hash_buckets,
-            ),
-            retain_versions=store_retain_versions,
-        )
-
-    def _marker_path(self) -> str:
-        return f"{self.path}/.mv/_BASE_VERSIONS"
-
-    def refreshed_versions(self) -> tuple[int, int] | None:
-        """Commit-version pair the view reflects, or None when never
-        refreshed, unreadable, or EITHER base was reset (incarnation
-        token mismatch) — commit numbers alone cannot tell a reset
-        from progress."""
-        parts = (_read_small(self.spark, self._marker_path()) or "").split()
-        if len(parts) != 4:
-            return None
-        try:
-            versions = (int(parts[0]), int(parts[1]))
-        except ValueError:
-            return None
-        if parts[2] != _inc_token(self.left) or parts[3] != _inc_token(
-            self.right
-        ):
-            return None
-        return versions
-
-    def _joined(self, l: DataFrame, r: DataFrame) -> DataFrame:
-        """Join the two sides and attach derived group-key columns —
-        every consumer of group columns reads through here (or through
-        _aggregate), so derived keys are never missing."""
-        out = l.join(r, l[self.l_on] == r[self.r_on], self.how)
-        for c, e in self.group_exprs.items():
-            out = out.withColumn(c, F.expr(e))
-        return out
-
-    def _aggregate(self, rows: DataFrame, seq: int) -> DataFrame:
-        out = rows.groupBy(*self.group_cols).agg(
-            *[F.expr(e).alias(c) for c, e in self.aggs.items()]
-        )
-        return out.withColumn(_SEQ_COL, F.lit(seq).cast("long"))
-
-    def read(self) -> DataFrame:
-        return _read_store(self.store).drop(_SEQ_COL)
-
-    def refresh(self) -> dict:
-        return _record_refresh(self, self._refresh())
-
-    def _refresh(self) -> dict:
-        l_latest = (self.left.versions() or [0])[-1]
-        r_latest = (self.right.versions() or [0])[-1]
-        cur = self.refreshed_versions()
-        if cur == (l_latest, r_latest):
-            return {
-                "mode": "noop",
-                "versions": cur,
-                "base_version": sum(cur),
-                "groups_refreshed": 0,
-            }
-        if (
-            cur is None
-            or cur[0] not in self.left.readable_versions()
-            or cur[1] not in self.right.readable_versions()
-        ):
-            return self._full(l_latest, r_latest)
-        return self._incremental(cur, (l_latest, r_latest))
-
-    def _write_cursor(self, versions: tuple[int, int]) -> None:
-        _write_small(
-            self.spark,
-            self._marker_path(),
-            f"{versions[0]} {versions[1]} "
-            f"{_inc_token(self.left)} {_inc_token(self.right)}",
-        )
-
-    def _full(self, l_latest: int, r_latest: int) -> dict:
-        rows = self._joined(self.left.read(), self.right.read())
-        self.store.initial_load(self._aggregate(rows, l_latest + r_latest))
-        n = self.store.read().count()
-        self._write_cursor((l_latest, r_latest))
-        return {
-            "mode": "full",
-            "versions": (l_latest, r_latest),
-            # scalar cursor for surfaces that report one number (the
-            # SQL layer's result frames): monotone — each refresh
-            # advances ≥1 head and never regresses the other
-            "base_version": l_latest + r_latest,
-            "groups_refreshed": n,
-        }
+        self.how = how
 
     def _touched_keys(self, cur, new) -> tuple[DataFrame | None, bool]:
         """``(distinct non-null join-key values any change image names,
@@ -846,7 +852,7 @@ class JoinMaterializedView:
         else:  # only null-key left rows changed
             lt = l.filter(l[self.l_on].isNull())
             rt = r.limit(0)
-        return self._joined(lt, rt).select(*self.group_cols).distinct()
+        return self._joined([lt, rt]).select(*self.group_cols).distinct()
 
     def _incremental(self, cur, new) -> dict:
         keys, null_left = self._touched_keys(cur, new)
@@ -859,17 +865,12 @@ class JoinMaterializedView:
                 # group broadcast below would OOM the driver at scale.
                 # Degrade to full recompute — at this change fraction
                 # it does no more work than affected-group recompute.
-                return self._full(new[0], new[1])
+                return self._full(new)
             if not n_keys and not null_left:
                 keys = None
         if keys is None and not null_left:
             self._write_cursor(new)
-            return {
-                "mode": "incremental",
-                "versions": new,
-                "base_version": sum(new),
-                "groups_refreshed": 0,
-            }
+            return self._result("incremental", new, 0)
         l_now, r_now = self.left.read(), self.right.read()
         l_old = self.left.read_as_of(cur[0])
         r_old = self.right.read_as_of(cur[1])
@@ -882,15 +883,10 @@ class JoinMaterializedView:
         n_touched = touched.count()
         if not n_touched:
             self._write_cursor(new)
-            return {
-                "mode": "incremental",
-                "versions": new,
-                "base_version": sum(new),
-                "groups_refreshed": 0,
-            }
+            return self._result("incremental", new, 0)
         if n_touched > self.max_broadcast_keys:
-            return self._full(new[0], new[1])
-        seq = new[0] + new[1]
+            return self._full(new)
+        seq = sum(new)
         # Zone-prune each side's recompute scan by the physical group
         # columns it owns (advisory; the semi-join below stays exact).
         # LEFT-join safety: a touched NULL group puts NULL in EVERY
@@ -927,8 +923,10 @@ class JoinMaterializedView:
             )
             l_rec = _zone_pruned_rows(self.left, dim_keys, [self.l_on])
         joined = self._joined(
-            l_rec if l_rec is not None else l_now,
-            r_rec if r_rec is not None else r_now,
+            [
+                l_rec if l_rec is not None else l_now,
+                r_rec if r_rec is not None else r_now,
+            ]
         )
         affected = _semi_on_groups(joined, touched, self.group_cols)
         fresh = self._aggregate(affected, seq).localCheckpoint(eager=False)
@@ -936,23 +934,13 @@ class JoinMaterializedView:
             self.store, touched, fresh, self.group_cols, self.aggs, seq
         )
         self._write_cursor(new)
-        return {
-            "mode": "incremental",
-            "versions": new,
-            "base_version": sum(new),
-            "groups_refreshed": n_touched,
-        }
+        return self._result("incremental", new, n_touched)
 
 
 def attach_join_matview_maintenance(view: JoinMaterializedView) -> None:
     """Enroll the view in BOTH base tables' post-commit maintenance
-    slots — whichever side commits, the refresh reads both heads."""
-
-    def jmv_refresh(_table: KeyedTable) -> None:
-        view.refresh()
-
-    view.left.add_maintenance_hook(jmv_refresh)
-    view.right.add_maintenance_hook(jmv_refresh)
+    slots (:func:`_attach`)."""
+    _attach(view, view.tables)
 
 
 # --- delta-merge maintenance (invertible aggregates) --------------------------
@@ -1027,16 +1015,35 @@ def _require_disjoint_columns(tables: list[KeyedTable]) -> None:
 
 
 class _SignedDeltaMergeMixin:
-    """Shared machinery of the signed-delta maintainers
-    (:class:`DeltaMaterializedView`, :class:`DeltaJoinMaterializedView`):
-    hidden-column naming, the intent-marker crash protocol, the
-    full-recompute aggregate that seeds the hidden columns, the signed
-    change-window aggregate, and the store merge. Hosts expose
-    ``self._parsed`` (from :func:`_parse_invertible_aggs`), plus the
-    usual view attributes (spark/path/store/group_cols/
-    max_broadcast_keys)."""
+    """The signed-delta strategy layer over :class:`_ViewSkeleton`,
+    shared by :class:`DeltaMaterializedView` (one table) and
+    :class:`DeltaChainMaterializedView` (N tables; its two-table
+    spelling :class:`DeltaJoinMaterializedView`): invertible-aggregate
+    parsing, hidden-column naming, the full-recompute aggregate that
+    seeds the hidden columns (``_aggregate`` / ``read``), the
+    intent-marker crash protocol, the count(DISTINCT) auxiliary
+    stores, the signed window aggregate, the store merge, and the full
+    rebuild's extension — aux stores rebuild before the store load and
+    the intent clears after the cursor. Hosts build a signed
+    contribution frame and hand it to :meth:`_fold_delta`."""
 
     _LIVE = "__live_n"
+
+    def __init__(self, *args, **kwargs):
+        super().__init__(*args, **kwargs)
+        self._parsed = _parse_invertible_aggs(
+            self.aggs, allow_extrema=True, allow_distinct=True
+        )
+        if "left" in self.hows and len(self.tables) != 2:
+            raise ValueError(
+                "signed-delta maintenance supports a LEFT join only as "
+                "the single hop of a two-table view (its dangling "
+                "correction is two-table) — use the recompute chain "
+                "for LEFT hops in longer chains"
+            )
+        if len(self.tables) > 1:
+            _require_disjoint_columns(self.tables)
+        self._init_aux_stores()
 
     def _nn(self, c: str) -> str:
         return f"__nn_{c}"
@@ -1074,7 +1081,28 @@ class _SignedDeltaMergeMixin:
     def _clear_pending(self) -> None:
         _write_small(self.spark, self._pending_path(), "")
 
+    def _full(self, heads: tuple[int, ...]) -> dict:
+        # aux stores rebuild FIRST: the cursor marker is written by the
+        # skeleton after the main load, so a crash between the two
+        # leaves the marker behind and the next refresh redoes both —
+        # initial_load overwrites, so the replay is idempotent.
+        self._rebuild_aux(self._snapshot(), sum(heads))
+        out = super()._full(heads)
+        self._clear_pending()
+        return out
+
     # -- aggregate plans -----------------------------------------------------
+
+    def _aggregate(self, rows: DataFrame, seq: int) -> DataFrame:
+        """Full-recompute form WITH the hidden invertibility columns —
+        used by the full rebuild, the bulk-rewrite fallback, and
+        extremum repair. ``rows`` arrive derived (the skeleton's
+        single-derive discipline)."""
+        out = rows.groupBy(*self.group_cols).agg(*self._delta_full_agg_cols())
+        return out.withColumn(_SEQ_COL, F.lit(seq).cast("long"))
+
+    def read(self) -> DataFrame:
+        return _read_store(self.store).drop(*self._hidden_store_cols())
 
     def _delta_full_agg_cols(self) -> list:
         """Full-recompute aggregate list WITH the hidden invertibility
@@ -1194,9 +1222,8 @@ class _SignedDeltaMergeMixin:
     # rewrites ≤ k buckets and the merge READ prunes to them too.
     _AUX_DEFAULT_BUCKETS = 64
 
-    def _init_aux_stores(
-        self, path: str, name: str, group_cols: list, store_hash_buckets: int
-    ) -> None:
+    def _init_aux_stores(self) -> None:
+        path, spec = self.path, self.store.spec
         self._aux: dict[str, KeyedTable] = {}
         # DISTINCT aggregates over the SAME inner expression share one
         # aux store (count/sum/avg(DISTINCT x) need identical
@@ -1216,11 +1243,11 @@ class _SignedDeltaMergeMixin:
                     self.spark,
                     f"{path}_aux/{c}",
                     TableSpec(
-                        f"{name}_aux_{c}",
-                        record_key=tuple(group_cols) + ("__val",),
+                        f"{spec.name}_aux_{c}",
+                        record_key=tuple(self.group_cols) + ("__val",),
                         precombine_key=_SEQ_COL,
                         partition_granularity="",
-                        hash_buckets=store_hash_buckets
+                        hash_buckets=spec.hash_buckets
                         or self._AUX_DEFAULT_BUCKETS,
                     ),
                 )
@@ -1243,7 +1270,7 @@ class _SignedDeltaMergeMixin:
         Callers run this BEFORE the main store load so a crash between
         the two leaves the cursor behind and the next refresh redoes
         both (initial_load overwrites — idempotent replay)."""
-        if not getattr(self, "_aux", None):
+        if not self._aux:
             return
         done: set[int] = set()
         for c, aux in self._aux.items():
@@ -1290,10 +1317,9 @@ class _SignedDeltaMergeMixin:
             d = vals.select(
                 *[F.col(k).alias(f"__g_{k}") for k in keyc], "__dc"
             ).alias("__ad")
-            cond = None
-            for k in keyc:
-                e = F.col(f"__ao.{k}").eqNullSafe(F.col(f"__ad.__g_{k}"))
-                cond = e if cond is None else cond & e
+            cond = _nullsafe_eq(
+                (F.col(f"__ao.{k}"), F.col(f"__ad.__g_{k}")) for k in keyc
+            )
             j = F.broadcast(old).join(d, cond, "right_outer")
             oldc = F.coalesce(F.col("__ao.__cnt"), F.lit(0).cast("long"))
             newc = oldc + F.col("__ad.__dc")
@@ -1361,7 +1387,7 @@ class _SignedDeltaMergeMixin:
         upsert and the main cursor write routes the next refresh to
         _full, which rebuilds aux and view together). Returns the
         extended delta, or None when a bulk window degrades to full."""
-        if not getattr(self, "_aux", None):
+        if not self._aux:
             return delta
         batches, transitions = self._distinct_transitions(ch, sign, seq)
         if batches is None:
@@ -1375,10 +1401,9 @@ class _SignedDeltaMergeMixin:
                 *[F.col(c).alias(f"__t_{c}") for c in self.group_cols],
                 *dcols,
             )
-            cond = None
-            for c in self.group_cols:
-                e = delta[c].eqNullSafe(t[f"__t_{c}"])
-                cond = e if cond is None else cond & e
+            cond = _nullsafe_eq(
+                (delta[c], t[f"__t_{c}"]) for c in self.group_cols
+            )
             delta = delta.join(t, cond, "left").drop(
                 *[f"__t_{c}" for c in self.group_cols]
             )
@@ -1401,19 +1426,68 @@ class _SignedDeltaMergeMixin:
             aux.upsert(batch, delete_mode="apply")
         return delta
 
-    def _merge_and_publish(
-        self, delta, n_touched: int, seq: int, ref, cursor_cb, recompute=None
-    ) -> dict | None:
-        """Merge a grouped signed-delta frame into the view store and
-        publish. Returns the partial summary dict, or None when the
-        extremum-repair set exceeds ``max_broadcast_keys`` (caller
-        degrades to full recompute).
+    def _fold_delta(self, contrib: DataFrame, sign, new) -> dict:
+        """Group a signed contribution frame (derived group keys
+        attached; each row's sign is ``sign``) into the per-group delta,
+        fold in the count(DISTINCT) transitions, merge into the store
+        and publish the cursor ``new`` — or degrade to a full rebuild
+        when a window or repair set outgrows ``max_broadcast_keys``."""
+        delta = (
+            contrib.groupBy(*self.group_cols)
+            .agg(*self._delta_window_agg_cols(sign))
+            .localCheckpoint(eager=False)
+        )
+        n_touched = delta.count()
+        if not n_touched:
+            self._write_cursor(new)
+            return self._result("delta", new, 0)
+        if n_touched > self.max_broadcast_keys:
+            return self._full(new)
+        # count(DISTINCT) aux stores merge the SAME signed rows the
+        # main delta aggregated
+        delta = self._apply_distinct_deltas(delta, contrib, sign, sum(new))
+        if delta is None:
+            return self._full(new)
+        n_repaired = self._merge_and_publish(delta, new)
+        if n_repaired is None:
+            return self._full(new)
+        out = self._result("delta", new, n_touched)
+        out["groups_repaired"] = n_repaired
+        return out
 
-        ``ref`` pins stored value types (delta arithmetic can widen
-        DECIMAL precision — cast back to the full-aggregate plan's
-        schema). ``recompute(groups, seq)`` re-aggregates exactly the
-        given groups from the snapshot — required iff min/max columns
-        are maintained.
+    def _recompute(self, groups: DataFrame, seq: int) -> DataFrame:
+        """Extremum repair: re-aggregate exactly ``groups`` from the
+        CURRENT (joined) snapshot, each table zone-pruned by the group
+        columns it owns (advisory; the group semi-join keeps the result
+        exact, and a touched NULL group disables a column's pruning, so
+        LEFT-join NULL extensions are never fabricated into it)."""
+        phys = [c for c in self.group_cols if c not in self.group_exprs]
+        buckets = _bucket_prunable(self.group_exprs)
+        rec = []
+        for t in self.tables:
+            now = t.read()
+            pr = _zone_pruned_rows(
+                t,
+                groups,
+                [c for c in phys if c in now.columns],
+                bucket_cols=buckets,
+            )
+            rec.append(pr if pr is not None else now)
+        return self._aggregate(
+            _semi_on_groups(self._joined(rec), groups, self.group_cols), seq
+        )
+
+    def _merge_and_publish(self, delta: DataFrame, new) -> int | None:
+        """Merge a grouped signed-delta frame into the view store and
+        publish the cursor ``new``. Returns the number of groups
+        repaired from the snapshot, or None when the extremum-repair
+        set exceeds ``max_broadcast_keys`` (caller degrades to full
+        recompute).
+
+        Stored value types are pinned by the full-aggregate plan's
+        schema: delta arithmetic can widen DECIMAL precision, so merged
+        values cast back. Groups where a removed value tied-or-beat a
+        stored min/max re-aggregate through :meth:`_recompute`.
 
         Plan shape: prune the view store to the touched groups FIRST
         (broadcast semi-join — the only pass over the store; a
@@ -1426,6 +1500,10 @@ class _SignedDeltaMergeMixin:
         semi's right side IS the delta), so the sides are
         Dataset.alias-qualified — unqualified df[col] references trip
         Spark's ambiguous-self-join check here."""
+        seq = sum(new)
+        ref = self._aggregate(
+            self._joined([t.read().limit(0) for t in self.tables]), 0
+        ).schema
         store_rows = _bucket_pruned_store_rows(self.store, delta)
         if store_rows is None:
             store_rows = self.store.read()
@@ -1443,10 +1521,7 @@ class _SignedDeltaMergeMixin:
         def _dc(c):
             return F.col(f"__dl.{c}")
 
-        cond = None
-        for c in self.group_cols:
-            e = _oc(c).eqNullSafe(_dc(f"__g_{c}"))
-            cond = e if cond is None else cond & e
+        cond = _nullsafe_eq((_oc(c), _dc(f"__g_{c}")) for c in self.group_cols)
         # delta side preserved (new groups), old side only where touched
         j = F.broadcast(old).join(d, cond, "right_outer")
 
@@ -1533,7 +1608,7 @@ class _SignedDeltaMergeMixin:
             if n_repaired:
                 if n_repaired > self.max_broadcast_keys:
                     return None
-                fresh = recompute(need, seq).localCheckpoint(eager=False)
+                fresh = self._recompute(need, seq).localCheckpoint(eager=False)
                 if fresh.count() != n_repaired:
                     raise ValueError(
                         "extremum repair found groups whose snapshot "
@@ -1548,12 +1623,9 @@ class _SignedDeltaMergeMixin:
         )
         self._set_pending("apply", seq)
         self.store.upsert(batch, delete_mode="apply")
-        cursor_cb()
+        self._write_cursor(new)
         self._clear_pending()
-        return {
-            "groups_refreshed": n_touched,
-            "groups_repaired": n_repaired,
-        }
+        return n_repaired
 
 
 class DeltaMaterializedView(_SignedDeltaMergeMixin, MaterializedView):
@@ -1578,7 +1650,8 @@ class DeltaMaterializedView(_SignedDeltaMergeMixin, MaterializedView):
     delta cannot name the surviving second-best, so exactly those
     groups re-aggregate from the base (zone-pruned like the parent
     class; removals strictly inside the range stay pure delta).
-    DISTINCT still needs the parent class. ``table_changes``'
+    count/sum/avg(DISTINCT) ride per-(group, value) auxiliary stores
+    (see the mixin). ``table_changes``'
     endpoint-state contract (net change per key, insert+delete cancel)
     makes the signed merge exact across multi-commit windows.
 
@@ -1595,526 +1668,23 @@ class DeltaMaterializedView(_SignedDeltaMergeMixin, MaterializedView):
     rather than publish a corrupt view.
     """
 
-    def __init__(
-        self,
-        base: KeyedTable,
-        path: str,
-        group_cols: list[str],
-        aggs: dict[str, str],
-        name: str = "delta_matview",
-        max_broadcast_keys: int = 1_000_000,
-        group_exprs: dict[str, str] | None = None,
-        store_retain_versions: int = 0,
-        store_hash_buckets: int = 0,
-    ):
-        self._parsed = _parse_invertible_aggs(
-            aggs, allow_extrema=True, allow_distinct=True
-        )
-        super().__init__(
-            base,
-            path,
-            group_cols,
-            aggs,
-            name=name,
-            max_broadcast_keys=max_broadcast_keys,
-            group_exprs=group_exprs,
-            store_retain_versions=store_retain_versions,
-            store_hash_buckets=store_hash_buckets,
-        )
-        self._init_aux_stores(path, name, group_cols, store_hash_buckets)
-
-    def _full(self, latest: int) -> dict:
-        # aux stores rebuild FIRST: the cursor marker is written by the
-        # parent after the main load, so a crash between the two leaves
-        # the marker behind and the next refresh redoes both —
-        # initial_load overwrites, so the replay is idempotent.
-        self._rebuild_aux(self._derive(self.base.read()), latest)
-        out = super()._full(latest)
-        self._clear_pending()
-        return out
-
-    def _aggregate(self, rows: DataFrame, seq: int) -> DataFrame:
-        """Full-recompute form WITH the hidden invertibility columns —
-        used by the initial load, the bulk-rewrite fallback, and
-        extremum repair. ``rows`` arrive pre-derived (same
-        single-derive discipline as the parent)."""
-        out = rows.groupBy(*self.group_cols).agg(*self._delta_full_agg_cols())
-        return out.withColumn(_SEQ_COL, F.lit(seq).cast("long"))
-
-    def read(self) -> DataFrame:
-        return _read_store(self.store).drop(*self._hidden_store_cols())
-
-    def _incremental(self, since: int, latest: int) -> dict:
-        if self._pending():
-            # a prior delta apply crashed between the store upsert and
-            # the cursor write — state unknown, rebuild from snapshot
-            return self._full(latest)
-        ch = self._derive(
-            self.base.table_changes(since, latest, include_preimage=True)
-        )
-        sign = F.when(
-            F.col("_change_type").isin("insert", "update_postimage"),
-            F.lit(1),
-        ).otherwise(F.lit(-1))
-        delta = (
-            ch.groupBy(*self.group_cols)
-            .agg(*self._delta_window_agg_cols(sign))
-            .localCheckpoint(eager=False)
-        )
-        n_touched = delta.count()
-        if not n_touched:
-            self._write_marker(latest)
-            return {"mode": "delta", "base_version": latest, "groups_refreshed": 0}
-        if n_touched > self.max_broadcast_keys:
-            return self._full(latest)
-        delta = self._apply_distinct_deltas(delta, ch, sign, latest)
-        if delta is None:
-            return self._full(latest)
-
-        # stored value types are pinned by the full-aggregate plan —
-        # delta arithmetic can widen DECIMAL precision, so cast back
-        ref = self._aggregate(self._derive(self.base.read()).limit(0), 0).schema
-
-        def _recompute(groups: DataFrame, seq: int) -> DataFrame:
-            # extremum repair: re-aggregate exactly these groups from
-            # the snapshot, zone-pruned like the parent class's
-            # affected-group recompute (files opened ∝ repair set)
-            rows = _zone_pruned_rows(
-                self.base,
-                groups,
-                [c for c in self.group_cols if c not in self.group_exprs],
-                bucket_cols=_bucket_prunable(self.group_exprs),
-            )
-            snap = self._derive(rows if rows is not None else self.base.read())
-            return self._aggregate(
-                _semi_on_groups(snap, groups, self.group_cols), seq
-            )
-
-        out = self._merge_and_publish(
-            delta,
-            n_touched,
-            latest,
-            ref,
-            lambda: self._write_marker(latest),
-            recompute=_recompute,
-        )
-        if out is None:
-            return self._full(latest)
-        out.update({"mode": "delta", "base_version": latest})
-        return out
-
-
-class DeltaJoinMaterializedView(_SignedDeltaMergeMixin, JoinMaterializedView):
-    """GROUP BY over an inner equi-join, maintained by SIGNED DELTA
-    MERGE — the join-bilinearity identity
-
-        Δ(A ⋈ B) = ΔA ⋈ B_new  +  A_new ⋈ ΔB  −  ΔA ⋈ ΔB
-
-    (A_new⋈B_new − A_old⋈B_old expanded with A_old = A_new − ΔA; the
-    third term subtracts the change-window×change-window pairs the
-    first two both count). Each term carries a per-row sign — ΔA's
-    image sign, ΔB's image sign, and −sign_A·sign_B respectively —
-    and the signed union feeds the same grouped-delta merge as
-    :class:`DeltaMaterializedView`.
-
-    Scale contrast with :class:`JoinMaterializedView` (affected-group
-    recompute): recompute re-joins and re-aggregates every row of
-    every touched GROUP — a one-order change against a
-    billion-row-group view re-aggregates the billion rows. The delta
-    form touches base data only to join each side's change window
-    against the OTHER side's current state, both reads pruned to the
-    changed join keys (zone-map file pruning on the join-key column
-    when a sidecar exists + an exact broadcast key semi-join either
-    way) — refresh I/O ∝ the change set's join NEIGHBORHOODS, never
-    either corpus and never a whole group. Both snapshots are read at
-    the CURRENT heads (no as-of reads), so retention only has to
-    cover the change window itself.
-
-    LEFT joins are maintained as inner + DANGLING corrections. A left
-    join is the inner join plus every unmatched left row extended with
-    NULLs; the inner part is bilinear as above, and the dangling part
-
-        D(A, B) = Σ_{a ∈ A} [match_B(a.key) = 0] · nullext(a)
-
-    moves only where a key's match COUNT transitions 0 ↔ positive:
-
-        ΔD = [D(A_new,B_new) − D(A_old,B_new)]   (ΔA at B_new)
-           + [D(A_old,B_new) − D(A_old,B_old)]   (flip keys × A_old)
-
-    The first bracket keeps exactly the ΔA rows whose key is matchless
-    at B_NEW (both signs — the bracket holds B fixed at its new
-    state); the second re-states A_old = A_new − ΔA over the keys
-    whose match count flipped. match_new comes from the current right
-    side PRUNED to the window's keys; match_old = match_new − Δmatch
-    is pure window arithmetic — no as-of reads, I/O still ∝ the change
-    neighborhoods. NULL left keys never match, so they ride the first
-    bracket with both indicators true.
-
-    Requirements beyond the parent: invertible aggregates (sum/count/avg, plus
-    min/max with JOIN-SIDE extremum repair — groups where a removed
-    contribution tied-or-beat the stored extremum re-aggregate from
-    the current join, zone-pruned and group-restricted; a pair that
-    nets to zero across the inclusion–exclusion terms appears with
-    BOTH signs, so any spurious added-instance that could corrupt a
-    merged extremum is accompanied by a removed-instance that forces
-    the repair instead); both tables' column names disjoint as ever.
-    Same intent-marker crash protocol, bulk-rewrite degradation,
-    NULL-sum semantics, and hash-bucketed store pruning as the
-    single-table delta class.
-    """
-
-    def __init__(
-        self,
-        left: KeyedTable,
-        right: KeyedTable,
-        path: str,
-        on: tuple[str, str],
-        group_cols: list[str],
-        aggs: dict[str, str],
-        name: str = "delta_join_matview",
-        how: str = "inner",
-        max_broadcast_keys: int = 1_000_000,
-        group_exprs: dict[str, str] | None = None,
-        store_retain_versions: int = 0,
-        store_hash_buckets: int = 0,
-    ):
-        if how not in ("inner", "left"):
-            raise ValueError(
-                f"DeltaJoinMaterializedView supports how='inner' or "
-                f"'left', got {how!r}"
-            )
-        self._parsed = _parse_invertible_aggs(
-            aggs, allow_extrema=True, allow_distinct=True
-        )
-        super().__init__(
-            left,
-            right,
-            path,
-            on=on,
-            group_cols=group_cols,
-            aggs=aggs,
-            name=name,
-            how=how,
-            max_broadcast_keys=max_broadcast_keys,
-            group_exprs=group_exprs,
-            store_retain_versions=store_retain_versions,
-            store_hash_buckets=store_hash_buckets,
-        )
-        _require_disjoint_columns([left, right])
-        self._init_aux_stores(path, name, group_cols, store_hash_buckets)
-
-    def _aggregate(self, rows: DataFrame, seq: int) -> DataFrame:
-        out = rows.groupBy(*self.group_cols).agg(*self._delta_full_agg_cols())
-        return out.withColumn(_SEQ_COL, F.lit(seq).cast("long"))
-
-    def read(self) -> DataFrame:
-        return _read_store(self.store).drop(*self._hidden_store_cols())
-
-    def _full(self, l_latest: int, r_latest: int) -> dict:
-        self._rebuild_aux(
-            self._joined(self.left.read(), self.right.read()), l_latest + r_latest
-        )
-        out = super()._full(l_latest, r_latest)
-        self._clear_pending()
-        return out
-
-    def _signed_changes(self, table: KeyedTable, since: int, latest: int):
-        """The table's netted change window with meta columns folded
-        into one integer ``__sg`` (±1) so the two windows can join
-        each other without column collisions."""
-        ch = table.table_changes(since, latest, include_preimage=True)
-        sign = F.when(
-            F.col("_change_type").isin("insert", "update_postimage"),
-            F.lit(1),
-        ).otherwise(F.lit(-1))
-        return ch.withColumn("__sg", sign).drop("_change_type")
-
-    def _pruned_current(
-        self, table: KeyedTable, key_col: str, keys: DataFrame
-    ) -> DataFrame:
-        """Current snapshot restricted to the changed join keys:
-        advisory zone-map file pruning on the join-key column first
-        (files opened ∝ the keys' zones when a sidecar exists), then
-        the exact broadcast key semi-join either way."""
-        rows = _zone_pruned_rows(table, keys, [key_col])
-        if rows is None:
-            rows = table.read()
-        t = keys.select(F.col(key_col).alias("__jk"))
-        return rows.join(
-            F.broadcast(t), rows[key_col] == t["__jk"], "left_semi"
-        )
-
-    def _dangling_terms(self, dl, dr) -> list[DataFrame]:
-        """Signed NULL-extension contributions for the LEFT-join form
-        (class docstring): ΔA rows dangling in their own state's B,
-        plus A_old rows at keys whose match count flipped 0 ↔ positive
-        — both as left-row frames with every right column NULLed, so
-        they union with the inner terms and feed the same grouped
-        delta. Reads ∝ the window's key neighborhoods (pruned current
-        snapshots); match_old is window arithmetic, never an as-of."""
-        if dl is None and dr is None:
-            return []
-        terms: list[DataFrame] = []
-        rfields = self.right.read().schema.fields
-
-        def _nullext(aframe: DataFrame) -> DataFrame:
-            for f in rfields:
-                aframe = aframe.withColumn(f.name, F.lit(None).cast(f.dataType))
-            return aframe
-
-        keyfs = [
-            d.select(F.col(on).alias("__dk"))
-            for d, on in ((dl, self.l_on), (dr, self.r_on))
-            if d is not None
-        ]
-        keys = keyfs[0] if len(keyfs) == 1 else keyfs[0].unionByName(keyfs[1])
-        keys = (
-            keys.filter(F.col("__dk").isNotNull())
-            .distinct()
-            .localCheckpoint(eager=False)
-        )
-        # match_new per key from the pruned current right side;
-        # match_old = match_new − Δmatch (signed window count)
-        cur_r = self._pruned_current(
-            self.right, self.r_on, keys.select(F.col("__dk").alias(self.r_on))
-        )
-        mn = (
-            cur_r.groupBy(self.r_on)
-            .agg(F.count(F.lit(1)).alias("__mn"))
-            .select(F.col(self.r_on).alias("__dk"), "__mn")
-        )
-        counts = keys.join(F.broadcast(mn), "__dk", "left").withColumn(
-            "__mn", F.coalesce("__mn", F.lit(0).cast("long"))
-        )
-        if dr is not None:
-            dm = (
-                dr.groupBy(self.r_on)
-                .agg(F.sum("__sg").alias("__dm"))
-                .select(F.col(self.r_on).alias("__dk"), "__dm")
-            )
-            counts = counts.join(F.broadcast(dm), "__dk", "left").withColumn(
-                "__dm", F.coalesce("__dm", F.lit(0).cast("long"))
-            )
-        else:
-            counts = counts.withColumn("__dm", F.lit(0).cast("long"))
-        counts = counts.withColumn(
-            "__mo", F.col("__mn") - F.col("__dm")
-        ).localCheckpoint(eager=False)
-        aux_cols = ["__dk", "__mn", "__dm", "__mo"]
-        if dl is not None:
-            # bracket 1 is evaluated ENTIRELY at B_new — both signs
-            # check match_new (a removed image whose key was matched
-            # only in the OLD state is bracket 2's business, restated
-            # through A_old = A_new − ΔA). A NULL key misses the
-            # counts join and coalesces to 0 matches (never matches).
-            d = dl.join(
-                F.broadcast(counts), dl[self.l_on] == counts["__dk"], "left"
-            )
-            keep = F.coalesce(F.col("__mn"), F.lit(0)) == 0
-            terms.append(_nullext(d.filter(keep).drop(*aux_cols)))
-        if dr is not None:
-            # bracket 2: keys whose match count flipped 0 ↔ positive
-            # re-state A_old = A_new − ΔA: a key gaining its first
-            # match removes its rows' NULL extensions (__fs = −1), a
-            # key losing its last match restores them (__fs = +1)
-            flips = (
-                counts.filter(
-                    ((F.col("__mo") == 0) & (F.col("__mn") > 0))
-                    | ((F.col("__mo") > 0) & (F.col("__mn") == 0))
-                )
-                .withColumn(
-                    "__fs",
-                    F.when(F.col("__mn") > 0, F.lit(-1)).otherwise(F.lit(1)),
-                )
-                .localCheckpoint(eager=False)
-            )
-            if flips.count():
-                a_cur = self._pruned_current(
-                    self.left,
-                    self.l_on,
-                    flips.select(F.col("__dk").alias(self.l_on)),
-                )
-                t_cur = (
-                    a_cur.join(
-                        F.broadcast(flips),
-                        a_cur[self.l_on] == flips["__dk"],
-                        "inner",
-                    )
-                    .withColumn("__sg", F.col("__fs"))
-                    .drop(*aux_cols, "__fs")
-                )
-                terms.append(_nullext(t_cur))
-                if dl is not None:
-                    t_win = (
-                        dl.join(
-                            F.broadcast(flips),
-                            dl[self.l_on] == flips["__dk"],
-                            "inner",
-                        )
-                        .withColumn("__sg", -F.col("__sg") * F.col("__fs"))
-                        .drop(*aux_cols, "__fs")
-                    )
-                    terms.append(_nullext(t_win))
-        return terms
+    _DEFAULT_NAME = "delta_matview"
 
     def _incremental(self, cur, new) -> dict:
         if self._pending():
-            return self._full(*new)
-
-        # Bulk guard BEFORE any base read: the changed-key sets are
-        # broadcast below — corpus-sized windows degrade to full.
-        def _one_side(side):
-            table, on, lo, hi = side
-            if hi <= lo:
-                return None
-            d = self._signed_changes(table, lo, hi).localCheckpoint(
-                eager=False
-            )
-            keys = (
-                d.select(on)
-                .filter(F.col(on).isNotNull())
-                .distinct()
-                .localCheckpoint(eager=False)
-            )
-            if keys.count() > self.max_broadcast_keys:
-                return _BULK
-            return d, keys
-
-        # the two sides' change scans are independent — overlap their
-        # jobs (zone-pruned term construction stays sequential: it
-        # updates the bench-visible prune counters)
-        sides = _pmap(
-            _one_side,
-            [
-                (self.left, self.l_on, cur[0], new[0]),
-                (self.right, self.r_on, cur[1], new[1]),
-            ],
-            workers=2,
+            # a prior delta apply crashed between the store upsert and
+            # the cursor write — state unknown, rebuild from snapshot
+            return self._full(new)
+        ch = self._joined(
+            [self.base.table_changes(cur[0], new[0], include_preimage=True)]
         )
-        if any(s is _BULK for s in sides):
-            return self._full(*new)
-        dl, lkeys = sides[0] if sides[0] is not None else (None, None)
-        dr, rkeys = sides[1] if sides[1] is not None else (None, None)
-        seq = new[0] + new[1]
-        terms = []
-        if dl is not None:
-            # ΔA ⋈ B_new, sign = ΔA's
-            r_sel = self._pruned_current(
-                self.right,
-                self.r_on,
-                lkeys.select(F.col(self.l_on).alias(self.r_on)),
-            )
-            terms.append(
-                dl.join(r_sel, dl[self.l_on] == r_sel[self.r_on], "inner")
-            )
-        if dr is not None:
-            # A_new ⋈ ΔB, sign = ΔB's
-            l_sel = self._pruned_current(
-                self.left,
-                self.l_on,
-                rkeys.select(F.col(self.r_on).alias(self.l_on)),
-            )
-            terms.append(
-                l_sel.join(dr, l_sel[self.l_on] == dr[self.r_on], "inner")
-            )
-        if dl is not None and dr is not None:
-            # − ΔA ⋈ ΔB: the first two terms BOTH count pairs where
-            # both sides changed in this window (ΔA joins B_new which
-            # already contains ΔB's effect, and vice versa) — subtract
-            # one copy with the product sign negated.
-            la = dl.withColumnRenamed("__sg", "__sg_a")
-            rb = dr.withColumnRenamed("__sg", "__sg_b")
-            terms.append(
-                la.join(rb, la[self.l_on] == rb[self.r_on], "inner")
-                .withColumn("__sg", -F.col("__sg_a") * F.col("__sg_b"))
-                .drop("__sg_a", "__sg_b")
-            )
-        if self.how == "left":
-            terms.extend(self._dangling_terms(dl, dr))
-        if not terms:
-            self._write_cursor(new)
-            return {
-                "mode": "delta",
-                "versions": new,
-                "base_version": seq,
-                "groups_refreshed": 0,
-            }
-        contrib = terms[0]
-        for t in terms[1:]:
-            contrib = contrib.unionByName(t)
-        for c, e in self.group_exprs.items():
-            contrib = contrib.withColumn(c, F.expr(e))
-        if self._aux:
-            # the aux transitions re-read the contribution union once
-            # per distinct column — materialize the term joins once
-            contrib = contrib.localCheckpoint(eager=False)
-        delta = (
-            contrib.groupBy(*self.group_cols)
-            .agg(*self._delta_window_agg_cols(F.col("__sg")))
-            .localCheckpoint(eager=False)
-        )
-        n_touched = delta.count()
-        if not n_touched:
-            self._write_cursor(new)
-            return {
-                "mode": "delta",
-                "versions": new,
-                "base_version": seq,
-                "groups_refreshed": 0,
-            }
-        if n_touched > self.max_broadcast_keys:
-            return self._full(*new)
-        # count(DISTINCT) aux stores merge the SAME signed contribution
-        # union the main delta aggregated
-        delta = self._apply_distinct_deltas(
-            delta, contrib, F.col("__sg"), seq
-        )
-        if delta is None:
-            return self._full(*new)
-        ref = self._aggregate(
-            self._joined(self.left.read().limit(0), self.right.read().limit(0)),
-            0,
-        ).schema
-
-        def _recompute(groups: DataFrame, s: int) -> DataFrame:
-            # join-side extremum repair: re-aggregate exactly these
-            # groups from the CURRENT join, each side zone-pruned by
-            # the physical group columns it owns (advisory; the
-            # group semi-join keeps the result exact)
-            phys = [c for c in self.group_cols if c not in self.group_exprs]
-            ln, rn = self.left.read(), self.right.read()
-            l_rec = _zone_pruned_rows(
-                self.left, groups, [c for c in phys if c in ln.columns]
-            )
-            r_rec = _zone_pruned_rows(
-                self.right, groups, [c for c in phys if c in rn.columns]
-            )
-            joined = self._joined(
-                l_rec if l_rec is not None else ln,
-                r_rec if r_rec is not None else rn,
-            )
-            return self._aggregate(
-                _semi_on_groups(joined, groups, self.group_cols), s
-            )
-
-        out = self._merge_and_publish(
-            delta,
-            n_touched,
-            seq,
-            ref,
-            lambda: self._write_cursor(new),
-            recompute=_recompute,
-        )
-        if out is None:
-            return self._full(*new)
-        out.update({"mode": "delta", "versions": new, "base_version": seq})
-        return out
+        return self._fold_delta(ch, _image_sign(), new)
 
 
 # --- N-table chain/star join views --------------------------------------------
 
 
-class ChainMaterializedView:
+class ChainMaterializedView(_ViewSkeleton):
     """GROUP BY over an N-table inner equi-join TREE — chain
     (``T0 JOIN T1 ON T0.fk0 = T1.k1 JOIN T2 ON T1.fk1 = T2.k2``),
     star (every fk on the fact), or snowflake (each join's left column
@@ -2167,6 +1737,8 @@ class ChainMaterializedView:
     (TPC-H-style prefixed schemas satisfy this).
     """
 
+    _DEFAULT_NAME = "chain_matview"
+
     def __init__(
         self,
         tables: list[KeyedTable],
@@ -2174,7 +1746,7 @@ class ChainMaterializedView:
         path: str,
         group_cols: list[str],
         aggs: dict[str, str],
-        name: str = "chain_matview",
+        name: str | None = None,
         max_broadcast_keys: int = 1_000_000,
         group_exprs: dict[str, str] | None = None,
         store_retain_versions: int = 0,
@@ -2185,33 +1757,11 @@ class ChainMaterializedView:
             raise ValueError(
                 "need >= 2 tables and exactly len(tables)-1 ON pairs"
             )
-        self.hows = list(hows) if hows is not None else ["inner"] * len(on)
-        if len(self.hows) != len(on) or any(
-            h not in ("inner", "left") for h in self.hows
-        ):
-            raise ValueError(
-                "hows must give 'inner' or 'left' per ON pair, got "
-                f"{self.hows!r}"
-            )
-        for t in tables:
-            if not t.retain_versions:
-                raise ValueError(
-                    "ChainMaterializedView requires every table versioned "
-                    "(retain_versions > 0) — the cursor is a version tuple"
-                )
-        if not group_cols or not aggs:
-            raise ValueError("group_cols and aggs must be non-empty")
-        bad = set(group_cols) & set(aggs)
-        if bad:
-            raise ValueError(f"column(s) both grouped and aggregated: {sorted(bad)}")
-        self.group_exprs = dict(group_exprs or {})
-        stray = set(self.group_exprs) - set(group_cols)
-        if stray:
-            raise ValueError(
-                f"group_exprs name(s) not in group_cols: {sorted(stray)}"
-            )
-        self.tables = list(tables)
-        self.on = list(on)
+        super().__init__(
+            tables, on, ["inner"] * len(on) if hows is None else hows, path,
+            group_cols, aggs, name, max_broadcast_keys, group_exprs,
+            store_retain_versions, store_hash_buckets,
+        )
         # Attachment structure: join j binds tables[j+1] via
         # on[j] = (left_col, right_col) where right_col belongs to
         # tables[j+1] and left_col to exactly ONE earlier table — a
@@ -2242,103 +1792,6 @@ class ChainMaterializedView:
             self._left_tainted[j + 1] = (
                 self.hows[j] == "left" or self._left_tainted[self._owner[j]]
             )
-        self.spark: SparkSession = tables[0].spark
-        self.path = path
-        self.group_cols = list(group_cols)
-        self.aggs = dict(aggs)
-        self.max_broadcast_keys = max_broadcast_keys
-        self.store = KeyedTable(
-            self.spark,
-            path,
-            TableSpec(
-                name,
-                record_key=tuple(group_cols),
-                precombine_key=_SEQ_COL,
-                partition_granularity="",
-                hash_buckets=store_hash_buckets,
-            ),
-            retain_versions=store_retain_versions,
-        )
-
-    # -- cursor ----------------------------------------------------------------
-
-    def _marker_path(self) -> str:
-        return f"{self.path}/.mv/_BASE_VERSIONS"
-
-    def refreshed_versions(self) -> tuple[int, ...] | None:
-        parts = (_read_small(self.spark, self._marker_path()) or "").split()
-        n = len(self.tables)
-        if len(parts) != 2 * n:
-            return None
-        try:
-            versions = tuple(int(p) for p in parts[:n])
-        except ValueError:
-            return None
-        if any(
-            parts[n + i] != _inc_token(t) for i, t in enumerate(self.tables)
-        ):
-            return None  # some table was RESET since the cursor
-        return versions
-
-    def _write_cursor(self, versions: tuple[int, ...]) -> None:
-        _write_small(
-            self.spark,
-            self._marker_path(),
-            " ".join(str(v) for v in versions)
-            + " "
-            + " ".join(_inc_token(t) for t in self.tables),
-        )
-
-    # -- plans -----------------------------------------------------------------
-
-    def _joined(self, frames: list[DataFrame]) -> DataFrame:
-        out = frames[0]
-        for (fk, k), d, how in zip(self.on, frames[1:], self.hows):
-            out = out.join(d, out[fk] == d[k], how)
-        for c, e in self.group_exprs.items():
-            out = out.withColumn(c, F.expr(e))
-        return out
-
-    def _aggregate(self, rows: DataFrame, seq: int) -> DataFrame:
-        out = rows.groupBy(*self.group_cols).agg(
-            *[F.expr(e).alias(c) for c, e in self.aggs.items()]
-        )
-        return out.withColumn(_SEQ_COL, F.lit(seq).cast("long"))
-
-    def read(self) -> DataFrame:
-        return _read_store(self.store).drop(_SEQ_COL)
-
-    def refresh(self) -> dict:
-        return _record_refresh(self, self._refresh())
-
-    def _refresh(self) -> dict:
-        heads = tuple((t.versions() or [0])[-1] for t in self.tables)
-        cur = self.refreshed_versions()
-        if cur == heads:
-            return {
-                "mode": "noop",
-                "versions": cur,
-                "base_version": sum(cur),
-                "groups_refreshed": 0,
-            }
-        if cur is None or any(
-            cur[i] not in t.readable_versions()
-            for i, t in enumerate(self.tables)
-        ):
-            return self._full(heads)
-        return self._incremental(cur, heads)
-
-    def _full(self, heads: tuple[int, ...]) -> dict:
-        rows = self._joined([t.read() for t in self.tables])
-        self.store.initial_load(self._aggregate(rows, sum(heads)))
-        n = self.store.read().count()
-        self._write_cursor(heads)
-        return {
-            "mode": "full",
-            "versions": heads,
-            "base_version": sum(heads),
-            "groups_refreshed": n,
-        }
 
     def _changed_keys(self, i: int, cur, new) -> DataFrame | None:
         """Distinct FULL record-key tuples of table i's change window,
@@ -2527,12 +1980,7 @@ class ChainMaterializedView:
             return self._full(new)
         if all(k is None for k in changed):
             self._write_cursor(new)
-            return {
-                "mode": "incremental",
-                "versions": new,
-                "base_version": sum(new),
-                "groups_refreshed": 0,
-            }
+            return self._result("incremental", new, 0)
         # LEFT-tainted changed dims also propagate their change
         # WINDOW's join values: rows absent from one state (inserts
         # walked old, deletes walked new) still name the facts whose
@@ -2559,12 +2007,7 @@ class ChainMaterializedView:
         n_touched = touched.count()
         if not n_touched:
             self._write_cursor(new)
-            return {
-                "mode": "incremental",
-                "versions": new,
-                "base_version": sum(new),
-                "groups_refreshed": 0,
-            }
+            return self._result("incremental", new, 0)
         if n_touched > self.max_broadcast_keys:
             return self._full(new)
         seq = sum(new)
@@ -2607,111 +2050,109 @@ class ChainMaterializedView:
             self.store, touched, fresh, self.group_cols, self.aggs, seq
         )
         self._write_cursor(new)
-        return {
-            "mode": "incremental",
-            "versions": new,
-            "base_version": sum(new),
-            "groups_refreshed": n_touched,
-        }
+        return self._result("incremental", new, n_touched)
 
 
 def attach_chain_matview_maintenance(view: ChainMaterializedView) -> None:
-    """Enroll the view in EVERY chained table's post-commit slot."""
-
-    def chain_refresh(_table: KeyedTable) -> None:
-        view.refresh()
-
-    for t in view.tables:
-        t.add_maintenance_hook(chain_refresh)
+    """Enroll the view in EVERY chained table's post-commit slot
+    (:func:`_attach`)."""
+    _attach(view, view.tables)
 
 
 class DeltaChainMaterializedView(_SignedDeltaMergeMixin, ChainMaterializedView):
-    """GROUP BY over an N-table inner equi-join tree, maintained by
-    SIGNED DELTA MERGE — the N-way generalization of
-    :class:`DeltaJoinMaterializedView` via inclusion–exclusion over
-    the changed tables:
+    """GROUP BY over an N-table equi-join tree, maintained by SIGNED
+    DELTA MERGE via inclusion–exclusion over the changed tables:
 
         Δ(T1 ⋈ … ⋈ Tn) = Σ_{∅≠S⊆changed} (−1)^{|S|+1} ·
                           ⋈_i (ΔTi if i∈S else Ti_new)
 
     (expand ⋈(Ti_new − ΔTi) and subtract — every non-delta factor is
     the CURRENT state, so no as-of reads; each term's per-row sign is
-    (−1)^{|S|+1} times the product of its deltas' image signs). With k
-    changed tables the window costs 2^k − 1 terms — one per table in
-    the overwhelmingly common single-feed refresh — and every term is
-    a join of change windows against NEIGHBORHOOD-PRUNED current
-    states: restrictions propagate from each delta both toward the
-    fact and away from it (one exact semi-join per hop, zone-map file
-    pruning where the reached key set is small enough to enumerate),
-    so refresh I/O ∝ the change set's join neighborhoods — never any
+    (−1)^{|S|+1} times the product of its deltas' image signs). For two
+    tables this is the join-bilinearity identity Δ(A⋈B) = ΔA⋈B_new +
+    A_new⋈ΔB − ΔA⋈ΔB. With k changed tables the window costs 2^k − 1
+    terms — one per table in the overwhelmingly common single-feed
+    refresh — and every term is a join of change windows against
+    NEIGHBORHOOD-PRUNED current states: restrictions propagate from
+    each delta both toward the fact and away from it (one exact
+    broadcast semi-join per hop, zone-map file pruning on the join key
+    where the reached key set is small enough to enumerate), so
+    refresh I/O ∝ the change set's join neighborhoods — never any
     corpus and never a touched group's full rows (the chain recompute
     class re-joins every row of every touched group; a far-dim rename
     over a billion-row group re-aggregates the billion rows there,
     and only the net signed contributions here).
 
-    Same constraints and protocol as the 2-table delta-join class:
-    inner joins, invertible aggregates (sum/count/avg, plus min/max
-    with join-side extremum repair — see that class's sign-pairing
-    argument for why net-zero pairs cannot corrupt a merged extremum),
-    disjoint column names, intent-marker crash protocol, bulk
-    degradation, NULL-sum semantics, bucketed-store merge pruning.
+    Hops are inner joins, plus ONE LEFT hop on a two-table view
+    (:class:`DeltaJoinMaterializedView` is that spelling); a LEFT hop
+    in a longer chain raises. A left join is the inner join plus every
+    unmatched left row extended with NULLs; the inner part is
+    maintained as above, and the dangling part
+
+        D(A, B) = Σ_{a ∈ A} [match_B(a.key) = 0] · nullext(a)
+
+    moves only where a key's match COUNT transitions 0 ↔ positive:
+
+        ΔD = [D(A_new,B_new) − D(A_old,B_new)]   (ΔA at B_new)
+           + [D(A_old,B_new) − D(A_old,B_old)]   (flip keys × A_old)
+
+    The first bracket keeps exactly the ΔA rows whose key is matchless
+    at B_NEW (both signs — the bracket holds B fixed at its new
+    state); the second re-states A_old = A_new − ΔA over the keys
+    whose match count flipped. match_new comes from the current right
+    side PRUNED to the window's keys; match_old = match_new − Δmatch
+    is pure window arithmetic — no as-of reads, I/O still ∝ the change
+    neighborhoods. NULL left keys never match, so they ride the first
+    bracket with both indicators true.
+
+    Requirements: invertible aggregates (sum/count/avg, their DISTINCT
+    forms through aux stores, plus min/max with JOIN-SIDE extremum
+    repair — groups where a removed contribution tied-or-beat the
+    stored extremum re-aggregate from the current join, zone-pruned
+    and group-restricted; a pair that nets to zero across the
+    inclusion–exclusion terms appears with BOTH signs, so any spurious
+    added-instance that could corrupt a merged extremum is accompanied
+    by a removed-instance that forces the repair instead); column
+    names disjoint across tables. Same intent-marker crash protocol,
+    bulk degradation, NULL-sum semantics and bucketed-store merge
+    pruning as the single-table delta class.
     """
 
-    def __init__(
-        self,
-        tables: list[KeyedTable],
-        on: list[tuple[str, str]],
-        path: str,
-        group_cols: list[str],
-        aggs: dict[str, str],
-        name: str = "delta_chain_matview",
-        max_broadcast_keys: int = 1_000_000,
-        group_exprs: dict[str, str] | None = None,
-        store_retain_versions: int = 0,
-        store_hash_buckets: int = 0,
-    ):
-        self._parsed = _parse_invertible_aggs(
-            aggs, allow_extrema=True, allow_distinct=True
-        )
-        super().__init__(
-            tables,
-            on,
-            path,
-            group_cols,
-            aggs,
-            name=name,
-            max_broadcast_keys=max_broadcast_keys,
-            group_exprs=group_exprs,
-            store_retain_versions=store_retain_versions,
-            store_hash_buckets=store_hash_buckets,
-        )
-        _require_disjoint_columns(tables)
-        self._init_aux_stores(path, name, group_cols, store_hash_buckets)
-
-    def _aggregate(self, rows: DataFrame, seq: int) -> DataFrame:
-        out = rows.groupBy(*self.group_cols).agg(*self._delta_full_agg_cols())
-        return out.withColumn(_SEQ_COL, F.lit(seq).cast("long"))
-
-    def read(self) -> DataFrame:
-        return _read_store(self.store).drop(*self._hidden_store_cols())
-
-    def _full(self, heads: tuple[int, ...]) -> dict:
-        self._rebuild_aux(
-            self._joined([t.read() for t in self.tables]), sum(heads)
-        )
-        out = super()._full(heads)
-        self._clear_pending()
-        return out
+    _DEFAULT_NAME = "delta_chain_matview"
 
     def _signed_changes(self, i: int, cur, new) -> DataFrame:
+        """Table i's netted change window with the change type folded
+        into one integer ``__sg_<i>`` (±1), so windows of different
+        tables can join each other without column collisions."""
         ch = self.tables[i].table_changes(
             cur[i], new[i], include_preimage=True
         )
-        sign = F.when(
-            F.col("_change_type").isin("insert", "update_postimage"),
-            F.lit(1),
-        ).otherwise(F.lit(-1))
-        return ch.withColumn(f"__sg_{i}", sign).drop("_change_type")
+        return ch.withColumn(f"__sg_{i}", _image_sign()).drop("_change_type")
+
+    def _pruned_current(
+        self,
+        table: KeyedTable,
+        key_col: str,
+        keys: DataFrame,
+        rows: DataFrame | None = None,
+    ) -> DataFrame:
+        """``rows`` restricted to the join-key values in ``keys`` (one
+        column named ``key_col``) by an exact BROADCAST semi-join — the
+        key sets here come from change windows and their join
+        neighborhoods. ``rows=None`` means the table's pristine current
+        snapshot, which first gets advisory zone-map file pruning on
+        the key column (files opened ∝ the keys' zones when a sidecar
+        exists). NULL keys never equal anything, so they drop first —
+        one would otherwise disable the zone pruning."""
+        keys = keys.filter(F.col(key_col).isNotNull())
+        if rows is None:
+            rows = _zone_pruned_rows(table, keys, [key_col])
+            if rows is None:
+                rows = table.read()
+        t = keys.select(F.col(key_col).alias("__jk"))
+        return rows.join(
+            F.broadcast(t), rows[key_col] == t["__jk"], "left_semi"
+        )
 
     def _term(self, S: frozenset, deltas: list, now: list) -> DataFrame:
         """One inclusion–exclusion term: the chain joined with ΔTi at
@@ -2726,13 +2167,8 @@ class DeltaChainMaterializedView(_SignedDeltaMergeMixin, ChainMaterializedView):
         restricted = [i in S for i in range(n)]
 
         def restrict(i: int, keys: DataFrame, col: str) -> None:
-            # keys carries exactly one column named `col`
-            if frames[i] is None:
-                pr = _zone_pruned_rows(self.tables[i], keys, [col])
-                frames[i] = pr if pr is not None else now[i]
-            ks = keys.select(F.col(col).alias("__rk")).distinct()
-            frames[i] = frames[i].join(
-                ks, frames[i][col] == ks["__rk"], "left_semi"
+            frames[i] = self._pruned_current(
+                self.tables[i], col, keys, frames[i]
             )
             restricted[i] = True
 
@@ -2762,12 +2198,124 @@ class DeltaChainMaterializedView(_SignedDeltaMergeMixin, ChainMaterializedView):
             *[f"__sg_{i}" for i in S]
         )
 
+    def _dangling_terms(self, dl, dr) -> list[DataFrame]:
+        """Signed NULL-extension contributions of a two-table LEFT view
+        (class docstring), from the left and right signed windows (None
+        = that table did not change): ΔA rows dangling at B_new, plus
+        A_old rows at keys whose match count flipped 0 ↔ positive —
+        both as left-row frames with every right column NULLed, so they
+        union with the inner terms and feed the same grouped delta.
+        Reads ∝ the window's key neighborhoods (pruned current
+        snapshots); match_old is window arithmetic, never an as-of."""
+        left, right = self.tables
+        l_on, r_on = self.on[0]
+        if dl is not None:
+            dl = dl.withColumnRenamed("__sg_0", "__sg")
+        if dr is not None:
+            dr = dr.withColumnRenamed("__sg_1", "__sg")
+        terms: list[DataFrame] = []
+        rfields = right.read().schema.fields
+
+        def _nullext(aframe: DataFrame) -> DataFrame:
+            for f in rfields:
+                aframe = aframe.withColumn(f.name, F.lit(None).cast(f.dataType))
+            return aframe
+
+        keyfs = [
+            d.select(F.col(on).alias("__dk"))
+            for d, on in ((dl, l_on), (dr, r_on))
+            if d is not None
+        ]
+        keys = keyfs[0] if len(keyfs) == 1 else keyfs[0].unionByName(keyfs[1])
+        keys = (
+            keys.filter(F.col("__dk").isNotNull())
+            .distinct()
+            .localCheckpoint(eager=False)
+        )
+        # match_new per key from the pruned current right side;
+        # match_old = match_new − Δmatch (signed window count)
+        cur_r = self._pruned_current(
+            right, r_on, keys.select(F.col("__dk").alias(r_on))
+        )
+        mn = (
+            cur_r.groupBy(r_on)
+            .agg(F.count(F.lit(1)).alias("__mn"))
+            .select(F.col(r_on).alias("__dk"), "__mn")
+        )
+        counts = keys.join(F.broadcast(mn), "__dk", "left").withColumn(
+            "__mn", F.coalesce("__mn", F.lit(0).cast("long"))
+        )
+        if dr is not None:
+            dm = (
+                dr.groupBy(r_on)
+                .agg(F.sum("__sg").alias("__dm"))
+                .select(F.col(r_on).alias("__dk"), "__dm")
+            )
+            counts = counts.join(F.broadcast(dm), "__dk", "left").withColumn(
+                "__dm", F.coalesce("__dm", F.lit(0).cast("long"))
+            )
+        else:
+            counts = counts.withColumn("__dm", F.lit(0).cast("long"))
+        counts = counts.withColumn(
+            "__mo", F.col("__mn") - F.col("__dm")
+        ).localCheckpoint(eager=False)
+        aux_cols = ["__dk", "__mn", "__dm", "__mo"]
+        if dl is not None:
+            # bracket 1 is evaluated ENTIRELY at B_new — both signs
+            # check match_new (a removed image whose key was matched
+            # only in the OLD state is bracket 2's business, restated
+            # through A_old = A_new − ΔA). A NULL key misses the
+            # counts join and coalesces to 0 matches (never matches).
+            d = dl.join(
+                F.broadcast(counts), dl[l_on] == counts["__dk"], "left"
+            )
+            keep = F.coalesce(F.col("__mn"), F.lit(0)) == 0
+            terms.append(_nullext(d.filter(keep).drop(*aux_cols)))
+        if dr is not None:
+            # bracket 2: keys whose match count flipped 0 ↔ positive
+            # re-state A_old = A_new − ΔA: a key gaining its first
+            # match removes its rows' NULL extensions (__fs = −1), a
+            # key losing its last match restores them (__fs = +1)
+            flips = (
+                counts.filter(
+                    ((F.col("__mo") == 0) & (F.col("__mn") > 0))
+                    | ((F.col("__mo") > 0) & (F.col("__mn") == 0))
+                )
+                .withColumn(
+                    "__fs",
+                    F.when(F.col("__mn") > 0, F.lit(-1)).otherwise(F.lit(1)),
+                )
+                .localCheckpoint(eager=False)
+            )
+            if flips.count():
+                a_cur = self._pruned_current(
+                    left, l_on, flips.select(F.col("__dk").alias(l_on))
+                )
+                t_cur = (
+                    a_cur.join(
+                        F.broadcast(flips), a_cur[l_on] == flips["__dk"], "inner"
+                    )
+                    .withColumn("__sg", F.col("__fs"))
+                    .drop(*aux_cols, "__fs")
+                )
+                terms.append(_nullext(t_cur))
+                if dl is not None:
+                    t_win = (
+                        dl.join(
+                            F.broadcast(flips), dl[l_on] == flips["__dk"], "inner"
+                        )
+                        .withColumn("__sg", -F.col("__sg") * F.col("__fs"))
+                        .drop(*aux_cols, "__fs")
+                    )
+                    terms.append(_nullext(t_win))
+        return terms
+
     def _incremental(self, cur, new) -> dict:
         if self._pending():
             return self._full(new)
-        n = len(self.tables)
-        seq = sum(new)
 
+        # Bulk guard BEFORE any base read: the windows' key sets are
+        # broadcast below — corpus-sized windows degrade to full.
         def _one_delta(i):
             if new[i] <= cur[i]:
                 return None
@@ -2778,84 +2326,69 @@ class DeltaChainMaterializedView(_SignedDeltaMergeMixin, ChainMaterializedView):
             return d if cnt else None
 
         # per-table change scans are independent — overlap their jobs
-        deltas = _pmap(_one_delta, range(n))
+        # (zone-pruned term construction stays sequential: it updates
+        # the bench-visible prune counters)
+        deltas = _pmap(_one_delta, range(len(self.tables)))
         if any(d is _BULK for d in deltas):
             return self._full(new)
-        changed = [i for i in range(n) if deltas[i] is not None]
+        changed = [i for i, d in enumerate(deltas) if d is not None]
         if not changed:
             self._write_cursor(new)
-            return {
-                "mode": "delta",
-                "versions": new,
-                "base_version": seq,
-                "groups_refreshed": 0,
-            }
+            return self._result("delta", new, 0)
         from itertools import combinations
 
         now = [t.read() for t in self.tables]
-        terms = []
-        for k in range(1, len(changed) + 1):
-            for S in combinations(changed, k):
-                terms.append(self._term(frozenset(S), deltas, now))
+        terms = [
+            self._term(frozenset(S), deltas, now)
+            for k in range(1, len(changed) + 1)
+            for S in combinations(changed, k)
+        ]
+        if self.hows == ["left"]:
+            terms.extend(self._dangling_terms(*deltas))
         contrib = terms[0]
         for t in terms[1:]:
             contrib = contrib.unionByName(t)
-        for c, e in self.group_exprs.items():
-            contrib = contrib.withColumn(c, F.expr(e))
+        contrib = self._joined([contrib])  # derived group keys only
         if self._aux:
             # the aux transitions re-read the contribution union once
             # per distinct column — materialize the term joins once
             contrib = contrib.localCheckpoint(eager=False)
-        delta = (
-            contrib.groupBy(*self.group_cols)
-            .agg(*self._delta_window_agg_cols(F.col("__sg")))
-            .localCheckpoint(eager=False)
-        )
-        n_touched = delta.count()
-        if not n_touched:
-            self._write_cursor(new)
-            return {
-                "mode": "delta",
-                "versions": new,
-                "base_version": seq,
-                "groups_refreshed": 0,
-            }
-        if n_touched > self.max_broadcast_keys:
-            return self._full(new)
-        delta = self._apply_distinct_deltas(
-            delta, contrib, F.col("__sg"), seq
-        )
-        if delta is None:
-            return self._full(new)
-        ref = self._aggregate(
-            self._joined([t.read().limit(0) for t in self.tables]), 0
-        ).schema
+        return self._fold_delta(contrib, F.col("__sg"), new)
 
-        def _recompute(groups: DataFrame, s: int) -> DataFrame:
-            # extremum repair lifted to the chain: re-aggregate exactly
-            # these groups from the CURRENT join, each table zone-pruned
-            # by the physical group columns it owns (advisory)
-            phys = [c for c in self.group_cols if c not in self.group_exprs]
-            rec = []
-            for i, t in enumerate(self.tables):
-                pr = _zone_pruned_rows(
-                    t, groups, [c for c in phys if c in now[i].columns]
-                )
-                rec.append(pr if pr is not None else now[i])
-            return self._aggregate(
-                _semi_on_groups(self._joined(rec), groups, self.group_cols),
-                s,
-            )
 
-        out = self._merge_and_publish(
-            delta,
-            n_touched,
-            seq,
-            ref,
-            lambda: self._write_cursor(new),
-            recompute=_recompute,
+class DeltaJoinMaterializedView(DeltaChainMaterializedView):
+    """The two-table spelling of :class:`DeltaChainMaterializedView`:
+    ``SELECT group_cols, aggs FROM left [LEFT] JOIN right ON left.lk =
+    right.rk GROUP BY group_cols`` by signed delta merge. ``(left,
+    right, on, how)`` is the chain ``([left, right], [on],
+    hows=[how])``; ``how="left"`` takes the chain's dangling
+    correction. It keeps the join views' attribute names (``left``,
+    ``right``, ``l_on``, ``r_on``, ``how``) and its own class name,
+    which DESCRIBE's ``view_class`` and ``LAST_REFRESH["view"]``
+    report. The cursor marker and store layout are the chain's."""
+
+    _DEFAULT_NAME = "delta_join_matview"
+
+    def __init__(
+        self,
+        left: KeyedTable,
+        right: KeyedTable,
+        path: str,
+        on: tuple[str, str],
+        group_cols: list[str],
+        aggs: dict[str, str],
+        name: str | None = None,
+        how: str = "inner",
+        max_broadcast_keys: int = 1_000_000,
+        group_exprs: dict[str, str] | None = None,
+        store_retain_versions: int = 0,
+        store_hash_buckets: int = 0,
+    ):
+        super().__init__(
+            [left, right], [on], path, group_cols, aggs, name,
+            max_broadcast_keys, group_exprs, store_retain_versions,
+            store_hash_buckets, hows=[how],
         )
-        if out is None:
-            return self._full(new)
-        out.update({"mode": "delta", "versions": new, "base_version": seq})
-        return out
+        self.left, self.right = left, right
+        self.l_on, self.r_on = on
+        self.how = how

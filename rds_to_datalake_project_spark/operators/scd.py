@@ -36,7 +36,7 @@ from functools import reduce
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from rds_to_datalake_project_spark import fsio
+from rds_to_datalake_project_spark.operators.matview import read_cursor, write_cursor
 
 __all__ = ["scd2_history", "pit_join"]
 
@@ -207,11 +207,15 @@ class Scd2Store:
         return f"{self.path}/.scd/_BASE_VERSION"
 
     def refreshed_version(self) -> int | None:
-        txt = fsio.read_text(self.spark, self._marker_path())
-        try:
-            return int((txt or "").strip())
-        except ValueError:
-            return None
+        """Base commit version the store reflects (None = never built,
+        unreadable, or the base was RESET since: ``initial_load``
+        restarts commit numbering, so the cursor also carries the
+        base's incarnation token)."""
+        cur = read_cursor(self.spark, self._marker_path(), [self.base])
+        return None if cur is None else cur[0]
+
+    def _write_cursor(self, v: int) -> None:
+        write_cursor(self.spark, self._marker_path(), [self.base], (v,))
 
     def read(self) -> DataFrame:
         return self.store.read().drop(_SEQ_COL)
@@ -226,7 +230,7 @@ class Scd2Store:
             _SEQ_COL, F.lit(v).cast("long")
         )
         self.store.initial_load(full)
-        fsio.write_text(self.spark, self._marker_path(), str(v))
+        self._write_cursor(v)
         return v
 
     def refresh(self) -> dict:
@@ -242,7 +246,7 @@ class Scd2Store:
             return {"mode": "full", "base_version": latest, "commits_applied": 0}
         for v in range(since + 1, latest + 1):
             self._apply(v)
-            fsio.write_text(self.spark, self._marker_path(), str(v))
+            self._write_cursor(v)
         return {
             "mode": "incremental",
             "base_version": latest,

@@ -298,19 +298,7 @@ def _lag(mv) -> int | None:
 
     if isinstance(mv, _SignedDeltaMergeMixin) and mv._pending():
         return None
-    if hasattr(mv, "tables"):
-        cur = mv.refreshed_versions()
-        heads = tuple((t.versions() or [0])[-1] for t in mv.tables)
-    elif hasattr(mv, "left"):
-        cur = mv.refreshed_versions()
-        heads = (
-            (mv.left.versions() or [0])[-1],
-            (mv.right.versions() or [0])[-1],
-        )
-    else:
-        v = mv.refreshed_version()
-        cur = None if v is None else (v,)
-        heads = ((mv.base.versions() or [0])[-1],)
+    cur, heads = mv.refreshed_versions(), mv._heads()
     if cur is None or any(h < c for h, c in zip(heads, cur)):
         return None
     return sum(h - c for h, c in zip(heads, cur))

@@ -957,8 +957,9 @@ def _create_chain_matview_statement(spark, m: re.Match, known: dict):
     safe = re.sub(r"[^A-Za-z0-9_]", "_", name)
     # WITH DELTA REFRESH → inclusion–exclusion signed-delta chain
     # maintenance (invertible aggregates only — validated in __init__,
-    # failing the CREATE cleanly). The delta chain is inner-only: its
-    # inclusion–exclusion terms have no dangling corrections.
+    # failing the CREATE cleanly). This path always has >= 3 tables,
+    # and the delta chain's LEFT-join dangling correction is two-table
+    # only (the single-JOIN form takes it) — so LEFT is refused here.
     extra = {}
     if m.group("delta"):
         from rds_to_datalake_project_spark.operators.matview import (
@@ -1322,12 +1323,7 @@ def _maintenance_statement(spark: SparkSession, sql: str, known: dict):
 
         rows = []
         for name, mv in MATVIEWS.items():
-            if hasattr(mv, "tables"):
-                tables = ",".join(t.spec.name for t in mv.tables)
-            elif hasattr(mv, "left"):
-                tables = f"{mv.left.spec.name},{mv.right.spec.name}"
-            else:
-                tables = mv.base.spec.name
+            tables = ",".join(t.spec.name for t in mv.tables)
             is_delta = isinstance(mv, _SignedDeltaMergeMixin)
             try:
                 lag = _rw._lag(mv)
@@ -1365,15 +1361,10 @@ def _maintenance_statement(spark: SparkSession, sql: str, known: dict):
                 f"DESCRIBE MATERIALIZED VIEW on unknown view {name!r}; "
                 f"known: {sorted(MATVIEWS)}"
             )
-        if hasattr(mv, "tables"):
-            tables = ",".join(t.spec.name for t in mv.tables)
-            cursor = mv.refreshed_versions()
-        elif hasattr(mv, "left"):
-            tables = f"{mv.left.spec.name},{mv.right.spec.name}"
-            cursor = mv.refreshed_versions()
-        else:
-            tables = mv.base.spec.name
-            cursor = mv.refreshed_version()
+        tables = ",".join(t.spec.name for t in mv.tables)
+        cursor = mv.refreshed_versions()
+        if cursor is not None and len(cursor) == 1:
+            cursor = cursor[0]  # a one-table cursor reads as its version
         is_delta = isinstance(mv, _SignedDeltaMergeMixin)
         aux = ",".join(sorted(getattr(mv, "_aux", {}) or {})) or None
         return _literal_frame(spark, 
@@ -1406,18 +1397,7 @@ def _maintenance_statement(spark: SparkSession, sql: str, known: dict):
             # REFRESH ... FULL: operator-forced rebuild from the
             # current snapshot(s) — the ops verb for "I don't trust
             # the view" (e.g. after an out-of-band store repair).
-            heads = getattr(mv, "tables", None)
-            if heads is not None:  # chain view: tuple-of-heads _full
-                info = mv._full(
-                    tuple((t.versions() or [0])[-1] for t in mv.tables)
-                )
-            elif hasattr(mv, "left"):  # join view
-                info = mv._full(
-                    (mv.left.versions() or [0])[-1],
-                    (mv.right.versions() or [0])[-1],
-                )
-            else:
-                info = mv._full((mv.base.versions() or [0])[-1])
+            info = mv._full(mv._heads())
         else:
             info = mv.refresh()
         _publish_matview(spark, name, mv)

@@ -147,6 +147,43 @@ def test_requires_versioned_tables(spark, tmp_path):
         )
 
 
+def test_no_module_outside_matview_dispatches_on_view_arity():
+    """Every view class shares one skeleton: ``tables``,
+    ``refreshed_versions()``, ``_heads()`` and ``_full(heads)`` mean the
+    same for one, two or N tables. No package module outside
+    ``operators/matview.py`` may tell the arities apart by probing for
+    ``left`` / ``tables`` (``hasattr(mv, "left")``,
+    ``getattr(mv, "tables", ...)``) — that decision lives in one
+    module."""
+    import ast
+    import pathlib
+
+    import rds_to_datalake_project_spark as pkg_mod
+
+    pkg = pathlib.Path(pkg_mod.__file__).parent
+    offenders = []
+    for src in sorted(pkg.rglob("*.py")):
+        rel = src.relative_to(pkg.parent)
+        if rel.as_posix() == "rds_to_datalake_project_spark/operators/matview.py":
+            continue
+        for node in ast.walk(ast.parse(src.read_text())):
+            if not (
+                isinstance(node, ast.Call)
+                and isinstance(node.func, ast.Name)
+                and len(node.args) >= 2
+                and isinstance(node.args[1], ast.Constant)
+            ):
+                continue
+            probe = (node.func.id, node.args[1].value)
+            if probe in (
+                ("hasattr", "left"),
+                ("hasattr", "tables"),
+                ("getattr", "tables"),
+            ):
+                offenders.append(f"{rel}:{node.lineno}: {ast.unparse(node)}")
+    assert offenders == []
+
+
 @pytest.mark.slow
 def test_sql_facade_join_matview_create_refresh_select_drop(spark, tmp_path):
     """CREATE MATERIALIZED VIEW ... FROM a JOIN b ON ... GROUP BY
@@ -802,7 +839,7 @@ def test_stacked_views_cascade_through_versioned_store(spark, tmp_path):
     # fires the maintenance hook, whose refresh sees the re-minted
     # incarnation and full-rebuilds level 2 immediately — an explicit
     # refresh afterwards is a clean noop, never a stale read
-    lvl1._full((facts.versions() or [0])[-1])
+    lvl1._full(lvl1._heads())
     assert got() == want()
     out = lvl2.refresh()
     assert out["mode"] in ("noop", "full")

@@ -833,8 +833,8 @@ def test_left_delta_dangling_terms_broadcast(spark, tmp_path):
         (fact.versions() or [0])[-1],
         (dim.versions() or [0])[-1],
     )
-    dl = view._signed_changes(fact, cur[0], new[0]).localCheckpoint(eager=True)
-    dr = view._signed_changes(dim, cur[1], new[1]).localCheckpoint(eager=True)
+    dl = view._signed_changes(0, cur, new).localCheckpoint(eager=True)
+    dr = view._signed_changes(1, cur, new).localCheckpoint(eager=True)
     terms = view._dangling_terms(dl, dr)
     assert terms
     saw_broadcast = False

@@ -207,16 +207,21 @@ def _gname(d, v):
     suppress_health_check=[HealthCheck.too_slow],
 )
 @given(events=join_events_strategy, cuts=cuts_strategy)
+@pytest.mark.parametrize("how", ["inner", "left"])
 @pytest.mark.slow
 def test_delta_join_view_equals_recompute_for_any_cdc_sequence(
-    spark, tmp_path_factory, events, cuts
+    spark, tmp_path_factory, how, events, cuts
 ):
     """Δ(A⋈B) maintenance under interleaved fact/dim churn in arbitrary
     batch splits — including windows where BOTH sides change (the
     −ΔA⋈ΔB correction term) and fk moves through NULL (rows leaving /
-    joining the view entirely)."""
+    joining the view entirely). Under ``how="left"`` the same churn
+    drives the dangling (NULL-extension) correction: fks whose dim row
+    appears, vanishes or never existed, and NULL fks. A recompute
+    JoinMaterializedView over the same events must agree too."""
     from rds_to_datalake_project_spark.operators.matview import (
         DeltaJoinMaterializedView,
+        JoinMaterializedView,
     )
 
     tmp = tmp_path_factory.mktemp("pdjv")
@@ -238,12 +243,20 @@ def test_delta_join_view_equals_recompute_for_any_cdc_sequence(
     dim.initial_load(spark.createDataFrame(
         [(d, _gname(d, 0), 0) for d in range(3)],
         "d_id long, gname string, dv long"))
-    view = DeltaJoinMaterializedView(
-        fact, dim, str(tmp / "v"), on=("fk", "d_id"),
-        group_cols=["gname"],
-        aggs={"n": "count(*)", "total": "sum(amount)"},
-    )
-    view.refresh()
+    views = [
+        cls(
+            fact, dim, str(tmp / sub), on=("fk", "d_id"),
+            group_cols=["gname"],
+            aggs={"n": "count(*)", "total": "sum(amount)"},
+            how=how,
+        )
+        for cls, sub in (
+            (DeltaJoinMaterializedView, "v"),
+            (JoinMaterializedView, "rv"),
+        )
+    ]
+    for view in views:
+        view.refresh()
 
     positions = sorted({c for c in cuts if c < len(events)})
     batches, prev = [], 0
@@ -268,9 +281,10 @@ def test_delta_join_view_equals_recompute_for_any_cdc_sequence(
             dim.upsert(spark.createDataFrame(
                 drows, "d_id long, gname string, dv long, Op string"),
                 delete_mode="apply")
-        view.refresh()
+        for view in views:
+            view.refresh()
 
-    j = fact.read().join(dim.read(), F.col("fk") == F.col("d_id"))
+    j = fact.read().join(dim.read(), F.col("fk") == F.col("d_id"), how)
     want = {
         tuple(r)
         for r in j.groupBy("gname").agg(
@@ -278,11 +292,12 @@ def test_delta_join_view_equals_recompute_for_any_cdc_sequence(
             F.sum("amount").alias("total"),
         ).select("gname", "n", "total").collect()
     }
-    got = {
-        tuple(r)
-        for r in view.read().select("gname", "n", "total").collect()
-    }
-    assert got == want
+    for view in views:
+        got = {
+            tuple(r)
+            for r in view.read().select("gname", "n", "total").collect()
+        }
+        assert got == want, type(view).__name__
 
 
 def _u(k, v):

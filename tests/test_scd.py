@@ -158,3 +158,40 @@ def test_scd2_store_reapply_is_idempotent(spark, tmp_path):
     after = sorted(map(tuple, s.read().collect()))
     assert before == after
     assert s.refreshed_version() == 1
+
+
+def test_scd2_store_rebuilds_after_base_reset(spark, tmp_path):
+    """A table RESET (``initial_load`` again) restarts commit numbering.
+    Two commits after it, the head version equals the store's cursor
+    again — the cursor's incarnation token must still send the next
+    refresh to a full rebuild instead of a noop over the previous
+    incarnation's intervals."""
+    from rds_to_datalake_project_spark.operators.scd import Scd2Store
+
+    t = _mk_base(spark, tmp_path)
+    for b in (B1, B2):
+        t.upsert(spark.createDataFrame(b, BATCH_COLS), delete_mode="apply")
+    s = Scd2Store(t, str(tmp_path / "scd_store5"), ["val"])
+    assert s.refresh()["mode"] == "full"
+    assert s.refreshed_version() == 2
+
+    t.initial_load(spark.createDataFrame(
+        [("r9", "2024-03-05T00:00:00", "2024-03-05T00:00:00", "z1")],
+        INIT_COLS,
+    ))
+    for i, ts in enumerate(("2024-07-01T00:00:00", "2024-08-01T00:00:00")):
+        t.upsert(
+            spark.createDataFrame(
+                [("r9", "2024-03-05T00:00:00", ts, f"z{i + 2}", "U")],
+                BATCH_COLS,
+            ),
+            delete_mode="apply",
+        )
+    assert (t.versions() or [0])[-1] == 2  # the old cursor's number
+    assert s.refresh()["mode"] == "full"
+    want = sorted(map(tuple, scd2_history(t, ["val"]).collect()))
+    got = sorted(
+        map(tuple, s.read().select(*scd2_history(t, ["val"]).columns).collect())
+    )
+    assert got == want
+    assert {r[0] for r in got} == {"r9"}
