@@ -53,6 +53,7 @@ import json
 from pyspark.sql import DataFrame, SparkSession
 
 from rds_to_datalake_project_spark import fsio
+from rds_to_datalake_project_spark.operators import commitlog
 from rds_to_datalake_project_spark.operators.upsert import KeyedTable
 from rds_to_datalake_project_spark.schema import TableSpec
 
@@ -107,20 +108,19 @@ class ClonedTable(KeyedTable):
             )
         return src
 
-    def _localized_rels(self) -> set[str]:
-        """Every partition rel the branch has EVER diverged — the set
-        the source remainder must exclude. Directory presence is NOT
-        enough: a branch delete vacating a whole partition removes its
-        local leaf dir, and resolving by dirs alone would resurrect
-        the source's copy. The ground truth is the commit records'
-        ``#created`` lists (every first materialization is flagged),
-        merged into the ``.meta/_LOCALIZED`` ledger when vacuum
-        expires old flags (see :meth:`vacuum_versions`)."""
+    def _localized_rels(self, upto: int | None = None) -> set[str]:
+        """Every partition rel the branch diverged by commit ``upto``
+        (None: ever) — the set the source remainder must exclude.
+        Directory presence is NOT enough: a branch delete vacating a
+        whole partition removes its local leaf dir, and resolving by
+        dirs alone would resurrect the source's copy. The ground truth
+        is the commit records' created lists, merged into the
+        ``.meta/_LOCALIZED`` ledger when vacuum expires old records (see
+        :meth:`vacuum_versions`) — ledger rels predate the retention
+        floor, so any readable ``upto``."""
         out = set(self._read_localized_ledger())
-        for j in self.versions():
-            out |= set(
-                self._flag_meta(f"{self.path}/.meta/v{j}.flag")["created"]
-            )
+        for rec in commitlog.read_range(self, upto=upto):
+            out |= set(rec.created)
         return out
 
     def _read_localized_ledger(self) -> list[str]:
@@ -134,20 +134,15 @@ class ClonedTable(KeyedTable):
 
     def vacuum_versions(self, keep_last: int = 1) -> int:
         """Vacuum, preserving localization evidence: the expiring
-        commits' ``#created`` lists merge into the ledger BEFORE their
-        flags are deleted (idempotent — a crash between merge and
+        commits' created lists merge into the ledger BEFORE their
+        records are deleted (idempotent — a crash between merge and
         delete re-merges on the next run)."""
         if self._clone_meta() is not None:
             expiring = self.versions()[:-keep_last] if keep_last >= 1 else []
             if expiring:
-                merged = set(self._read_localized_ledger())
-                for j in expiring:
-                    merged |= set(
-                        self._flag_meta(f"{self.path}/.meta/v{j}.flag")[
-                            "created"
-                        ]
-                    )
-                self._write_localized_ledger(merged)
+                self._write_localized_ledger(
+                    self._localized_rels(upto=expiring[-1])
+                )
         return super().vacuum_versions(keep_last=keep_last)
 
     def _local_dirs(self) -> set[str]:
@@ -232,15 +227,7 @@ class ClonedTable(KeyedTable):
         meta = self._clone_meta()
         if meta is None:
             return super().read_as_of(version, _exclude_rels=_exclude_rels)
-        if not self.retain_versions:
-            raise ValueError("read_as_of requires retain_versions > 0")
-        latest = (self.versions() or [0])[-1]
-        floor = self._read_floor()
-        if not floor <= version <= latest:
-            raise ValueError(
-                f"version {version} is not reconstructible: readable "
-                f"range is [{floor}, {latest}]"
-            )
+        self._check_readable(version)
         src = self._source(meta)
         if not self.partition_cols:
             first_local = min(self.versions(), default=None)
@@ -249,15 +236,8 @@ class ClonedTable(KeyedTable):
             return self._pinned_source_read(src, meta)
         # A rel is LOCAL as of k iff a clone commit ≤ k first
         # materialized it (the commit records name exactly those — a
-        # staged rel absent from the local tree is flagged #created).
-        # The ledger holds the lists of vacuumed flags; every ledger
-        # rel localized before the retention floor ≤ any readable k.
-        local_at_k: set[str] = set(self._read_localized_ledger())
-        for j in self.versions():
-            if j <= version:
-                local_at_k |= set(
-                    self._flag_meta(f"{self.path}/.meta/v{j}.flag")["created"]
-                )
+        # staged rel absent from the local tree is recorded created).
+        local_at_k = self._localized_rels(upto=version)
         remainder = self._pinned_source_read(src, meta, exclude=local_at_k)
         if not local_at_k:
             return remainder
@@ -310,12 +290,7 @@ class ClonedTable(KeyedTable):
         meta = self._clone_meta()
         if meta is None:
             return super()._as_of_rels(version)
-        localized: set[str] = set(self._read_localized_ledger())
-        for j in self.versions():
-            if j <= version:
-                localized |= set(
-                    self._flag_meta(f"{self.path}/.meta/v{j}.flag")["created"]
-                )
+        localized = self._localized_rels(upto=version)
         src_rels = set(
             self._source(meta)._as_of_rels(meta["src_version"])
         )
@@ -359,9 +334,11 @@ class ClonedTable(KeyedTable):
 
         Conflict rule (Delta-style logical conflict detection): a
         source commit after the pin touching a partition the branch
-        also modified raises :class:`PromoteConflict` (``force=True``
-        lets the branch win); source commits to OTHER partitions
-        compose freely. Publishes through the source's own optimistic
+        also modified — by the commit record's ``touched`` rule, so
+        vector deletes and MOR updates count — raises
+        :class:`PromoteConflict` (``force=True`` lets the branch win);
+        so does a source history whose reach is unknowable (an expired
+        record). Source commits to OTHER partitions compose freely. Publishes through the source's own optimistic
         commit protocol, so a racing writer conflicts instead of being
         overwritten.
 
@@ -406,14 +383,10 @@ class ClonedTable(KeyedTable):
                 "source_version": (src.versions() or [0])[-1],
             }
         if not force:
-            conflicted: set[str] = set()
-            for j in src.versions():
-                if j <= meta["src_version"]:
-                    continue
-                touched = set(src._retired_rels(j)) | set(
-                    src._flag_meta(f"{src.path}/.meta/v{j}.flag")["created"]
-                )
-                conflicted |= touched & local
+            touched = src._touched_rels_between(
+                meta["src_version"], (src.versions() or [0])[-1]
+            )
+            conflicted = local if touched is None else touched & local
             if conflicted:
                 raise PromoteConflict(
                     "source commits after the pin touched partitions "

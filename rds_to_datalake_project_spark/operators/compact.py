@@ -26,6 +26,7 @@ import os
 from pyspark.sql import DataFrame, functions as F
 
 from rds_to_datalake_project_spark import fsio
+from rds_to_datalake_project_spark.operators import commitlog
 from rds_to_datalake_project_spark.operators.upsert import (
     CommitConflict,
     KeyedTable,
@@ -460,8 +461,9 @@ def attach_auto_compact(
     it.
 
     Cost per commit ∝ the TOUCHED partition set: on retained tables
-    the set is read from the commit's created/retired records (pure
-    metadata); unversioned tables fall back to the full leaf listing.
+    the set is the commit record's ``file_rels`` (pure metadata;
+    operators/commitlog says why a vector's reach stays out);
+    unversioned tables fall back to the full leaf listing.
     Advisory and failure-isolated like every maintenance hook; the
     compaction commits through the optimistic protocol, so it can
     never swallow a concurrent writer's commit (a lost race skips the
@@ -480,16 +482,8 @@ def attach_auto_compact(
                 vs = t.versions()
                 if not vs:
                     return  # nothing committed beyond the initial load
-                v = vs[-1]
-                meta = t._flag_meta(f"{t.path}/.meta/v{v}.flag")
-                only = set(meta.get("created", [])) | set(t._retired_rels(v))
-                # MOR-update appends fragment too (one small file per
-                # update batch per partition) — in scope for repair
-                only |= {
-                    p.rsplit("/", 1)[0]
-                    for p in meta.get("appended", "").split("\t")
-                    if "/" in p
-                }
+                (newest,) = commitlog.read_range(t, vs[-1] - 1, vs[-1])
+                only = set(newest.file_rels)
                 if not only:
                     return
             compact_partitions(

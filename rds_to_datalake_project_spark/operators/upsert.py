@@ -57,6 +57,7 @@ from pyspark.sql import functions as F
 
 from rds_to_datalake_project_spark import fsio
 
+from rds_to_datalake_project_spark.operators import commitlog
 from rds_to_datalake_project_spark.operators.dedup import latest_version_per_key
 from rds_to_datalake_project_spark.operators.enrich import (
     add_time_partitions,
@@ -73,7 +74,6 @@ _PRIORITY = "__src_priority"
 # (and to Spark's own file index) — a contract-derived column, like the
 # time-partition columns, re-derived from the record key on every write.
 _BUCKET_COL = "bucket_id"
-_READY_FLAG = "_PUBLISH_READY"  # staged write complete; publish may proceed
 # Staged deletion vector riding inside a commit's staging dir (see
 # operators/deletevectors): dot-prefixed, so partition walkers, the
 # manifest, and every parquet reader skip it.
@@ -89,7 +89,6 @@ _ASIDE_PREFIX = ".__old-"  # parked pre-publish copy of a partition dir
 # contract, and the concurrency protocol must cover them too.
 _LOCK_FILE = ".commit_lock"  # commit mutex (exclusive-create arbitration)
 _TOKEN_FILE = ".commit_token"  # opaque uuid, rewritten per commit
-_UNSET = object()  # "no base token recorded" (≠ None = "table was empty")
 
 
 class ConstraintViolation(ValueError):
@@ -992,9 +991,10 @@ class KeyedTable:
         log: concurrent writers to disjoint partition sets ALL commit;
         at 100 TB this is what lets per-partition-range CDC ingestors
         run unserialized. Conservative on every surprise: unretained
-        or unpartitioned tables, a reset incarnation, a missing commit
-        record, or a vector commit without its partition list all
-        report False (strict token conflict)."""
+        or unpartitioned tables, a reset incarnation, or an unknowable
+        ``_touched_rels_between`` (a missing commit record, a vector
+        commit without its partition list) report False (strict token
+        conflict)."""
         if (
             not base_stamp
             or base_stamp.get("version") is None
@@ -1009,29 +1009,8 @@ class KeyedTable:
         base_v = base_stamp["version"]
         if latest < base_v:
             return False
-        for j in self.versions():
-            if j <= base_v:
-                continue
-            flag = f"{self.path}/.meta/v{j}.flag"
-            if not self._fs.exists(flag):
-                return False
-            meta = self._flag_meta(flag)
-            touched = set(meta["created"]) | set(self._retired_rels(j))
-            if meta.get("dv_target"):
-                dv_rels = [
-                    r for r in meta.get("dv_rels", "").split("\t") if r
-                ]
-                if not dv_rels:
-                    return False  # vector of unknown reach
-                touched |= set(dv_rels)
-            touched |= {
-                p.rsplit("/", 1)[0]
-                for p in meta.get("appended", "").split("\t")
-                if "/" in p
-            }
-            if touched & staged_rels:
-                return False
-        return True
+        touched = self._touched_rels_between(base_v, latest)
+        return touched is not None and not (touched & staged_rels)
 
     def _commit_staging(self, staging: str, base_token, base_stamp=None) -> bool:
         """Flag + conflict-check + publish as ONE lock-held critical
@@ -1188,10 +1167,10 @@ class KeyedTable:
                 for st in stagings():
                     name = st.getPath().getName()
                     staging = f"{self.path}/{name}"
-                    if fs.exists(f"{staging}/{_READY_FLAG}"):
-                        meta = self._flag_meta(f"{staging}/{_READY_FLAG}")
-                        if "base_token" in meta and (
-                            (meta["base_token"] or None) != self.commit_token()
+                    if fs.exists(commitlog.staged_path(staging)):
+                        rec = commitlog.read(fs, commitlog.staged_path(staging))
+                        if rec.base_token is not None and (
+                            (rec.base_token or None) != self.commit_token()
                         ):
                             _LOG.warning(
                                 "discarding stale staged merge %s (computed "
@@ -1277,17 +1256,16 @@ class KeyedTable:
         # zone-map manifest stamped with the PREVIOUS token can never
         # be mistaken for current mid-publish (see _bump_seq).
         self._bump_seq()
-        meta = self._flag_meta(f"{staging}/{_READY_FLAG}")
-        version = meta.get("version") if self.retain_versions else None
-        dv_target = meta.get("dv_target")
-        if dv_target:
+        rec = commitlog.read(self._fs, commitlog.staged_path(staging))
+        version = rec.version if self.retain_versions else None
+        if rec.dv_target:
             # Deletion-vector commit: publish the staged vector by ONE
             # rename into .dv/ under its flag-assigned permanent name.
             # Idempotent re-entry (recover() after a crash): target
             # already present → the staged copy is a leftover.
             fs = self._fs
             dv_staged = f"{staging}/{_STAGED_DV_NAME}"
-            dv_dest = f"{self.path}/.dv/{dv_target}"
+            dv_dest = f"{self.path}/.dv/{rec.dv_target}"
             if fs.exists(dv_staged):
                 if fs.exists(dv_dest):
                     fs.delete(dv_staged, True)
@@ -1295,14 +1273,13 @@ class KeyedTable:
                     fs.mkdirs(f"{self.path}/.dv")
                     self._rename(fs, dv_staged, dv_dest)
             self._fault("dv_published")
-        appended = [p for p in meta.get("appended", "").split("\t") if p]
-        if appended:
+        if rec.appended:
             # MOR-update appends: per-file renames INTO the live dirs
             # (fresh basenames — collision-free). Idempotent re-entry:
             # a file already at its destination was moved by a prior
             # attempt; one absent from staging too is simply done.
             fs = self._fs
-            for relfile in appended:
+            for relfile in rec.appended:
                 src = f"{staging}/{_STAGED_APPEND_NAME}/{relfile}"
                 dst = f"{self.path}/{relfile}"
                 if not fs.exists(src):
@@ -1336,11 +1313,11 @@ class KeyedTable:
             else:
                 for rel in rels:
                     self._publish_partition(staging, rel, version)
-        elif not (dv_target and not self._read_manifest(staging)):
+        elif not (rec.dv_target and not rec.manifest):
             # A vector-only commit stages NO data files; on an
             # unpartitioned table the empty manifest would otherwise
             # read as "new state = zero files" and retire everything.
-            self._swap_unpartitioned(staging, version)
+            self._swap_unpartitioned(staging, set(rec.manifest), version)
         self._fault("all_swapped")
         if version is not None:
             # Persist the commit record by RENAMING the staging flag
@@ -1353,9 +1330,9 @@ class KeyedTable:
             # here).
             fs = self._fs
             fs.mkdirs(f"{self.path}/.meta")
-            rec = f"{self.path}/.meta/v{version}.flag"
-            fs.delete(rec, True)  # re-entry leftovers
-            self._rename(fs, f"{staging}/{_READY_FLAG}", rec)
+            dst = commitlog.record_path(self.path, version)
+            fs.delete(dst, True)  # re-entry leftovers
+            self._rename(fs, commitlog.staged_path(staging), dst)
             self._fault("meta_committed")
         # Advance the commit token: from here on, any staged merge
         # recorded against the previous snapshot is refused. A crash
@@ -1888,14 +1865,14 @@ class KeyedTable:
         walk(root, "")
         return sorted(out)
 
-    def _write_ready_flag(self, staging: str, base_token=_UNSET) -> None:
+    def _write_ready_flag(self, staging: str, base_token: str | None) -> None:
         """Commit point of the upsert. The flag carries the commit
-        record — ``#``-prefixed meta lines (snapshot version, created
-        partitions) plus a manifest of the staged top-level data-file
-        names (relevant for unpartitioned tables — see
-        ``_swap_unpartitioned``) — written atomically via tmp +
-        rename, so a crash mid-write can never leave a
-        present-but-truncated flag: the staging is either fully
+        record (``operators/commitlog``: snapshot version, created
+        partitions, base token, vector and append sets, plus a manifest
+        of the staged top-level data-file names — relevant for
+        unpartitioned tables, see ``_swap_unpartitioned``) — written
+        atomically via tmp + rename, so a crash mid-write can never
+        leave a present-but-truncated flag: the staging is either fully
         committed or discardable. Everything recovery needs to finish
         (or attribute) this publish is in the flag, so re-entry never
         recomputes commit state."""
@@ -1906,7 +1883,7 @@ class KeyedTable:
             if not st.getPath().getName().startswith((".", "_"))
             and not st.isDirectory()
         ]
-        lines = []
+        version, created = None, []
         if self.retain_versions:
             version = (self.versions() or [0])[-1] + 1
             created = [
@@ -1914,15 +1891,7 @@ class KeyedTable:
                 for rel in self._staged_partition_dirs(staging)
                 if not fs.exists(f"{self.path}/{rel}")
             ]
-            lines.append(f"#version={version}")
-            lines.append("#created=" + "\t".join(sorted(created)))
-        if base_token is not _UNSET:
-            # The snapshot token the staged merge was computed FROM
-            # (empty = the table had none — pre-protocol or brand
-            # new). _publish refuses to swap when the table has moved
-            # past it; a flag WITHOUT this line (legacy staging)
-            # publishes unconditionally, preserving old semantics.
-            lines.append("#base_token=" + (base_token or ""))
+        dv_target = dv_rels = None
         if fs.exists(f"{staging}/{_STAGED_DV_NAME}"):
             # Deletion-vector commit: the staged vector's PERMANENT
             # name is assigned here (v{version} so snapshot reads can
@@ -1930,52 +1899,37 @@ class KeyedTable:
             # tables), baked into the flag so a crashed publish
             # re-enters with the same target — the rename stays
             # idempotent.
-            target = (
+            dv_target = (
                 f"v{version}"
                 if self.retain_versions
                 else f"d{uuid.uuid4().hex}"
             )
-            lines.append("#dv_target=" + target)
-            dv_rels = fs.read_text(f"{staging}/.dv_rels")
-            if dv_rels is not None:
-                # the partitions this vector masks rows in — what a
-                # later writer's disjointness check must intersect
-                lines.append("#dv_rels=" + dv_rels)
-        appended = self._staged_append_files(staging)
-        if appended:
+            # the partitions this vector masks rows in — what a later
+            # writer's disjointness check must intersect
+            raw = fs.read_text(f"{staging}/.dv_rels")
+            if raw is not None:
+                dv_rels = tuple(r for r in raw.split("\t") if r)
+        record = commitlog.CommitRecord(
+            version=version,
+            created=tuple(sorted(created)),
+            # The snapshot token the staged merge was computed FROM
+            # (empty = the table had none — pre-protocol or brand
+            # new). _publish refuses to swap when the table has moved
+            # past it.
+            base_token=base_token or "",
+            dv_target=dv_target,
+            dv_rels=dv_rels,
             # MOR-update append set: publish renames each file into
             # its live dir; snapshot reads BEFORE this commit exclude
             # exactly these basenames (unique per write job).
-            lines.append("#appended=" + "\t".join(appended))
-        lines.extend(sorted(names))
-        fs.publish_text(f"{staging}/{_READY_FLAG}", "\n".join(lines))
+            appended=tuple(self._staged_append_files(staging)),
+            manifest=tuple(sorted(names)),
+        )
+        fs.publish_text(commitlog.staged_path(staging), record.render())
 
     def _read_marker(self, path: str) -> str | None:
         """A marker file's stripped text; None when absent or empty."""
         return (self._fs.read_text(path) or "").strip() or None
-
-    def _read_flag_text(self, flag_path: str) -> str:
-        text = self._fs.read_text(flag_path)
-        if text is None:
-            raise IOError(f"not found: {flag_path}")
-        return text
-
-    def _read_manifest(self, staging: str) -> set[str]:
-        """The committed staged-file-name set from the ready flag."""
-        text = self._read_flag_text(f"{staging}/{_READY_FLAG}")
-        return {n for n in text.split("\n") if n and not n.startswith("#")}
-
-    def _flag_meta(self, flag_path: str) -> dict:
-        """Parse the ``#key=value`` meta lines of a commit flag."""
-        meta: dict = {}
-        for line in self._read_flag_text(flag_path).split("\n"):
-            if line.startswith("#") and "=" in line:
-                k, v = line[1:].split("=", 1)
-                meta[k] = v
-        if "version" in meta:
-            meta["version"] = int(meta["version"])
-        meta["created"] = [r for r in meta.get("created", "").split("\t") if r]
-        return meta
 
     # -- snapshot retention / time travel ------------------------------------
 
@@ -1983,15 +1937,7 @@ class KeyedTable:
         """Committed snapshot versions, ascending (0, the initial-load
         state, is implicit and not listed). NOT the readable set once
         vacuuming has run — use ``readable_versions()`` for that."""
-        meta = f"{self.path}/.meta"
-        if not self._fs.exists(meta):
-            return []
-        out = []
-        for st in self._fs.listStatus(meta):
-            n = st.getPath().getName()
-            if n.startswith("v") and n.endswith(".flag"):
-                out.append(int(n[1 : -len(".flag")]))
-        return sorted(out)
+        return commitlog.versions(self._fs, self.path)
 
     def _read_floor(self) -> int:
         """The oldest still-reconstructible snapshot version. 0 until
@@ -2033,13 +1979,10 @@ class KeyedTable:
         paths to OMIT from the reconstruction; a shallow clone uses it
         to read only the source-resident remainder of its view.
 
-        Metadata-only reconstruction: for each partition, the first
-        event after ``version`` decides its source — retired at j →
-        read the ``.retired/v{j}`` copy (the pre-j state, i.e. the
-        state at ``version`` by minimality of j); created at j →
-        the partition did not exist yet; no event → live dir. No data
-        is copied at commit or read time; a snapshot read lists the
-        same number of dirs as a live read.
+        Metadata-only reconstruction: ``_as_of_sources`` says where
+        each partition's state at ``version`` lives. No data is copied
+        at commit or read time; a snapshot read lists the same number
+        of dirs as a live read.
 
         Raises ``ValueError`` for any version outside
         ``readable_versions()`` — a version whose history was
@@ -2049,37 +1992,31 @@ class KeyedTable:
         result-reuse which errors rather than serving stale data,
         reference vendor/aws_athena.py:75-82).
         """
-        if not self.retain_versions:
-            raise ValueError("read_as_of requires retain_versions > 0")
-        latest = (self.versions() or [0])[-1]
-        floor = self._read_floor()
-        if not floor <= version <= latest:
-            raise ValueError(
-                f"version {version} is not reconstructible: readable "
-                f"range is [{floor}, {latest}]"
-                + (" (older history was vacuumed)" if floor else "")
-            )
+        latest = self._check_readable(version)
         self.spark.conf.set(
             "spark.sql.sources.partitionColumnTypeInference.enabled", "false"
         )
-        if not self.partition_cols:
-            return self._read_unpartitioned_as_of(version)
-        first: dict[str, tuple[str, int]] = {}
-        for j in self.versions():
-            if j <= version:
-                continue
-            for rel in self._retired_rels(j):
-                first.setdefault(rel, ("retired", j))
-            for rel in self._flag_meta(f"{self.path}/.meta/v{j}.flag")["created"]:
-                first.setdefault(rel, ("created", j))
-        skip = set(_exclude_rels or ())
-        groups: dict[str, list[str]] = {}
-        for rel in self._staged_partition_dirs(self.path):  # live dirs
-            if rel not in first and rel not in skip:
-                groups.setdefault(self.path, []).append(rel)
-        for rel, (kind, j) in first.items():
-            if kind == "retired" and rel not in skip:
-                groups.setdefault(f"{self.path}/.retired/v{j}", []).append(rel)
+        later = commitlog.read_range(self, version, latest)
+        if self.partition_cols:
+            skip = set(_exclude_rels or ())
+            groups = {
+                root: [f"{root}/{rel}" for rel in rels if rel not in skip]
+                for root, rels in self._as_of_sources(later).items()
+            }
+        elif not later:
+            return self.read()  # read() handles the emptied-table case
+        else:
+            # Unpartitioned: the swap unit is the whole file set, so
+            # ``.retired/v{j}`` of the first commit after ``version``
+            # holds the COMPLETE table at ``version`` (every replaced
+            # file parked there — see ``_swap_unpartitioned``); no
+            # file there = the table was empty.
+            root = f"{self.path}/.retired/v{later[0].version}"
+            has_files = self._fs.exists(root) and any(
+                not st.getPath().getName().startswith((".", "_"))
+                for st in self._fs.listStatus(root)
+            )
+            groups = {root: [root] if has_files else []}
         from rds_to_datalake_project_spark.operators.deletevectors import (
             has_vectors,
             with_provenance,
@@ -2100,13 +2037,13 @@ class KeyedTable:
         # only when something will actually apply, so plain tables
         # keep their exact original plans.
         masked = has_vectors(self.spark, self.path, upto_version=version)
-        late_appends = self._appended_after(version)
+        late_appends = {p.rsplit("/", 1)[-1] for r in later for p in r.appended}
         reads = [
             self.spark.read.option("mergeSchema", "true")
             .option("basePath", root)
-            .parquet(*[f"{root}/{rel}" for rel in rels])
-            for root, rels in groups.items()
-            if rels
+            .parquet(*paths)
+            for root, paths in groups.items()
+            if paths
         ]
         if masked or late_appends:
             reads = [with_provenance(r) for r in reads]
@@ -2125,44 +2062,48 @@ class KeyedTable:
             out = out.drop(_DV_FILE, _DV_POS)
         return out
 
-    def _appended_after(self, version: int) -> set[str]:
-        """Basenames of files APPENDED by MOR-update commits after
-        ``version`` — a snapshot read at ``version`` must exclude
-        them wherever they appear (live dirs or retired copies)."""
-        out: set[str] = set()
-        for j in self.versions():
-            if j <= version:
-                continue
-            meta = self._flag_meta(f"{self.path}/.meta/v{j}.flag")
-            out |= {
-                p.rsplit("/", 1)[-1]
-                for p in meta.get("appended", "").split("\t")
-                if p
-            }
-        return out
+    def _check_readable(self, version: int) -> int:
+        """The newest version; raises unless ``version`` is readable."""
+        if not self.retain_versions:
+            raise ValueError("read_as_of requires retain_versions > 0")
+        latest = (self.versions() or [0])[-1]
+        floor = self._read_floor()
+        if not floor <= version <= latest:
+            raise ValueError(
+                f"version {version} is not reconstructible: readable "
+                f"range is [{floor}, {latest}]"
+                + (" (older history was vacuumed)" if floor else "")
+            )
+        return latest
+
+    def _as_of_sources(self, later) -> dict[str, list[str]]:
+        """Where each partition of a snapshot lives, as root → rels,
+        given ``later``: the records of every commit after it. For each
+        partition the first event after the snapshot decides — retired
+        at j → the ``.retired/v{j}`` copy (the pre-j state, i.e. the
+        snapshot's by minimality of j); created at j → the partition
+        did not exist yet; no event → the live dir."""
+        first: dict[str, str | None] = {}
+        for rec in later:
+            for rel in rec.retired:
+                first.setdefault(rel, f"{self.path}/.retired/v{rec.version}")
+            for rel in rec.created:
+                first.setdefault(rel, None)
+        groups: dict[str, list[str]] = {}
+        for rel in self._staged_partition_dirs(self.path):  # live dirs
+            if rel not in first:
+                groups.setdefault(self.path, []).append(rel)
+        for rel, root in first.items():
+            if root is not None:
+                groups.setdefault(root, []).append(rel)
+        return groups
 
     def _as_of_rels(self, version: int) -> list[str]:
         """Partition rel paths present in snapshot ``version`` — the
-        same first-event-after resolution ``read_as_of`` performs,
-        names only (metadata-only; operators/clone uses it to size a
-        detach)."""
-        first: dict[str, str] = {}
-        for j in self.versions():
-            if j <= version:
-                continue
-            for rel in self._retired_rels(j):
-                first.setdefault(rel, "retired")
-            for rel in self._flag_meta(f"{self.path}/.meta/v{j}.flag")[
-                "created"
-            ]:
-                first.setdefault(rel, "created")
-        out = {
-            rel
-            for rel in self._staged_partition_dirs(self.path)
-            if rel not in first
-        }
-        out |= {rel for rel, kind in first.items() if kind == "retired"}
-        return sorted(out)
+        same resolution ``read_as_of`` performs, names only
+        (metadata-only; operators/clone uses it to size a detach)."""
+        groups = self._as_of_sources(commitlog.read_range(self, version))
+        return sorted(rel for rels in groups.values() for rel in rels)
 
     def version_at_timestamp(self, ts) -> int:
         """Newest committed version whose commit time is ≤ ``ts`` —
@@ -2187,20 +2128,16 @@ class KeyedTable:
         if parsed.tzinfo is None:
             parsed = parsed.replace(tzinfo=_dt.timezone.utc)
         ts_ms = parsed.timestamp() * 1000
-
-        def _mtime(path: str) -> float | None:
-            if not self._fs.exists(path):
-                return None
-            return self._fs.getFileStatus(path).getModificationTime()
-
         best = None
-        t0 = _mtime(f"{self.path}/.meta/_INCARNATION")
-        if t0 is not None and t0 <= ts_ms:
+        inc = f"{self.path}/.meta/_INCARNATION"
+        if (
+            self._fs.exists(inc)
+            and self._fs.getFileStatus(inc).getModificationTime() <= ts_ms
+        ):
             best = 0
-        for v in self.versions():
-            mt = _mtime(f"{self.path}/.meta/v{v}.flag")
-            if mt is not None and mt <= ts_ms:
-                best = v
+        for rec in commitlog.read_range(self):
+            if rec.commit_time_ms <= ts_ms:
+                best = rec.version
         if best is None:
             raise ValueError(
                 f"timestamp {ts!r} precedes this table's history — "
@@ -2240,55 +2177,15 @@ class KeyedTable:
         latest = (self.versions() or [0])[-1]
         if version == latest:
             return latest
-        staging = f"{self.path}/.staging-{uuid.uuid4().hex}"
-        writer = snap.write.mode("overwrite")
-        if self.partition_cols:
-            writer = writer.partitionBy(*self.partition_cols)
-        writer.parquet(staging)
-        if self.partition_cols:
-            staged_set = set(self._staged_partition_dirs(staging))
-            for rel in self._staged_partition_dirs(self.path):
-                if rel not in staged_set:
-                    # live but absent at `version` → retire
-                    self._fs.mkdirs(f"{staging}/{rel}")
-        if not self._commit_staging(staging, base_token):
+        # every live partition is touched: one absent at `version`
+        # swaps away as an empty staged dir (retired)
+        live = self._staged_partition_dirs(self.path) if self.partition_cols else None
+        if not self._stage_and_commit_rewrite(snap, live, base_token):
             raise ConcurrentWriteError(
                 f"a commit landed on {self.path} while the restore "
                 "ran; re-run the restore"
             )
         return (self.versions() or [0])[-1]
-
-    def _read_unpartitioned_as_of(self, version: int) -> DataFrame:
-        """Unpartitioned snapshot read: the swap unit is the whole
-        file set, so ``.retired/v{j}`` holds the COMPLETE pre-j table
-        (every replaced file parked there — see
-        ``_swap_unpartitioned``); the state at ``version`` is the
-        retired set of the first commit after it, or the live files
-        when no later commit exists."""
-        later = [j for j in self.versions() if j > version]
-        if not later:
-            return self.read()  # read() handles the emptied-table case
-        root = f"{self.path}/.retired/v{later[0]}"
-        has_files = self._fs.exists(root) and any(
-            not st.getPath().getName().startswith((".", "_"))
-            for st in self._fs.listStatus(root)
-        )
-        if not has_files:  # the table was empty at that version
-            return self.read().limit(0)
-        from rds_to_datalake_project_spark.operators.deletevectors import (
-            _DV_FILE,
-            _DV_POS,
-            with_provenance,
-        )
-
-        out = self.spark.read.option("mergeSchema", "true").parquet(root)
-        late_appends = self._appended_after(version)
-        if late_appends:
-            out = with_provenance(out).filter(
-                ~F.col(_DV_FILE).isin(sorted(late_appends))
-            )
-        # _mask_dv drops the provenance columns in every branch
-        return self._mask_dv(out, upto_version=version)
 
     # -- row-level DML (Delta DELETE/UPDATE analog) ---------------------------
 
@@ -2377,37 +2274,33 @@ class KeyedTable:
             f"{attempts} times; re-run (nothing was committed)"
         )
 
-    def _dv_delete_once(self, condition) -> int | None:
+    def _stage_vector(self, staging: str, rows: DataFrame) -> int:
+        """Stage the deletion vector of ``rows`` (a provenanced read)
+        in ``staging`` and return its entry count; 0 = nothing to mask,
+        the staging is discarded."""
         from rds_to_datalake_project_spark.operators.deletevectors import (
             _DV_FILE,
             _DV_POS,
         )
 
-        cond = F.expr(condition) if isinstance(condition, str) else condition
-        base_stamp = self._snapshot_stamp()
-        base_token = base_stamp["token"]
-        victims = (
-            self._provenanced_read()
-            .filter(cond)
-            .select(*self.partition_cols, _DV_FILE, _DV_POS)
-        )
-        staging = f"{self.path}/.staging-{uuid.uuid4().hex}"
         # One output file: a vector is kilobytes per thousand victims;
         # the mask reader pays one footer per vector dir.
-        victims.coalesce(1).write.parquet(f"{staging}/{_STAGED_DV_NAME}")
+        rows.select(*self.partition_cols, _DV_FILE, _DV_POS).coalesce(
+            1
+        ).write.parquet(f"{staging}/{_STAGED_DV_NAME}")
         staged = self.spark.read.parquet(f"{staging}/{_STAGED_DV_NAME}")
         # Footer-only count over what was WRITTEN (the number the
         # caller acts on must be the number the mask will apply).
         n = staged.count()
         if n == 0:
             self._fs.delete(staging, True)
-            return 0
-        if self.partition_cols:
+        elif self.partition_cols:
             # The partitions this vector masks rows in — a DV commit
             # stages no data dirs, but it LOGICALLY touches these:
             # a concurrent merge rewriting one of them from the
             # pre-vector snapshot would resurrect the victims, so the
-            # disjoint-commit check must see them (flag #dv_rels).
+            # disjoint-commit check must see them (the record's
+            # dv_rels).
             rels = sorted(
                 {
                     self._partition_rel_path(
@@ -2419,6 +2312,16 @@ class KeyedTable:
                 }
             )
             self._fs.write_text(f"{staging}/.dv_rels", "\t".join(rels))
+        return n
+
+    def _dv_delete_once(self, condition) -> int | None:
+        cond = F.expr(condition) if isinstance(condition, str) else condition
+        base_stamp = self._snapshot_stamp()
+        base_token = base_stamp["token"]
+        staging = f"{self.path}/.staging-{uuid.uuid4().hex}"
+        n = self._stage_vector(staging, self._provenanced_read().filter(cond))
+        if n == 0:
+            return 0
         self._fault("dv_staged")
         ok = self._commit_staging(staging, base_token, base_stamp=base_stamp)
         return n if ok else None
@@ -2659,26 +2562,9 @@ class KeyedTable:
                 self._assigned(rows, assignments, data_cols)
             )
             staging = f"{self.path}/.staging-{uuid.uuid4().hex}"
-            rows.select(*self.partition_cols, _DV_FILE, _DV_POS).coalesce(
-                1
-            ).write.parquet(f"{staging}/{_STAGED_DV_NAME}")
-            staged = self.spark.read.parquet(f"{staging}/{_STAGED_DV_NAME}")
-            n = staged.count()
+            n = self._stage_vector(staging, rows)
             if n == 0:
-                self._fs.delete(staging, True)
                 return 0
-            if self.partition_cols:
-                rels = sorted(
-                    {
-                        self._partition_rel_path(
-                            tuple(r[c] for c in self.partition_cols)
-                        )
-                        for r in staged.select(*self.partition_cols)
-                        .distinct()
-                        .collect()
-                    }
-                )
-                self._fs.write_text(f"{staging}/.dv_rels", "\t".join(rels))
             writer = self._assigned(
                 rows, assignments, data_cols
             ).write.mode("overwrite")
@@ -2926,20 +2812,17 @@ class KeyedTable:
         floor = self._read_floor()
         merr = self._read_maint_errors()
         out = []
-        for v in self.versions():
-            rec = f"{self.path}/.meta/v{v}.flag"
-            meta = self._flag_meta(rec)
+        for rec in commitlog.read_range(self):
+            v = rec.version
             out.append(
                 {
                     "version": v,
                     "readable": v >= floor,
                     # the instant FOR TIMESTAMP AS OF resolves against
                     # (the commit record's mtime, epoch ms UTC)
-                    "commit_time_ms": self._fs.getFileStatus(
-                        rec
-                    ).getModificationTime(),
-                    "created_partitions": sorted(meta["created"]),
-                    "retired_partitions": sorted(self._retired_rels(v)),
+                    "commit_time_ms": rec.commit_time_ms,
+                    "created_partitions": sorted(rec.created),
+                    "retired_partitions": sorted(rec.retired),
                     # Post-commit service failures recorded against
                     # this commit (stale-but-advisory services — the
                     # table data itself is good).
@@ -3008,21 +2891,14 @@ class KeyedTable:
         # set at 100 TB instead of two corpus diffs per window; any
         # metadata surprise resolves to None = the full diff.
         touched = self._touched_rels_between(v_from, v_to)
-        if touched is None:
-            old, new = self.read_as_of(v_from), self.read_as_of(v_to)
-        else:
-            old = self.read_as_of(
-                v_from,
-                _exclude_rels={
-                    r for r in self._as_of_rels(v_from) if r not in touched
-                },
-            )
-            new = self.read_as_of(
-                v_to,
-                _exclude_rels={
-                    r for r in self._as_of_rels(v_to) if r not in touched
-                },
-            )
+
+        def snapshot(v: int) -> DataFrame:
+            if touched is None:
+                return self.read_as_of(v)
+            untouched = {r for r in self._as_of_rels(v) if r not in touched}
+            return self.read_as_of(v, _exclude_rels=untouched)
+
+        old, new = snapshot(v_from), snapshot(v_to)
         for c in old.columns:
             if c not in new.columns:
                 new = new.withColumn(c, F.lit(None).cast(old.schema[c].dataType))
@@ -3073,36 +2949,24 @@ class KeyedTable:
         )
 
     def _touched_rels_between(self, v_from: int, v_to: int) -> set[str] | None:
-        """Partition rels any commit in ``(v_from, v_to]`` could have
-        touched, or None when unknowable (unpartitioned or unretained
-        table, a missing commit record, a vector commit without its
-        reach list) — mirrors ``_disjoint_since``'s per-commit
-        accounting, which OCC already trusts for conflict detection.
-        Exact for change feeds: a partition outside the union is
-        byte-identical at both endpoint snapshots."""
+        """The union of the ``touched`` sets (operators/commitlog) of
+        the commits in ``(v_from, v_to]``, or None when unknowable
+        (unpartitioned or unretained table, a missing commit record, a
+        vector commit without its reach list). OCC, change-feed pruning
+        and clone promote all decide on this set. Exact for change
+        feeds: a partition outside it is byte-identical at both
+        endpoint snapshots."""
         if not self.partition_cols or not self.retain_versions:
             return None
+        try:
+            records = commitlog.read_range(self, v_from, v_to)
+        except FileNotFoundError:
+            return None
         out: set[str] = set()
-        for j in self.versions():
-            if j <= v_from or j > v_to:
-                continue
-            flag = f"{self.path}/.meta/v{j}.flag"
-            if not self._fs.exists(flag):
+        for rec in records:
+            if rec.touched is None:
                 return None
-            meta = self._flag_meta(flag)
-            out |= set(meta["created"]) | set(self._retired_rels(j))
-            if meta.get("dv_target"):
-                dv_rels = [
-                    r for r in meta.get("dv_rels", "").split("\t") if r
-                ]
-                if not dv_rels:
-                    return None  # vector of unknown reach
-                out |= set(dv_rels)
-            out |= {
-                p.rsplit("/", 1)[0]
-                for p in meta.get("appended", "").split("\t")
-                if "/" in p
-            }
+            out |= rec.touched
         return out
 
     def write_changes_feed(self, feed_dir: str) -> list[int]:
@@ -3208,15 +3072,10 @@ class KeyedTable:
         import time as _time
 
         horizon_ms = (_time.time() - hours * 3600.0) * 1000
-        fs = self._fs
-        fresh = 0
-        for v in self.versions():
-            p = f"{self.path}/.meta/v{v}.flag"
-            if (
-                fs.exists(p)
-                and fs.getFileStatus(p).getModificationTime() >= horizon_ms
-            ):
-                fresh += 1
+        fresh = sum(
+            rec.commit_time_ms >= horizon_ms
+            for rec in commitlog.read_range(self)
+        )
         return self.vacuum_versions(keep_last=max(1, fresh))
 
     @_invalidates
@@ -3240,7 +3099,7 @@ class KeyedTable:
         self._fault("floor_written")
         for j in expired:
             self._fs.delete(f"{self.path}/.retired/v{j}", True)
-            self._fs.delete(f"{self.path}/.meta/v{j}.flag", True)
+            self._fs.delete(commitlog.record_path(self.path, j), True)
         # Deletion vectors below the fold floor exist only for
         # snapshot readers (their basenames left the live tree at the
         # fold commit). Once the retention floor reaches the fold, no
@@ -3255,10 +3114,6 @@ class KeyedTable:
                 if d["version"] is not None and d["version"] < fold:
                     self._fs.delete(d["path"], True)
         return len(expired)
-
-    def _retired_rels(self, version: int) -> list[str]:
-        root = f"{self.path}/.retired/v{version}"
-        return self._staged_partition_dirs(root) if self._fs.exists(root) else []
 
     def _retire_aside(self, aside: str, rel: str, version: int) -> None:
         """Move a parked pre-publish partition copy into the snapshot
@@ -3352,7 +3207,8 @@ class KeyedTable:
             self._fault("vacuum_retired")
         # Commit record (tmp + rename, same shape as a publish flag).
         fs.publish_text(
-            f"{self.path}/.meta/v{version}.flag", f"#version={version}\n#created="
+            commitlog.record_path(self.path, version),
+            commitlog.CommitRecord(version=version).render(),
         )
         self._fault("vacuum_committed")
         self._write_commit_token()
@@ -3472,11 +3328,14 @@ class KeyedTable:
         fs.delete(aside, True)
 
     def _swap_unpartitioned(
-        self, staging: str, retire_version: int | None = None
+        self,
+        staging: str,
+        manifest: set[str],
+        retire_version: int | None = None,
     ) -> None:
         """Replace the table's data files with the staged ones.
 
-        The manifest in the ready flag — NOT the staging dir's current
+        ``manifest`` — the ready flag's, NOT the staging dir's current
         listing — defines the new file set: on re-entry after a crash,
         a file this publish already moved in is recognized by its
         manifest membership and left alone, while every pre-publish
@@ -3498,7 +3357,6 @@ class KeyedTable:
         unique, so every pre-publish file is outside the manifest and
         every parked name is collision-free."""
         fs = self._fs
-        manifest = self._read_manifest(staging)
         staged = [
             st.getPath().getName()
             for st in fs.listStatus(staging)

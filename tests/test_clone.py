@@ -284,15 +284,30 @@ def test_promote_publishes_diverged_partitions_to_source(spark, tmp_path):
     assert tc.filter(F.col("_change_type") == "update").count() == 10
 
 
-def test_promote_conflict_on_overlapping_source_commit(spark, tmp_path):
-    src = _src(spark, tmp_path)
+# Source commits to day 01 (id 4) after the pin, one per commit kind;
+# the vector kinds stage no partition dir, only the masked day.
+_OVERLAPPING_SOURCE_COMMITS = {
+    "upsert": lambda spark, src: src.upsert(
+        _rows(spark, ver="v6").filter(F.col("id") == 4)
+    ),
+    "vector_delete": lambda spark, src: src.delete_where(
+        "id = 4", strategy="vector"
+    ),
+    "vector_update": lambda spark, src: src.update_where(
+        "id = 4", {"amount": "-99.0"}, strategy="vector"
+    ),
+}
+
+
+@pytest.mark.parametrize("kind", list(_OVERLAPPING_SOURCE_COMMITS))
+def test_promote_conflict_on_overlapping_source_commit(spark, tmp_path, kind):
+    src = _src(spark, tmp_path, deletion_vectors=kind != "upsert")
     cl = clone_table(src, str(tmp_path / "b"))
     cl.upsert(
         _rows(spark, ver="v5").filter(F.col("id") % 4 == 0)
     )  # branch touches day 01
-    src.upsert(
-        _rows(spark, ver="v6").filter(F.col("id") == 4)
-    )  # source also commits to day 01 after the pin
+    # source also commits to day 01 after the pin
+    _OVERLAPPING_SOURCE_COMMITS[kind](spark, src)
     with pytest.raises(PromoteConflict, match="also modified"):
         cl.promote()
     # FORCE: the branch wins

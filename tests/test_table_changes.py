@@ -424,20 +424,63 @@ def test_changes_between_timestamps(spark, tmp_path):
     assert t.changes_between_timestamps(m1, m1).count() == 0
 
 
+# One commit of each kind; the commit under test is the table's newest.
+# All but the restore (which restages the whole snapshot) leave month
+# 02 untouched.
+_R1_ONLY = [("r1", "2024-01-05T00:00:00", "2024-05-01T00:00:00", "b1", "U")]
+_COMMIT_KINDS = {
+    "upsert": lambda spark, t: t.upsert(
+        spark.createDataFrame(B1, BATCH_COLS), delete_mode="apply"
+    ),
+    "rewrite_delete": lambda spark, t: t.delete_where(
+        "id = 'r1'", strategy="rewrite"
+    ),
+    "vector_delete": lambda spark, t: t.delete_where(
+        "id = 'r1'", strategy="vector"
+    ),
+    "mor_vector_update": lambda spark, t: t.update_where(
+        "id = 'r1'", {"val": "'z1'"}, strategy="vector"
+    ),
+    "vacuum_partitions": lambda spark, t: t.vacuum_partitions(
+        lambda vals: vals[1] >= "02"
+    ),
+    "restore_after_upsert": lambda spark, t: (
+        t.upsert(spark.createDataFrame(_R1_ONLY, BATCH_COLS)),
+        t.restore_to_version(0),
+    ),
+    "materialize_after_vector_delete": lambda spark, t: (
+        t.delete_where("id = 'r1'", strategy="vector"),
+        t.materialize_deletes(),
+    ),
+}
+
+
 @pytest.mark.slow
-def test_table_changes_scan_confined_to_touched_partitions(spark, tmp_path):
+@pytest.mark.parametrize("kind", list(_COMMIT_KINDS))
+def test_table_changes_scan_confined_to_touched_partitions(
+    spark, tmp_path, kind
+):
     """r13 optimization: the snapshot diff excludes the FILES of
     partitions no commit in the window touched (they are byte-identical
-    at both endpoints), and the pruned feed equals the full diff."""
-    t = _mk(spark, tmp_path)  # V0 load: months 01, 02
-    t.upsert(spark.createDataFrame(B1, BATCH_COLS), delete_mode="apply")
-    touched = t._touched_rels_between(0, 1)
+    at both endpoints), and the pruned feed equals the full diff — for
+    every kind of commit the touched rule has to account for."""
+    t = KeyedTable(
+        spark,
+        str(tmp_path / "tt"),
+        SPEC,
+        retain_versions=5,
+        deletion_vectors=True,
+    )
+    t.initial_load(spark.createDataFrame(V0, INIT_COLS))  # months 01, 02
+    _COMMIT_KINDS[kind](spark, t)
+    v = t.versions()[-1]
+    touched = t._touched_rels_between(v - 1, v)
     assert touched is not None and touched  # partitioned + retained
-    feed = t.table_changes(0, 1)
+    feed = t.table_changes(v - 1, v)
     files = feed.inputFiles()
     untouched = [
         rel
-        for rel in t._as_of_rels(1)
+        for rel in t._as_of_rels(v)
         if rel not in touched
     ]
     for rel in untouched:
@@ -448,7 +491,7 @@ def test_table_changes_scan_confined_to_touched_partitions(spark, tmp_path):
     orig = up.KeyedTable._touched_rels_between
     up.KeyedTable._touched_rels_between = lambda self, a, b: None
     try:
-        full = t.table_changes(0, 1)
+        full = t.table_changes(v - 1, v)
         assert feed.exceptAll(full).count() == 0
         assert full.exceptAll(feed).count() == 0
     finally:
