@@ -35,6 +35,7 @@ differs. False positives cost a read, never correctness.
 from __future__ import annotations
 
 import logging
+import threading
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -79,17 +80,24 @@ def _auto_m_bits(n_rows: int, n_files: int) -> int:
 LAST_PRUNE: dict = {}
 
 
+# Probes run on concurrent service threads too: every update is one
+# locked read-modify-write, so the totals do not depend on the order.
+_PRUNE_LOCK = threading.Lock()
+
+
 def reset_prune_stats() -> None:
-    LAST_PRUNE.clear()
+    with _PRUNE_LOCK:
+        LAST_PRUNE.clear()
 
 
 def _record_prune(files_total: int, files_read: int) -> None:
-    LAST_PRUNE["probes"] = LAST_PRUNE.get("probes", 0) + 1
-    LAST_PRUNE["files_total"] = LAST_PRUNE.get("files_total", 0) + files_total
-    LAST_PRUNE["files_read"] = LAST_PRUNE.get("files_read", 0) + files_read
-    LAST_PRUNE["files_skipped"] = (
-        LAST_PRUNE["files_total"] - LAST_PRUNE["files_read"]
-    )
+    with _PRUNE_LOCK:
+        LAST_PRUNE["probes"] = LAST_PRUNE.get("probes", 0) + 1
+        LAST_PRUNE["files_total"] = LAST_PRUNE.get("files_total", 0) + files_total
+        LAST_PRUNE["files_read"] = LAST_PRUNE.get("files_read", 0) + files_read
+        LAST_PRUNE["files_skipped"] = (
+            LAST_PRUNE["files_total"] - LAST_PRUNE["files_read"]
+        )
 
 
 def _index_dir(table_path: str) -> str:

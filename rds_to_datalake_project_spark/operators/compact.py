@@ -468,7 +468,10 @@ def attach_auto_compact(
     compaction commits through the optimistic protocol, so it can
     never swallow a concurrent writer's commit (a lost race skips the
     pass — the next commit's hook retries). A reentrancy latch keeps
-    the compaction commit's own maintenance pass from recursing.
+    the compaction commit's own maintenance pass from recursing. It is
+    registered as a hook that commits to the table, so it runs after
+    the concurrent services, never beside them: its commit's nested
+    maintenance pass rewrites the zone map and the other sidecars.
     """
     state = {"active": False}
 
@@ -497,4 +500,4 @@ def attach_auto_compact(
         finally:
             state["active"] = False
 
-    table.add_maintenance_hook(auto_compact)
+    table.add_maintenance_hook(auto_compact, commits_to_table=True)

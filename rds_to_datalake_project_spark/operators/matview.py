@@ -49,6 +49,9 @@ the KeyedTable merge (partition-pruned, crash-safe publish).
 
 from __future__ import annotations
 
+import contextvars
+import threading
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -56,6 +59,7 @@ from rds_to_datalake_project_spark.fsio import read_text as _read_small
 from rds_to_datalake_project_spark.fsio import write_text as _write_small
 from rds_to_datalake_project_spark.operators.upsert import KeyedTable
 from rds_to_datalake_project_spark.schema import TableSpec
+from rds_to_datalake_project_spark.session import pmap
 
 _SEQ_COL = "_refresh_seq"
 
@@ -74,57 +78,58 @@ _SEQ_COL = "_refresh_seq"
 # Last-refresh observability (bench `skips` dict): mode +
 # groups_refreshed show the incremental leverage wall time can't —
 # a 3-group refresh over a 1M-group view is the design working.
+# Views refresh concurrently (post-commit services run side by side),
+# so the record is replaced WHOLE under a lock: a reader never sees
+# one view's mode beside another's scan counts.
 LAST_REFRESH: dict = {}
+_REFRESH_LOCK = threading.Lock()
 
 
 def reset_refresh_stats() -> None:
-    LAST_REFRESH.clear()
+    with _REFRESH_LOCK:
+        LAST_REFRESH.clear()
 
 
 # Per-refresh recompute-scan pruning (files opened vs live set),
 # filled by _zone_pruned_rows and folded into LAST_REFRESH so bench
 # skips show the scan leverage per refresh without cumulative noise.
-_LAST_SCAN: dict = {}
+# One accumulator per running refresh: ``refresh`` binds a fresh dict
+# in its own context, so two views refreshing on different threads
+# never fold their scans into each other's record (``pmap`` workers
+# run in a copy of the caller's context and add to the same dict).
+_SCAN: contextvars.ContextVar = contextvars.ContextVar("matview_scan", default=None)
+_SCAN_LOCK = threading.Lock()
 
 
-def _record_refresh(view, info: dict) -> dict:
-    LAST_REFRESH.clear()
-    LAST_REFRESH.update(
-        {
-            "view": type(view).__name__,
-            "mode": info["mode"],
-            "groups_refreshed": info["groups_refreshed"],
-        }
-    )
+def _add_scan(files_total: int, files_read: int) -> None:
+    scan = _SCAN.get()
+    if scan is None:
+        return
+    with _SCAN_LOCK:
+        scan["files_total"] = scan.get("files_total", 0) + files_total
+        scan["files_read"] = scan.get("files_read", 0) + files_read
+
+
+def _record_refresh(view, info: dict, scan: dict) -> dict:
+    rec = {
+        "view": type(view).__name__,
+        "mode": info["mode"],
+        "groups_refreshed": info["groups_refreshed"],
+    }
     if "groups_repaired" in info:
-        LAST_REFRESH["groups_repaired"] = info["groups_repaired"]
-    if _LAST_SCAN:
-        LAST_REFRESH["scan"] = dict(_LAST_SCAN)
-        _LAST_SCAN.clear()
+        rec["groups_repaired"] = info["groups_repaired"]
+    if scan:
+        rec["scan"] = dict(scan)
+    with _REFRESH_LOCK:
+        LAST_REFRESH.clear()
+        LAST_REFRESH.update(rec)
     return info
 
 
 # Sentinel: a per-table change window exceeded max_broadcast_keys —
-# the caller degrades to full recompute (returned through _pmap, which
+# the caller degrades to full recompute (returned through pmap, which
 # must not raise mid-pool).
 _BULK = object()
-
-
-def _pmap(fn, items, workers: int = 3):
-    """Run independent per-table driver-synchronized steps (change
-    scans: plan construction + checkpoint-count job) CONCURRENTLY so
-    each table's job overlaps the others' driver gaps — guide §2.6
-    "overlap independent jobs"; 2-3 in flight is plenty. Results keep
-    item order; the first error propagates. Deliberately NOT used for
-    zone-prune steps: those update the module's prune counters, whose
-    bench-visible totals must stay deterministic."""
-    items = list(items)
-    if len(items) <= 1:
-        return [fn(x) for x in items]
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(max_workers=min(workers, len(items))) as pool:
-        return list(pool.map(fn, items))
 
 
 def _nullsafe_eq(pairs):
@@ -442,8 +447,7 @@ def _zone_pruned_rows(
             if keep:
                 files.append(orig)
         _record_prune(len(live), len(files))
-        _LAST_SCAN["files_total"] = _LAST_SCAN.get("files_total", 0) + len(live)
-        _LAST_SCAN["files_read"] = _LAST_SCAN.get("files_read", 0) + len(files)
+        _add_scan(len(live), len(files))
         if not files:
             return full.limit(0)
         return table._mask_dv(
@@ -613,7 +617,13 @@ class _ViewSkeleton:
         """Bring the view up to every base's latest commit. Returns a
         summary dict: {"mode", "versions", "base_version",
         "groups_refreshed"}."""
-        return _record_refresh(self, self._refresh())
+        scan: dict = {}
+        token = _SCAN.set(scan)
+        try:
+            info = self._refresh()
+        finally:
+            _SCAN.reset(token)
+        return _record_refresh(self, info, scan)
 
     def _refresh(self) -> dict:
         heads = self._heads()
@@ -643,7 +653,9 @@ def _attach(view, tables) -> None:
     def matview_refresh(_table: KeyedTable) -> None:
         view.refresh()
 
-    for t in tables:
+    # once per distinct table: a table's services run concurrently, so
+    # a table joined to itself must not start two refreshes of one store
+    for t in {id(t): t for t in tables}.values():
         t.add_maintenance_hook(matview_refresh)
 
 
@@ -1975,7 +1987,7 @@ class ChainMaterializedView(_ViewSkeleton):
             return keys if n else None
 
         # per-table change scans are independent — overlap their jobs
-        changed = _pmap(_one_changed, range(len(self.tables)))
+        changed = pmap(self.spark, _one_changed, range(len(self.tables)))
         if any(k is _BULK for k in changed):
             return self._full(new)
         if all(k is None for k in changed):
@@ -2326,9 +2338,7 @@ class DeltaChainMaterializedView(_SignedDeltaMergeMixin, ChainMaterializedView):
             return d if cnt else None
 
         # per-table change scans are independent — overlap their jobs
-        # (zone-pruned term construction stays sequential: it updates
-        # the bench-visible prune counters)
-        deltas = _pmap(_one_delta, range(len(self.tables)))
+        deltas = pmap(self.spark, _one_delta, range(len(self.tables)))
         if any(d is _BULK for d in deltas):
             return self._full(new)
         changed = [i for i, d in enumerate(deltas) if d is not None]

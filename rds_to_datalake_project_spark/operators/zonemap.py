@@ -44,6 +44,7 @@ import json
 import logging
 import math
 import os
+import threading
 from urllib.parse import urlparse
 
 from pyspark.sql import DataFrame, SparkSession
@@ -62,17 +63,24 @@ _FILE = "file_uri"
 LAST_PRUNE: dict = {}
 
 
+# Probes run on concurrent service threads too: every update is one
+# locked read-modify-write, so the totals do not depend on the order.
+_PRUNE_LOCK = threading.Lock()
+
+
 def reset_prune_stats() -> None:
-    LAST_PRUNE.clear()
+    with _PRUNE_LOCK:
+        LAST_PRUNE.clear()
 
 
 def _record_prune(files_total: int, files_read: int) -> None:
-    LAST_PRUNE["probes"] = LAST_PRUNE.get("probes", 0) + 1
-    LAST_PRUNE["files_total"] = LAST_PRUNE.get("files_total", 0) + files_total
-    LAST_PRUNE["files_read"] = LAST_PRUNE.get("files_read", 0) + files_read
-    LAST_PRUNE["files_skipped"] = (
-        LAST_PRUNE["files_total"] - LAST_PRUNE["files_read"]
-    )
+    with _PRUNE_LOCK:
+        LAST_PRUNE["probes"] = LAST_PRUNE.get("probes", 0) + 1
+        LAST_PRUNE["files_total"] = LAST_PRUNE.get("files_total", 0) + files_total
+        LAST_PRUNE["files_read"] = LAST_PRUNE.get("files_read", 0) + files_read
+        LAST_PRUNE["files_skipped"] = (
+            LAST_PRUNE["files_total"] - LAST_PRUNE["files_read"]
+        )
 
 
 def _index_dir(table_path: str) -> str:
@@ -150,25 +158,23 @@ def _resolve_table(spark: SparkSession, table_path: str):
     live-tree mutation BEFORE any maintenance/probe can observe the
     new tree, so a hit always describes the current committed
     snapshot; token-less paths resolve fresh every call (see
-    upsert.resolve_cache_entry). Metadata only — the frame still
-    reads its parquet files on every action."""
+    upsert.resolve_cache_entry). Concurrent callers — the zone-map and
+    bloom reconciles of one commit — share one resolution
+    (upsert.cache_fill). Metadata only — the frame still reads its
+    parquet files on every action."""
     from rds_to_datalake_project_spark.operators.upsert import (
+        cache_fill,
         resolve_cache_entry,
     )
 
-    ent = resolve_cache_entry(spark, table_path)
-    if ent is not None:
-        hit = ent["frames"].get("zresolve")
-        if hit is not None:
-            return hit
-    spark.conf.set(
-        "spark.sql.sources.partitionColumnTypeInference.enabled", "false"
-    )
-    full = spark.read.option("mergeSchema", "true").parquet(table_path)
-    out = (full, {_norm(f): f for f in full.inputFiles()})
-    if ent is not None:
-        ent["frames"]["zresolve"] = out
-    return out
+    def build():
+        spark.conf.set(
+            "spark.sql.sources.partitionColumnTypeInference.enabled", "false"
+        )
+        full = spark.read.option("mergeSchema", "true").parquet(table_path)
+        return (full, {_norm(f): f for f in full.inputFiles()})
+
+    return cache_fill(resolve_cache_entry(spark, table_path), "zresolve", build)
 
 
 def sidecar_memo(spark: SparkSession, table_path: str, idx: str, load):

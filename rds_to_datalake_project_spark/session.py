@@ -17,9 +17,12 @@ Scale posture (100 TB target):
 
 from __future__ import annotations
 
+import contextvars
 import os
+from concurrent.futures import ThreadPoolExecutor
 
 from pyspark.sql import SparkSession
+from pyspark.util import inheritable_thread_target
 
 
 def default_parallelism() -> int:
@@ -133,3 +136,40 @@ def get_spark(
     for k, v in conf.items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
+
+
+# Callers hand pmap a few driver-synchronized steps (per-table change
+# scans, a commit's table services): one thread each, and a cap well
+# above any caller's count rather than a knob.
+_PMAP_MAX_THREADS = 8
+
+
+def pmap(spark: SparkSession, fn, items) -> list:
+    """``[fn(x) for x in items]`` with the calls running CONCURRENTLY,
+    so one call's Spark jobs overlap the others' driver gaps. Results
+    keep item order; the first error propagates (callers that must
+    isolate failures catch inside ``fn``). One item, or none, runs
+    inline with no pool.
+
+    Each call runs on a pool thread that first takes on a clone of the
+    CALLER's Spark local properties (``inheritable_thread_target``):
+    job group, job description and scheduler pool follow the work, so
+    a job-group profile or cancellation still covers it. The clone is
+    per call — ``SQLExecution`` sets its execution id as a local
+    property, so two threads must never share one properties object.
+    Each call also runs in a copy of the caller's ``contextvars``
+    context, so per-operation accumulators bound by the caller (see
+    ``matview._SCAN``) still see the work done on its behalf."""
+    items = list(items)
+    if len(items) <= 1:
+        return [fn(x) for x in items]
+    with ThreadPoolExecutor(
+        max_workers=min(_PMAP_MAX_THREADS, len(items)), thread_name_prefix="spark-pmap"
+    ) as pool:
+        futures = [
+            pool.submit(
+                contextvars.copy_context().run, inheritable_thread_target(spark)(fn), x
+            )
+            for x in items
+        ]
+        return [f.result() for f in futures]

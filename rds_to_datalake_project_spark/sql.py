@@ -800,7 +800,8 @@ def _finish_matview_create(spark, m: re.Match, name: str, mv, hooked_tables):
             _mv.refresh()
             _publish_matview(spark, _name, _mv)
 
-        for t in hooked_tables:
+        # once per distinct table (see matview._attach)
+        for t in {id(t): t for t in hooked_tables}.values():
             t.add_maintenance_hook(_auto_hook)
     MATVIEWS[name] = mv
     _publish_matview(spark, name, mv)

@@ -537,3 +537,19 @@ def test_initial_load_reset_wipes_vectors(spark, tmp_path):
     t.initial_load(_rows(spark, ver="v9"))
     assert not os.path.exists(f"{t.path}/.dv")
     assert t.read().count() == 40
+
+
+def test_update_literal_keeps_the_column_type(spark, tmp_path):
+    """A SET literal takes its column's type: ``-1.0`` parses as
+    DECIMAL(2,1), and appending it as such to a DOUBLE column left
+    files whose schemas no later read could merge."""
+    t = _partitioned(spark, tmp_path / "t")
+    t.initial_load(_rows(spark))
+    assert t.update_where("id = 6", {"amount": "-1.0"}, strategy="vector") == 1
+    assert t.update_where("id = 7", {"amount": "-2.5"}, strategy="rewrite") == 1
+    assert dict(t.read().dtypes)["amount"] == "double"
+    # a rewrite delete reads every file of the touched partitions
+    assert t.delete_where("id % 4 = 2", strategy="rewrite") == 10
+    got = {r.id: r.amount for r in t.read().collect()}
+    assert len(got) == 30 and 6 not in got
+    assert got[7] == -2.5

@@ -6,8 +6,8 @@ the count of one warm refresh so a plan change that adds jobs shows up
 as a failure rather than as drift in a benchmark.
 
 Jobs are counted as the delta of the scheduler's global job id around
-``refresh()``. A job group would miss jobs: change scans run on pool
-threads (``matview._pmap``), which do not inherit the caller's group.
+``refresh()`` or a commit. Pool threads (``session.pmap``) keep the
+caller's job group, but the delta counts every job whatever its group.
 """
 
 from __future__ import annotations
@@ -164,3 +164,65 @@ def test_two_table_delta_refresh_job_budget(spark, tmp_path, how):
     assert _got(view) == _direct(fact, dim, how)
     fact_max, dim_max = BUDGET[how]
     assert fact_jobs <= fact_max and dim_jobs <= dim_max, (fact_jobs, dim_jobs)
+
+
+SERVE_COLS = "id string, create_at string, update_at string, entity string, amount int, is_credit int"
+SERVE_VIEW = (
+    "CREATE MATERIALIZED VIEW jb_serve_mv WITH AUTO DELTA REFRESH AS "
+    "SELECT entity, is_credit, sum(amount) AS total, count(*) AS n "
+    "FROM jb_serve GROUP BY entity, is_credit"
+)
+
+
+def _serve_row(i: int, ver: int, op: str | None = None):
+    row = (f"k{i:06d}", f"2024-01-{i % 20 + 1:02d}T00:00:00",
+           f"2024-03-01T00:{ver:02d}:00", f"e{i % 8}", i % 997, i % 2)
+    return row if op is None else (*row, op)
+
+
+def _serve_batch(spark, r: int):
+    """500 CDC rows in the ``serve`` mix: 400 updates and 25 deletes of
+    keys in the newest three day partitions, 75 inserts there too."""
+    hot = [i for i in range(4000) if i % 20 >= 17]
+    ups = [_serve_row(i, r, "U") for i in hot[r * 10:r * 10 + 400]]
+    dels = [_serve_row(i, r, "D") for i in hot[r * 10 + 400:r * 10 + 425]]
+    ins = [_serve_row(4000 + r * 100 + j * 20 + 17 + j % 3, r, "I") for j in range(75)]
+    return spark.createDataFrame(ups + dels + ins, SERVE_COLS + ", Op string")
+
+
+def test_serve_commit_job_budget(spark, tmp_path):
+    """A commit of the ``serve`` workload's shape — a zone map and a
+    bloom index on ``id`` and an AUTO DELTA view over the table, all
+    maintained after a 500-row CDC batch — runs at most 36 Spark jobs
+    once warm: the commit core plus its three post-commit services,
+    which run concurrently on threads that keep the caller's job
+    group."""
+    from rds_to_datalake_project_spark.operators.bloomfilter import (
+        attach_bloom_maintenance,
+    )
+    from rds_to_datalake_project_spark.sql import run_query
+
+    path = str(tmp_path / "serve")
+    spec = TableSpec("jb_serve", partition_granularity="day")
+    t = KeyedTable(spark, path, spec, retain_versions=2, zonemap_columns=["id"])
+    t.initial_load(spark.createDataFrame(
+        [_serve_row(i, 0) for i in range(4000)], SERVE_COLS
+    ))
+    attach_bloom_maintenance(t, ["id"])
+    t.register("jb_serve")
+    run_query(spark, SERVE_VIEW, tables={"jb_serve": t})
+    try:
+        t.upsert(_serve_batch(spark, 1), delete_mode="apply")  # warm-up
+        sched = spark.sparkContext._jsc.sc().dagScheduler()
+        j0 = sched.nextJobId()
+        t.upsert(_serve_batch(spark, 2), delete_mode="apply")
+        jobs = sched.nextJobId() - j0
+        assert t.last_maintenance_errors == []
+        view = run_query(spark, "SELECT entity, is_credit, total, n FROM jb_serve_mv")
+        direct = t.read().groupBy("entity", "is_credit").agg(
+            F.sum("amount").alias("total"), F.count("*").alias("n")
+        )
+        assert {tuple(r) for r in view.collect()} == {tuple(r) for r in direct.collect()}
+    finally:
+        run_query(spark, "DROP MATERIALIZED VIEW jb_serve_mv")
+    assert jobs <= 36, jobs
