@@ -10,39 +10,25 @@ history. Reference analog: the always-queryable Athena lake
 (reference rds_to_datalake/athena.py:16-64) — an index you call, not
 a job you rerun.
 
-Sidecar layout under ``<table>/.annindex``:
+The sidecar under ``<table>/.annindex`` holds, in the sidecar
+lifecycle (operators/sidecar.py):
 
 - ``bounds``   one row per dimension ``(pos, lo, hi)`` — the SQ8
   codebook. Trained ONCE at build and held FIXED across refreshes
   (the served-index posture: a quantizer must not drift under its
   queries; retraining is an explicit ``build_ann_index`` rebuild).
-- ``codes``    one row per record: id, ``code array<long>`` (8-bit
-  codes) and ``qvec array<long>`` (the 1e-6 fixed-point vector the
-  exact rerank uses) — the index holds everything a query needs, so
-  serving NEVER scans the base table.
-- ``_VERSION`` ``"<base-table commit version> <build epoch>"``.
+- ``centroids`` (IVF builds only) the cell centroids, in order.
+- ``codes``    a delta family, one row per record: id, ``code
+  array<long>`` (8-bit codes) and ``qvec array<long>`` (the 1e-6
+  fixed-point vector the exact rerank uses) — the index holds
+  everything a query needs, so serving NEVER scans the base table.
 
-Crash atomicity — the three writes (bounds, codes, _VERSION) are not
-one transaction, so every build stamps one fresh EPOCH (a uuid) into
-``bounds/_EPOCH``, ``codes/_EPOCH`` (written only AFTER the parquet
-overwrite completes; underscore files are invisible to
-``spark.read.parquet``) and ``_VERSION``. ``refresh_ann_index``
-verifies all three epochs agree before taking the incremental path —
-a crash between any two writes leaves a mismatch (or a missing
-marker) and forces a full rebuild, so NEW bounds can never silently
+All three share the build epoch, so NEW bounds can never silently
 pair with OLD codes (a mixed codebook would corrupt the stage-1
-approx ranking). An unreadable codes/bounds dir falls back the same
-way.
-
-Incremental maintenance consumes ``KeyedTable.table_changes(indexed,
-latest)`` — cost ∝ rows changed, not corpus size; deletes anti-join
-out, upserts re-code with the persisted bounds. If the indexed
-version has already been vacuumed out of the readable window the
-refresh falls back to a full rebuild (correct, just not incremental).
-A crash after the refresh's codes overwrite but before its _VERSION
-stamp replays the same change window on the next refresh — recoding
-is idempotent (same vectors, same fixed bounds → same codes), so the
-replay converges.
+approx ranking): a torn build rebuilds, and serving refuses it.
+Refreshes re-code only the change window's upserts with the persisted
+bounds — recoding is idempotent (same vectors, same fixed bounds →
+same codes), so a replayed window converges.
 
 Query path (``ann_index_topk``) is the same two integer-exact stages
 as ``sq8_topk`` — centered int64 surrogate over codes, exact
@@ -51,8 +37,6 @@ bit-for-bit.
 """
 
 from __future__ import annotations
-
-import uuid
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -69,14 +53,14 @@ from rds_to_datalake_project_spark.operators.similarity import (
 )
 from rds_to_datalake_project_spark.operators.sidecar import (
     DEFAULT_COMPACT_THRESHOLD,
-    clear_delta_log,
-    epoch_of,
-    family_consistent,
-    publish_family_delta,
+    Delta,
+    Part,
+    Sidecar,
+    consistent,
+    head_version,
+    publish_build,
     read_family,
-    read_state,
-    write_part,
-    write_state,
+    refresh,
 )
 from rds_to_datalake_project_spark.operators.upsert import KeyedTable
 
@@ -101,14 +85,13 @@ def _read_bounds(table: KeyedTable) -> list[tuple[float, float]]:
     return [(r["lo"], r["hi"]) for r in sorted(rows, key=lambda r: r["pos"])]
 
 
-def _index_state(table: KeyedTable) -> tuple[int, str] | None:
-    """(indexed version, build epoch), or None when missing/unparsable
-    (operators/sidecar.py protocol)."""
-    return read_state(table.spark, _idx(table))
-
-
-def _epoch_of(table: KeyedTable, part: str) -> str | None:
-    return epoch_of(table.spark, _idx(table), part)
+def _sidecar(table: KeyedTable, params: dict | None = None) -> Sidecar:
+    """IVF mode is detected from the sidecar itself: a build with
+    centroids leaves a ``centroids`` part, which then shares the
+    consistency check with ``bounds`` and ``codes``."""
+    ivf = table._fs.exists(f"{_idx(table)}/centroids")
+    parts = ("bounds", "centroids") if ivf else ("bounds",)
+    return Sidecar(_idx(table), parts=parts, families=("codes",), params=params)
 
 
 def _code_rows(
@@ -166,59 +149,44 @@ def build_ann_index(
     the query — stage-1 cost becomes ∝ probed cells, not the corpus.
     Like the SQ8 bounds, centroids are FIXED across refreshes."""
     spark = table.spark
-    epoch = uuid.uuid4().hex
+    version = head_version(table)
     corpus = table.read()
-    version = (table.versions() or [0])[-1]
     bounds = sq8_train(corpus, vec_col)
-    write_part(
+    cents = None if centroids is None else _literal_frame(
         spark,
-        _idx(table),
-        "bounds",
-        _literal_frame(spark, 
-            [(i, lo, hi) for i, (lo, hi) in enumerate(bounds)],
-            "pos int, lo double, hi double",
-        ),
-        epoch,
-        coalesce=1,
+        [(pos, cid, [float(x) for x in vec]) for pos, (cid, vec) in enumerate(centroids)],
+        "pos int, cid int, cvec array<double>",
     )
-    if centroids is not None:
-        write_part(
-            spark,
-            _idx(table),
-            "centroids",
-            _literal_frame(spark, 
-                [
-                    (pos, cid, [float(x) for x in vec])
-                    for pos, (cid, vec) in enumerate(centroids)
-                ],
-                "pos int, cid int, cvec array<double>",
+    parts = [
+        Part(
+            "bounds",
+            _literal_frame(
+                spark,
+                [(i, lo, hi) for i, (lo, hi) in enumerate(bounds)],
+                "pos int, lo double, hi double",
             ),
-            epoch,
             coalesce=1,
-        )
-    else:
-        # a lingering centroids dir from an earlier IVF build would
-        # look torn forever — a non-IVF build removes it outright
-        table._fs.delete(f"{_idx(table)}/centroids", True)
-    coded = write_part(
-        spark,
-        _idx(table),
-        "codes",
-        _code_rows(corpus, bounds, id_col, vec_col, centroids),
-        epoch,
+        ),
+        # no centroids: the part goes, or a lingering dir from an
+        # earlier IVF build would turn IVF mode on for this index
+        Part("centroids", cents, coalesce=1),
         # IVF codes are hive-partitioned by cell: a probed query's
         # cell filter prunes whole directories, so stage-1 I/O is
         # ∝ probed cells even at 100-TB index size.
-        partition_by=["cell"] if centroids is not None else None,
+        Part(
+            "codes",
+            _code_rows(corpus, bounds, id_col, vec_col, centroids),
+            partition_by=["cell"] if centroids is not None else None,
+        ),
+    ]
+    params = {"id_col": id_col, "vec_col": vec_col}
+    publish_build(
+        spark,
+        Sidecar(_idx(table), families=("codes",), params=params),
+        version,
+        parts,
     )
-    # A rebuild resets the family to flat layout — unlink any prior
-    # delta chain (its epoch is dead).
-    clear_delta_log(spark, _idx(table), "codes")
-    # version+epoch LAST: a crash before this leaves the old (or no)
-    # marker, whose epoch no longer matches the new bounds/codes —
-    # the next refresh rebuilds; never a fresher-than-reality stamp.
-    write_state(spark, _idx(table), version, epoch)
-    return coded.count()
+    return spark.read.parquet(f"{_idx(table)}/codes").count()
 
 
 def refresh_ann_index(
@@ -229,13 +197,12 @@ def refresh_ann_index(
     drift_train_iterations: int = 5,
     compact_threshold: int = DEFAULT_COMPACT_THRESHOLD,
 ) -> tuple[int, int]:
-    """Reconcile codes with the table's commits since the last index
-    version: deletes anti-join out, inserts/updates re-code with the
-    PERSISTED bounds. Returns ``(n_recoded, n_deleted)`` — cost ∝ the
-    change set, never the corpus. Falls back to a full rebuild when
-    the indexed version is no longer reconstructible (vacuumed), no
-    index exists yet, or the sidecar's epochs disagree / a dir is
-    unreadable (torn build — see module docstring).
+    """Reconcile codes with the table's commits since the indexed
+    version: deletes tombstone out, inserts/updates re-code with the
+    PERSISTED bounds. Returns ``(n_recoded, n_deleted)``; a rebuild
+    (unreadable bounds, other id/vector columns, or the sidecar ladder)
+    reports ``(rows, 0)`` and reuses the persisted centroid list, if
+    any — a full reassignment restores any fixed list as a codebook.
 
     ``drift_rebuild_ratio`` (IVF mode) arms the CENTROID-DRIFT
     trigger: centroids are deliberately fixed across refreshes
@@ -250,58 +217,37 @@ def refresh_ann_index(
     Opt-in (None = never retrain) because a rebuild changes cell
     assignments, which callers replaying the codebook externally must
     opt into."""
-    spark = table.spark
-    latest = (table.versions() or [0])[-1]
-    state = family_consistent(spark, _idx(table), "codes", ["bounds"])
-    # IVF mode is detected from the sidecar itself: a centroids part
-    # whose epoch matches _VERSION. A torn centroids part (epoch
-    # mismatch while bounds/codes agree) forces a rebuild REUSING the
-    # persisted centroid list — any fixed list is a valid codebook as
-    # long as stored cells and query probing share it, which a full
-    # reassignment restores.
-    centroids = _read_centroids(table)
-    ivf_ok = (
-        state is not None
-        and centroids is not None
-        and epoch_of(spark, _idx(table), "centroids") == state[1]
+    sc = _sidecar(table, {"id_col": id_col, "vec_col": vec_col})
+    ivf = "centroids" in sc.parts
+    centroids = None
+
+    def deltas(w):
+        nonlocal centroids
+        try:
+            bounds = _read_bounds(table)
+        except Exception:
+            return None  # unreadable bounds: rebuild
+        centroids = _read_centroids(table) if ivf else None
+        if ivf and centroids is None:
+            return None
+        # IVF deltas keep the cell partitioning so probed queries
+        # prune delta dirs too.
+        return [Delta(
+            "codes", _code_rows(w.upserts, bounds, id_col, vec_col, centroids),
+            w.changes.select(id_col), id_col, ["cell"] if ivf else None,
+        )]
+
+    mode, out = refresh(
+        table, sc,
+        lambda: build_ann_index(
+            table, id_col, vec_col, _read_centroids(table) if ivf else None
+        ),
+        deltas, compact_threshold,
     )
-    if centroids is not None and state is not None and not ivf_ok:
-        return (build_ann_index(table, id_col, vec_col, centroids), 0)
-    if state is None or state[0] not in table.readable_versions():
-        return (build_ann_index(table, id_col, vec_col, centroids), 0)
-    v0, epoch, gens = state
-    if v0 == latest:
-        return (0, 0)
-    try:
-        bounds = _read_bounds(table)
-    except Exception:
-        return (build_ann_index(table, id_col, vec_col, centroids), 0)
-    changes = table.table_changes(v0, latest)
-    upserts = changes.filter(F.col("_change_type") != "delete")
-    fresh = _code_rows(
-        upserts, bounds, id_col, vec_col, centroids if ivf_ok else None
-    )
-    n_up = upserts.count()
-    n_del = changes.filter(F.col("_change_type") == "delete").count()
-    # Delta publish: only the change window's codes + a touched-id
-    # tombstone hit disk — the r8 survivors∪fresh full rewrite is gone
-    # (refresh I/O ∝ batch, compaction folds every
-    # DEFAULT_COMPACT_THRESHOLD refreshes). IVF deltas keep the cell
-    # partitioning so probed queries prune delta dirs too.
-    publish_family_delta(
-        spark,
-        _idx(table),
-        "codes",
-        fresh,
-        changes.select(id_col),
-        id_col,
-        latest,
-        epoch,
-        gens,
-        partition_by=["cell"] if ivf_ok else None,
-        compact_threshold=compact_threshold,
-    )
-    if ivf_ok and drift_rebuild_ratio is not None:
+    if mode != "incremental":
+        return (out, 0) if mode == "rebuild" else (0, 0)
+    counts = out.counts()
+    if ivf and drift_rebuild_ratio is not None:
         if _cells_drifted(table, centroids, drift_rebuild_ratio, id_col):
             from rds_to_datalake_project_spark.operators.ivf_train import (
                 train_ivf_centroids,
@@ -315,7 +261,7 @@ def refresh_ann_index(
                 vec_col=vec_col,
             )
             build_ann_index(table, id_col, vec_col, retrained)
-    return (n_up, n_del)
+    return counts
 
 
 def _cells_drifted(
@@ -350,14 +296,9 @@ def attach_ann_maintenance(
     vec_col: str = "embedding",
     drift_rebuild_ratio: float | None = None,
 ) -> None:
-    """Enroll the index as a TABLE SERVICE: every commit the table
-    publishes triggers ``refresh_ann_index`` in the post-commit
-    maintenance slot (KeyedTable.add_maintenance_hook — the same slot
-    the zone-map reconcile runs in), so the served index follows the
-    lake automatically instead of by out-of-band job. Attach before
-    the first load and the hook's first run performs the initial
-    ``build_ann_index`` too (refresh falls back to build when no
-    index exists)."""
+    """Enroll the index as a table service: every commit runs
+    ``refresh_ann_index`` in the post-commit maintenance slot. Attach
+    before the first load and that load builds the index."""
     table.add_maintenance_hook(
         lambda t: refresh_ann_index(
             t, id_col, vec_col, drift_rebuild_ratio=drift_rebuild_ratio
@@ -385,8 +326,16 @@ def ann_index_topk(
     set is computed driver-side from the tiny centroid part with the
     SAME integer-exact distance as the stored assignment, and the cell
     filter is a partition-prunable predicate on the codes scan (base
-    AND delta parts — the merged family keeps hive pruning per leg)."""
-    codes = read_family(table.spark, _idx(table), "codes", id_col)
+    AND delta parts — the merged family keeps hive pruning per leg).
+    Raises when the sidecar is missing or torn: serving never mixes
+    one build's codes with another's bounds."""
+    sc = _sidecar(table)
+    state = consistent(table.spark, sc.dir, sc.parts, sc.families)
+    if state is None:
+        raise ValueError("ANN index missing or torn — build_ann_index first")
+    codes = read_family(
+        table.spark, sc.dir, "codes", id_col, gens=state.gens["codes"]
+    )
     if probe_cells is not None:
         centroids = _read_centroids(table)
         if centroids is None:

@@ -238,10 +238,12 @@ class ClonedTable(KeyedTable):
         # materialized it (the commit records name exactly those — a
         # staged rel absent from the local tree is recorded created).
         local_at_k = self._localized_rels(upto=version)
-        remainder = self._pinned_source_read(src, meta, exclude=local_at_k)
+        remainder = self._pinned_source_read(
+            src, meta, exclude=local_at_k | set(_exclude_rels or ())
+        )
         if not local_at_k:
             return remainder
-        mine = super().read_as_of(version)
+        mine = super().read_as_of(version, _exclude_rels=_exclude_rels)
         return mine.unionByName(remainder, allowMissingColumns=True)
 
     # Index-served point/range paths prune over LOCAL files only —

@@ -11,20 +11,14 @@ commit history, so screening a batch costs one banding pass over the
 BATCH plus one (band, bucket) equi-join against the index — the
 corpus is never re-read, let alone re-signed.
 
-Sidecar layout under ``<table>/.lshindex`` (epoch-stamped commit
-protocol shared with the ANN index — operators/sidecar.py):
-
-- ``bands``    one row per (doc, band): ``id, band, bucket``.
-- ``_PARAMS``  the signature parameters (num_hashes/bands/shingle_n/
-  hash_mode) the index was built with; a refresh under different
-  parameters would silently mix incompatible bucket spaces, so any
-  mismatch forces a rebuild under the caller's parameters.
-- ``_VERSION`` ``"<base-table commit version> <build epoch>"``.
-
-Incremental maintenance consumes ``KeyedTable.table_changes(indexed,
-latest)``: deleted/replaced ids anti-join out, upserted docs are
-re-banded — cost ∝ rows changed. Vacuumed-out indexed versions and
-torn builds (epoch mismatch) fall back to a full rebuild.
+The sidecar under ``<table>/.lshindex`` is one delta family,
+``bands`` (one ``id, band, bucket`` row per (doc, band)), in the
+sidecar lifecycle (operators/sidecar.py). Its params are the
+signature parameters (num_hashes/bands/shingle_n/hash_mode): a
+refresh under others would silently mix incompatible bucket spaces,
+so a mismatch rebuilds under the caller's parameters. A refresh
+re-bands only the change window's upserted docs — cost ∝ rows
+changed.
 
 Query paths:
 - ``lsh_candidates_for(table, batch)``: candidate (batch_id, corpus
@@ -36,22 +30,20 @@ Query paths:
 
 from __future__ import annotations
 
-import json
-import uuid
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from rds_to_datalake_project_spark import fsio
 from rds_to_datalake_project_spark.operators.minhash import band_rows
 from rds_to_datalake_project_spark.operators.sidecar import (
     DEFAULT_COMPACT_THRESHOLD,
-    clear_delta_log,
-    family_consistent,
-    publish_family_delta,
+    Delta,
+    Part,
+    Sidecar,
+    head_version,
+    publish_build,
     read_family,
-    write_part,
-    write_state,
+    read_params,
+    refresh,
 )
 from rds_to_datalake_project_spark.operators.upsert import KeyedTable
 
@@ -74,13 +66,7 @@ def _params(
 
 
 def _stored_params(table: KeyedTable) -> dict | None:
-    txt = fsio.read_text(table.spark, f"{_idx(table)}/_PARAMS")
-    if not txt:
-        return None
-    try:
-        return json.loads(txt)
-    except ValueError:
-        return None
+    return read_params(table.spark, _idx(table))
 
 
 def build_lsh_index(
@@ -92,28 +78,18 @@ def build_lsh_index(
     shingle_n: int = 3,
     hash_mode: str = "xxhash64",
 ) -> int:
-    """Full (re)build: band the current corpus, stamp params, version
-    and a fresh epoch. Returns (doc, band) rows written."""
-    spark = table.spark
-    epoch = uuid.uuid4().hex
-    version = (table.versions() or [0])[-1]
-    banded = band_rows(
-        table.read(), id_col, text_col, num_hashes, bands, shingle_n, hash_mode
+    """Full (re)build: band the current corpus under these params.
+    Returns (doc, band) rows written."""
+    params = _params(num_hashes, bands, shingle_n, hash_mode)
+    version = head_version(table)
+    banded = band_rows(table.read(), id_col, text_col, **params)
+    publish_build(
+        table.spark,
+        Sidecar(_idx(table), families=("bands",), params=params),
+        version,
+        [Part("bands", banded)],
     )
-    out = write_part(spark, _idx(table), "bands", banded, epoch)
-    # A rebuild starts a fresh flat layout — any prior delta chain is
-    # dead (its epoch no longer matches) and must be unlinked or every
-    # later consistency check would read it as torn.
-    clear_delta_log(spark, _idx(table), "bands")
-    # Params BEFORE _VERSION: a refresh only trusts the index once the
-    # epoch chain closes, and by then the parameter record is in place.
-    fsio.write_text(
-        spark,
-        f"{_idx(table)}/_PARAMS",
-        json.dumps(_params(num_hashes, bands, shingle_n, hash_mode)),
-    )
-    write_state(spark, _idx(table), version, epoch)
-    return out.count()
+    return table.spark.read.parquet(f"{_idx(table)}/bands").count()
 
 
 def refresh_lsh_index(
@@ -127,51 +103,27 @@ def refresh_lsh_index(
     compact_threshold: int = DEFAULT_COMPACT_THRESHOLD,
 ) -> tuple[int, int]:
     """Reconcile the signature index with commits since the indexed
-    version — DELTA-PUBLISHED (sidecar.publish_family_delta): the
-    refresh writes only the change window's re-banded rows plus a
-    touched-id tombstone, so maintenance I/O is ∝ the change set, not
-    the signature table (the r8 full-rewrite union is gone). Readers
-    merge base+deltas; the chain folds into the base every
-    ``DEFAULT_COMPACT_THRESHOLD`` refreshes. Returns
-    ``(n_rebanded_docs, n_deleted_docs)``. Falls back to a full
-    rebuild when no/torn index, parameter mismatch, or the indexed
-    version was vacuumed out."""
-    spark = table.spark
-    latest = (table.versions() or [0])[-1]
-    state = family_consistent(spark, _idx(table), "bands")
-    if (
-        state is None
-        or state[0] not in table.readable_versions()
-        or _stored_params(table)
-        != _params(num_hashes, bands, shingle_n, hash_mode)
-    ):
-        n = build_lsh_index(
-            table, id_col, text_col, num_hashes, bands, shingle_n, hash_mode
-        )
-        return (n // max(bands, 1), 0)
-    v0, epoch, gens = state
-    if v0 == latest:
-        return (0, 0)
-    changes = table.table_changes(v0, latest)
-    upserts = changes.filter(F.col("_change_type") != "delete")
-    fresh = band_rows(
-        upserts, id_col, text_col, num_hashes, bands, shingle_n, hash_mode
+    version — only the change window's re-banded rows plus a
+    touched-id tombstone are written, so maintenance I/O is ∝ the
+    change set, not the signature table. Returns
+    ``(n_rebanded_docs, n_deleted_docs)``; a rebuild (no or torn
+    index, parameter mismatch, vacuumed indexed version) reports
+    ``(docs, 0)``."""
+    params = _params(num_hashes, bands, shingle_n, hash_mode)
+    mode, out = refresh(
+        table,
+        Sidecar(_idx(table), families=("bands",), params=params),
+        lambda: build_lsh_index(table, id_col, text_col, **params),
+        lambda w: [Delta(
+            "bands", band_rows(w.upserts, id_col, text_col, **params),
+            w.changes.select(id_col),  # every changed key leaves the index
+            id_col,
+        )],
+        compact_threshold,
     )
-    n_up = upserts.count()
-    n_del = changes.filter(F.col("_change_type") == "delete").count()
-    publish_family_delta(
-        spark,
-        _idx(table),
-        "bands",
-        fresh,
-        changes.select(id_col),  # every changed key leaves the index
-        id_col,
-        latest,
-        epoch,
-        gens,
-        compact_threshold=compact_threshold,
-    )
-    return (n_up, n_del)
+    if mode == "rebuild":
+        return (out // max(bands, 1), 0)
+    return out.counts() if mode == "incremental" else (0, 0)
 
 
 def lsh_candidates_for(
@@ -240,17 +192,13 @@ def lsh_neardups_for(
     only. Corpus text is fetched for CANDIDATE ids alone (semi-join
     pushdown), so the verify cost tracks the candidate set, not the
     table. Output: ``batch_id, corpus_id, jaccard``."""
-    params = _stored_params(table)
-    if params is None:
-        raise ValueError(
-            "no LSH index under this table — run build_lsh_index first"
-        )
     from rds_to_datalake_project_spark.operators.minhash import shingles
 
-    n = params["shingle_n"]
+    # raises first when the table has no LSH index
     cand = lsh_candidates_for(
         table, batch, id_col, text_col, max_bucket_size
     )
+    n = _stored_params(table)["shingle_n"]
     # Each side shingled FROM ITS OWN frame (a batch id that collides
     # with a corpus id keeps its batch text on the a-side and the
     # corpus text on the b-side — no ambiguity); corpus text fetched
@@ -290,9 +238,8 @@ def attach_lsh_maintenance(
     hash_mode: str = "xxhash64",
 ) -> None:
     """Enroll the signature index as a table service: every commit
-    triggers ``refresh_lsh_index`` in the post-commit maintenance slot
-    (KeyedTable.add_maintenance_hook). Attach before the first load
-    and the first commit builds the index."""
+    runs ``refresh_lsh_index`` in the post-commit maintenance slot.
+    Attach before the first load and that load builds the index."""
     table.add_maintenance_hook(
         lambda t: refresh_lsh_index(
             t, id_col, text_col, num_hashes, bands, shingle_n, hash_mode

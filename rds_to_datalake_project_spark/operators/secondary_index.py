@@ -37,12 +37,10 @@ never a Python reimplementation (str(v) and CAST(v AS STRING) render
 booleans, scientific doubles, and decimals differently, which would
 silently probe the wrong bucket and break the exactness contract).
 
-Maintenance for both layouts is DELTA-PUBLISHED (operators/sidecar.py
-family protocol): per commit, the change window's entries are written
-as a delta part plus a record-key tombstone — a re-keyed value (the
-row moved to a different indexed value) retires its old entry
-logically. Refresh I/O ∝ change set; the chain compacts on the shared
-threshold.
+Both layouts are one ``entries`` delta family in the sidecar
+lifecycle (operators/sidecar.py): a commit's entries land as a delta
+with a record-key tombstone, so a re-keyed value (the row moved to a
+different indexed value) retires its old entry logically.
 
 Serving composes with the key-side indexes: the secondary index
 resolves probe values to record keys (a driver-side collect, bounded
@@ -60,20 +58,20 @@ maintenance-hook failure), mirroring the torn-index refusal.
 
 from __future__ import annotations
 
-import uuid
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from rds_to_datalake_project_spark import fsio
 from rds_to_datalake_project_spark.operators.sidecar import (
     DEFAULT_COMPACT_THRESHOLD,
-    clear_delta_log,
-    family_consistent,
-    publish_family_delta,
+    Delta,
+    Part,
+    Sidecar,
+    consistent,
+    head_version,
+    publish_build,
     read_family,
-    write_part,
-    write_state,
+    read_params,
+    refresh,
 )
 from rds_to_datalake_project_spark.operators.upsert import KeyedTable
 
@@ -134,11 +132,11 @@ def _require_fresh(table: KeyedTable, state, value_col: str, layout: str) -> Non
     refusal. Zone/bloom may serve stale because their residual filter
     re-checks; here the probed value's entry list itself is the
     answer set."""
-    latest = (table.versions() or [0])[-1]
-    if state[0] < latest:
+    latest = head_version(table)
+    if state.version < latest:
         raise ValueError(
             f"secondary {layout} index on {value_col!r} is STALE "
-            f"(indexed v{state[0]}, table head v{latest}) — lookups would "
+            f"(indexed v{state.version}, table head v{latest}) — lookups would "
             "return wrong rows; refresh the index first (a swallowed "
             "maintenance-hook failure leaves it lagging: see "
             "last_maintenance_errors)"
@@ -156,33 +154,39 @@ def entries_of(df: DataFrame, value_col: str, key_col: str) -> DataFrame:
     )
 
 
+def _sidecar(index_dir: str, table: KeyedTable, value_col: str, **frozen) -> Sidecar:
+    params = {"value_col": value_col, "key_col": table.spec.record_key[0], **frozen}
+    return Sidecar(index_dir, families=("entries",), params=params)
+
+
+def _refresh(
+    table: KeyedTable, value_col: str, index_dir: str, build, entries, part_col: str,
+    compact_threshold: int,
+) -> str:
+    """Either layout's refresh: the change window's entries (banded
+    with the params the build stored) as one ``entries`` delta."""
+    key_col = table.spec.record_key[0]
+    return refresh(
+        table,
+        _sidecar(index_dir, table, value_col),
+        build,
+        lambda w: [Delta(
+            "entries", entries(w.upserts, w.params), w.changes.select(key_col),
+            key_col, [part_col],
+        )],
+        compact_threshold,
+    )[0]
+
+
 def build_secondary_index(table: KeyedTable, value_col: str) -> None:
     """Full (re)build over the current snapshot, hive-partitioned by
     value bucket for directory-level pruning at probe time."""
-    spark = table.spark
-    key_col = table.spec.record_key[0]
-    latest = (table.versions() or [0])[-1]
-    epoch = uuid.uuid4().hex
-    write_part(
-        spark,
-        _idir(table, value_col),
-        "entries",
-        entries_of(table.read(), value_col, key_col),
-        epoch,
-        partition_by=["bucket"],
-        checkpoint=False,  # reads the TABLE, writes the index dir
+    version = head_version(table)
+    rows = entries_of(table.read(), value_col, table.spec.record_key[0])
+    publish_build(
+        table.spark, _sidecar(_idir(table, value_col), table, value_col), version,
+        [Part("entries", rows, partition_by=["bucket"])],
     )
-    clear_delta_log(spark, _idir(table, value_col), "entries")
-    fsio.write_text(
-        spark, f"{_idir(table, value_col)}/_PARAMS", f"{value_col} {key_col}"
-    )
-    write_state(spark, _idir(table, value_col), latest, epoch)
-
-
-def _stored_params(table: KeyedTable, value_col: str) -> tuple[str, str] | None:
-    txt = fsio.read_text(table.spark, f"{_idir(table, value_col)}/_PARAMS")
-    parts = (txt or "").split()
-    return (parts[0], parts[1]) if len(parts) == 2 else None
 
 
 def refresh_secondary_index(
@@ -193,49 +197,18 @@ def refresh_secondary_index(
     """Advance the index to the table's latest commit by publishing
     the change window as a delta (fresh entries + record-key
     tombstone). Returns ``"noop" | "incremental" | "rebuild"``."""
-    spark = table.spark
     key_col = table.spec.record_key[0]
-    if not table.retain_versions:
-        build_secondary_index(table, value_col)
-        return "rebuild"
-    latest = (table.versions() or [0])[-1]
-    state = family_consistent(spark, _idir(table, value_col), "entries")
-    if (
-        state is None
-        or _stored_params(table, value_col) != (value_col, key_col)
-        or state[0] not in (table.readable_versions() or [])
-    ):
-        build_secondary_index(table, value_col)
-        return "rebuild"
-    if state[0] >= latest:
-        return "noop"
-    v0, epoch, gens = state
-    changes = table.table_changes(v0, latest)
-    fresh = entries_of(
-        changes.filter(F.col("_change_type") != "delete"), value_col, key_col
+    return _refresh(
+        table, value_col, _idir(table, value_col),
+        lambda: build_secondary_index(table, value_col),
+        lambda rows, _params: entries_of(rows, value_col, key_col),
+        "bucket", compact_threshold,
     )
-    publish_family_delta(
-        spark,
-        _idir(table, value_col),
-        "entries",
-        fresh,
-        changes.select(key_col),
-        key_col,
-        latest,
-        epoch,
-        gens,
-        partition_by=["bucket"],
-        compact_threshold=compact_threshold,
-    )
-    return "incremental"
 
 
 def attach_secondary_index_maintenance(table: KeyedTable, value_col: str) -> None:
-    """Enroll the index in the post-commit maintenance slot (same
-    advisory posture as the zone-map/bloom/LSH/ANN services)."""
-    table.add_maintenance_hook(
-        lambda t: refresh_secondary_index(t, value_col)
-    )
+    """Enroll the index in the post-commit maintenance slot."""
+    table.add_maintenance_hook(lambda t: refresh_secondary_index(t, value_col))
 
 
 def secondary_lookup_keys(
@@ -249,7 +222,7 @@ def secondary_lookup_keys(
         raise ValueError("values must be non-empty")
     spark = table.spark
     key_col = table.spec.record_key[0]
-    state = family_consistent(spark, _idir(table, value_col), "entries")
+    state = consistent(spark, _idir(table, value_col), families=("entries",))
     if state is None:
         raise ValueError(
             f"secondary index on {value_col!r} missing or torn — "
@@ -276,7 +249,7 @@ def secondary_lookup_keys(
         _idir(table, value_col),
         "entries",
         key_col,
-        gens=state[2],
+        gens=state.gens["entries"],
         partition_filter=("bucket", buckets),
     )
     LAST_PROBE["probes"] = LAST_PROBE.get("probes", 0) + 1
@@ -408,7 +381,7 @@ def build_secondary_range_index(
     pushes the residual range predicate into parquet."""
     spark = table.spark
     key_col = table.spec.record_key[0]
-    latest = (table.versions() or [0])[-1]
+    version = head_version(table)
     snap = table.read().filter(F.col(value_col).isNotNull())
     dtype = snap.schema[value_col].dataType
     from pyspark.sql import types as T
@@ -433,36 +406,18 @@ def build_secondary_range_index(
     width = (hi - lo) / n_bands
     if not width > 0.0:
         width = 1.0  # constant/empty column: every value bands to 0
-    epoch = uuid.uuid4().hex
-    write_part(
+    publish_build(
         spark,
-        _rdir(table, value_col),
-        "entries",
-        _range_entries_of(snap, value_col, key_col, lo, width),
-        epoch,
-        partition_by=["band"],
-        checkpoint=False,  # reads the TABLE, writes the index dir
+        _sidecar(
+            _rdir(table, value_col), table, value_col,
+            n_bands=n_bands, lo=lo, width=width,
+        ),
+        version,
+        [Part(
+            "entries", _range_entries_of(snap, value_col, key_col, lo, width),
+            partition_by=["band"],
+        )],
     )
-    clear_delta_log(spark, _rdir(table, value_col), "entries")
-    fsio.write_text(
-        spark,
-        f"{_rdir(table, value_col)}/_PARAMS",
-        f"{value_col} {key_col} {n_bands} {lo!r} {width!r}",
-    )
-    write_state(spark, _rdir(table, value_col), latest, epoch)
-
-
-def _stored_range_params(
-    table: KeyedTable, value_col: str
-) -> tuple[str, str, int, float, float] | None:
-    txt = fsio.read_text(table.spark, f"{_rdir(table, value_col)}/_PARAMS")
-    parts = (txt or "").split()
-    if len(parts) != 5:
-        return None
-    try:
-        return parts[0], parts[1], int(parts[2]), float(parts[3]), float(parts[4])
-    except ValueError:
-        return None
 
 
 def refresh_secondary_range_index(
@@ -474,59 +429,21 @@ def refresh_secondary_range_index(
     change window under the FROZEN band params (values outside the
     build-time domain open new bands on the same grid — see module
     docstring). Returns ``"noop" | "incremental" | "rebuild"``."""
-    spark = table.spark
     key_col = table.spec.record_key[0]
-    if not table.retain_versions:
-        build_secondary_range_index(table, value_col)
-        return "rebuild"
-    latest = (table.versions() or [0])[-1]
-    state = family_consistent(spark, _rdir(table, value_col), "entries")
-    params = _stored_range_params(table, value_col)
-    if (
-        state is None
-        or params is None
-        or params[:2] != (value_col, key_col)
-        or state[0] not in (table.readable_versions() or [])
-    ):
-        build_secondary_range_index(table, value_col)
-        return "rebuild"
-    if state[0] >= latest:
-        return "noop"
-    v0, epoch, gens = state
-    _, _, _n_bands, lo, width = params
-    changes = table.table_changes(v0, latest)
-    # Frozen (lo, width) band the change window on the SAME unbounded
-    # grid — out-of-domain values open new bands, keeping a growing
-    # domain (monotone timestamps) pruned without rebuilds.
-    fresh = _range_entries_of(
-        changes.filter(F.col("_change_type") != "delete"),
-        value_col,
-        key_col,
-        lo,
-        width,
+    return _refresh(
+        table, value_col, _rdir(table, value_col),
+        lambda: build_secondary_range_index(table, value_col),
+        lambda rows, params: _range_entries_of(
+            rows, value_col, key_col, params["lo"], params["width"]
+        ),
+        "band", compact_threshold,
     )
-    publish_family_delta(
-        spark,
-        _rdir(table, value_col),
-        "entries",
-        fresh,
-        changes.select(key_col),
-        key_col,
-        latest,
-        epoch,
-        gens,
-        partition_by=["band"],
-        compact_threshold=compact_threshold,
-    )
-    return "incremental"
 
 
 def attach_secondary_range_index_maintenance(
     table: KeyedTable, value_col: str
 ) -> None:
-    table.add_maintenance_hook(
-        lambda t: refresh_secondary_range_index(t, value_col)
-    )
+    table.add_maintenance_hook(lambda t: refresh_secondary_range_index(t, value_col))
 
 
 def secondary_range_lookup_keys(
@@ -540,15 +457,15 @@ def secondary_range_lookup_keys(
     is missing, torn, or stale."""
     spark = table.spark
     key_col = table.spec.record_key[0]
-    state = family_consistent(spark, _rdir(table, value_col), "entries")
-    params = _stored_range_params(table, value_col)
+    state = consistent(spark, _rdir(table, value_col), families=("entries",))
+    params = read_params(spark, _rdir(table, value_col))
     if state is None or params is None:
         raise ValueError(
             f"secondary range index on {value_col!r} missing or torn — "
             "build_secondary_range_index first"
         )
     _require_fresh(table, state, value_col, "range")
-    _, _, n_bands, blo, bwidth = params
+    n_bands, blo, bwidth = params["n_bands"], params["lo"], params["width"]
     dtype = table.read().schema[value_col].dataType
     # Band the EXACT probe values: _band_col widens through double
     # (temporal via timestamp) — never a narrowing cast to the column
@@ -582,7 +499,8 @@ def secondary_range_lookup_keys(
         # and let the residual carry correctness over a full entries
         # scan — graceful degradation, never a wrong answer.
         entries = read_family(
-            spark, _rdir(table, value_col), "entries", key_col, gens=state[2]
+            spark, _rdir(table, value_col), "entries", key_col,
+            gens=state.gens["entries"],
         )
         return entries.filter(residual).select(key_col).distinct()
     bands = [str(b) for b in range(int(b_lo), int(b_hi) + 1)]
@@ -594,7 +512,7 @@ def secondary_range_lookup_keys(
         _rdir(table, value_col),
         "entries",
         key_col,
-        gens=state[2],
+        gens=state.gens["entries"],
         partition_filter=("band", bands),
     )
     return (

@@ -1,50 +1,67 @@
-"""Epoch-stamped sidecar commit protocol for derived table services.
+"""The one lifecycle of the epoch-stamped sidecar services.
 
-A table service (SQ8 ANN index, LSH signature index, …) persists
-derived state under ``<table>/.<service>`` as a few parquet parts
-plus a ``_VERSION`` marker. The parts cannot be committed in one
-transaction, so every (re)build stamps one fresh EPOCH (a uuid) into
-each part's ``_EPOCH`` marker (written only AFTER that part's parquet
-overwrite completes — underscore files are invisible to
-``spark.read.parquet``) and finally into ``_VERSION`` alongside the
-base-table commit version. A consumer takes the incremental path only
-when every epoch agrees with ``_VERSION``; any mismatch or missing
-marker means a torn build and forces a full rebuild. Crash at any
-point therefore leaves the sidecar looking STALE, never torn-but-
-trusted (same conservative posture as the zone map's _SEQ/_SYNC
-tokens).
+A table service (secondary equality/range index, text, LSH and ANN
+indexes, sketches, table stats) keeps derived state under
+``<table>/.<service>`` and follows the table from post-commit hooks.
+It is advisory and rebuildable: a crash, a vacuumed base version or a
+parameter change costs a rebuild, never a wrong answer. A service
+supplies only what is its own — a ``Sidecar`` (directory, plain parts,
+delta families, params), the ``Part`` rows it derives from a snapshot,
+and the ``Delta`` rows it derives from a change window's upserts and
+touched ids. This module does the rest.
 
-DELTA FAMILIES — refresh I/O ∝ change set, not index size
----------------------------------------------------------
-A "family" is one logical relation stored as a BASE part plus an
-ordered chain of DELTA parts, each delta paired with a TOMBSTONE part
-(the ids the delta's change window touched — upserts AND deletes).
-A refresh writes ONLY its fresh rows and touched ids (two small
-parts); it never rewrites the base, so at a 100-TB corpus per-commit
-maintenance moves O(batch) bytes where the flat layout moved the
-whole artifact. Readers merge with generation-aware semantics:
+Markers: ``<part>/_EPOCH`` (the build epoch, a uuid, written only
+AFTER the part's parquet overwrite completes — a partial overwrite has
+none), ``<family>_DELTAS`` (a family's delta chain), ``_PARAMS`` (the
+build params as one JSON object; a pre-JSON layout reads as a
+mismatch and rebuilds once, never misparsed) and ``_VERSION``
+(``"<base-table commit version> <build epoch>"``). ``consistent``, the
+one check every probe and refresh opens a sidecar through, trusts it
+only when every part, delta and log bears ``_VERSION``'s epoch; else
+it is torn — probes refuse, refreshes rebuild.
+
+BUILD PUBLISH (``publish_build``): fresh epoch → every part → clear
+every family's delta log → ``_PARAMS`` → ``_VERSION`` LAST. A crash
+before the last write leaves the old (or no) ``_VERSION``, whose epoch
+no longer matches the new parts: the next refresh rebuilds, so NEW
+parts never pair with OLD ones (ANN bounds with another build's
+codes) and the stamp is never fresher than reality. ``_PARAMS`` lands
+first, so when the epoch chain closes the parameter record is in
+place.
+
+REFRESH LADDER (``refresh``): unversioned table, torn sidecar,
+changed params or a vacuumed indexed version → rebuild; at the head →
+noop; else the service turns the ``table_changes`` window into deltas,
+every family's delta is published, and ``_VERSION`` advances ONCE,
+after the last family. A crash between family publishes leaves
+``_VERSION`` old and the window replays whole (idempotently, below);
+advancing per family would stamp a half-applied window fresh — a
+noop forever. State that is not replay-idempotent (sketch's turnstile
+CMS) republishes merged parts through the build publish instead,
+under a fresh epoch, so a half-done rewrite reads torn.
+
+DELTA FAMILIES — refresh I/O ∝ change set, not index size. A family
+is a BASE part plus an ordered chain of DELTA parts, each paired with
+a TOMBSTONE part (the ids its window touched — upserts AND deletes).
+A refresh writes only those two small parts, never the base. Readers
+merge with generation-aware semantics:
 
     a row written at generation g survives iff no tombstone with
     generation > g names its id  (base rows are generation 0)
 
-which makes replays idempotent: re-publishing the same change window
-as a later generation tombstones its earlier copy. The chain is
-recorded in a ``<family>_DELTAS`` JSON marker carrying the build
-epoch; every part in the chain must bear that epoch, so the torn-
-build detection extends unchanged (``family_consistent``). Deltas
-share the BUILD's epoch — a refresh adds parts, it never re-stamps
-existing ones — so a crash anywhere leaves either an unreferenced
-orphan (invisible) or a version-lagged log (replayed and healed by
-the next refresh). When the chain reaches ``compact_threshold`` the
-refresh folds base+deltas into a new base (the merged read), clears
-the log, and deletes the delta dirs — full-rewrite cost amortized to
-1/threshold of commits.
+so re-publishing a window as a later generation tombstones its
+earlier copy. Deltas share the BUILD's epoch (a refresh adds parts,
+never re-stamps), so a crash leaves either an unreferenced orphan
+(invisible; ``vacuum_family``) or a version-lagged log (replayed).
+At ``compact_threshold`` deltas the chain folds into a new base.
 """
 
 from __future__ import annotations
 
 import json
-from functools import reduce
+import uuid
+from functools import cached_property, reduce
+from typing import Callable, NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -84,6 +101,79 @@ def _existing_subdirs(
     ]
 
 
+class State(NamedTuple):
+    """A consistent sidecar: the base-table version it is at, its
+    build epoch, and each delta family's live generations."""
+
+    version: int
+    epoch: str
+    gens: dict[str, list[int]]
+
+
+class Sidecar(NamedTuple):
+    """What a service supplies to the lifecycle: its directory, the
+    plain parts and delta families ``consistent`` checks, and the
+    params it is built under (``refresh`` rebuilds unless the stored
+    params contain these; None = the service keeps no params)."""
+
+    dir: str
+    parts: tuple[str, ...] = ()
+    families: tuple[str, ...] = ()
+    params: dict | None = None
+
+
+class Part(NamedTuple):
+    """One part a build (or a merged rewrite) publishes whole; rows
+    None removes the part. ``checkpoint`` only when ``rows`` reads the
+    directory it overwrites (see ``write_part``)."""
+
+    name: str
+    rows: DataFrame | None
+    partition_by: list[str] | None = None
+    coalesce: int | None = None
+    checkpoint: bool = False
+
+
+class Delta(NamedTuple):
+    """One family's share of a change window: recomputed rows for the
+    window's upserts and every touched id (upserts and deletes)."""
+
+    family: str
+    fresh: DataFrame
+    touched: DataFrame
+    id_col: str
+    partition_by: list[str] | None = None
+
+
+class Window:
+    """The change window a refresh publishes: commits after
+    ``state.version`` up to ``head``. ``changes`` is built on first
+    use (a service may decide without it)."""
+
+    def __init__(self, table, state: State, head: int, params: dict | None):
+        self.table, self.state, self.head, self.params = table, state, head, params
+
+    @cached_property
+    def changes(self) -> DataFrame:
+        return self.table.table_changes(self.state.version, self.head)
+
+    @property
+    def upserts(self) -> DataFrame:
+        return self.changes.filter(F.col("_change_type") != "delete")
+
+    def counts(self) -> tuple[int, int]:
+        """(upserted, deleted) rows of the window in one grouped job."""
+        n = dict(
+            self.changes.groupBy(F.col("_change_type") == "delete").count().collect()
+        )
+        return n.get(False, 0), n.get(True, 0)
+
+
+def head_version(table) -> int:
+    """The table's latest commit version (0 before any commit)."""
+    return (table.versions() or [0])[-1]
+
+
 def read_state(spark: SparkSession, index_dir: str) -> tuple[int, str] | None:
     """(base-table version, build epoch) from ``_VERSION``, or None
     when missing/unparsable (pre-epoch layouts rebuild too)."""
@@ -106,32 +196,30 @@ def epoch_of(spark: SparkSession, index_dir: str, part: str) -> str | None:
     return txt.strip() if txt and txt.strip() else None
 
 
-def write_part(
-    spark: SparkSession,
-    index_dir: str,
-    part: str,
-    df: DataFrame,
-    epoch: str,
-    coalesce: int | None = None,
-    partition_by: list[str] | None = None,
-    checkpoint: bool = True,
-) -> DataFrame:
-    """Overwrite ``<index>/<part>`` with ``df``, then stamp its epoch
-    marker. Returns the MATERIALIZED frame (derived-from-previous
-    state is lazy — checkpoint before overwriting the directory it
-    reads from; recounting the checkpoint costs no second disk
-    read). ``checkpoint=False`` skips that materialization job — pass
-    it ONLY when the plan provably does not read the directory being
-    overwritten (e.g. a delta publish writing a brand-new generation
-    dir) AND the returned frame is not re-consumed (it stays lazy).
-    ``partition_by`` hive-partitions the part so consumers'
-    partition filters prune at the directory level (keep such columns
-    STRING-typed: the engine session disables partition type
+def read_params(spark: SparkSession, index_dir: str) -> dict | None:
+    """The ``_PARAMS`` object, or None when missing or not a JSON
+    object (a pre-JSON layout — its refresh rebuilds)."""
+    txt = fsio.read_text(spark, f"{index_dir}/_PARAMS")
+    try:
+        params = json.loads(txt) if txt else None
+    except ValueError:
+        return None
+    return params if isinstance(params, dict) else None
+
+
+def write_part(spark: SparkSession, index_dir: str, part: Part, epoch: str) -> None:
+    """Overwrite ``<index>/<part>`` with its rows, then stamp its epoch
+    marker. ``part.checkpoint`` materializes the rows first — required
+    when they derive from the directory being overwritten, a wasted
+    job otherwise. ``partition_by`` hive-partitions the part so
+    probes' partition filters prune at the directory level (keep such
+    columns STRING-typed: the engine session disables partition type
     inference, so values read back as strings). Partitioned parts are
     repartitioned ON the partition columns first — otherwise every
     write task emits a sliver into every bucket dir (tasks × buckets
     small files; a 256-bucket index from a 32-task frame would write
     ~8k files per build where 256 suffice)."""
+    df, partition_by = part.rows, part.partition_by
     if partition_by:
         # Explicit partition count: a bare repartition(cols) lets AQE
         # coalesce a small part to ONE post-shuffle partition (correct
@@ -143,32 +231,19 @@ def write_part(
         # exactly one task, so the file count per dir stays 1.
         n = max(1, spark.sparkContext.defaultParallelism)
         df = df.repartition(n, *[F.col(c) for c in partition_by])
-    out = df.localCheckpoint(eager=True) if checkpoint else df
-    writer = out.coalesce(coalesce) if coalesce else out
-    w = writer.write.mode("overwrite").option(
+    if part.checkpoint:
+        df = df.localCheckpoint(eager=True)
+    if part.coalesce:
+        df = df.coalesce(part.coalesce)
+    w = df.write.mode("overwrite").option(
         "partitionOverwriteMode", "static"  # part replace = full reset
     )
     if partition_by:
         w = w.partitionBy(*partition_by)
-    w.parquet(f"{index_dir}/{part}")
+    w.parquet(f"{index_dir}/{part.name}")
     # Marker AFTER the data: a partial overwrite has no _EPOCH and the
     # next consumer rebuilds instead of trusting truncated state.
-    fsio.write_text(spark, f"{index_dir}/{part}/_EPOCH", epoch)
-    return out
-
-
-def parts_consistent(
-    spark: SparkSession, index_dir: str, parts: list[str]
-) -> tuple[int, str] | None:
-    """The (version, epoch) state IF every part's epoch matches
-    ``_VERSION``'s — else None (torn build → caller rebuilds)."""
-    state = read_state(spark, index_dir)
-    if state is None:
-        return None
-    for p in parts:
-        if epoch_of(spark, index_dir, p) != state[1]:
-            return None
-    return state
+    fsio.write_text(spark, f"{index_dir}/{part.name}/_EPOCH", epoch)
 
 
 # --- delta families ---------------------------------------------------------
@@ -212,36 +287,40 @@ def clear_delta_log(spark: SparkSession, index_dir: str, family: str) -> None:
     """Reset the family to flat layout (build/compaction) and drop the
     now-unreferenced delta dirs."""
     old = read_delta_log(spark, index_dir, family)
-    fsio.write_text(
-        spark, f"{index_dir}/{family}_DELTAS", json.dumps({"epoch": "", "gens": []})
-    )
+    _write_delta_log(spark, index_dir, family, "", [])
     fs = fsio.fs_for(spark, index_dir)
     for g in old[1] if old else []:
         fs.delete(f"{index_dir}/{_delta_name(family, g)}", True)
         fs.delete(f"{index_dir}/{_tomb_name(family, g)}", True)
 
 
-def family_consistent(
-    spark: SparkSession, index_dir: str, family: str, extra_parts: list[str] = ()
-) -> tuple[int, str, list[int]] | None:
-    """(version, epoch, delta generations) IF the base part, every
-    delta/tombstone part, any ``extra_parts``, and the delta log all
-    agree on ``_VERSION``'s epoch — else None (torn → rebuild)."""
+def consistent(
+    spark: SparkSession,
+    index_dir: str,
+    parts: tuple[str, ...] | list[str] = (),
+    families: tuple[str, ...] | list[str] = (),
+) -> State | None:
+    """The sidecar's ``State`` IF every plain part, every family's
+    base, delta and tombstone parts, and every family's delta log
+    agree on ``_VERSION``'s epoch — else None (missing or torn: probes
+    refuse, refreshes rebuild)."""
     state = read_state(spark, index_dir)
     if state is None:
         return None
     version, epoch = state
-    log = read_delta_log(spark, index_dir, family)
-    gens = log[1] if log else []
-    if gens and log[0] != epoch:
-        return None
-    parts = [family, *extra_parts]
-    for g in gens:
-        parts += [_delta_name(family, g), _tomb_name(family, g)]
-    for p in parts:
+    names, gens = list(parts), {}
+    for family in families:
+        log = read_delta_log(spark, index_dir, family)
+        gens[family] = log[1] if log else []
+        if gens[family] and log[0] != epoch:
+            return None
+        names.append(family)
+        for g in gens[family]:
+            names += [_delta_name(family, g), _tomb_name(family, g)]
+    for p in names:
         if epoch_of(spark, index_dir, p) != epoch:
             return None
-    return version, epoch, gens
+    return State(version, epoch, gens)
 
 
 def read_family(
@@ -253,8 +332,8 @@ def read_family(
     partition_filter: tuple[str, list] | None = None,
 ) -> DataFrame:
     """The family's merged relation: base ∪ deltas, generation-aware
-    tombstones applied. ``gens`` from ``family_consistent`` (pass it
-    to avoid a second log read); None re-reads the log.
+    tombstones applied. ``gens`` from ``consistent`` (pass it to
+    avoid a second log read); None re-reads the log.
 
     ``partition_filter=(col, values)``: ADVISORY directory pruning for
     probe paths — each base/delta leg reads only its existing
@@ -328,70 +407,110 @@ def read_family(
 def publish_family_delta(
     spark: SparkSession,
     index_dir: str,
-    family: str,
-    fresh: DataFrame,
-    touched_ids: DataFrame,
-    id_col: str,
-    version: int,
+    d: Delta,
     epoch: str,
     gens: list[int],
-    partition_by: list[str] | None = None,
     compact_threshold: int = DEFAULT_COMPACT_THRESHOLD,
-    advance_state: bool = True,
-) -> str:
-    """Publish one refresh as a delta: write ``fresh`` (recomputed
-    rows for the change window's upserts) and ``touched_ids`` (EVERY
-    changed id — upserts and deletes) as two new parts under the
-    build epoch, append the generation to the log, then advance
-    ``_VERSION``. Returns ``"delta"``, or ``"compacted"`` when the
-    chain hit ``compact_threshold`` and was folded into the base.
-
-    Write cost: O(change set) — the base and prior deltas are never
-    touched (same-epoch deltas need no re-stamping; see module
-    docstring for the crash matrix).
-
-    ``advance_state=False`` defers the ``_VERSION`` write: a sidecar
-    holding SEVERAL families (postings + doclens) must publish each
-    family's delta first and stamp the version ONCE after the last —
-    otherwise a crash between publishes would leave _VERSION at the
-    new version with one family missing its window, and the next
-    refresh would no-op forever on half-applied state. Deferred, the
-    crash leaves _VERSION old and the whole window replays (the
-    generation rule makes replays idempotent)."""
+) -> None:
+    """Publish one family's share of a refresh: its fresh rows and
+    touched ids as two new parts under the build epoch, then the
+    generation appended to the log — O(change set), the base and prior
+    deltas untouched. ``_VERSION`` is ``refresh``'s to advance, once,
+    after the last family. At ``compact_threshold`` generations the
+    chain folds into the base."""
     gen = (max(gens) + 1) if gens else 1
-    # checkpoint=False: both parts are brand-new generation dirs the
+    # Not checkpointed: both parts are brand-new generation dirs the
     # plans cannot read (fresh/touched derive from the table's change
-    # feed), and neither return value is consumed — one write job
-    # each instead of materialize + write.
-    write_part(
-        spark,
-        index_dir,
-        _delta_name(family, gen),
-        fresh,
-        epoch,
-        partition_by=partition_by,
-        checkpoint=False,
-    )
-    write_part(
-        spark,
-        index_dir,
-        _tomb_name(family, gen),
-        touched_ids.select(id_col).distinct(),
-        epoch,
-        coalesce=1,
-        checkpoint=False,
-    )
+    # feed) — one write job each instead of materialize + write.
+    write_part(spark, index_dir, Part(
+        _delta_name(d.family, gen), d.fresh, partition_by=d.partition_by
+    ), epoch)
+    write_part(spark, index_dir, Part(
+        _tomb_name(d.family, gen), d.touched.select(d.id_col).distinct(), coalesce=1
+    ), epoch)
     new_gens = [*gens, gen]
-    _write_delta_log(spark, index_dir, family, epoch, new_gens)
-    out = "delta"
+    _write_delta_log(spark, index_dir, d.family, epoch, new_gens)
     if len(new_gens) >= compact_threshold:
         compact_family(
-            spark, index_dir, family, id_col, epoch, new_gens, partition_by
+            spark, index_dir, d.family, d.id_col, epoch, new_gens, d.partition_by
         )
-        out = "compacted"
-    if advance_state:
-        write_state(spark, index_dir, version, epoch)
-    return out
+
+
+def publish_build(
+    spark: SparkSession, sc: Sidecar, version: int, parts: list[Part]
+) -> None:
+    """The one build publish: a fresh epoch, every part, every
+    family's delta log cleared, ``_PARAMS``, and ``_VERSION`` LAST
+    (crash order: module docstring). ``version`` must be read BEFORE
+    the snapshot the parts derive from, so the stamp is never fresher
+    than the data."""
+    epoch = uuid.uuid4().hex
+    for p in parts:
+        if p.rows is None:  # a part this build does not have
+            fsio.fs_for(spark, sc.dir).delete(f"{sc.dir}/{p.name}", True)
+        else:
+            write_part(spark, sc.dir, p, epoch)
+    # A build starts every family flat: a prior chain bears a dead
+    # epoch and would read as torn forever.
+    for family in sc.families:
+        clear_delta_log(spark, sc.dir, family)
+    if sc.params is not None:
+        fsio.write_text(
+            spark, f"{sc.dir}/_PARAMS", json.dumps(sc.params, sort_keys=True)
+        )
+    write_state(spark, sc.dir, version, epoch)
+
+
+def refresh(
+    table,
+    sc: Sidecar,
+    build: Callable[[], object],
+    publish: Callable[[Window], list | None],
+    compact_threshold: int = DEFAULT_COMPACT_THRESHOLD,
+) -> tuple[str, object]:
+    """The one refresh ladder (module docstring). ``build()`` rebuilds
+    the sidecar; ``publish(window)`` turns a change window into a list
+    of ``Delta`` (published per family, then ``_VERSION`` advances
+    once), a list of ``Part`` (a merged rewrite under a fresh epoch,
+    through ``publish_build``), ``[]`` (leave the sidecar where it
+    is) or None (rebuild instead).
+
+    Returns ``(mode, value)``: ``("rebuild", build())``,
+    ``("noop", None)`` or ``("incremental", window)``."""
+    spark = table.spark
+    if not table.retain_versions:
+        # no commit log to diff or to certify freshness against
+        return "rebuild", build()
+    head = head_version(table)
+    state = consistent(spark, sc.dir, sc.parts, sc.families)
+    stored = read_params(spark, sc.dir)
+    # stored params may carry more keys than the refresh names (the
+    # range index's frozen band grid)
+    if (
+        state is None
+        or sc.params is not None and (
+            stored is None or any(stored.get(k) != v for k, v in sc.params.items())
+        )
+        or state.version not in table.readable_versions()
+    ):
+        return "rebuild", build()
+    if state.version >= head:
+        return "noop", None
+    window = Window(table, state, head, stored)
+    out = publish(window)
+    if out is None:
+        return "rebuild", build()
+    if not out:
+        return "noop", None
+    if isinstance(out[0], Part):
+        publish_build(spark, sc._replace(params=stored), head, out)
+        return "incremental", window
+    for d in out:
+        publish_family_delta(
+            spark, sc.dir, d, state.epoch, state.gens[d.family], compact_threshold
+        )
+    write_state(spark, sc.dir, head, state.epoch)
+    return "incremental", window
 
 
 def vacuum_family(
@@ -484,14 +603,14 @@ def compact_family(
     partition_by: list[str] | None = None,
 ) -> None:
     """Fold base + deltas into a new base and drop the chain. The
-    merged frame is checkpointed by ``write_part`` before the base
-    overwrite, so reading-while-overwriting is safe; a crash between
+    merged frame is checkpointed before the base overwrite, so
+    reading-while-overwriting is safe; a crash between
     the base write and the log clear leaves base rows double-covered
     by still-listed tombstones, which the generation rule resolves to
     exactly one copy (delta wins) — reads stay correct and the next
     compaction finishes the cleanup."""
     merged = read_family(spark, index_dir, family, id_col, gens)
-    write_part(
-        spark, index_dir, family, merged, epoch, partition_by=partition_by
-    )
+    write_part(spark, index_dir, Part(
+        family, merged, partition_by=partition_by, checkpoint=True
+    ), epoch)
     clear_delta_log(spark, index_dir, family)

@@ -37,8 +37,8 @@ Sketch state:
   changes feed (insert/delete/update pre+post) keeps it EXACTLY equal
   to a fresh build over the current snapshot.
 
-Maintenance (``attach_sketch_maintenance``): the sidecar follows the
-epoch-stamped torn-build protocol (operators/sidecar.py). CMS
+Maintenance (``attach_sketch_maintenance``): the two sketches are
+plain parts in the sidecar lifecycle (operators/sidecar.py). CMS
 refreshes incrementally — cost ∝ change set via
 ``table_changes(include_preimage=True)``. HLL registers only grow
 (a set sketch forgets nothing), so deletes schedule a full rebuild;
@@ -52,16 +52,16 @@ the base table. Hash modes follow the repo convention: ``xxhash64``
 
 from __future__ import annotations
 
-import uuid
-
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from rds_to_datalake_project_spark import fsio
 from rds_to_datalake_project_spark.operators.sidecar import (
-    parts_consistent,
-    write_part,
-    write_state,
+    Part,
+    Sidecar,
+    consistent,
+    head_version,
+    publish_build,
+    refresh,
 )
 from rds_to_datalake_project_spark.operators.upsert import KeyedTable
 
@@ -246,22 +246,15 @@ def _sdir(table: KeyedTable) -> str:
     return f"{table.path}/{_SKETCH_DIR}"
 
 
-def _params_str(col: str, p: int, depth: int, width: int, hash_mode: str) -> str:
-    return f"{col} {p} {depth} {width} {hash_mode}"
+_PARTS = ("hll", "cms")
 
 
-def _stored_params(table: KeyedTable) -> tuple[str, int, int, int, str] | None:
-    txt = fsio.read_text(table.spark, f"{_sdir(table)}/_PARAMS")
-    parts = (txt or "").split()
-    if len(parts) != 5:
-        return None
-    try:
-        return parts[0], int(parts[1]), int(parts[2]), int(parts[3]), parts[4]
-    except ValueError:
-        return None
-
-
-_PARTS = ["hll", "cms"]
+def _sidecar(
+    table: KeyedTable, col: str, p: int, depth: int, width: int, hash_mode: str
+) -> Sidecar:
+    params = {"col": col, "p": p, "depth": depth, "width": width,
+              "hash_mode": hash_mode}
+    return Sidecar(_sdir(table), parts=_PARTS, params=params)
 
 
 def build_sketches(
@@ -275,38 +268,22 @@ def build_sketches(
     """Full (re)build of both sketches over the current snapshot —
     one epoch, one scan per sketch, sidecar stamped at the table's
     latest commit."""
-    spark = table.spark
-    latest = (table.versions() or [0])[-1]
-    epoch = uuid.uuid4().hex
+    version = head_version(table)
     base = table.read()
-    # checkpoint=False: full rebuild reads the TABLE only (the
-    # refresh path's merge-with-old-sidecar MUST keep its checkpoint —
-    # it overwrites the dirs it reads)
-    write_part(
-        spark, _sdir(table), "hll", hll_registers(base, col, p, hash_mode), epoch, 1,
-        checkpoint=False,
+    publish_build(
+        table.spark, _sidecar(table, col, p, depth, width, hash_mode), version, [
+            Part("hll", hll_registers(base, col, p, hash_mode), coalesce=1),
+            Part("cms", cms_counters(base, col, depth, width, hash_mode=hash_mode),
+                 coalesce=1),
+        ],
     )
-    write_part(
-        spark,
-        _sdir(table),
-        "cms",
-        cms_counters(base, col, depth, width, hash_mode=hash_mode),
-        epoch,
-        1,
-        checkpoint=False,
-    )
-    fsio.write_text(
-        spark, f"{_sdir(table)}/_PARAMS", _params_str(col, p, depth, width, hash_mode)
-    )
-    write_state(spark, _sdir(table), latest, epoch)
 
 
 def read_sketches(table: KeyedTable) -> tuple[DataFrame, DataFrame] | None:
     """(hll_registers, cms_counters) IF the sidecar is consistent
     (epochs agree — torn or missing state reads as absent, never as a
     trusted stale artifact)."""
-    state = parts_consistent(table.spark, _sdir(table), _PARTS)
-    if state is None:
+    if consistent(table.spark, _sdir(table), parts=_PARTS) is None:
         return None
     d = _sdir(table)
     return table.spark.read.parquet(f"{d}/hll"), table.spark.read.parquet(f"{d}/cms")
@@ -327,7 +304,10 @@ def refresh_sketches(
       post-image per changed row, so it stays exactly equal to a
       fresh build); HLL merges registers of the inserted/updated
       values (a set sketch only grows — stale entries from updated
-      rows keep it an upper bound until the next full build).
+      rows keep it an upper bound until the next full build). Both
+      parts are rewritten merged, under a fresh epoch: a replayed
+      turnstile delta would double-count, so the rewrite must never
+      look consistent half-done.
     - deletes present, params changed, torn sidecar, or no retained
       base version → **full rebuild** (HLL cannot forget; CMS could,
       but a rebuild epoch is due anyway).
@@ -335,60 +315,46 @@ def refresh_sketches(
     Returns the path taken: ``"noop" | "incremental" | "rebuild"``.
     """
     spark = table.spark
-    if not table.retain_versions:
-        # unversioned table: no commit log to diff or to certify
-        # freshness against — every refresh is a full rebuild
-        build_sketches(table, col, p, depth, width, hash_mode)
-        return "rebuild"
-    latest = (table.versions() or [0])[-1]
-    state = parts_consistent(spark, _sdir(table), _PARTS)
-    stored = _stored_params(table)
-    params_now = (col, p, depth, width, hash_mode)
-    if state is None or stored != params_now or state[0] not in (
-        table.readable_versions() or []
-    ):
-        build_sketches(table, col, p, depth, width, hash_mode)
-        return "rebuild"
-    if state[0] >= latest:
-        return "noop"
-    v_from = state[0]
-    changes = table.table_changes(v_from, latest, include_preimage=True)
-    kinds = {
-        r[0]
-        for r in changes.select("_change_type").distinct().collect()
-    }  # ≤4-row driver read
-    if "delete" in kinds:
-        build_sketches(table, col, p, depth, width, hash_mode)
-        return "rebuild"
-    d = _sdir(table)
-    epoch = uuid.uuid4().hex
-    hll_old = spark.read.parquet(f"{d}/hll")
-    cms_old = spark.read.parquet(f"{d}/cms")
-    added = changes.filter(
-        F.col("_change_type").isin("insert", "update_postimage")
-    )
-    removed = changes.filter(F.col("_change_type") == "update_preimage")
-    hll_new = hll_merge(hll_old, hll_registers(added, col, p, hash_mode))
-    delta = cms_counters(
-        added, col, depth, width, weight=F.lit(1).cast("long"), hash_mode=hash_mode
-    )
-    if "update_preimage" in kinds:
-        delta = cms_merge(
-            delta,
-            cms_counters(
-                removed,
-                col,
-                depth,
-                width,
-                weight=F.lit(-1).cast("long"),
-                hash_mode=hash_mode,
-            ),
+
+    def merged(w):
+        changes = table.table_changes(
+            w.state.version, w.head, include_preimage=True
         )
-    cms_new = cms_merge(cms_old, delta).filter(F.col("cnt") != 0)
-    write_part(spark, d, "hll", hll_new, epoch, 1)
-    write_part(spark, d, "cms", cms_new, epoch, 1)
-    write_state(spark, d, latest, epoch)
-    return "incremental"
+        kinds = {
+            r[0]
+            for r in changes.select("_change_type").distinct().collect()
+        }  # ≤4-row driver read
+        if "delete" in kinds:
+            return None
+        d = _sdir(table)
+        added = changes.filter(
+            F.col("_change_type").isin("insert", "update_postimage")
+        )
+        hll_new = hll_merge(
+            spark.read.parquet(f"{d}/hll"), hll_registers(added, col, p, hash_mode)
+        )
+        delta = cms_counters(
+            added, col, depth, width, weight=F.lit(1).cast("long"),
+            hash_mode=hash_mode,
+        )
+        if "update_preimage" in kinds:
+            removed = changes.filter(F.col("_change_type") == "update_preimage")
+            delta = cms_merge(delta, cms_counters(
+                removed, col, depth, width, weight=F.lit(-1).cast("long"),
+                hash_mode=hash_mode,
+            ))
+        cms_new = cms_merge(spark.read.parquet(f"{d}/cms"), delta).filter(
+            F.col("cnt") != 0
+        )
+        # checkpointed: both rewrites read the dirs they overwrite
+        return [Part("hll", hll_new, coalesce=1, checkpoint=True),
+                Part("cms", cms_new, coalesce=1, checkpoint=True)]
+
+    return refresh(
+        table, _sidecar(table, col, p, depth, width, hash_mode),
+        lambda: build_sketches(table, col, p, depth, width, hash_mode),
+        merged,
+    )[0]
 
 
 def attach_sketch_maintenance(

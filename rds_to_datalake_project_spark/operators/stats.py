@@ -6,9 +6,9 @@ The reference leans on Glue catalog metadata and eyeballed
 null fractions, min/max) must be a maintained artifact, not a query
 you remember to run. This module persists the one-pass profile
 (:func:`~rds_to_datalake_project_spark.operators.profile.profile_table`)
-as an epoch-stamped sidecar under ``<table>/.stats`` — same torn-build
-protocol as the ANN/LSH services (operators/sidecar.py) — and derives
-planning decisions from it:
+as a ``profile`` part under ``<table>/.stats`` in the sidecar
+lifecycle shared with the index services (operators/sidecar.py) — and
+derives planning decisions from it:
 
 - :func:`advise_join` — broadcast the under-threshold side / shuffle /
   salt, decided from persisted row counts and key NDV instead of
@@ -26,16 +26,17 @@ read a k-row sidecar, never the table.
 
 from __future__ import annotations
 
-import uuid
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from rds_to_datalake_project_spark.operators.profile import profile_table
 from rds_to_datalake_project_spark.operators.sidecar import (
-    parts_consistent,
-    write_part,
-    write_state,
+    Part,
+    Sidecar,
+    consistent,
+    head_version,
+    publish_build,
+    refresh,
 )
 from rds_to_datalake_project_spark.operators.skew import salted_join
 from rds_to_datalake_project_spark.operators.upsert import KeyedTable
@@ -43,8 +44,8 @@ from rds_to_datalake_project_spark.operators.upsert import KeyedTable
 _STATS_DIR = ".stats"
 
 
-def _sdir(table: KeyedTable) -> str:
-    return f"{table.path}/{_STATS_DIR}"
+def _sidecar(table: KeyedTable) -> Sidecar:
+    return Sidecar(f"{table.path}/{_STATS_DIR}", parts=("profile",))
 
 
 def build_table_stats(table: KeyedTable, exact_distinct: bool = False) -> int:
@@ -52,28 +53,27 @@ def build_table_stats(table: KeyedTable, exact_distinct: bool = False) -> int:
     Returns the number of column rows written. ``exact_distinct``
     swaps HyperLogLog NDV for exact COUNT(DISTINCT) — one extra
     shuffle per column, test/oracle territory (profile_table docs)."""
-    spark = table.spark
-    latest = (table.versions() or [0])[-1]
-    epoch = uuid.uuid4().hex
+    sc = _sidecar(table)
+    version = head_version(table)
     prof = profile_table(table.read(), exact_distinct=exact_distinct)
-    out = write_part(spark, _sdir(table), "profile", prof, epoch, coalesce=1)
-    write_state(spark, _sdir(table), latest, epoch)
-    return out.count()
+    publish_build(table.spark, sc, version, [Part("profile", prof, coalesce=1)])
+    return table.spark.read.parquet(f"{sc.dir}/profile").count()
 
 
 def read_table_stats(table: KeyedTable) -> DataFrame | None:
     """The persisted profile IF consistent (epochs agree), else None
     — torn or missing stats mean "no estimate", never a stale guess
     served as fresh."""
-    state = parts_consistent(table.spark, _sdir(table), ["profile"])
-    if state is None:
+    sc = _sidecar(table)
+    if consistent(table.spark, sc.dir, sc.parts) is None:
         return None
-    return table.spark.read.parquet(f"{_sdir(table)}/profile")
+    return table.spark.read.parquet(f"{sc.dir}/profile")
 
 
 def stats_version(table: KeyedTable) -> int | None:
-    state = parts_consistent(table.spark, _sdir(table), ["profile"])
-    return state[0] if state else None
+    sc = _sidecar(table)
+    state = consistent(table.spark, sc.dir, sc.parts)
+    return state.version if state else None
 
 
 def attach_stats_maintenance(
@@ -84,14 +84,15 @@ def attach_stats_maintenance(
     a full scan — ``refresh_every=N`` amortizes it to every Nth
     commit; in between, consumers see the last consistent profile
     (row counts at most N commits stale, which a cost model
-    tolerates)."""
+    tolerates). An unversioned table rebuilds on every commit: with
+    no commit log its lag cannot be told."""
 
     def stats_refresh(t: KeyedTable) -> None:
-        latest = (t.versions() or [0])[-1]
-        state = parts_consistent(t.spark, _sdir(t), ["profile"])
-        if state is not None and latest - state[0] < refresh_every:
-            return
-        build_table_stats(t, exact_distinct=exact_distinct)
+        refresh(
+            t, _sidecar(t),
+            lambda: build_table_stats(t, exact_distinct=exact_distinct),
+            lambda w: None if w.head - w.state.version >= refresh_every else [],
+        )
 
     table.add_maintenance_hook(stats_refresh)
 

@@ -13,15 +13,11 @@ Tokenization matches the text-operator family (operators/text.py):
 lowercase, ``[^a-z]+`` splits, empties dropped — so the DuckDB twin
 (``regexp_split_to_array``) reproduces postings bit-for-bit.
 
-Maintenance: the sidecar follows the epoch-stamped torn-build
-protocol with DELTA FAMILIES (operators/sidecar.py): every change
-window — inserts, updates, AND deletes — refreshes incrementally by
-publishing the window's postings as a new delta part plus a
-touched-id tombstone (cost ∝ batch). A deleted/updated document's old
-postings are removed LOGICALLY: readers merge base+deltas and drop
-rows tombstoned by a later generation, so no bucket is ever
-physically rewritten until the chain compacts (every
-DEFAULT_COMPACT_THRESHOLD refreshes).
+Maintenance: postings and doclens are two delta families in the
+sidecar lifecycle (operators/sidecar.py), so inserts, updates and
+deletes all refresh incrementally — a deleted/updated document's old
+postings are tombstoned, never physically rewritten until the chain
+compacts.
 
 AND-search semantics: a document matches when it contains EVERY query
 term; rank = Σ tf over the query terms (ties broken by id). Scale:
@@ -31,20 +27,19 @@ the per-term posting read is a pruned scan; the AND is one
 
 from __future__ import annotations
 
-import uuid
-
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from rds_to_datalake_project_spark import fsio
 from rds_to_datalake_project_spark.operators.sidecar import (
     DEFAULT_COMPACT_THRESHOLD,
-    clear_delta_log,
-    family_consistent,
-    publish_family_delta,
+    Delta,
+    Part,
+    Sidecar,
+    consistent,
+    head_version,
+    publish_build,
     read_family,
-    write_part,
-    write_state,
+    refresh,
 )
 from rds_to_datalake_project_spark.operators.upsert import KeyedTable
 
@@ -123,43 +118,35 @@ def doclens_of(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     )
 
 
+_FAMILIES = ("postings", "doclens")
+
+
+def _sidecar(table: KeyedTable, id_col: str, text_col: str) -> Sidecar:
+    params = {"id_col": id_col, "text_col": text_col}
+    return Sidecar(_idir(table), families=_FAMILIES, params=params)
+
+
+def _posting_rows(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
+    # partition columns read back as strings
+    return postings_of(df, id_col, text_col).withColumn(
+        "bucket", F.col("bucket").cast("string")
+    )
+
+
 def build_text_index(table: KeyedTable, id_col: str, text_col: str) -> None:
     """Full (re)build over the current snapshot: the term-bucketed
     postings (directory pruning at query time) plus the doclens
     relation BM25's length normalization needs."""
-    spark = table.spark
-    latest = (table.versions() or [0])[-1]
-    epoch = uuid.uuid4().hex
+    version = head_version(table)
     corpus = table.read().select(id_col, text_col).cache()
     try:
-        posts = postings_of(corpus, id_col, text_col).withColumn(
-            "bucket", F.col("bucket").cast("string")  # partition cols read as strings
-        )
-        write_part(
-            spark, _idir(table), "postings", posts, epoch,
-            partition_by=["bucket"],
-            checkpoint=False,  # reads the cached corpus, writes the index
-        )
-        clear_delta_log(spark, _idir(table), "postings")  # rebuild = flat layout
-        write_part(
-            spark,
-            _idir(table),
-            "doclens",
-            doclens_of(corpus, id_col, text_col),
-            epoch,
-            checkpoint=False,  # reads the cached corpus, writes the index
-        )
-        clear_delta_log(spark, _idir(table), "doclens")
+        publish_build(table.spark, _sidecar(table, id_col, text_col), version, [
+            Part("postings", _posting_rows(corpus, id_col, text_col),
+                 partition_by=["bucket"]),
+            Part("doclens", doclens_of(corpus, id_col, text_col)),
+        ])
     finally:
         corpus.unpersist()
-    fsio.write_text(spark, f"{_idir(table)}/_PARAMS", f"{id_col} {text_col}")
-    write_state(spark, _idir(table), latest, epoch)
-
-
-def _stored_params(table: KeyedTable) -> tuple[str, str] | None:
-    txt = fsio.read_text(table.spark, f"{_idir(table)}/_PARAMS")
-    parts = (txt or "").split()
-    return (parts[0], parts[1]) if len(parts) == 2 else None
 
 
 def read_postings(
@@ -169,7 +156,7 @@ def read_postings(
     IF the sidecar is consistent, else None. ``buckets`` prunes the
     directory listing to the probed bucket dirs (advisory — callers
     keep their bucket IN filter)."""
-    state = family_consistent(table.spark, _idir(table), "postings")
+    state = consistent(table.spark, _idir(table), families=("postings",))
     if state is None:
         return None
     return read_family(
@@ -177,7 +164,7 @@ def read_postings(
         _idir(table),
         "postings",
         "id",
-        gens=state[2],
+        gens=state.gens["postings"],
         partition_filter=("bucket", buckets) if buckets else None,
     )
 
@@ -189,69 +176,26 @@ def refresh_text_index(
     compact_threshold: int = DEFAULT_COMPACT_THRESHOLD,
 ) -> str:
     """Bring the index to the table's latest commit by publishing the
-    change window as a delta: the window's postings (inserts and the
-    NEW text of updates) plus a tombstone of every touched id — so
-    updates and deletes are as incremental as inserts, and refresh I/O
-    is ∝ batch. Returns ``"noop" | "incremental" | "rebuild"``."""
-    spark = table.spark
-    if not table.retain_versions:
-        build_text_index(table, id_col, text_col)
-        return "rebuild"
-    latest = (table.versions() or [0])[-1]
-    state = family_consistent(spark, _idir(table), "postings")
-    if (
-        state is None
-        or _stored_params(table) != (id_col, text_col)
-        or state[0] not in (table.readable_versions() or [])
-    ):
-        build_text_index(table, id_col, text_col)
-        return "rebuild"
-    state_d = family_consistent(spark, _idir(table), "doclens")
-    if state_d is None or state_d[:2] != state[:2]:
-        # pre-BM25 layout (no doclens) or torn — upgrade via rebuild
-        build_text_index(table, id_col, text_col)
-        return "rebuild"
-    if state[0] >= latest:
-        return "noop"
-    v0, epoch, gens = state
-    changes = table.table_changes(v0, latest)
-    upserts = changes.filter(F.col("_change_type") != "delete")
-    added = postings_of(upserts, id_col, text_col).withColumn(
-        "bucket", F.col("bucket").cast("string")
-    )
-    touched = changes.select(F.col(id_col).alias("id"))
-    # Both families publish BEFORE the single _VERSION advance — a
-    # crash in between leaves the version old and the window replays
-    # idempotently (sidecar.publish_family_delta advance_state notes).
-    publish_family_delta(
-        spark,
-        _idir(table),
-        "postings",
-        added,
-        touched,
-        "id",
-        latest,
-        epoch,
-        gens,
-        partition_by=["bucket"],
-        advance_state=False,
-        compact_threshold=compact_threshold,
-    )
-    publish_family_delta(
-        spark,
-        _idir(table),
-        "doclens",
-        doclens_of(upserts, id_col, text_col),
-        touched,
-        "id",
-        latest,
-        epoch,
-        state_d[2],
-        advance_state=False,
-        compact_threshold=compact_threshold,
-    )
-    write_state(spark, _idir(table), latest, epoch)
-    return "incremental"
+    change window as a delta of both families: the window's postings
+    and doclens (inserts and the NEW text of updates) plus a tombstone
+    of every touched id — so updates and deletes are as incremental as
+    inserts, and refresh I/O is ∝ batch. Returns ``"noop" |
+    "incremental" | "rebuild"``."""
+
+    def deltas(w):
+        touched = w.changes.select(F.col(id_col).alias("id"))
+        return [
+            Delta("postings", _posting_rows(w.upserts, id_col, text_col),
+                  touched, "id", ["bucket"]),
+            Delta("doclens", doclens_of(w.upserts, id_col, text_col),
+                  touched, "id"),
+        ]
+
+    return refresh(
+        table, _sidecar(table, id_col, text_col),
+        lambda: build_text_index(table, id_col, text_col),
+        deltas, compact_threshold,
+    )[0]
 
 
 def attach_text_index_maintenance(
@@ -330,9 +274,8 @@ def bm25_search(
         raise ValueError("terms must be non-empty")
     want = sorted({t.lower() for t in terms})
     spark = table.spark
-    st_p = family_consistent(spark, _idir(table), "postings")
-    st_d = family_consistent(spark, _idir(table), "doclens")
-    if st_p is None or st_d is None:
+    state = consistent(spark, _idir(table), families=_FAMILIES)
+    if state is None:
         raise ValueError(
             "text index missing, torn, or pre-BM25 (no doclens) — "
             "build_text_index first"
@@ -343,10 +286,12 @@ def bm25_search(
         _idir(table),
         "postings",
         "id",
-        gens=st_p[2],
+        gens=state.gens["postings"],
         partition_filter=("bucket", probe),
     )
-    dls = read_family(spark, _idir(table), "doclens", "id", gens=st_d[2])
+    dls = read_family(
+        spark, _idir(table), "doclens", "id", gens=state.gens["doclens"]
+    )
 
     hits = posts.filter(
         F.col("bucket").isin(probe) & F.col("term").isin(want)

@@ -1812,9 +1812,7 @@ class KeyedTable:
             secondary_lookup_keys,
             secondary_range_lookup_keys,
         )
-        from rds_to_datalake_project_spark.operators.sidecar import (
-            family_consistent,
-        )
+        from rds_to_datalake_project_spark.operators.sidecar import consistent
 
         key_col = self.spec.record_key[0]
         keys = None
@@ -1822,12 +1820,12 @@ class KeyedTable:
             if col == key_col or lo is None or hi is None:
                 continue  # key side: zone/bloom path is the right tool
             try:
-                if lo == hi and family_consistent(
-                    self.spark, _idir(self, col), "entries"
+                if lo == hi and consistent(
+                    self.spark, _idir(self, col), families=("entries",)
                 ):
                     keys = secondary_lookup_keys(self, col, [lo])
-                elif family_consistent(
-                    self.spark, _rdir(self, col), "entries"
+                elif consistent(
+                    self.spark, _rdir(self, col), families=("entries",)
                 ):
                     keys = secondary_range_lookup_keys(self, col, lo, hi)
             except ValueError:

@@ -7,13 +7,12 @@ import pytest
 from pyspark.sql import functions as F
 
 from rds_to_datalake_project_spark.operators.ann_index import (
-    _epoch_of,
     _idx,
-    _index_state,
     ann_index_topk,
     build_ann_index,
     refresh_ann_index,
 )
+from rds_to_datalake_project_spark.operators.sidecar import epoch_of, read_state
 from rds_to_datalake_project_spark.operators.similarity import sq8_topk
 from rds_to_datalake_project_spark.operators.upsert import KeyedTable
 from rds_to_datalake_project_spark.operators.zonemap import _write_small
@@ -25,6 +24,14 @@ SPEC = TableSpec(
     precombine_key="update_at",
     partition_granularity=None,
 )
+
+
+def _index_state(table):
+    return read_state(table.spark, _idx(table))
+
+
+def _epoch_of(table, part: str):
+    return epoch_of(table.spark, _idx(table), part)
 
 
 def _vec(seed: int, dim: int = 8) -> list[float]:
@@ -147,6 +154,40 @@ def test_partial_codes_overwrite_forces_rebuild(spark, table):
     p = jvm.org.apache.hadoop.fs.Path(f"{_idx(table)}/codes/_EPOCH")
     p.getFileSystem(spark._jsc.hadoopConfiguration()).delete(p, False)
     assert refresh_ann_index(table) == (60, 0)
+
+
+def test_refresh_with_another_vector_column_rebuilds(spark, tmp_path):
+    """The build records its id/vector columns: a refresh naming
+    another vector column rebuilds under bounds trained on it, rather
+    than coding that column under the old column's bounds."""
+    t = KeyedTable(spark, str(tmp_path / "emb2"), SPEC, retain_versions=4)
+    t.initial_load(
+        _corpus(spark, 40, "v0").withColumn(
+            "emb2", F.transform("embedding", lambda x: x * 4)
+        )
+    )
+    build_ann_index(t)
+    epoch0 = _index_state(t)[1]
+    t.upsert(
+        spark.createDataFrame(
+            [(11, _vec(1100), [4 * x for x in _vec(1100)], "v1", "U")],
+            "vec_id bigint, embedding array<float>, emb2 array<float>, "
+            "update_at string, Op string",
+        )
+    )
+    assert refresh_ann_index(t, vec_col="emb2") == (40, 0)
+    assert _index_state(t)[1] != epoch0
+    assert refresh_ann_index(t, vec_col="emb2") == (0, 0)
+
+
+def test_topk_refuses_a_torn_sidecar(spark, table):
+    """Serving never mixes one build's codes with another's bounds: a
+    bounds part from another epoch makes the probe raise, as the
+    secondary-index lookups do."""
+    build_ann_index(table)
+    _write_small(spark, f"{_idx(table)}/bounds/_EPOCH", "torn-new-epoch")
+    with pytest.raises(ValueError, match="missing or torn"):
+        ann_index_topk(table, query_vec_id=0, k=3, rerank=8)
 
 
 def test_topk_serves_from_sidecar_only(spark, table):

@@ -462,3 +462,26 @@ def test_matview_maintains_over_a_branch(spark, tmp_path):
     mv.refresh()
     got3 = {r.day: (r.total, r.n) for r in mv.read().collect()}
     assert got3["2024-01-02"] == (9.0, 9)
+
+
+def test_clone_table_changes_reads_only_the_touched_partition(spark, tmp_path):
+    """A change window on a partitioned clone prunes both endpoint
+    snapshots — the local overlay AND the pinned source remainder — to
+    the partitions its commits touched, and yields the unpruned diff."""
+    src = KeyedTable(spark, str(tmp_path / "src"), _spec(), retain_versions=5)
+    src.initial_load(_rows(spark, n=30).filter(F.col("day") != "2024-01-04"))
+    cl = clone_table(src, str(tmp_path / "b"), retain_versions=4)
+    cl.upsert(
+        _rows(spark, n=30, ver="v5")
+        .filter(F.col("day") == "2024-01-01")
+        .withColumn("amount", F.col("amount") + 0.5)
+    )
+    tc = cl.table_changes(0, 1)
+    files = tc.inputFiles()
+    assert files and all("/day_day=01/" in f for f in files), files
+    want = cl.read_as_of(1).exceptAll(cl.read_as_of(0))
+    rows = tc.collect()
+    assert {r["_change_type"] for r in rows} == {"update"}
+    assert sorted((r["id"], r["amount"]) for r in rows) == sorted(
+        (r["id"], r["amount"]) for r in want.collect()
+    )

@@ -250,6 +250,17 @@ def test_stats_build_read_and_maintenance(spark, tmp_path):
     assert prof["id"].n_rows == 2  # B2 deleted r3/r4/r5; r1,r2 remain
 
 
+def test_stats_maintenance_follows_an_unversioned_table(spark, tmp_path):
+    """With no commit log there is no lag to amortize: every commit
+    rebuilds the profile, so the row count follows the table."""
+    t = _mk(spark, tmp_path, retain=0)
+    ST.build_table_stats(t, exact_distinct=True)
+    ST.attach_stats_maintenance(t, exact_distinct=True, refresh_every=2)
+    t.upsert(spark.createDataFrame(B1, BCOLS), delete_mode="apply")
+    prof = {r.column: r for r in ST.read_table_stats(t).collect()}
+    assert prof["id"].n_rows == t.read().count() == 5
+
+
 def _stats_frame(spark, rows):
     return spark.createDataFrame(
         [(c, n, 0, ndv, None, None) for c, n, ndv in rows],

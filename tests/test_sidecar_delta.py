@@ -257,7 +257,6 @@ def test_crash_between_family_publishes_replays_and_converges(spark, tmp_path, m
     rebuild — the generation rule absorbs the duplicated postings
     delta."""
     from rds_to_datalake_project_spark.operators import sidecar as sc
-    from rds_to_datalake_project_spark.operators import text_index as ti
 
     t = _mk(spark, tmp_path, n=40)
     build_text_index(t, "doc_id", "text")
@@ -273,12 +272,12 @@ def test_crash_between_family_publishes_replays_and_converges(spark, tmp_path, m
             raise RuntimeError("injected crash between family publishes")
         return out
 
-    monkeypatch.setattr(ti, "publish_family_delta", exploding_publish)
+    monkeypatch.setattr(sc, "publish_family_delta", exploding_publish)
     import pytest as _pytest
 
     with _pytest.raises(RuntimeError, match="injected crash"):
         refresh_text_index(t, "doc_id", "text")
-    monkeypatch.setattr(ti, "publish_family_delta", real_publish)
+    monkeypatch.setattr(sc, "publish_family_delta", real_publish)
 
     # stale, not torn: the replayed refresh is still incremental
     assert refresh_text_index(t, "doc_id", "text") == "incremental"
@@ -359,9 +358,7 @@ def test_randomized_lifecycle_merged_equals_recomputed(spark, tmp_path):
         doclens_of,
         refresh_text_index,
     )
-    from rds_to_datalake_project_spark.operators.sidecar import (
-        family_consistent,
-    )
+    from rds_to_datalake_project_spark.operators.sidecar import consistent
     from rds_to_datalake_project_spark.operators.text_index import _idir
 
     rng = random.Random(20260815)
@@ -392,8 +389,10 @@ def test_randomized_lifecycle_merged_equals_recomputed(spark, tmp_path):
         assert fresh_p.exceptAll(stored_p).count() == 0, step
         from rds_to_datalake_project_spark.operators.sidecar import read_family
 
-        st_d = family_consistent(spark, _idir(t), "doclens")
-        stored_d = read_family(spark, _idir(t), "doclens", "id", gens=st_d[2])
+        st_d = consistent(spark, _idir(t), families=("doclens",))
+        stored_d = read_family(
+            spark, _idir(t), "doclens", "id", gens=st_d.gens["doclens"]
+        )
         fresh_d = doclens_of(t.read(), "doc_id", "text")
         assert stored_d.exceptAll(fresh_d).count() == 0, step
         assert fresh_d.exceptAll(stored_d).count() == 0, step
@@ -462,7 +461,7 @@ def test_read_family_partition_filter_prunes_listing_and_stays_exact(
     read returns — through upserts, deletes, and a no-probed-delta
     window."""
     from rds_to_datalake_project_spark.operators.sidecar import (
-        family_consistent,
+        consistent,
         read_family,
     )
     from rds_to_datalake_project_spark.operators.text_index import (
@@ -478,14 +477,14 @@ def test_read_family_partition_filter_prunes_listing_and_stays_exact(
     t.upsert(_batch(spark, [(200, "fresh doc mentioning quasar", 2)]))
 
     idx = _idir(t)
-    state = family_consistent(spark, idx, "postings")
-    assert state is not None and state[2], "needs a live delta chain"
+    state = consistent(spark, idx, families=("postings",))
+    assert state is not None and state.gens["postings"], "needs a live delta chain"
     terms = ["zebra", "topic"]
     buckets = sorted({str(_bucket_py(w)) for w in terms})
 
-    full = read_family(spark, idx, "postings", "id", gens=state[2])
+    full = read_family(spark, idx, "postings", "id", gens=state.gens["postings"])
     pruned = read_family(
-        spark, idx, "postings", "id", gens=state[2],
+        spark, idx, "postings", "id", gens=state.gens["postings"],
         partition_filter=("bucket", buckets),
     )
     resid = F.col("bucket").isin(buckets) & F.col("term").isin(terms)
@@ -505,7 +504,7 @@ def test_read_family_partition_filter_prunes_listing_and_stays_exact(
     # probing buckets that exist nowhere: base falls back (schema
     # source), residual keeps the answer exactly empty
     none = read_family(
-        spark, idx, "postings", "id", gens=state[2],
+        spark, idx, "postings", "id", gens=state.gens["postings"],
         partition_filter=("bucket", ["999999"]),
     )
     assert none.filter(F.col("bucket").isin(["999999"])).count() == 0
