@@ -223,7 +223,14 @@ class ClonedTable(KeyedTable):
                 "source past the pin, or re-clone"
             ) from e
 
-    def read_as_of(self, version: int, _exclude_rels=None) -> DataFrame:
+    def read_as_of(
+        self, version: int, _exclude_rels=None, _only_rels=None
+    ) -> DataFrame:
+        if _only_rels is not None:
+            # the complement, in the rels the local tree resolves
+            _exclude_rels = set(_exclude_rels or ()) | {
+                r for r in self._as_of_rels(version) if r not in _only_rels
+            }
         meta = self._clone_meta()
         if meta is None:
             return super().read_as_of(version, _exclude_rels=_exclude_rels)

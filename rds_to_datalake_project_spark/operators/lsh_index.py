@@ -30,6 +30,8 @@ Query paths:
 
 from __future__ import annotations
 
+import logging
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -39,6 +41,7 @@ from rds_to_datalake_project_spark.operators.sidecar import (
     Delta,
     Part,
     Sidecar,
+    consistent,
     head_version,
     publish_build,
     read_family,
@@ -48,6 +51,7 @@ from rds_to_datalake_project_spark.operators.sidecar import (
 from rds_to_datalake_project_spark.operators.upsert import KeyedTable
 
 _DIR = ".lshindex"
+_LOG = logging.getLogger(__name__)
 
 
 def _idx(table: KeyedTable) -> str:
@@ -140,13 +144,23 @@ def lsh_candidates_for(
     a batch row that already lives in the corpus pairs with its own
     indexed copy only if ids differ. ``max_bucket_size`` drops corpus
     mega-buckets before the join (same bounded-recall guard as
-    lsh_candidate_pairs)."""
+    lsh_candidate_pairs).
+
+    A torn sidecar (``sidecar.consistent`` fails) still screens, with
+    a warning: the streaming dedup screens a batch BEFORE the commit
+    whose maintenance rebuilds the index, so refusing would wedge it."""
     params = _stored_params(table)
     if params is None:
         raise ValueError(
             "no LSH index under this table — run build_lsh_index first"
         )
     spark = table.spark
+    if consistent(spark, _idx(table), families=("bands",)) is None:
+        _LOG.warning(
+            "LSH sidecar %s is torn (its parts disagree on the build "
+            "epoch); screening with it until the next refresh rebuilds it",
+            _idx(table),
+        )
     corpus = read_family(spark, _idx(table), "bands", id_col)
     if max_bucket_size is not None:
         big = (

@@ -44,17 +44,30 @@ Scale notes: the change scan is two metadata snapshot reads + one
 co-partitioned full-outer join (table_changes' contract); touched key
 sets are broadcast into semi joins so base scans prune to affected
 groups before their one aggregation shuffle; the view store reuses
-the KeyedTable merge (partition-pruned, crash-safe publish).
+the KeyedTable merge (partition-pruned, crash-safe publish). The
+signed-delta store merge has two paths. A store within
+``spark.sql.autoBroadcastJoinThreshold`` — unbucketed, no
+count(DISTINCT) aux store, no min/max — merges on the driver: the
+grouped window is collected once, the store's rows are read from its
+parquet files, and the whole new store is published as one file
+(``_SignedDeltaMergeMixin._merge_on_driver``; a 16-row serve store
+refreshes in 5 Spark jobs where the Spark merge takes 12). Every other
+store merges in Spark, pruned to the touched groups or buckets
+(``_merge_and_publish``).
 """
 
 from __future__ import annotations
 
 import contextvars
+import logging
+import math
 import threading
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
+from rds_to_datalake_project_spark import fsio
 from rds_to_datalake_project_spark.fsio import read_text as _read_small
 from rds_to_datalake_project_spark.fsio import write_text as _write_small
 from rds_to_datalake_project_spark.operators.upsert import KeyedTable
@@ -124,6 +137,42 @@ def _record_refresh(view, info: dict, scan: dict) -> dict:
         LAST_REFRESH.clear()
         LAST_REFRESH.update(rec)
     return info
+
+
+_LOG = logging.getLogger(__name__)
+
+# Store column types the driver merge reads from parquet and writes back
+# unchanged (a Python value per row; no decimal scale, no timezone). Its
+# merged columns — counts, sums, averages and their hidden parts — are
+# longs and doubles on the stores it takes.
+_DRIVER_TYPES = (
+    T.BooleanType,
+    T.ByteType,
+    T.ShortType,
+    T.IntegerType,
+    T.LongType,
+    T.FloatType,
+    T.DoubleType,
+    T.StringType,
+    T.DateType,
+)
+_NAN_KEY = object()
+
+
+def _group_key(values) -> tuple:
+    """A group's dict key under SQL grouping equality: NULL keys match
+    each other, and so do NaN keys (Spark normalizes NaN; a Python NaN
+    is not equal to itself). -0.0 and 0.0 already compare equal."""
+    return tuple(
+        _NAN_KEY if isinstance(v, float) and math.isnan(v) else v for v in values
+    )
+
+
+def _long(v: int) -> int:
+    """``v`` as a Spark long; OverflowError where ANSI arithmetic raises."""
+    if not -(1 << 63) <= v < (1 << 63):
+        raise OverflowError(v)
+    return v
 
 
 # Sentinel: a per-table change window exceeded max_broadcast_keys —
@@ -1443,12 +1492,27 @@ class _SignedDeltaMergeMixin:
         attached; each row's sign is ``sign``) into the per-group delta,
         fold in the count(DISTINCT) transitions, merge into the store
         and publish the cursor ``new`` — or degrade to a full rebuild
-        when a window or repair set outgrows ``max_broadcast_keys``."""
-        delta = (
-            contrib.groupBy(*self.group_cols)
-            .agg(*self._delta_window_agg_cols(sign))
-            .localCheckpoint(eager=False)
+        when a window or repair set outgrows ``max_broadcast_keys``.
+        A small store merges on the driver (``_merge_on_driver``)."""
+        grouped = contrib.groupBy(*self.group_cols).agg(
+            *self._delta_window_agg_cols(sign)
         )
+        ref = self._stored_schema()
+        small = self._small_store(ref)
+        if small is not None:
+            rows = grouped.collect()
+            if len(rows) > self.max_broadcast_keys:
+                return self._full(new)
+            if not rows:
+                self._write_cursor(new)
+                return self._result("delta", new, 0)
+            if self._merge_on_driver(rows, ref, small, new):
+                out = self._result("delta", new, len(rows))
+                out["groups_repaired"] = 0
+                return out
+            # what the driver cannot decide (a long overflow, a lost
+            # commit race, an unreadable store file), the Spark merge does
+        delta = grouped.localCheckpoint(eager=False)
         n_touched = delta.count()
         if not n_touched:
             self._write_cursor(new)
@@ -1460,7 +1524,7 @@ class _SignedDeltaMergeMixin:
         delta = self._apply_distinct_deltas(delta, contrib, sign, sum(new))
         if delta is None:
             return self._full(new)
-        n_repaired = self._merge_and_publish(delta, new)
+        n_repaired = self._merge_and_publish(delta, new, ref)
         if n_repaired is None:
             return self._full(new)
         out = self._result("delta", new, n_touched)
@@ -1489,12 +1553,175 @@ class _SignedDeltaMergeMixin:
             _semi_on_groups(self._joined(rec), groups, self.group_cols), seq
         )
 
-    def _merge_and_publish(self, delta: DataFrame, new) -> int | None:
-        """Merge a grouped signed-delta frame into the view store and
-        publish the cursor ``new``. Returns the number of groups
-        repaired from the snapshot, or None when the extremum-repair
-        set exceeds ``max_broadcast_keys`` (caller degrades to full
-        recompute).
+    def _stored_schema(self) -> T.StructType:
+        """The store's column names and types: the full-aggregate plan's
+        schema (analysis only — the base reads run no job)."""
+        return self._aggregate(
+            self._joined([t.read().limit(0) for t in self.tables]), 0
+        ).schema
+
+    def _small_store(self, ref: T.StructType):
+        """``(commit token, live files)`` of a store the driver merge may
+        take, else None. The gate: no count(DISTINCT) aux store, no
+        min/max (extremum repair re-aggregates in Spark), an unbucketed
+        local store whose live bytes are within
+        ``spark.sql.autoBroadcastJoinThreshold`` (the bound the sidecar
+        memo uses; -1 turns the driver merge off), and only stored types
+        a parquet file hands back to Python unchanged."""
+        store = self.store
+        if (
+            self._aux
+            or self._has_extrema
+            or store.spec.hash_buckets
+            or not fsio.is_local(store.path)
+            or not all(
+                isinstance(f.dataType, _DRIVER_TYPES)
+                if f.name in self.group_cols
+                else isinstance(f.dataType, (T.LongType, T.DoubleType))
+                for f in ref.fields
+            )
+        ):
+            return None
+        store.recover()  # what the store's upsert does first
+        token = store.commit_token()
+        files, size = [], 0
+        for st in store._fs.listStatus(store.path):
+            name = st.getPath().getName()
+            if name == ".dv" or (
+                st.isDirectory() and not name.startswith((".", "_"))
+            ):
+                return None  # masked or partitioned: not a plain file set
+            if not name.startswith((".", "_")):
+                files.append(f"{store.path}/{name}")
+                size += st.getLen()
+        limit = (
+            self.spark._jsparkSession.sessionState()
+            .conf()
+            .autoBroadcastJoinThreshold()
+        )
+        return (token, files) if size <= limit else None
+
+    def _merge_on_driver(self, rows: list, ref: T.StructType, small, new) -> bool:
+        """The signed merge of :meth:`_merge_and_publish` in plain Python
+        for a small store: ``rows`` is the collected grouped window, the
+        store's rows are read from its parquet files without a Spark
+        job, and the whole new store is published as one file through
+        the store's commit protocol, inside the same intent bracket and
+        cursor order. False — nothing published — when a stored file
+        cannot be read back, a long value leaves its range, or another
+        commit won the store; the caller then runs the Spark merge,
+        which raises (or, with ANSI off, wraps) exactly as before."""
+        import pyarrow as pa
+        import pyarrow.parquet as pq
+        from pyspark.sql.pandas.types import to_arrow_schema
+
+        token, files = small
+        names = [f.name for f in ref.fields]
+        try:
+            stored = []
+            for f in files:
+                tbl = pq.ParquetFile(f).read()
+                if tbl.column_names != names:
+                    raise ValueError(f"columns {tbl.column_names} != {names}")
+                stored.extend(zip(*(tbl.column(n).to_pylist() for n in names)))
+        except (pa.ArrowException, OSError, ValueError, OverflowError) as exc:
+            # an unreadable file, a value Python cannot hold: the Spark
+            # merge reads the store instead
+            _LOG.warning(
+                "view store %s not merged on the driver (%s: %s)",
+                self.store.path, type(exc).__name__, exc,
+            )
+            return False
+        pos = {n: i for i, n in enumerate(names)}
+        gpos = [pos[c] for c in self.group_cols]
+        merged = {_group_key([r[i] for i in gpos]): r for r in stored}
+        seq = sum(new)
+        fresh = {}
+        try:
+            for d in rows:
+                key = _group_key([d[c] for c in self.group_cols])
+                fresh[key] = self._merged_row(merged.get(key), d, ref, pos, seq)
+        except OverflowError:
+            return False
+        live = pos[self._LIVE]
+        if any(r[live] < 0 for r in fresh.values()):
+            raise ValueError(
+                "delta merge produced a negative live count — the change "
+                "feed is inconsistent with the view state; rebuild with "
+                "refresh() after clearing the cursor"
+            )
+        for key, r in fresh.items():
+            if r[live] == 0:
+                merged.pop(key, None)  # tombstone: the group vanished
+            else:
+                merged[key] = r
+        # an Arrow-backed frame: no plan per literal, no Python worker
+        frame = self.spark.createDataFrame(
+            pa.Table.from_pylist(
+                [dict(zip(names, r)) for r in merged.values()],
+                schema=to_arrow_schema(ref),
+            )
+        )
+        self._set_pending("apply", seq)
+        if not self.store._stage_and_commit_rewrite(
+            frame.coalesce(1), None, token, written=frame.schema
+        ):
+            return False
+        self._write_cursor(new)
+        self._clear_pending()
+        return True
+
+    def _merged_row(self, old, d, ref: T.StructType, pos: dict, seq: int) -> tuple:
+        """One group's merged store row — the column expressions of
+        :meth:`_merge_and_publish`, evaluated on Python values: ``old``
+        is the stored row (None for a new group), ``d`` the window row.
+        Raises OverflowError where Spark's long arithmetic would."""
+        row = [None] * len(ref.fields)
+
+        def ov(c):
+            return None if old is None else old[pos[c]]
+
+        def z(v):
+            return 0 if v is None else v
+
+        def add(a, b, typ):
+            if isinstance(typ, T.LongType):
+                return _long(z(a) + z(b))
+            return float(z(a)) + float(z(b))
+
+        for c in self.group_cols:
+            row[pos[c]] = ov(c) if ov(c) is not None else d[c]
+        for c, (kind, _inner) in self._parsed.items():
+            typ = ref[c].dataType
+            if kind == "count":
+                row[pos[c]] = add(ov(c), d[f"__d_{c}"], typ)
+            elif kind == "avg":
+                styp = ref[self._sm(c)].dataType
+                nn = _long(z(ov(self._nn(c))) + z(d[f"__dnn_{c}"]))
+                sm = add(ov(self._sm(c)), d[f"__d_{c}"], styp)
+                row[pos[c]] = float(sm) / float(nn) if nn > 0 else None
+                row[pos[self._sm(c)]] = sm
+                row[pos[self._nn(c)]] = nn
+            else:  # sum
+                nn = _long(z(ov(self._nn(c))) + z(d[f"__dnn_{c}"]))
+                row[pos[c]] = add(ov(c), d[f"__d_{c}"], typ) if nn > 0 else None
+                row[pos[self._nn(c)]] = nn
+        row[pos[self._LIVE]] = _long(z(ov(self._LIVE)) + z(d[f"__d_{self._LIVE}"]))
+        row[pos[_SEQ_COL]] = seq
+        return tuple(row)
+
+    def _merge_and_publish(self, delta: DataFrame, new, ref) -> int | None:
+        """Merge a grouped signed-delta frame into the view store in
+        Spark and publish the cursor ``new``. One of two store-merge
+        paths: a store that passes :meth:`_small_store`'s gate (within
+        the broadcast threshold, unbucketed, no aux store, no min/max,
+        plain types) merges on the driver instead
+        (:meth:`_merge_on_driver`); every other store, and any window
+        the driver merge hands back, merges here.
+        Returns the number of groups repaired from the snapshot, or None
+        when the extremum-repair set exceeds ``max_broadcast_keys``
+        (caller degrades to full recompute). ``ref`` is the store's
+        schema (:meth:`_stored_schema`).
 
         Stored value types are pinned by the full-aggregate plan's
         schema: delta arithmetic can widen DECIMAL precision, so merged
@@ -1513,9 +1740,6 @@ class _SignedDeltaMergeMixin:
         Dataset.alias-qualified — unqualified df[col] references trip
         Spark's ambiguous-self-join check here."""
         seq = sum(new)
-        ref = self._aggregate(
-            self._joined([t.read().limit(0) for t in self.tables]), 0
-        ).schema
         store_rows = _bucket_pruned_store_rows(self.store, delta)
         if store_rows is None:
             store_rows = self.store.read()

@@ -148,14 +148,18 @@ class Delta(NamedTuple):
 class Window:
     """The change window a refresh publishes: commits after
     ``state.version`` up to ``head``. ``changes`` is built on first
-    use (a service may decide without it)."""
+    use (a service may decide without it) and computed once: the
+    families' delta and tombstone parts and ``counts`` all read it."""
 
     def __init__(self, table, state: State, head: int, params: dict | None):
         self.table, self.state, self.head, self.params = table, state, head, params
 
     @cached_property
     def changes(self) -> DataFrame:
-        return self.table.table_changes(self.state.version, self.head)
+        # lazy: the first part write materializes it, the rest reuse it
+        return self.table.table_changes(self.state.version, self.head).localCheckpoint(
+            eager=False
+        )
 
     @property
     def upserts(self) -> DataFrame:

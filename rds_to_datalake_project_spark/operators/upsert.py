@@ -44,6 +44,7 @@ Physical strategy (scale-first):
 from __future__ import annotations
 
 import contextlib
+import dataclasses
 import functools
 import json
 import logging
@@ -125,27 +126,95 @@ def _norm_table_path(path: str) -> str:
     return os.path.normpath(path) if fsio.is_local(path) else path
 
 
+@dataclasses.dataclass(frozen=True)
+class _Handoff:
+    """What a commit knows about the files it left live, so the reads
+    right after it run no schema-inference (mergeSchema footer) job.
+
+    A record exists only while EVERY live data file of the table
+    carries the same schema. ``initial_load`` writes all its files in
+    one job; a commit keeps the property when it writes its files in
+    the schema it read (a partitioned table must also have had it
+    before the commit — untouched partitions keep their files) or
+    replaces the whole file set (an unpartitioned table). ``schema``
+    is then exactly what a mergeSchema read infers: those columns,
+    all nullable, then the partition columns as strings — None until
+    a commit has seen it. ``since``: every retained version from it to
+    the head consists of such files, so ``read_as_of`` takes the
+    schema too (None: no version is vouched for). Keyed by the token
+    the commit wrote, so any later commit, from any handle or process,
+    retires the record."""
+
+    token: str
+    spark: object
+    schema: object
+    since: int | None
+
+
+_HANDOFF: dict[str, _Handoff] = {}
+
+
+def _hand_off(path: str, rec: _Handoff) -> None:
+    key = _norm_table_path(path)
+    with _PLAN_CACHE_LOCK:
+        if key not in _HANDOFF and len(_HANDOFF) >= _PLAN_CACHE_MAX_TABLES:
+            _HANDOFF.clear()
+        _HANDOFF[key] = rec
+        ent = _PLAN_CACHE.get(key)
+        if ent is not None and ent["token"] == rec.token and ent["spark"] is rec.spark:
+            ent["handoff"] = rec
+
+
+def _handoff_for(spark, path: str, token) -> _Handoff | None:
+    rec = _HANDOFF.get(_norm_table_path(path))
+    if rec is None or rec.token != token or rec.spark is not spark:
+        return None
+    return rec
+
+
+def handed_off_schema(ent: dict | None, version: int | None = None):
+    """The schema a plan-cache slot's commit handed off, or None (infer
+    as before). With ``version``, only when the slot vouches for that
+    retained version's files (see ``_Handoff``)."""
+    rec = ent.get("handoff") if ent is not None else None
+    if rec is None or rec.schema is None:
+        return None
+    if version is not None and (rec.since is None or version < rec.since):
+        return None
+    return rec.schema
+
+
+def _drop_plans(path: str) -> None:
+    with _PLAN_CACHE_LOCK:
+        _PLAN_CACHE.pop(_norm_table_path(path), None)
+
+
 def invalidate_plan_cache(path: str | None = None) -> None:
-    """Drop cached read plans for one table (any mutation outside the
-    engine's own choke points must call this), or all of them."""
+    """Drop cached read plans and handed-off schemas for one table (any
+    mutation outside the engine's own choke points must call this), or
+    for all of them."""
     with _PLAN_CACHE_LOCK:
         if path is None:
             _PLAN_CACHE.clear()
+            _HANDOFF.clear()
         else:
             _PLAN_CACHE.pop(_norm_table_path(path), None)
+            _HANDOFF.pop(_norm_table_path(path), None)
 
 
 def _invalidates(fn):
     """Method decorator: drop this table's cached read plans when the
     call returns — success OR failure (a raise half-way through a
-    vacuum/publish may already have moved files)."""
+    vacuum/publish may already have moved files). A handed-off schema
+    survives: it names the commit token it describes, and every
+    engine mutation of the live files writes a new token."""
 
     @functools.wraps(fn)
     def wrapper(self, *a, **k):
         try:
             return fn(self, *a, **k)
         finally:
-            invalidate_plan_cache(self.path)
+            _drop_plans(self.path)
 
     return wrapper
 
@@ -156,6 +225,13 @@ def resolve_cache_entry(spark, path: str) -> dict | None:
     footer sweep + listing every zoned probe, matview refresh step and
     reconcile pays (~100-500 ms of driver wall each) — and sidecar
     memos. Fill it through ``cache_fill``.
+
+    ``ent["handoff"]`` carries the schema the commit that wrote this
+    token handed off (``_Handoff``; None when it handed off nothing):
+    ``read``, ``read_as_of`` and ``zonemap._resolve_table`` read with
+    it and run no inference job. It outlives the slot's frames — the
+    commit's own ``@_invalidates`` drops those on return, and the next
+    slot for the same token picks the record up again.
 
     Eligible ONLY for local paths whose commit token EXISTS: the token
     is rewritten as the LAST metadata step of every live-tree mutation
@@ -187,6 +263,7 @@ def resolve_cache_entry(spark, path: str) -> dict | None:
                 "frames": {},
                 "lock": threading.Lock(),
                 "building": {},
+                "handoff": _handoff_for(spark, path, tok),
             }
             _PLAN_CACHE[key] = ent
     return ent
@@ -492,9 +569,15 @@ class KeyedTable:
         self.spark.conf.set(
             "spark.sql.sources.partitionColumnTypeInference.enabled", "false"
         )
-        return cache_fill(self._plan_cache_entry(), "read", self._read_uncached)
+        ent = self._plan_cache_entry()
+        return cache_fill(
+            ent, "read", lambda: self._read_uncached(handed_off_schema(ent))
+        )
 
-    def _read_uncached(self) -> DataFrame:
+    def _read_uncached(self, schema=None) -> DataFrame:
+        if schema is not None:
+            # the last commit wrote every live file in this schema
+            return self._mask_dv(self.spark.read.schema(schema).parquet(self.path))
         if self.retain_versions and self._is_empty_live():
             # emptied-by-deletes retained table: a real empty frame
             # (schema borrowed from the newest retired copy) instead
@@ -674,7 +757,14 @@ class KeyedTable:
         # otherwise) conflicts at publish instead of overwriting the
         # reload. Root-level dot-file, so unversioned tables keep
         # their no-.meta contract.
-        self._write_commit_token()
+        token = self._write_commit_token()
+        if self._hands_off():
+            # one write job laid out every file alike; the first commit
+            # learns the schema by reading it
+            _hand_off(
+                self.path,
+                _Handoff(token, self.spark, None, 0 if self.retain_versions else None),
+            )
         # A zero-row load of a PARTITIONED/bucketed table writes no
         # data files (partitionBy of nothing), leaving the path
         # schema-less — persist the written schema so read() can stay
@@ -760,6 +850,7 @@ class KeyedTable:
         base_stamp = self._snapshot_stamp()
         base_token = base_stamp["token"]
         existing = self.read()
+        read_schema = existing.schema
         # Type-widening schema evolution (the upstream ran ALTER
         # COLUMN ... TYPE): when a common column's types differ but
         # promote within the lattice, cast BOTH sides to the wider
@@ -880,6 +971,11 @@ class KeyedTable:
         # is a dead half-written job output (safe to discard); staging
         # WITH it is a committed merge that recover() must publish.
         self._fault("staged_written")
+        # A merge that adds no column and widens no type wrote its files
+        # in the schema it read: hand that to the reads after the commit.
+        written = self._data_schema(merged.schema)
+        if _field_types(written) != _field_types(self._data_schema(read_schema)):
+            written = None
         # A schema-migration commit (touched is None) rewrites every
         # partition — never disjoint; everything else may ride the
         # partition-level conflict check.
@@ -887,6 +983,7 @@ class KeyedTable:
             staging,
             base_token,
             base_stamp=base_stamp if touched is not None else None,
+            written=written,
         )
 
     # -- table CHECK constraints (Delta ADD CONSTRAINT parity) ---------------
@@ -1027,7 +1124,9 @@ class KeyedTable:
         touched = self._touched_rels_between(base_v, latest)
         return touched is not None and not (touched & staged_rels)
 
-    def _commit_staging(self, staging: str, base_token, base_stamp=None) -> bool:
+    def _commit_staging(
+        self, staging: str, base_token, base_stamp=None, written=None
+    ) -> bool:
         """Flag + conflict-check + publish as ONE lock-held critical
         section; False = lost the commit race (staging discarded).
 
@@ -1046,10 +1145,17 @@ class KeyedTable:
         when the intervening commits touched none of this staging's
         partitions (nor, via vector commits, any rows in them), the
         staged output is byte-identical to a recompute and publishes
-        against the CURRENT snapshot instead of being thrown away."""
+        against the CURRENT snapshot instead of being thrown away.
+
+        ``written``: the data schema every staged file carries, when the
+        caller knows it — the commit then hands the table's read schema
+        to the reads after it (``_hand_off_written``)."""
         staged_rels = None
+        if written is not None and not self._has_data_files(staging):
+            written = None  # no file carries it: nothing to vouch for
         with self._commit_lock():
             if self.commit_token() != base_token:
+                written = None  # published over a snapshot it never read
                 if not self._fs.exists(staging):
                     # an intervening initial_load reset the table and
                     # its static overwrite ate our staging with it —
@@ -1073,9 +1179,47 @@ class KeyedTable:
             # against the snapshot it actually published over.
             self._write_ready_flag(staging, base_token=self.commit_token())
             self._fault("flag_created")
-            self._publish_under_lock(staging)
+            token = self._publish_under_lock(staging)
+            if written is not None:
+                self._hand_off_written(token, base_token, written)
         self._run_maintenance()
         return True
+
+    def _hands_off(self) -> bool:
+        """Whether this handle's commits hand schemas to later reads: a
+        plain local table (a clone's reads compose source state, and
+        remote tables keep no plan cache)."""
+        return type(self) is KeyedTable and fsio.is_local(self.path)
+
+    def _hand_off_written(self, token: str, base_token, written) -> None:
+        """Record that every live file now carries ``written`` — true
+        when the commit replaced the whole file set (unpartitioned), or
+        when every file was already alike (the record of ``base_token``
+        says so) and the commit wrote its files the same way."""
+        if not self._hands_off():
+            return
+        base = _handoff_for(self.spark, self.path, base_token)
+        if base is None and self.partition_cols:
+            return
+        from pyspark.sql import types as T
+
+        schema = T.StructType(
+            [T.StructField(f.name, f.dataType, True, f.metadata) for f in written.fields]
+            + [T.StructField(c, T.StringType(), True) for c in self.partition_cols]
+        )
+        _hand_off(
+            self.path,
+            _Handoff(token, self.spark, schema, base.since if base else None),
+        )
+
+    def _data_schema(self, schema):
+        """``schema`` without the partition columns: what a data file
+        of this table carries."""
+        from pyspark.sql import types as T
+
+        return T.StructType(
+            [f for f in schema.fields if f.name not in self.partition_cols]
+        )
 
     def _right_size_output(self, merged: DataFrame, touched) -> DataFrame:
         """optimizeWrite: shape the merge output so each touched
@@ -1265,7 +1409,7 @@ class KeyedTable:
         maintenance is the CALLER's job, outside the mutex: it is
         advisory, and matview auto-refresh hooks can be arbitrarily
         expensive — the serialized section stays metadata renames +
-        the changes-feed append.
+        the changes-feed append. Returns the new commit token.
         """
         # State token FIRST — before any swap becomes visible — so a
         # zone-map manifest stamped with the PREVIOUS token can never
@@ -1354,7 +1498,7 @@ class KeyedTable:
         # BEFORE this line leaves the old token, so recover() simply
         # finishes this publish (idempotent swaps); a crash AFTER it
         # leaves a consumed staging that recover() discards.
-        self._write_commit_token()
+        token = self._write_commit_token()
         self._fs.delete(staging, True)
         self._fault("staging_deleted")
         self._sweep_asides(version)
@@ -1370,6 +1514,7 @@ class KeyedTable:
             # publish, so retired copies can never grow unbounded
             # behind a caller who forgets to vacuum.
             self.vacuum_versions(keep_last=self.retain_versions)
+        return token
 
     def add_maintenance_hook(self, fn, commits_to_table: bool = False) -> None:
         """Register ``fn(table)`` to run after every successful commit
@@ -1546,8 +1691,10 @@ class KeyedTable:
         return self._read_marker(f"{self.path}/{_TOKEN_FILE}")
 
     @_invalidates
-    def _write_commit_token(self) -> None:
-        self._fs.publish_text(f"{self.path}/{_TOKEN_FILE}", uuid.uuid4().hex)
+    def _write_commit_token(self) -> str:
+        token = uuid.uuid4().hex
+        self._fs.publish_text(f"{self.path}/{_TOKEN_FILE}", token)
+        return token
 
     def _try_lock_create(self, holder: str) -> bool:
         """One atomic exclusive-create attempt on the lock file."""
@@ -1989,25 +2136,38 @@ class KeyedTable:
         latest = (self.versions() or [0])[-1]
         return list(range(self._read_floor(), latest + 1))
 
-    def read_as_of(self, version: int, _exclude_rels=None) -> DataFrame:
+    def read_as_of(
+        self, version: int, _exclude_rels=None, _only_rels=None
+    ) -> DataFrame:
         """The table exactly as it stood after commit ``version``
         (0 = after initial load).  See ``_read_as_of_uncached`` for
         the reconstruction contract; this wrapper adds read-plan
         caching (snapshots are immutable between commits/vacuums, and
-        every path that can change one invalidates the cache)."""
+        every path that can change one invalidates the cache) and the
+        schema the last commit handed off, when it vouches for
+        ``version``."""
+        ent = self._plan_cache_entry()
+        partial = _exclude_rels is not None or _only_rels is not None
         return cache_fill(
-            self._plan_cache_entry() if _exclude_rels is None else None,
+            None if partial else ent,
             ("asof", version),
-            lambda: self._read_as_of_uncached(version, _exclude_rels),
+            lambda: self._read_as_of_uncached(
+                version, _exclude_rels, _only_rels, handed_off_schema(ent, version)
+            ),
         )
 
-    def _read_as_of_uncached(self, version: int, _exclude_rels=None) -> DataFrame:
+    def _read_as_of_uncached(
+        self, version: int, _exclude_rels=None, _only_rels=None, schema=None
+    ) -> DataFrame:
         """The table exactly as it stood after commit ``version``
         (0 = after initial load).
 
         ``_exclude_rels`` (internal — operators/clone): partition rel
         paths to OMIT from the reconstruction; a shallow clone uses it
         to read only the source-resident remainder of its view.
+        ``_only_rels`` (internal — ``table_changes``): read only these
+        partition rels. ``schema``: read every snapshot scan with it
+        instead of inferring (every file of the snapshot carries it).
 
         Metadata-only reconstruction: ``_as_of_sources`` says where
         each partition's state at ``version`` lives. No data is copied
@@ -2030,7 +2190,11 @@ class KeyedTable:
         if self.partition_cols:
             skip = set(_exclude_rels or ())
             groups = {
-                root: [f"{root}/{rel}" for rel in rels if rel not in skip]
+                root: [
+                    f"{root}/{rel}"
+                    for rel in rels
+                    if rel not in skip and (_only_rels is None or rel in _only_rels)
+                ]
                 for root, rels in self._as_of_sources(later).items()
             }
         elif not later:
@@ -2068,10 +2232,14 @@ class KeyedTable:
         # keep their exact original plans.
         masked = has_vectors(self.spark, self.path, upto_version=version)
         late_appends = {p.rsplit("/", 1)[-1] for r in later for p in r.appended}
+
+        def reader():
+            if schema is not None:
+                return self.spark.read.schema(schema)
+            return self.spark.read.option("mergeSchema", "true")
+
         reads = [
-            self.spark.read.option("mergeSchema", "true")
-            .option("basePath", root)
-            .parquet(*paths)
+            reader().option("basePath", root).parquet(*paths)
             for root, paths in groups.items()
             if paths
         ]
@@ -2452,12 +2620,14 @@ class KeyedTable:
         )
 
     def _stage_and_commit_rewrite(
-        self, frame: DataFrame, touched_rels: list[str] | None, base_token
+        self, frame: DataFrame, touched_rels: list[str] | None, base_token,
+        written=None,
     ) -> bool:
         """Stage ``frame`` and commit it through the standard publish
         protocol, materializing empty staged dirs for touched
         partitions whose every row was deleted (they must swap away).
-        ``touched_rels=None`` = unpartitioned whole-set swap."""
+        ``touched_rels=None`` = unpartitioned whole-set swap.
+        ``written``: see ``_commit_staging``."""
         staging = f"{self.path}/.staging-{uuid.uuid4().hex}"
         writer = frame.write.mode("overwrite")
         if self.partition_cols:
@@ -2468,7 +2638,7 @@ class KeyedTable:
             for rel in touched_rels:
                 if rel not in staged_set:
                     self._fs.mkdirs(f"{staging}/{rel}")
-        return self._commit_staging(staging, base_token)
+        return self._commit_staging(staging, base_token, written=written)
 
     def _validate_assignments(self, assignments: dict) -> None:
         frozen = set(self.spec.record_key) | set(self.partition_cols)
@@ -2768,6 +2938,8 @@ class KeyedTable:
         # images — scrub those too
         if n:
             self._scrub_history(victims, keys)
+        # history files were rewritten outside a commit: vouch for none
+        invalidate_plan_cache(self.path)
         # 5. done — drop the marker
         self._fs.delete(pend, True)
         return n
@@ -2926,14 +3098,9 @@ class KeyedTable:
         # set at 100 TB instead of two corpus diffs per window; any
         # metadata surprise resolves to None = the full diff.
         touched = self._touched_rels_between(v_from, v_to)
-
-        def snapshot(v: int) -> DataFrame:
-            if touched is None:
-                return self.read_as_of(v)
-            untouched = {r for r in self._as_of_rels(v) if r not in touched}
-            return self.read_as_of(v, _exclude_rels=untouched)
-
-        old, new = snapshot(v_from), snapshot(v_to)
+        old, new = (
+            self.read_as_of(v, _only_rels=touched) for v in (v_from, v_to)
+        )
         for c in old.columns:
             if c not in new.columns:
                 new = new.withColumn(c, F.lit(None).cast(old.schema[c].dataType))
@@ -3254,11 +3421,11 @@ class KeyedTable:
     # -- filesystem commit layer (the table's fsio handle: native on
     # local paths, Hadoop for HDFS/S3A/file: schemes) -------------------------
 
-    def _has_data_files(self) -> bool:
-        """True when any parquet data file exists under the table root
-        (filesystem walk, no Spark job) — the schema-marker guard for
-        empty partitioned loads."""
-        it = self._fs.listFiles(self.path, True)
+    def _has_data_files(self, root: str | None = None) -> bool:
+        """True when any parquet data file exists under ``root`` (the
+        table root by default; filesystem walk, no Spark job) — the
+        schema-marker guard for empty partitioned loads."""
+        it = self._fs.listFiles(root or self.path, True)
         while it.hasNext():
             if it.next().getPath().getName().endswith(".parquet"):
                 return True
@@ -3458,6 +3625,12 @@ class KeyedTable:
         # "apply": a winning D version removes the record entirely (ST9).
         df = df.filter(F.col(_OP_COL).isNull() | (F.upper(F.col(_OP_COL)) != "D"))
         return df.drop(_OP_COL)
+
+
+def _field_types(schema) -> list:
+    """Name, type and metadata of each field — a schema compared the
+    way a parquet footer round-trips it (every field reads nullable)."""
+    return [(f.name, f.dataType, f.metadata) for f in schema.fields]
 
 
 def _align_op_column(existing: DataFrame, batch: DataFrame):

@@ -160,21 +160,31 @@ def _resolve_table(spark: SparkSession, table_path: str):
     snapshot; token-less paths resolve fresh every call (see
     upsert.resolve_cache_entry). Concurrent callers — the zone-map and
     bloom reconciles of one commit — share one resolution
-    (upsert.cache_fill). Metadata only — the frame still reads its
+    (upsert.cache_fill). A schema the last commit handed off replaces
+    the footer sweep. Metadata only — the frame still reads its
     parquet files on every action."""
     from rds_to_datalake_project_spark.operators.upsert import (
         cache_fill,
+        handed_off_schema,
         resolve_cache_entry,
     )
+
+    ent = resolve_cache_entry(spark, table_path)
 
     def build():
         spark.conf.set(
             "spark.sql.sources.partitionColumnTypeInference.enabled", "false"
         )
-        full = spark.read.option("mergeSchema", "true").parquet(table_path)
+        schema = handed_off_schema(ent)
+        reader = (
+            spark.read.schema(schema)
+            if schema is not None
+            else spark.read.option("mergeSchema", "true")
+        )
+        full = reader.parquet(table_path)
         return (full, {_norm(f): f for f in full.inputFiles()})
 
-    return cache_fill(resolve_cache_entry(spark, table_path), "zresolve", build)
+    return cache_fill(ent, "zresolve", build)
 
 
 def sidecar_memo(spark: SparkSession, table_path: str, idx: str, load):

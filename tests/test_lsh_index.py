@@ -132,6 +132,33 @@ def test_torn_build_rebuilds(spark, table):
     assert v == table.versions()[-1]
 
 
+def test_torn_sidecar_screens_with_a_warning(spark, table, caplog):
+    """A torn ``bands`` family keeps serving — the streaming dedup
+    screens a batch before the commit whose refresh rebuilds the index,
+    so refusing would wedge it — but the probe says so, naming the
+    sidecar."""
+    import logging
+
+    from rds_to_datalake_project_spark.fsio import write_text
+
+    build_lsh_index(table)
+    probe = spark.createDataFrame(
+        [(100, BASE.replace("lazy dog", "sleepy dog"))], "doc_id bigint, text string"
+    )
+
+    def candidates():
+        return {(r.batch_id, r.corpus_id) for r in lsh_candidates_for(table, probe).collect()}
+
+    before = candidates()
+    assert (100, 0) in before
+    write_text(spark, f"{_idx(table)}/bands/_EPOCH", "torn-new-epoch")
+    with caplog.at_level(logging.WARNING):
+        after = candidates()
+    assert after == before
+    torn = [r for r in caplog.records if "torn" in r.getMessage()]
+    assert len(torn) == 1 and _idx(table) in torn[0].getMessage()
+
+
 @pytest.mark.slow
 def test_attached_maintenance_follows_commits(spark, tmp_path):
     t = KeyedTable(spark, str(tmp_path / "svc"), SPEC, retain_versions=4)
