@@ -1,56 +1,40 @@
-"""Tiny literal frames as pure-JVM plans.
+"""Small driver-side frames as Arrow-backed local relations.
 
-``spark.createDataFrame(python_list)`` is RDD-backed: EVERY action on
-the frame — or on any larger plan that contains it — spins a Python
-worker to re-pickle the rows (guide §4 "the Python boundary"; the r12
-optimization log measured 0.6-0.7 s steady-state for a 5-row frame's
-bare collect vs 0.14-0.16 s for a JVM relation). Facade verb results,
-sidecar codebook parts and fixture micro-batches don't need an RDD:
-build them IN-PLAN over ``spark.range(n)`` with per-column literal
-arrays — whole-stage codegen, zero Python workers, and a relation
-Catalyst can see through (same pattern as
-``bloomfilter._probe_relation``).
+``spark.createDataFrame(python_list)`` is RDD-backed: every action on
+the frame, or on any larger plan that contains it, starts a Python
+worker to re-pickle the rows (guide §4 "the Python boundary"). Facade
+verb results, sidecar codebook parts and the delta-view store publish
+need no RDD: :func:`local_frame` hands Spark one ``pyarrow.Table``,
+which it plans as a ``LocalRelation``. Collecting it runs no Spark job,
+and building it costs one Arrow batch, not one planned literal per
+value.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-# Past this many literals the plan itself becomes the cost (Catalyst
-# analysis is O(plan size) — the r12 log measured seconds of planning
-# at ~1k-literal-per-value shapes); large frames keep the RDD path,
-# whose per-action cost is amortized by real data volume anyway.
-_MAX_LITERALS = 20_000
 
+def local_frame(spark: SparkSession, rows, schema) -> DataFrame:
+    """``spark.createDataFrame(rows, schema)`` as a ``LocalRelation``:
+    the rows (tuples or Rows, in schema order) become one
+    ``pyarrow.Table`` typed by ``schema`` (a DDL string or StructType),
+    so the frame carries exactly that schema, nullability included.
+    Values must already have their column's Python type, as the RDD
+    path verifies; naive datetimes read as UTC, the engine's session
+    zone."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
 
-def literal_frame(spark: SparkSession, rows, schema) -> DataFrame:
-    """``spark.createDataFrame(rows, schema)`` for SMALL row lists,
-    built as a JVM-only plan (``range(n)`` + literal-array
-    ``element_at``) instead of a Python RDD. Accepts tuples/Rows and a
-    DDL string or StructType; values must be plain literals (None,
-    bool, int, float, str, bytes, datetime/date, Decimal, flat lists)
-    — exactly what the engine's status/result frames carry. Falls back
-    to ``createDataFrame`` for big inputs."""
     if isinstance(schema, str):
         schema = T._parse_datatype_string(schema)
-    rows = list(rows)
-    if not rows:
-        return spark.range(0).select(
-            *[
-                F.lit(None).cast(f.dataType).alias(f.name)
-                for f in schema.fields
-            ]
-        )
-    if len(rows) * len(schema.fields) > _MAX_LITERALS:
-        return spark.createDataFrame(rows, schema)
-    idx = (F.col("id") + 1).cast("int")
-    cols = []
-    for i, f in enumerate(schema.fields):
-        vals = [F.lit(r[i]).cast(f.dataType) for r in rows]
-        cols.append(F.element_at(F.array(*vals), idx).alias(f.name))
-    return spark.range(len(rows)).select(*cols)
+    arrow = to_arrow_schema(schema)
+    cols = list(zip(*rows)) or [()] * len(arrow)
+    table = pa.Table.from_arrays(
+        [pa.array(c, type=f.type) for c, f in zip(cols, arrow)], schema=arrow
+    )
+    return spark.createDataFrame(table, schema)
 
 
 def widen_if_narrow(rows: DataFrame, min_ratio: float = 0.5) -> DataFrame:

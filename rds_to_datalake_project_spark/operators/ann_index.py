@@ -41,9 +41,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from rds_to_datalake_project_spark.functions.localrel import (
-    literal_frame as _literal_frame,
-)
+from rds_to_datalake_project_spark.functions.localrel import local_frame
 
 from rds_to_datalake_project_spark.operators.similarity import (
     cosine_q,
@@ -152,7 +150,7 @@ def build_ann_index(
     version = head_version(table)
     corpus = table.read()
     bounds = sq8_train(corpus, vec_col)
-    cents = None if centroids is None else _literal_frame(
+    cents = None if centroids is None else local_frame(
         spark,
         [(pos, cid, [float(x) for x in vec]) for pos, (cid, vec) in enumerate(centroids)],
         "pos int, cid int, cvec array<double>",
@@ -160,7 +158,7 @@ def build_ann_index(
     parts = [
         Part(
             "bounds",
-            _literal_frame(
+            local_frame(
                 spark,
                 [(i, lo, hi) for i, (lo, hi) in enumerate(bounds)],
                 "pos int, lo double, hi double",

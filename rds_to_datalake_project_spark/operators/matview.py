@@ -70,6 +70,7 @@ from pyspark.sql import types as T
 from rds_to_datalake_project_spark import fsio
 from rds_to_datalake_project_spark.fsio import read_text as _read_small
 from rds_to_datalake_project_spark.fsio import write_text as _write_small
+from rds_to_datalake_project_spark.functions.localrel import local_frame
 from rds_to_datalake_project_spark.operators.upsert import KeyedTable
 from rds_to_datalake_project_spark.schema import TableSpec
 from rds_to_datalake_project_spark.session import pmap
@@ -1613,7 +1614,6 @@ class _SignedDeltaMergeMixin:
         which raises (or, with ANSI off, wraps) exactly as before."""
         import pyarrow as pa
         import pyarrow.parquet as pq
-        from pyspark.sql.pandas.types import to_arrow_schema
 
         token, files = small
         names = [f.name for f in ref.fields]
@@ -1655,13 +1655,7 @@ class _SignedDeltaMergeMixin:
                 merged.pop(key, None)  # tombstone: the group vanished
             else:
                 merged[key] = r
-        # an Arrow-backed frame: no plan per literal, no Python worker
-        frame = self.spark.createDataFrame(
-            pa.Table.from_pylist(
-                [dict(zip(names, r)) for r in merged.values()],
-                schema=to_arrow_schema(ref),
-            )
-        )
+        frame = local_frame(self.spark, merged.values(), ref)
         self._set_pending("apply", seq)
         if not self.store._stage_and_commit_rewrite(
             frame.coalesce(1), None, token, written=frame.schema

@@ -12,9 +12,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from rds_to_datalake_project_spark.functions.localrel import (
-    literal_frame as _literal_frame,
-)
+from rds_to_datalake_project_spark.functions.localrel import local_frame
 
 # Tiny per-language stopword marker sets for the heuristic language ID.
 # Deliberately small + deterministic: the goal is a cheap first-pass
@@ -432,8 +430,8 @@ def bpe_merge_table(
         )
         if rank % checkpoint_every == 0:
             cur = cur.localCheckpoint(eager=True)
-    return _literal_frame(spark, 
-        merges, "merge_rank int, lhs string, rhs string, pair_count bigint"
+    return local_frame(
+        spark, merges, "merge_rank int, lhs string, rhs string, pair_count bigint"
     )
 
 

@@ -621,11 +621,9 @@ class KeyedTable:
             schema = T.StructType.fromJson(_json.loads(raw))
         except Exception:
             return None
-        from rds_to_datalake_project_spark.functions.localrel import (
-            literal_frame,
-        )
+        from rds_to_datalake_project_spark.functions.localrel import local_frame
 
-        return literal_frame(self.spark, [], schema)
+        return local_frame(self.spark, [], schema)
 
     def _is_empty_live(self) -> bool:
         """True when the live tree holds no data FILES — deleting the

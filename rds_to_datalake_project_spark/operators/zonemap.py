@@ -595,7 +595,14 @@ def fast_count(spark: SparkSession, table_path: str, index_dir: str | None = Non
     (files gone) are ignored via the live-set intersection, unindexed
     files fall back to a real (column-less, footer-only) count. On a
     token-synced index (see _index_is_synced) the count is PURE
-    metadata — one sidecar read, no directory listing, no footers."""
+    metadata — one sidecar read, no directory listing, no footers.
+    Committed deletion vectors mask rows the file counts still hold,
+    so a table with any counts its masked live read instead."""
+    from rds_to_datalake_project_spark.operators import deletevectors as dv
+
+    if dv.has_vectors(spark, table_path):
+        full, _live = _resolve_table(spark, table_path)
+        return dv.mask_deleted(spark, table_path, full).count()
     idx = index_dir or _index_dir(table_path)
     try:
         stats = spark.read.parquet(idx).select(_FILE, "n_rows").collect()

@@ -16,9 +16,7 @@ import tempfile
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from rds_to_datalake_project_spark.functions.localrel import (
-    literal_frame as _literal_frame,
-)
+from rds_to_datalake_project_spark.functions.localrel import local_frame
 
 from rds_to_datalake_project_spark.catalog import load_table
 from rds_to_datalake_project_spark.operators.dedup import latest_version_per_key
@@ -1353,7 +1351,8 @@ def sidecar_service_status(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         for d in service_status(t)
     ]
-    return _literal_frame(spark, 
+    return local_frame(
+        spark,
         flat,
         "service string, indexed_version int, head_version int, "
         "lag int, n_delta_parts int",

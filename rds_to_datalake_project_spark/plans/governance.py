@@ -9,9 +9,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from rds_to_datalake_project_spark.functions.localrel import (
-    literal_frame as _literal_frame,
-)
+from rds_to_datalake_project_spark.functions.localrel import local_frame
 
 from rds_to_datalake_project_spark.catalog import load_table
 from rds_to_datalake_project_spark.operators import expectations as X
@@ -306,7 +304,7 @@ def sql_matview_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).orderBy("o_orderstatus")
         rows = out.collect()  # materialize before DROP unbinds the view
         run_query(spark, "DROP MATERIALIZED VIEW status_rev", tables=reg)
-        return _literal_frame(spark, rows, out.schema)
+        return local_frame(spark, rows, out.schema)
     finally:
         MATVIEWS.pop("status_rev", None)
 
@@ -388,7 +386,7 @@ def sql_matview_time_bucket(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).orderBy("h", "event_type")
         rows = out.collect()  # materialize before DROP unbinds the view
         run_query(spark, "DROP MATERIALIZED VIEW ev_hourly", tables=reg)
-        return _literal_frame(spark, rows, out.schema)
+        return local_frame(spark, rows, out.schema)
     finally:
         MATVIEWS.pop("ev_hourly", None)
 
@@ -1266,7 +1264,8 @@ def stats_join_advisory(spark: SparkSession, sf_dir: str) -> DataFrame:
                 a["broadcast_side"],
             )
         )
-    return _literal_frame(spark, 
+    return local_frame(
+        spark,
         rows,
         "pair string, left_rows bigint, right_rows bigint, "
         "left_key_ndv bigint, right_key_ndv bigint, "
@@ -1640,7 +1639,8 @@ def _mmv_fixture(spark, sf_dir: str):
         .withColumn("update_at", F.lit("b"))
         .withColumn("Op", F.lit("D"))
     )
-    new_low = _literal_frame(spark, 
+    new_low = local_frame(
+        spark,
         [(-1, "2-HIGH", 0.01, "b", "I")],
         "o_orderkey long, o_orderpriority string, o_totalprice double, "
         "update_at string, Op string",

@@ -17,9 +17,7 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame, SparkSession
 
 from rds_to_datalake_project_spark import fsio
-from rds_to_datalake_project_spark.functions.localrel import (
-    literal_frame as _literal_frame,
-)
+from rds_to_datalake_project_spark.functions.localrel import local_frame
 
 # Table identifiers as users coming from the reference's Athena layer
 # type them: bare (`orders`), qualified (`lake.orders`, any depth), and
@@ -575,9 +573,7 @@ def _merge_statement(spark: SparkSession, m: re.Match, known: dict):
     finally:
         if cached:
             batch.unpersist()
-    return _literal_frame(spark, 
-        [(name, n)], "table_name string, rows_merged bigint"
-    )
+    return local_frame(spark, [(name, n)], "table_name string, rows_merged bigint")
 
 
 def _split_top_level(text: str) -> list[str]:
@@ -811,7 +807,8 @@ def _finish_matview_create(spark, m: re.Match, name: str, mv, hooked_tables):
     from rds_to_datalake_project_spark import rewrite as _rw
 
     _rw.attach_meta(mv, m)
-    return _literal_frame(spark, 
+    return local_frame(
+        spark,
         [
             (
                 name,
@@ -1088,8 +1085,8 @@ def _maintenance_statement(spark: SparkSession, sql: str, known: dict):
             cluster_by=cols,  # any arity — N-dim Morton interleave
             curve="zorder",  # the verb names Z-order, not the default Hilbert
         )
-        return _literal_frame(spark, 
-            [(m.group(1), n)], "table_name string, target_files int"
+        return local_frame(
+            spark, [(m.group(1), n)], "table_name string, target_files int"
         )
     m = _OPTIMIZE_RE.match(sql)
     if m and table_bound:
@@ -1098,14 +1095,16 @@ def _maintenance_statement(spark: SparkSession, sql: str, known: dict):
         )
 
         rewritten = compact_partitions(_resolve(m.group(1)))
-        return _literal_frame(spark, 
+        return local_frame(
+            spark,
             [(m.group(1), len(rewritten))],
             "table_name string, partitions_rewritten int",
         )
     m = _HISTORY_RE.match(sql)
     if m and table_bound:
         hist = _resolve(m.group(1)).describe_history()
-        return _literal_frame(spark, 
+        return local_frame(
+            spark,
             [
                 (
                     h["version"],
@@ -1124,13 +1123,14 @@ def _maintenance_statement(spark: SparkSession, sql: str, known: dict):
     m = _VACUUM_RE.match(sql)
     if m and table_bound:
         expired = _resolve(m.group(1)).vacuum_versions(keep_last=int(m.group(2)))
-        return _literal_frame(spark, 
-            [(m.group(1), expired)], "table_name string, versions_expired int"
+        return local_frame(
+            spark, [(m.group(1), expired)], "table_name string, versions_expired int"
         )
     m = _RESTORE_RE.match(sql)
     if m and table_bound:
         new_v = _resolve(m.group(1)).restore_to_version(int(m.group(2)))
-        return _literal_frame(spark, 
+        return local_frame(
+            spark,
             [(m.group(1), int(m.group(2)), new_v)],
             "table_name string, restored_version int, new_version int",
         )
@@ -1139,15 +1139,16 @@ def _maintenance_statement(spark: SparkSession, sql: str, known: dict):
         t = _resolve(m.group(1))
         target = t.version_at_timestamp(m.group(2))
         new_v = t.restore_to_version(target)
-        return _literal_frame(spark, 
+        return local_frame(
+            spark,
             [(m.group(1), target, new_v)],
             "table_name string, restored_version int, new_version int",
         )
     m = _VACUUM_HOURS_RE.match(sql)
     if m and table_bound:
         expired = _resolve(m.group(1)).vacuum_older_than(float(m.group(2)))
-        return _literal_frame(spark, 
-            [(m.group(1), expired)], "table_name string, versions_expired int"
+        return local_frame(
+            spark, [(m.group(1), expired)], "table_name string, versions_expired int"
         )
     m = _ANALYZE_RE.match(sql)
     if m and table_bound:
@@ -1167,7 +1168,8 @@ def _maintenance_statement(spark: SparkSession, sql: str, known: dict):
         # any registered view it reflects the plan AT REGISTRATION —
         # re-register (or use the handle) after branch commits.
         dest.register(m.group("dest"))
-        return _literal_frame(spark, 
+        return local_frame(
+            spark,
             [
                 (
                     m.group("dest"),
@@ -1185,7 +1187,8 @@ def _maintenance_statement(spark: SparkSession, sql: str, known: dict):
         if not hasattr(t, "detach"):
             raise ValueError(f"{m.group(1)} is not a shallow clone")
         res = t.detach()
-        return _literal_frame(spark, 
+        return local_frame(
+            spark,
             [(m.group(1), res["partitions_copied"])],
             "table_name string, partitions_copied int",
         )
@@ -1195,7 +1198,8 @@ def _maintenance_statement(spark: SparkSession, sql: str, known: dict):
         if not hasattr(t, "promote"):
             raise ValueError(f"{m.group(1)} is not a shallow clone")
         res = t.promote(force=bool(m.group(2)))
-        return _literal_frame(spark, 
+        return local_frame(
+            spark,
             [
                 (
                     m.group(1),
@@ -1209,14 +1213,16 @@ def _maintenance_statement(spark: SparkSession, sql: str, known: dict):
     m = _ADD_CONSTRAINT_RE.match(sql)
     if m and table_bound:
         _resolve(m.group(1)).add_constraint(m.group(2), m.group(3).strip())
-        return _literal_frame(spark, 
+        return local_frame(
+            spark,
             [(m.group(1), m.group(2), m.group(3).strip())],
             "table_name string, constraint_name string, check_expr string",
         )
     m = _DROP_CONSTRAINT_RE.match(sql)
     if m and table_bound:
         _resolve(m.group(1)).drop_constraint(m.group(2))
-        return _literal_frame(spark, 
+        return local_frame(
+            spark,
             [(m.group(1), m.group(2))],
             "table_name string, constraint_name string",
         )
@@ -1231,7 +1237,8 @@ def _maintenance_statement(spark: SparkSession, sql: str, known: dict):
         n_files, size = fsio.live_data_size(t._fs, t.path) or (0, 0)
         versions = t.versions() if t.retain_versions else []
         meta = getattr(t, "_clone_meta", lambda: None)()
-        return _literal_frame(spark, 
+        return local_frame(
+            spark,
             [
                 (
                     m.group(1),
@@ -1253,7 +1260,8 @@ def _maintenance_statement(spark: SparkSession, sql: str, known: dict):
     m = _MATERIALIZE_DV_RE.match(sql)
     if m and table_bound:
         res = _resolve(m.group(1)).materialize_deletes()
-        return _literal_frame(spark, 
+        return local_frame(
+            spark,
             [
                 (
                     m.group(1),
@@ -1274,7 +1282,8 @@ def _maintenance_statement(spark: SparkSession, sql: str, known: dict):
 
         t = _resolve(m.group(1))
         st = dv_stats(t.spark, t.path)
-        return _literal_frame(spark, 
+        return local_frame(
+            spark,
             [
                 (
                     m.group(1),
@@ -1340,7 +1349,8 @@ def _maintenance_statement(spark: SparkSession, sql: str, known: dict):
                     lag,
                 )
             )
-        return _literal_frame(spark, 
+        return local_frame(
+            spark,
             rows,
             "view_name string, view_class string, strategy string, "
             "base_tables string, group_cols string, lag_commits bigint",
@@ -1368,7 +1378,8 @@ def _maintenance_statement(spark: SparkSession, sql: str, known: dict):
             cursor = cursor[0]  # a one-table cursor reads as its version
         is_delta = isinstance(mv, _SignedDeltaMergeMixin)
         aux = ",".join(sorted(getattr(mv, "_aux", {}) or {})) or None
-        return _literal_frame(spark, 
+        return local_frame(
+            spark,
             [
                 (
                     name,
@@ -1402,7 +1413,8 @@ def _maintenance_statement(spark: SparkSession, sql: str, known: dict):
         else:
             info = mv.refresh()
         _publish_matview(spark, name, mv)
-        return _literal_frame(spark, 
+        return local_frame(
+            spark,
             [(name, info["mode"], info["base_version"], info["groups_refreshed"])],
             "view_name string, mode string, base_version int, groups_refreshed bigint",
         )
@@ -1419,7 +1431,7 @@ def _maintenance_statement(spark: SparkSession, sql: str, known: dict):
         # full-refreshes over it); only the name binding goes away.
         if re.fullmatch(r"\w+", name):
             spark.catalog.dropTempView(name)
-        return _literal_frame(spark, [(name, True)], "view_name string, dropped boolean")
+        return local_frame(spark, [(name, True)], "view_name string, dropped boolean")
     m = _EXPLAIN_RW_RE.match(sql)
     if m:
         # report the aggregate-navigation decision without running the
@@ -1429,7 +1441,8 @@ def _maintenance_statement(spark: SparkSession, sql: str, known: dict):
 
         df = _rw.try_rewrite(spark, m.group("q"), observe=False)
         hit = _rw.LAST_SELECT_REWRITE if df is not None else None
-        return _literal_frame(spark, 
+        return local_frame(
+            spark,
             [
                 (
                     hit["view"] if hit else None,
@@ -1449,7 +1462,8 @@ def _maintenance_statement(spark: SparkSession, sql: str, known: dict):
             top=int(m.group("lim")) if m.group("lim") else None,
             tables=known,
         )
-        return _literal_frame(spark, 
+        return local_frame(
+            spark,
             [
                 (
                     r["name"],
@@ -1485,7 +1499,8 @@ def _maintenance_statement(spark: SparkSession, sql: str, known: dict):
                 continue
             run_query(spark, r["ddl"], tables=known)
             applied.append((r["name"], r["strategy"], True, None))
-        return _literal_frame(spark, 
+        return local_frame(
+            spark,
             applied,
             "view_name string, strategy string, created boolean, "
             "skipped_reason string",
@@ -1494,7 +1509,8 @@ def _maintenance_statement(spark: SparkSession, sql: str, known: dict):
     if m:
         from rds_to_datalake_project_spark import advisor
 
-        return _literal_frame(spark, 
+        return local_frame(
+            spark,
             [
                 (
                     r["from_text"],
@@ -1515,9 +1531,7 @@ def _maintenance_statement(spark: SparkSession, sql: str, known: dict):
 
         n = len(advisor.workload())
         advisor.reset()
-        return _literal_frame(spark, 
-            [(n, True)], "shapes_cleared bigint, reset boolean"
-        )
+        return local_frame(spark, [(n, True)], "shapes_cleared bigint, reset boolean")
     m = _MERGE_RE.match(sql)
     if m and table_bound and _unquote_ident(m.group("t")) in known:
         return _merge_statement(spark, m, known)
@@ -1529,21 +1543,22 @@ def _maintenance_statement(spark: SparkSession, sql: str, known: dict):
         if n:
             t.upsert(rows)  # merge semantics: same-key rows take the
             # incoming version per the precombine rule (idempotent)
-        return _literal_frame(spark, 
-            [(m.group(1), n)], "table_name string, rows_inserted bigint"
+        return local_frame(
+            spark, [(m.group(1), n)], "table_name string, rows_inserted bigint"
         )
     m = _DELETE_RE.match(sql)
     if m and table_bound and _unquote_ident(m.group(1)) in known:
         n = _resolve(m.group(1)).delete_where(m.group(2))
-        return _literal_frame(spark, 
-            [(m.group(1), n)], "table_name string, rows_deleted bigint"
+        return local_frame(
+            spark, [(m.group(1), n)], "table_name string, rows_deleted bigint"
         )
     m = _PURGE_RE.match(sql)
     if m and table_bound and _unquote_ident(m.group(1)) in known:
         n = _resolve(m.group(1)).purge_rows(
             m.group(2), keep_history=bool(m.group(3))
         )
-        return _literal_frame(spark, 
+        return local_frame(
+            spark,
             [(m.group(1), n, bool(m.group(3)))],
             "table_name string, rows_purged bigint, kept_history boolean",
         )
@@ -1556,15 +1571,16 @@ def _maintenance_statement(spark: SparkSession, sql: str, known: dict):
                 raise ValueError(f"malformed SET assignment: {part!r}")
             assignments[_unquote_ident(col.strip())] = expr.strip()
         n = _resolve(m.group(1)).update_where(m.group(3), assignments)
-        return _literal_frame(spark, 
-            [(m.group(1), n)], "table_name string, rows_updated bigint"
+        return local_frame(
+            spark, [(m.group(1), n)], "table_name string, rows_updated bigint"
         )
     m = _UNLOAD_RE.match(sql)
     if m:
         unload_query(
             spark, m.group("q"), m.group("path"), fmt=m.group("fmt").lower()
         )
-        return _literal_frame(spark, 
+        return local_frame(
+            spark,
             [(m.group("path"), m.group("fmt").lower())],
             "path string, format string",
         )
