@@ -34,20 +34,22 @@ differs. False positives cost a read, never correctness.
 
 from __future__ import annotations
 
-import logging
-import threading
+import json
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from rds_to_datalake_project_spark import fsio
+from rds_to_datalake_project_spark.operators.sidecar import read_params
 from rds_to_datalake_project_spark.operators.zonemap import (
+    _PRUNE_LOCK,
     _norm,
+    _record_prune,
     _resolve_table,
+    read_sidecar,
     sidecar_memo,
+    warn_fallback,
 )
-
-_LOG = logging.getLogger(__name__)
 
 _FILE = "__file"
 # Fixed sidecar layout (what _filter_rows emits): supplying it to the
@@ -61,7 +63,6 @@ _SIDECAR_SCHEMA = f"{_FILE} string, col string, word_idx int, bits bigint"
 BITS_PER_KEY = 10
 M_BITS_MIN = 16384  # 2 KiB floor per file·column
 M_BITS_MAX = 1 << 24  # 2 MiB cap per file·column (≈1.6M keys/file)
-M_BITS_DEFAULT = M_BITS_MIN  # legacy fallback when _PARAMS is missing
 K_HASHES_DEFAULT = 5
 
 
@@ -76,28 +77,13 @@ def _auto_m_bits(n_rows: int, n_files: int) -> int:
 # Diagnostics: CUMULATIVE pruning verdicts since reset_prune_stats()
 # (point-lookup flows probe once per key, so per-probe numbers alone
 # would under-report) — what bench.py reports as the index's
-# I/O-avoided metric.
+# I/O-avoided metric. Recorded by zonemap._record_prune.
 LAST_PRUNE: dict = {}
-
-
-# Probes run on concurrent service threads too: every update is one
-# locked read-modify-write, so the totals do not depend on the order.
-_PRUNE_LOCK = threading.Lock()
 
 
 def reset_prune_stats() -> None:
     with _PRUNE_LOCK:
         LAST_PRUNE.clear()
-
-
-def _record_prune(files_total: int, files_read: int) -> None:
-    with _PRUNE_LOCK:
-        LAST_PRUNE["probes"] = LAST_PRUNE.get("probes", 0) + 1
-        LAST_PRUNE["files_total"] = LAST_PRUNE.get("files_total", 0) + files_total
-        LAST_PRUNE["files_read"] = LAST_PRUNE.get("files_read", 0) + files_read
-        LAST_PRUNE["files_skipped"] = (
-            LAST_PRUNE["files_total"] - LAST_PRUNE["files_read"]
-        )
 
 
 def _index_dir(table_path: str) -> str:
@@ -174,17 +160,26 @@ def build_bloom_index(
         eager=True
     )
     out.write.mode("overwrite").parquet(idx)
-    # params ride a marker so probes use the same (m, k)
-    fsio.write_text(spark, f"{idx}/_PARAMS", f"{m_bits} {k_hashes}")
+    _write_mk(spark, idx, m_bits, k_hashes)
     return out.count()
 
 
-def _stored_mk(spark: SparkSession, idx: str) -> tuple[int, int]:
-    txt = fsio.read_text(spark, f"{idx}/_PARAMS")
-    if not txt:
-        return (M_BITS_DEFAULT, K_HASHES_DEFAULT)
-    m, k = txt.split()
-    return int(m), int(k)
+def _write_mk(spark: SparkSession, idx: str, m_bits: int, k: int) -> None:
+    # params ride a marker so probes use the same (m, k)
+    fsio.write_text(
+        spark, f"{idx}/_PARAMS", json.dumps({"m_bits": m_bits, "k": k})
+    )
+
+
+def _stored_mk(spark: SparkSession, idx: str) -> tuple[int, int] | None:
+    """The stored ``(m, k)``, or None when ``_PARAMS`` is missing or
+    not the JSON object a build writes — no readable index: probes
+    full-scan and the next refresh rebuilds."""
+    params = read_params(spark, idx)
+    try:
+        return int(params["m_bits"]), int(params["k"])
+    except (TypeError, KeyError, ValueError):
+        return None
 
 
 def bloom_prune_files(
@@ -212,7 +207,7 @@ def bloom_prune_files(
         for path, orig in sorted(live.items())
         if path not in covered or path in any_hit
     ]
-    _record_prune(len(live), len(files))
+    _record_prune(LAST_PRUNE, len(live), len(files))
     return files, len(live) - len(files)
 
 
@@ -294,21 +289,13 @@ def _probe_positions(spark, order: list, dtype, m_bits: int, k: int) -> list:
     return out
 
 
-def _warn_fallback(idx: str, what: str, exc: Exception) -> None:
-    msg = str(exc)
-    _LOG.warning(
-        "bloom sidecar %s %s (%s: %s) — lookups fall back to full scans",
-        idx,
-        what,
-        type(exc).__name__,
-        msg.splitlines()[0] if msg else "",
-    )
-
-
 def _load_words(spark: SparkSession, idx: str):
     """``((m, k), {col: {normalized path: {word_idx: bits}}})`` from
-    one collect of the sidecar (the driver memo's contents)."""
+    one collect of the sidecar (the driver memo's contents), or None
+    without readable params."""
     mk = _stored_mk(spark, idx)
+    if mk is None:
+        return None
     words: dict = {}
     for f, c, w, b in spark.read.schema(_SIDECAR_SCHEMA).parquet(idx).collect():
         per_file = words.setdefault(c, {}).setdefault(_norm(f), {})
@@ -349,7 +336,7 @@ def bloom_value_survivors(
         try:
             positions = _probe_positions(spark, order, dtype, m_bits, k)
         except Exception as exc:
-            _warn_fallback(idx, "probe failed", exc)
+            warn_fallback(idx, "probe failed", exc)
             return None, {}
         survives = {
             v: {
@@ -360,22 +347,13 @@ def bloom_value_survivors(
             for v, ps in zip(order, positions)
         }
         return set(files), survives
-    m_bits, k = _stored_mk(spark, idx)
-    try:
-        # resolves the sidecar path BEFORE any probe work: a table
-        # with no bloom index (the common un-indexed case) must cost
-        # nothing here beyond this existence check.
-        sidecar = spark.read.schema(_SIDECAR_SCHEMA).parquet(idx)
-    except Exception as exc:
-        # no readable index → callers full-scan. The common case is
-        # PATH_NOT_FOUND (un-indexed table — silent by design); any
-        # OTHER failure (permissions, corrupt sidecar, transient FS)
-        # is logged so a degraded-to-full-scan real fault stays
-        # visible (r12 ADVICE).
-        msg = str(exc)
-        if "PATH_NOT_FOUND" not in msg and "Path does not exist" not in msg:
-            _warn_fallback(idx, "unreadable", exc)
-        return None, {}
+    # A table with no bloom index (the common un-indexed case) costs
+    # nothing here beyond the params read and an existence check.
+    mk = _stored_mk(spark, idx)
+    sidecar = read_sidecar(spark, idx, _SIDECAR_SCHEMA) if mk else None
+    if sidecar is None:
+        return None, {}  # no readable index → callers full-scan
+    m_bits, k = mk
     # In-plan probe (see _probe_relation): the values hash through the
     # build's own expressions and the sidecar meets the broadcast
     # probe in ONE job, independent of probe-set size — also the
@@ -401,7 +379,7 @@ def bloom_value_survivors(
             .collect()
         )
     except Exception as exc:
-        _warn_fallback(idx, "probe failed", exc)
+        warn_fallback(idx, "probe failed", exc)
         return None, {}
     covered = {_norm(r[0]) for r in rows}
     survives: dict = {v: set() for v in order}
@@ -453,14 +431,13 @@ def refresh_bloom_index(
     an explicit mismatching value forces the rebuild."""
     idx = index_dir or _index_dir(table_path)
     full, live = _resolve_table(spark, table_path)
-    try:
-        stats = spark.read.parquet(idx)
-    except Exception:
-        build_bloom_index(spark, table_path, columns, idx, m_bits, k_hashes)
-        return (len(live), 0)
-    stored_m, stored_k = _stored_mk(spark, idx)
-    if set(stats.columns) != {_FILE, "col", "word_idx", "bits"} or (
-        m_bits is not None and (stored_m, stored_k) != (m_bits, k_hashes)
+    stats = read_sidecar(spark, idx)
+    stored = _stored_mk(spark, idx)
+    if (
+        stats is None
+        or stored is None
+        or set(stats.columns) != {_FILE, "col", "word_idx", "bits"}
+        or (m_bits is not None and stored != (m_bits, k_hashes))
     ):
         build_bloom_index(spark, table_path, columns, idx, m_bits, k_hashes)
         return (len(live), 0)
@@ -474,7 +451,7 @@ def refresh_bloom_index(
     if set(sets["cols"]) != set(columns):
         build_bloom_index(spark, table_path, columns, idx, m_bits, k_hashes)
         return (len(live), 0)
-    m_bits, k_hashes = stored_m, stored_k
+    m_bits, k_hashes = stored
     indexed = {_norm(p): p for p in sets["files"]}
     new = [orig for p, orig in sorted(live.items()) if p not in indexed]
     stale = [orig for p, orig in sorted(indexed.items()) if p not in live]
@@ -495,7 +472,7 @@ def refresh_bloom_index(
         )
     out = kept.localCheckpoint(eager=True)  # derived from the dir it replaces
     out.write.mode("overwrite").parquet(idx)
-    fsio.write_text(spark, f"{idx}/_PARAMS", f"{m_bits} {k_hashes}")
+    _write_mk(spark, idx, m_bits, k_hashes)
     return (len(new), len(stale))
 
 

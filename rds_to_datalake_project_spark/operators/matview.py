@@ -255,6 +255,7 @@ def _bucket_pruned_store_rows(
     touched group's row."""
     from rds_to_datalake_project_spark.operators.upsert import _BUCKET_COL
     from rds_to_datalake_project_spark.operators.zonemap import (
+        LAST_PRUNE,
         _record_prune,
         _resolve_table,
     )
@@ -278,7 +279,7 @@ def _bucket_pruned_store_rows(
         files = [
             orig for p, orig in live.items() if any(fr in p for fr in frags)
         ]
-        _record_prune(len(live), len(files))
+        _record_prune(LAST_PRUNE, len(live), len(files))
         if not files:
             return full.limit(0)
         return (
@@ -436,6 +437,7 @@ def _zone_pruned_rows(
     never pruned away.
     """
     from rds_to_datalake_project_spark.operators.zonemap import (
+        LAST_PRUNE,
         _record_prune,
         _resolve_table,
         zone_intervals,
@@ -496,7 +498,7 @@ def _zone_pruned_rows(
                     break
             if keep:
                 files.append(orig)
-        _record_prune(len(live), len(files))
+        _record_prune(LAST_PRUNE, len(live), len(files))
         _add_scan(len(live), len(files))
         if not files:
             return full.limit(0)

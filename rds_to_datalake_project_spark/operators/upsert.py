@@ -239,12 +239,13 @@ def resolve_cache_entry(spark, path: str) -> dict | None:
     ``_write_commit_token`` is itself ``@_invalidates``, so by the
     time any post-commit maintenance or probe can run, a stale entry
     is already unreachable — a hit can never feed a pre-mutation
-    listing to the reconcile that stamps the trusted manifest. The
-    memoized pair is raw path metadata (no source composition), so
-    clone paths are safe too: their LOCAL tree mutates only through
-    their own commits. Token-less paths (plain directories, legacy
-    tables, anything mid-first-load) never cache — the conservative
-    default, same posture as ``_SEQ``."""
+    listing to a sidecar reconcile or a zoned read. The memoized pair
+    is raw path metadata (no source composition), so clone paths are
+    safe too: their LOCAL tree mutates only through their own commits.
+    Token-less paths (plain directories, legacy tables, anything
+    mid-first-load) never cache — the conservative default: they list
+    on every call, so out-of-band writes stay visible. Nor do non-local
+    schemes: a zoned read there lists the table once per call."""
     if not fsio.is_local(path):
         return None
     tok = fsio.read_text(spark, f"{path}/{_TOKEN_FILE}")
@@ -745,10 +746,6 @@ class KeyedTable:
         self._fs.delete(f"{self.path}/.dv", True)
         if cons:
             self._write_constraints(cons)  # re-persist past the wipe
-        # Token AFTER the table reset (the overwrite clears .meta with
-        # the path): a crash before this leaves no _SEQ, which reads
-        # treat as "never trust the manifest" — conservative.
-        self._bump_seq()
         # Fresh commit token per incarnation: any merge staged against
         # the PREVIOUS incarnation (including the token-less legacy
         # state — None would compare equal to the post-reset None
@@ -1407,12 +1404,11 @@ class KeyedTable:
         maintenance is the CALLER's job, outside the mutex: it is
         advisory, and matview auto-refresh hooks can be arbitrarily
         expensive — the serialized section stays metadata renames +
-        the changes-feed append. Returns the new commit token.
+        the changes-feed append. Returns the new commit token, the one
+        token that says the live file set changed: the read-plan cache
+        (and the live set every zoned read takes from it) is keyed on
+        it.
         """
-        # State token FIRST — before any swap becomes visible — so a
-        # zone-map manifest stamped with the PREVIOUS token can never
-        # be mistaken for current mid-publish (see _bump_seq).
-        self._bump_seq()
         rec = commitlog.read(self._fs, commitlog.staged_path(staging))
         version = rec.version if self.retain_versions else None
         if rec.dv_target:
@@ -1612,42 +1608,7 @@ class KeyedTable:
     def _maintain_zonemap(self) -> None:
         from rds_to_datalake_project_spark.operators.zonemap import refresh_zonemap
 
-        # The token is read BEFORE refresh lists the live set: if a
-        # later mutation bumps it mid-refresh, the stamped manifest
-        # simply mismatches and reads fall back to a listing.
-        refresh_zonemap(
-            self.spark,
-            self.path,
-            self.zonemap_columns,
-            sync_token=self._read_seq(),
-        )
-
-    # -- live-state token (zone-map manifest freshness) -----------------------
-    #
-    # Every mutation of the LIVE file set (publish swaps, initial-load
-    # overwrite, partition drops) first writes a fresh opaque token to
-    # ``.meta/_SEQ``. refresh_zonemap stamps the token it observed into
-    # the index sidecar after reconciling — matching tokens prove the
-    # sidecar's file list IS the current live set (single-writer
-    # protocol), letting zoned reads and fast_count skip the O(files)
-    # directory listing entirely; any mismatch, absence, or
-    # out-of-band write falls back to a real listing (the advisory
-    # contract is unchanged). Bump-BEFORE-mutate is what makes a crash
-    # at any point conservative: the manifest can only ever look
-    # STALE, never fresher than the tree.
-
-    def _read_seq(self) -> str | None:
-        return self._read_marker(f"{self.path}/.meta/_SEQ")
-
-    def _bump_seq(self) -> None:
-        # Unversioned plain tables (retain_versions=0, no zone-map
-        # columns) carry no manifest sidecar to synchronize with, and
-        # their documented contract is "no snapshot debris" — a
-        # missing _SEQ is already the conservative "never trust the
-        # manifest" state, so skip the token entirely for them.
-        if not (self.retain_versions or self.zonemap_columns):
-            return
-        self._fs.publish_text(f"{self.path}/.meta/_SEQ", uuid.uuid4().hex)
+        refresh_zonemap(self.spark, self.path, self.zonemap_columns)
 
     # -- multi-writer safety (optimistic concurrency) -------------------------
     #
@@ -1812,6 +1773,7 @@ class KeyedTable:
         expression — a Python twin could diverge on type rendering).
         The caller applies the key residual, so the result is exact."""
         from rds_to_datalake_project_spark.operators.zonemap import (
+            LAST_PRUNE,
             _record_prune,
             _resolve_table,
         )
@@ -1843,7 +1805,7 @@ class KeyedTable:
                 for p, orig in live.items()
                 if any(fr in p for fr in frags)
             ]
-            _record_prune(len(live), len(files))
+            _record_prune(LAST_PRUNE, len(live), len(files))
             if not files:
                 return full.limit(0)
             return self._mask_dv(
@@ -1909,9 +1871,9 @@ class KeyedTable:
                 or p in survives.get(k, ())
             ]
             if zones is not None:
-                _zm._record_prune(len(live), len(zone_ok))
+                _zm._record_prune(_zm.LAST_PRUNE, len(live), len(zone_ok))
             if covered is not None:
-                _bf._record_prune(len(live), len(cand))
+                _zm._record_prune(_bf.LAST_PRUNE, len(live), len(cand))
             files.update(cand)
         if not files:
             return full.filter(residual).limit(0)
@@ -3373,7 +3335,6 @@ class KeyedTable:
             return 0
         if not self.retain_versions:
             with self._commit_lock():
-                self._bump_seq()  # live tree mutates — invalidate manifests
                 for rel in to_drop:
                     self._fs.delete(f"{self.path}/{rel}", True)
                 # A partition drop is a commit like any other: advance
@@ -3392,11 +3353,10 @@ class KeyedTable:
         self.recover()
         with self._commit_lock():
             self._vacuum_partitions_commit(to_drop)
-        self._run_maintenance()  # re-sync the manifest after the drop
+        self._run_maintenance()  # re-sync the sidecars after the drop
         return len(to_drop)
 
     def _vacuum_partitions_commit(self, to_drop: list[str]) -> None:
-        self._bump_seq()  # live tree about to mutate — invalidate manifests
         fs = self._fs
         version = (self.versions() or [0])[-1] + 1
         for rel in to_drop:

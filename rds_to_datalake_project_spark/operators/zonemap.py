@@ -17,11 +17,16 @@ own narrow value ranges, so zones are tight and most files drop out.
 
 Correctness stance — the index is ADVISORY:
 
-- Files present on disk but absent from the index are ALWAYS read, so
-  a stale or partial index (crash mid-build, files appended since)
+- The live file set and the full-table schema always come from the
+  table itself (_resolve_table, resolved once per commit token); the
+  sidecar only says which of those files a predicate can skip. Files
+  present on disk but absent from the index are ALWAYS read, so a
+  stale or partial index (crash mid-build, files appended since)
   degrades to reading more files, never to row loss. Spark part-file
   names are globally unique (task UUIDs), so an index row can never
   describe a *different* file of the same name.
+- A missing sidecar costs one existence check; one that exists but
+  cannot be read logs a warning and the read scans every live file.
 - Pruning drops a file only when the predicate interval provably
   misses [min, max]. An all-null zone (min/max NULL) is droppable for
   range predicates: a comparison with NULL is never true.
@@ -40,7 +45,6 @@ file, the same driver-side footprint as Delta's log replay.
 
 from __future__ import annotations
 
-import json
 import logging
 import math
 import os
@@ -49,11 +53,8 @@ from urllib.parse import urlparse
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from rds_to_datalake_project_spark import fsio
-from rds_to_datalake_project_spark.fsio import read_text as _read_small
-from rds_to_datalake_project_spark.fsio import write_text as _write_small
 
 _FILE = "file_uri"
 
@@ -65,6 +66,7 @@ LAST_PRUNE: dict = {}
 
 # Probes run on concurrent service threads too: every update is one
 # locked read-modify-write, so the totals do not depend on the order.
+# The bloom index's LAST_PRUNE is recorded under the same lock.
 _PRUNE_LOCK = threading.Lock()
 
 
@@ -73,14 +75,43 @@ def reset_prune_stats() -> None:
         LAST_PRUNE.clear()
 
 
-def _record_prune(files_total: int, files_read: int) -> None:
+def _record_prune(stats: dict, files_total: int, files_read: int) -> None:
+    """Add one probe's verdict to ``stats`` — this module's LAST_PRUNE
+    or the bloom index's."""
     with _PRUNE_LOCK:
-        LAST_PRUNE["probes"] = LAST_PRUNE.get("probes", 0) + 1
-        LAST_PRUNE["files_total"] = LAST_PRUNE.get("files_total", 0) + files_total
-        LAST_PRUNE["files_read"] = LAST_PRUNE.get("files_read", 0) + files_read
-        LAST_PRUNE["files_skipped"] = (
-            LAST_PRUNE["files_total"] - LAST_PRUNE["files_read"]
-        )
+        stats["probes"] = stats.get("probes", 0) + 1
+        stats["files_total"] = stats.get("files_total", 0) + files_total
+        stats["files_read"] = stats.get("files_read", 0) + files_read
+        stats["files_skipped"] = stats["files_total"] - stats["files_read"]
+
+
+def warn_fallback(idx: str, what: str, exc: Exception) -> None:
+    """One visible warning for a sidecar a probe cannot use."""
+    msg = str(exc)
+    logging.getLogger(__name__).warning(
+        "sidecar %s %s (%s: %s) — reads fall back to full scans",
+        idx,
+        what,
+        type(exc).__name__,
+        msg.splitlines()[0] if msg else "",
+    )
+
+
+def read_sidecar(
+    spark: SparkSession, idx: str, schema: str | None = None
+) -> DataFrame | None:
+    """The parquet sidecar at ``idx`` as a frame, or None when there is
+    no readable one. A missing sidecar — every un-indexed table — costs
+    one existence check and no Spark read; one that exists but cannot
+    be read logs a warning (warn_fallback). Either way the caller falls
+    back to a full scan (or a rebuild), so the result stays exact."""
+    if not fsio.fs_for(spark, idx).exists(idx):
+        return None
+    try:
+        return (spark.read.schema(schema) if schema else spark.read).parquet(idx)
+    except Exception as exc:
+        warn_fallback(idx, "unreadable", exc)
+        return None
 
 
 def _index_dir(table_path: str) -> str:
@@ -148,18 +179,19 @@ def _zone_intersects(col: str, lo, hi) -> F.Column:
 
 
 def _resolve_table(spark: SparkSession, table_path: str):
-    """One listing+schema resolution of the table, shared by every
-    zoned operation (a second resolution would double the metadata
-    cost the index exists to avoid). Partition values must round-trip
-    as the strings the layout encodes — mirror KeyedTable.read().
+    """One listing+schema resolution of the table: the ONE source of
+    the live file set and full schema for every zoned read, count and
+    reconcile (a second resolution would double the metadata cost the
+    index exists to avoid). Partition values must round-trip as the
+    strings the layout encodes — mirror KeyedTable.read().
 
     Memoized per (path, commit token) in the KeyedTable read-plan
     cache: the token is rewritten as the last metadata step of every
     live-tree mutation BEFORE any maintenance/probe can observe the
     new tree, so a hit always describes the current committed
-    snapshot; token-less paths resolve fresh every call (see
-    upsert.resolve_cache_entry). Concurrent callers — the zone-map and
-    bloom reconciles of one commit — share one resolution
+    snapshot; token-less and non-local paths resolve fresh every call
+    (see upsert.resolve_cache_entry). Concurrent callers — the zone-map
+    and bloom reconciles of one commit — share one resolution
     (upsert.cache_fill). A schema the last commit handed off replaces
     the footer sweep. Metadata only — the frame still reads its
     parquet files on every action."""
@@ -284,25 +316,6 @@ def zone_overlaps(zlo, zhi, lo, hi) -> bool:
     return True
 
 
-def _index_is_synced(spark: SparkSession, table_path: str, index_dir: str) -> bool:
-    """True when the sidecar PROVABLY reflects the current live file
-    set, making its file list a manifest that replaces the O(files)
-    directory listing: the table writes a fresh opaque token to
-    ``.meta/_SEQ`` BEFORE any live-tree mutation
-    (KeyedTable._bump_seq), and refresh_zonemap stamps the token it
-    observed into ``<index>/_SYNC`` after reconciling. Matching tokens
-    ⇒ no mutation since the reconcile ⇒ index rows == live files
-    (single-writer publish protocol). Any mismatch or absence — plain
-    directories, crashed publishes, out-of-band file drops — falls
-    back to a real listing, so the advisory correctness contract is
-    unchanged; only the metadata cost differs."""
-    seq = _read_small(spark, f"{table_path.rstrip('/')}/.meta/_SEQ")
-    if seq is None or not seq.strip():
-        return False
-    sync = _read_small(spark, f"{index_dir}/_SYNC")
-    return sync is not None and sync.strip() == seq.strip()
-
-
 def _plan_zoned_read(
     spark: SparkSession,
     table_path: str,
@@ -310,18 +323,15 @@ def _plan_zoned_read(
     index_dir: str | None = None,
     _resolved=None,
 ):
-    """Shared planner: ``(files_to_read, n_skipped, full_df_or_None)``.
+    """Shared planner: ``(files_to_read, n_skipped, full)``.
 
-    ONE collect of ``(file, kept)`` pairs resolves the whole index —
-    the kept flag and the indexed set come from the same pass. When
-    the index is token-synced (see _index_is_synced) the indexed set
-    doubles as the live-set manifest and no directory listing happens
-    at all; ``full`` comes back None in that case."""
-    idx = index_dir or _index_dir(table_path)
-    try:
-        stats = spark.read.parquet(idx)
-    except Exception:
-        full, live = _resolved or _resolve_table(spark, table_path)
+    The live set and the full-table schema come from _resolve_table
+    (one resolution per commit token); ONE collect of ``(file, kept)``
+    pairs resolves the whole index — the kept flag and the indexed set
+    come from the same pass."""
+    full, live = _resolved or _resolve_table(spark, table_path)
+    stats = read_sidecar(spark, index_dir or _index_dir(table_path))
+    if stats is None:
         return sorted(live.values()), 0, full  # no index → full scan
 
     cond = F.lit(True)
@@ -329,23 +339,14 @@ def _plan_zoned_read(
         if f"min_{col}" in stats.columns and f"max_{col}" in stats.columns:
             cond = cond & _zone_intersects(col, lo, hi)
     rows = stats.select(F.col(_FILE), cond.alias("__kept")).collect()
-    indexed = {_norm(r[0]): r[0] for r in rows}
+    indexed = {_norm(r[0]) for r in rows}
     kept = {_norm(r[0]) for r in rows if r[1]}
-
-    full = None
-    if _resolved is not None:
-        full, live = _resolved
-    elif _index_is_synced(spark, table_path, idx):
-        live = indexed  # the reconciled index IS the live set
-    else:
-        full, live = _resolve_table(spark, table_path)
-
     files = [
         orig
         for path, orig in sorted(live.items())
         if path not in indexed or path in kept
     ]
-    _record_prune(len(live), len(files))
+    _record_prune(LAST_PRUNE, len(live), len(files))
     return files, len(live) - len(files), full
 
 
@@ -390,17 +391,16 @@ def zone_intervals(
     idx = index_dir or _index_dir(table_path)
     zones = sidecar_memo(spark, table_path, idx, lambda: _load_zones(spark, idx))
     if zones is None:
-        try:
-            zones = _load_zones(spark, idx)
-        except Exception:
-            return None  # no readable index
+        zones = _load_zones(spark, idx)
     return zones.get(col)
 
 
 def _load_zones(spark: SparkSession, idx: str) -> dict:
     """``{col: {normalized path: (min, max)}}`` for every indexed
-    column, from one collect of the sidecar."""
-    stats = spark.read.parquet(idx)
+    column, from one collect of the sidecar; empty without one."""
+    stats = read_sidecar(spark, idx)
+    if stats is None:
+        return {}
     names = set(stats.columns)
     cols = [c[4:] for c in names if c.startswith("min_") and f"max_{c[4:]}" in names]
     rows = stats.collect() if cols else []
@@ -431,14 +431,7 @@ def pruned_read(
     files, _skipped, full = _plan_zoned_read(
         spark, table_path, predicates, index_dir
     )
-    spark.conf.set(
-        "spark.sql.sources.partitionColumnTypeInference.enabled", "false"
-    )
     if not files:
-        if full is None:  # trusted-manifest path pruned everything:
-            # one listing only for the empty frame's schema (rare —
-            # the predicate matched no zone at all)
-            full, _live = _resolve_table(spark, table_path)
         return full.filter(residual).limit(0)
     # Merge-on-read deletes: committed deletion vectors mask their
     # victims on every pruned read too (passthrough when the table has
@@ -450,38 +443,11 @@ def pruned_read(
 
     # basePath keeps hive partition columns alive when reading leaf
     # files directly — without it every partition column reads NULL.
-    reader = spark.read.option("basePath", table_path)
-    # Pin the resolved schema when a full resolution happened anyway.
-    if full is not None:
-        return mask_deleted(
-            spark, table_path, reader.schema(full.schema).parquet(*files)
-        ).filter(residual)
-    # Trusted-manifest path (no listing happened): pin the schema the
-    # refresh persisted in the sidecar. Merging over only the PRUNED
-    # files is wrong after schema evolution — a subset of old files
-    # can lack a column the full-table schema surfaces as NULL, and
-    # the residual filter would then fail to resolve (r6 ADVICE).
-    idx = index_dir or _index_dir(table_path)
-    pinned = _read_small(spark, f"{idx}/_SCHEMA")
-    if pinned:
-        schema = T.StructType.fromJson(json.loads(pinned))
-        return mask_deleted(
-            spark, table_path, reader.schema(schema).parquet(*files)
-        ).filter(residual)
-    # Legacy sidecar without a schema pin: merge, but fall back to a
-    # real full resolution if any predicate column is absent from the
-    # merged subset.
-    out = reader.option("mergeSchema", "true").parquet(*files)
-    if any(c not in out.columns for c in predicates):
-        full, _live = _resolve_table(spark, table_path)
-        return mask_deleted(
-            spark,
-            table_path,
-            spark.read.option("basePath", table_path)
-            .schema(full.schema)
-            .parquet(*files),
-        ).filter(residual)
-    return mask_deleted(spark, table_path, out).filter(residual)
+    # The full-table schema, not a merge over the pruned files: after
+    # schema evolution a pruned subset of old files can lack a column
+    # the table surfaces as NULL, and the residual would not resolve.
+    reader = spark.read.option("basePath", table_path).schema(full.schema)
+    return mask_deleted(spark, table_path, reader.parquet(*files)).filter(residual)
 
 
 def refresh_zonemap(
@@ -489,7 +455,6 @@ def refresh_zonemap(
     table_path: str,
     columns: list[str],
     index_dir: str | None = None,
-    sync_token: str | None = None,
 ) -> tuple[int, int]:
     """Incrementally reconcile the index with the live file set.
 
@@ -497,67 +462,38 @@ def refresh_zonemap(
     live are dropped; files the index has never seen are scanned
     (ONLY those files, column-pruned) and appended — so the
     post-upsert maintenance cost is proportional to the touched
-    files, not the table. A column-set change or a missing index
-    falls back to a full build; an emptied table drops the index.
-    Correctness never depends on this running (advisory contract) —
-    it restores pruning EFFECTIVENESS after the live set changes.
-
-    ``sync_token``: the table's ``.meta/_SEQ`` value as read BEFORE
-    this call (KeyedTable._maintain_zonemap passes it). After the
-    reconcile the token is stamped into ``<index>/_SYNC``, turning the
-    index into a trusted live-set manifest for reads until the next
-    mutation bumps the table token (see _index_is_synced). Callers
-    without a token (plain directories) simply never get the trusted
-    fast path.
+    files, not the table. A column-set change or a missing or
+    unreadable index falls back to a full build; an emptied table
+    drops the index. Correctness never depends on this running
+    (advisory contract) — it restores pruning EFFECTIVENESS after the
+    live set changes.
     """
     idx = index_dir or _index_dir(table_path)
-
-    def _stamp() -> None:
-        if sync_token is not None:
-            # Schema BEFORE the token: a manifest is only trusted once
-            # _SYNC matches, and by then the full-table schema pin the
-            # listing-free read path needs is already in place (see
-            # pruned_read — merging over pruned files alone breaks
-            # after schema evolution).
-            _write_small(spark, f"{idx}/_SCHEMA", full.schema.json())
-            _write_small(spark, f"{idx}/_SYNC", sync_token)
-
     try:
         full, live = _resolve_table(spark, table_path)
     except Exception:
         live = {}
     if not live:
         # emptied table: no files to describe
-        try:
-            n = spark.read.parquet(idx).count()
-        except Exception:
-            return (0, 0)
+        stats = read_sidecar(spark, idx)
+        n = stats.count() if stats is not None else 0
         fsio.fs_for(spark, idx).delete(idx, True)
         return (0, n)
-    try:
-        stats = spark.read.parquet(idx)
-    except Exception:
-        build_zonemap(spark, table_path, columns, idx)
-        _stamp()
-        return (len(live), 0)
+    stats = read_sidecar(spark, idx)
     want = (
         {_FILE, "n_rows"}
         | {f"min_{c}" for c in columns}
         | {f"max_{c}" for c in columns}
     )
-    if set(stats.columns) != want:
+    if stats is None or set(stats.columns) != want:
         build_zonemap(spark, table_path, columns, idx)
-        _stamp()
         return (len(live), 0)
 
     indexed = {_norm(r[0]): r[0] for r in stats.select(_FILE).collect()}
     new = [orig for p, orig in sorted(live.items()) if p not in indexed]
     stale = [orig for p, orig in sorted(indexed.items()) if p not in live]
     if not new and not stale:
-        # index already matches the live set — just re-stamp (the
-        # mutation that bumped the token touched no data files)
-        _stamp()
-        return (0, 0)
+        return (0, 0)  # index already matches the live set
     kept = stats.filter(~F.col(_FILE).isin(stale)) if stale else stats
     if new:
         aggs = [F.count(F.lit(1)).alias("n_rows")]
@@ -578,12 +514,9 @@ def refresh_zonemap(
         )
         kept = kept.unionByName(fresh.select(*stats.columns))
     # The new index is derived from the old one lazily — materialize
-    # before overwriting the directory it reads from. The overwrite
-    # clears any previous _SYNC with the dir — correct: the stamp must
-    # postdate the index contents.
+    # before overwriting the directory it reads from.
     out = kept.localCheckpoint(eager=True)
     out.coalesce(1).write.mode("overwrite").parquet(idx)
-    _stamp()
     return (len(new), len(stale))
 
 
@@ -593,25 +526,18 @@ def fast_count(spark: SparkSession, table_path: str, index_dir: str | None = Non
     zero data reads — and only files the index has never seen are
     scanned. Exact under the advisory contract: stale index rows
     (files gone) are ignored via the live-set intersection, unindexed
-    files fall back to a real (column-less, footer-only) count. On a
-    token-synced index (see _index_is_synced) the count is PURE
-    metadata — one sidecar read, no directory listing, no footers.
+    files fall back to a real (column-less, footer-only) count. The
+    live set is _resolve_table's, one resolution per commit token.
     Committed deletion vectors mask rows the file counts still hold,
     so a table with any counts its masked live read instead."""
     from rds_to_datalake_project_spark.operators import deletevectors as dv
 
-    if dv.has_vectors(spark, table_path):
-        full, _live = _resolve_table(spark, table_path)
-        return dv.mask_deleted(spark, table_path, full).count()
-    idx = index_dir or _index_dir(table_path)
-    try:
-        stats = spark.read.parquet(idx).select(_FILE, "n_rows").collect()
-    except Exception:
-        stats = []
-    if stats and _index_is_synced(spark, table_path, idx):
-        return int(sum(r[1] for r in stats))
     full, live = _resolve_table(spark, table_path)
-    indexed = {_norm(r[0]): r[1] for r in stats}
+    if dv.has_vectors(spark, table_path):
+        return dv.mask_deleted(spark, table_path, full).count()
+    stats = read_sidecar(spark, index_dir or _index_dir(table_path))
+    rows = stats.select(_FILE, "n_rows").collect() if stats is not None else []
+    indexed = {_norm(r[0]): r[1] for r in rows}
     total = sum(n for p, n in indexed.items() if p in live)
     unindexed = [orig for p, orig in live.items() if p not in indexed]
     if unindexed:

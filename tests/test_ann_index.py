@@ -6,6 +6,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
+from rds_to_datalake_project_spark.fsio import write_text as _write_small
 from rds_to_datalake_project_spark.operators.ann_index import (
     _idx,
     ann_index_topk,
@@ -15,7 +16,6 @@ from rds_to_datalake_project_spark.operators.ann_index import (
 from rds_to_datalake_project_spark.operators.sidecar import epoch_of, read_state
 from rds_to_datalake_project_spark.operators.similarity import sq8_topk
 from rds_to_datalake_project_spark.operators.upsert import KeyedTable
-from rds_to_datalake_project_spark.operators.zonemap import _write_small
 from rds_to_datalake_project_spark.schema import TableSpec
 
 SPEC = TableSpec(

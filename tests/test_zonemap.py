@@ -230,15 +230,12 @@ def test_fast_count_metadata_only_and_fallback(spark, sf_dir, tmp_path):
     assert fast_count(spark, t.path) == t.read().count() == 30
 
 
-@pytest.mark.slow
-def test_synced_index_is_live_manifest_no_listing(spark, tmp_path, monkeypatch):
-    """On a KeyedTable whose zone map the publish protocol maintains,
-    a zoned read/count derives the live file set from the token-synced
-    index — NO directory listing (r5 verdict #1: the O(files)
-    inputFiles() round trip per read was the last per-query
-    driver-side metadata cost). The seam: _resolve_table is the only
-    listing path; poison it and the synced read must still work."""
-    from rds_to_datalake_project_spark.operators import zonemap as zm
+def test_zoned_reads_resolve_once_per_commit_token(spark, tmp_path, monkeypatch):
+    """Zoned reads and counts take the live set from _resolve_table,
+    memoized per commit token: within one token, two read_where calls
+    and a fast_count build the resolution once, and the next upsert
+    makes it resolve again — and see the new files."""
+    from rds_to_datalake_project_spark.operators import upsert as up
     from rds_to_datalake_project_spark.operators.upsert import KeyedTable
     from rds_to_datalake_project_spark.operators.zonemap import fast_count
     from rds_to_datalake_project_spark.schema import TableSpec
@@ -253,60 +250,108 @@ def test_synced_index_is_live_manifest_no_listing(spark, tmp_path, monkeypatch):
     )
     total = t.read().count()
 
-    def boom(*_a, **_k):
-        raise AssertionError("zoned read paid a directory listing")
+    builds = []
+    real = up.cache_fill
 
-    with monkeypatch.context() as m:
-        m.setattr(zm, "_resolve_table", boom)
+    def counting(ent, slot, build):
+        def counted():
+            if slot == "zresolve":
+                builds.append(slot)
+            return build()
+
+        return real(ent, slot, counted)
+
+    monkeypatch.setattr(up, "cache_fill", counting)
+    for _ in range(2):
         got = sorted(
-            (r.id, r.val)
-            for r in t.read_where({"score": (120, 130)}).collect()
+            (r.id, r.val) for r in t.read_where({"score": (120, 130)}).collect()
         )
         assert got == expect
-        assert fast_count(spark, t.path) == total
-
-    # out-of-band mutation (no refresh ran): the token mismatch must
-    # revoke trust and route back through a real listing
-    t._bump_seq()
-    with monkeypatch.context() as m:
-        m.setattr(zm, "_resolve_table", boom)
-        with pytest.raises(AssertionError, match="directory listing"):
-            t.read_where({"score": (120, 130)}).collect()
-    # ...and with the real listing the read is still exact (advisory)
-    got = sorted(
-        (r.id, r.val) for r in t.read_where({"score": (120, 130)}).collect()
-    )
-    assert got == expect
     assert fast_count(spark, t.path) == total
+    assert len(builds) == 1
 
-    # the next publish re-syncs the manifest
     t.upsert(_kv_rows(spark, range(150, 160), "v2"))
-    with monkeypatch.context() as m:
-        m.setattr(zm, "_resolve_table", boom)
-        assert fast_count(spark, t.path) == total + 10
+    builds.clear()
+    assert t.read_where({"score": (150, 159)}).count() == 10
+    assert fast_count(spark, t.path) == total + 10
+    assert len(builds) == 1
 
 
-def test_plain_directory_never_trusts_manifest(spark, sf_dir, tmp_path):
-    """A zone map built on a plain directory (no KeyedTable, no _SEQ
-    token) keeps the old behavior: listing every read, so out-of-band
-    appends stay visible (the advisory contract)."""
-    from rds_to_datalake_project_spark.operators.zonemap import (
-        _index_is_synced,
-        fast_count,
-        pruned_read,
+def test_committed_table_writes_no_manifest_markers(spark, tmp_path):
+    """A retained, zone-mapped table keeps one token: no commit —
+    load, upsert or partition drop — writes ``.meta/_SEQ`` or a
+    ``_SYNC`` / ``_SCHEMA`` stamp beside the zone map."""
+    import os
+
+    from rds_to_datalake_project_spark.operators.upsert import KeyedTable
+    from rds_to_datalake_project_spark.schema import TableSpec
+
+    spec = TableSpec("nm", record_key=("id",), precombine_key="update_at")
+    t = KeyedTable(
+        spark, str(tmp_path / "nm"), spec, retain_versions=2, zonemap_columns=["id"]
     )
+    t.initial_load(
+        _kv_rows(spark, range(20), "v0").unionByName(
+            _kv_rows(spark, range(20, 40), "v0", day="2024-01-02")
+        )
+    )
+    t.upsert(_kv_rows(spark, range(10, 30), "v1"))
+    assert t.vacuum_partitions(lambda vals: vals[-1] != "01") == 1
+    assert t.read().count() == 20
+    for marker in (".meta/_SEQ", ".zonemap/_SYNC", ".zonemap/_SCHEMA"):
+        assert not os.path.exists(os.path.join(t.path, marker)), marker
+
+
+def test_indexless_table_reads_no_sidecar(spark, tmp_path, monkeypatch):
+    """On a table without a zone map or bloom index, lookups, zoned
+    reads and zone_intervals pay an existence check, never a Spark
+    read of the missing sidecar directory."""
+    from pyspark.sql.readwriter import DataFrameReader
+
+    from rds_to_datalake_project_spark.operators.upsert import KeyedTable
+    from rds_to_datalake_project_spark.operators.zonemap import zone_intervals
+    from rds_to_datalake_project_spark.schema import TableSpec
+
+    spec = TableSpec("pl", record_key=("id",), precombine_key="update_at")
+    t = KeyedTable(spark, str(tmp_path / "pl"), spec)
+    t.initial_load(_kv_rows(spark, range(40), "v0"))
+
+    read_paths = []
+    real = DataFrameReader.parquet
+
+    def spy(self, *paths, **kw):
+        read_paths.extend(paths)
+        return real(self, *paths, **kw)
+
+    monkeypatch.setattr(DataFrameReader, "parquet", spy)
+    assert _rows(t.lookup("k7")) == [("k7", "v0")]
+    assert _rows(t.lookup_many(["k3", "k9"])) == [("k3", "v0"), ("k9", "v0")]
+    assert t.read_where({"score": (3, 5)}).count() == 3
+    assert zone_intervals(spark, t.path, "score") is None
+    assert read_paths  # the data reads went through the spy
+    assert [p for p in read_paths if ".zonemap" in p or ".bloomindex" in p] == []
+
+
+def test_corrupt_zonemap_warns_once_and_reads_exact(spark, sf_dir, tmp_path, caplog):
+    """A zone-map sidecar that exists but cannot be read degrades
+    visibly: one warning, and the read is the exact full filter."""
+    import logging
+    import os
+    import shutil
 
     path = str(tmp_path / "orders")
     _write_clustered(spark, sf_dir, path, n_files=4)
     build_zonemap(spark, path, ["o_orderdate"])
-    assert not _index_is_synced(spark, path, path + "/.zonemap")
-    expected = load_table(spark, sf_dir, "orders").count()
-    load_table(spark, sf_dir, "orders").limit(9).coalesce(1).write.mode(
-        "append"
-    ).parquet(path)
-    assert fast_count(spark, path) == expected + 9  # appended rows visible
-    n_all = pruned_read(spark, path, {"o_orderdate": (None, None)}).count()
-    assert n_all == expected + 9
+    idx = os.path.join(path, ".zonemap")
+    shutil.rmtree(idx)
+    os.makedirs(idx)
+    with open(os.path.join(idx, "part-junk.parquet"), "w") as f:
+        f.write("not parquet")
+    with caplog.at_level(logging.WARNING):
+        got = pruned_read(spark, path, PRED).count()
+    assert got == _expected(spark, sf_dir)
+    warned = [r for r in caplog.records if ".zonemap" in r.getMessage()]
+    assert len(warned) == 1
 
 
 def test_key_clustered_lookup_opens_few_files(spark, tmp_path):
@@ -411,18 +456,12 @@ def test_partitioned_read_where_keeps_partition_columns(spark, tmp_path):
     assert both.count() == 3
 
 
-def test_manifest_path_pins_schema_across_evolution(spark, tmp_path, monkeypatch):
-    """Trusted-manifest reads must resolve the FULL table schema, not
-    a merge over only the pruned files: after schema evolution a
-    pruned subset of old files can lack a column newer files carry,
-    and a downstream select on it must surface NULLs, not an
-    unresolved-column error (r6 ADVICE)."""
-    from rds_to_datalake_project_spark.operators import zonemap as zm
-    from rds_to_datalake_project_spark.operators.zonemap import (
-        _index_is_synced,
-        _write_small,
-        refresh_zonemap,
-    )
+def test_pruned_read_pins_full_schema_across_evolution(spark, tmp_path):
+    """Pruned reads resolve the FULL table schema, not a merge over
+    only the pruned files: after schema evolution a pruned subset of
+    old files can lack a column newer files carry, and a downstream
+    select on it must surface NULLs, not an unresolved-column error."""
+    from rds_to_datalake_project_spark.operators.zonemap import refresh_zonemap
 
     path = str(tmp_path / "evo")
     # old file: no 'extra' column; new file: evolved schema
@@ -433,29 +472,18 @@ def test_manifest_path_pins_schema_across_evolution(spark, tmp_path, monkeypatch
         [(i, f"v{i}", i * 10) for i in range(50, 100)],
         "key int, val string, extra int",
     ).coalesce(1).write.mode("append").parquet(path)
+    refresh_zonemap(spark, path, ["key"])
 
-    # simulate the KeyedTable publish protocol on this directory:
-    # token first, then a reconcile that stamps _SYNC (+ _SCHEMA)
-    _write_small(spark, f"{path}/.meta/_SEQ", "tok-1")
-    refresh_zonemap(spark, path, ["key"], sync_token="tok-1")
-    assert _index_is_synced(spark, path, f"{path}/.zonemap")
-
-    def boom(*_a, **_k):
-        raise AssertionError("manifest read paid a directory listing")
-
-    with monkeypatch.context() as m:
-        m.setattr(zm, "_resolve_table", boom)
-        out = pruned_read(spark, path, {"key": (0, 10)})
-        # prunes down to the OLD file only — 'extra' must still exist
-        rows = out.select("key", "extra").collect()
+    out = pruned_read(spark, path, {"key": (0, 10)})
+    assert len(out.inputFiles()) == 1  # prunes down to the OLD file only
+    # ... and 'extra' must still exist
+    rows = out.select("key", "extra").collect()
     assert len(rows) == 11
     assert all(r.extra is None for r in rows)
     # and the evolved rows keep their values through the same path
-    with monkeypatch.context() as m:
-        m.setattr(zm, "_resolve_table", boom)
-        got = pruned_read(spark, path, {"key": (60, 61)}).select(
-            "key", "extra"
-        ).collect()
+    got = pruned_read(spark, path, {"key": (60, 61)}).select(
+        "key", "extra"
+    ).collect()
     assert sorted((r.key, r.extra) for r in got) == [(60, 600), (61, 610)]
 
 
@@ -650,6 +678,8 @@ def test_bloom_auto_sizing_tracks_table_shape(spark, tmp_path):
         refresh_bloom_index,
     )
 
+    import json
+
     path = str(tmp_path / "dense")
     spark.range(40_000).selectExpr("id AS k", "id * 2 AS v").repartitionByRange(
         2, "k"
@@ -658,6 +688,8 @@ def test_bloom_auto_sizing_tracks_table_shape(spark, tmp_path):
     idx = f"{path}/.bloomindex"
     m, _k = _stored_mk(spark, idx)
     assert m == _auto_m_bits(40_000, 2) > M_BITS_MIN * 10
+    with open(f"{idx}/_PARAMS") as f:
+        assert json.load(f) == {"m_bits": m, "k": _k}
     # properly sized: a burst of absent probes skips everything
     absent = [10**9 + i for i in range(25)]
     _files, skipped = bloom_prune_files(spark, path, "k", absent)
@@ -671,6 +703,41 @@ def test_bloom_auto_sizing_tracks_table_shape(spark, tmp_path):
     # explicit mismatch → full rebuild under the requested size
     refresh_bloom_index(spark, path, ["k"], m_bits=M_BITS_MIN)
     assert _stored_mk(spark, idx)[0] == M_BITS_MIN
+
+
+def test_legacy_bloom_params_rebuild_once_and_stay_exact(spark, tmp_path):
+    """A pre-JSON ``"m k"`` _PARAMS marker is no readable index: the
+    probe full-scans (exact), and the next refresh rebuilds under JSON
+    params, after which probes prune again."""
+    import json
+
+    from rds_to_datalake_project_spark.operators.bloomfilter import (
+        _stored_mk,
+        bloom_prune_files,
+        bloom_pruned_read,
+        build_bloom_index,
+        refresh_bloom_index,
+    )
+
+    path = str(tmp_path / "legacy")
+    spark.range(4_000).selectExpr("id AS k", "id * 2 AS v").repartitionByRange(
+        4, "k"
+    ).write.mode("overwrite").parquet(path)
+    build_bloom_index(spark, path, ["k"])
+    idx = f"{path}/.bloomindex"
+    with open(f"{idx}/_PARAMS", "w") as f:
+        f.write("16384 5")
+    assert _stored_mk(spark, idx) is None
+    _files, skipped = bloom_prune_files(spark, path, "k", [17])
+    assert skipped == 0  # no readable index: full scan
+    assert [r.v for r in bloom_pruned_read(spark, path, "k", [17]).collect()] == [34]
+    assert refresh_bloom_index(spark, path, ["k"]) == (4, 0)  # rebuilt
+    with open(f"{idx}/_PARAMS") as f:
+        assert set(json.load(f)) == {"m_bits", "k"}
+    assert refresh_bloom_index(spark, path, ["k"]) == (0, 0)  # once
+    _files, skipped = bloom_prune_files(spark, path, "k", [17])
+    assert skipped >= 1
+    assert [r.v for r in bloom_pruned_read(spark, path, "k", [17]).collect()] == [34]
 
 
 @pytest.mark.slow
