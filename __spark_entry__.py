@@ -31,6 +31,7 @@ def _configure(spark: SparkSession) -> SparkSession:
         "spark.sql.sources.partitionColumnTypeInference.enabled": "false",
         "spark.sql.legacy.parquet.nanosAsLong": "true",
         "spark.sql.parquet.inferTimestampNTZ.enabled": "false",
+        "spark.sql.parquet.outputTimestampType": "TIMESTAMP_MICROS",
     }
     for k, v in conf.items():
         try:

@@ -3,10 +3,9 @@
 ``sq8_topk`` (operators/similarity.py) retrains bounds and re-codes
 the corpus on every call — right as an operator, wrong for a SERVED
 workload, where a 100-TB corpus must be coded once and queries must
-touch only the index. This module gives SQ8 the same treatment the
-zone map got (operators/upsert.py ``_maintain_zonemap``): a sidecar
-under the table, maintained incrementally from the lake's own commit
-history. Reference analog: the always-queryable Athena lake
+touch only the index. This module gives SQ8 the table-service
+treatment the bloom index has: a sidecar under the table, maintained
+incrementally from the lake's own commit history. Reference analog: the always-queryable Athena lake
 (reference rds_to_datalake/athena.py:16-64) — an index you call, not
 a job you rerun.
 

@@ -419,10 +419,10 @@ def refresh_bloom_index(
     m_bits: int | None = None,
     k_hashes: int = K_HASHES_DEFAULT,
 ) -> tuple[int, int]:
-    """Reconcile the bloom sidecar with the live file set — the same
-    incremental shape as refresh_zonemap: filter rows for files no
-    longer live are dropped, files the index has never seen are
-    scanned (ONLY those files) and their filters appended. Returns
+    """Reconcile the bloom sidecar with the live file set,
+    incrementally: filter rows for files no longer live are dropped,
+    files the index has never seen are scanned (ONLY those files) and
+    their filters appended. Returns
     ``(files_added, files_dropped)``. Column-set/parameter changes and
     a missing index fall back to a full build; cost is otherwise ∝
     files touched since the last reconcile. ``m_bits=None`` adopts
@@ -431,12 +431,13 @@ def refresh_bloom_index(
     an explicit mismatching value forces the rebuild."""
     idx = index_dir or _index_dir(table_path)
     full, live = _resolve_table(spark, table_path)
-    stats = read_sidecar(spark, idx)
+    # Read with the fixed layout (no inference job): a sidecar in any
+    # other layout has no JSON _PARAMS, so it rebuilds below.
+    stats = read_sidecar(spark, idx, _SIDECAR_SCHEMA)
     stored = _stored_mk(spark, idx)
     if (
         stats is None
         or stored is None
-        or set(stats.columns) != {_FILE, "col", "word_idx", "bits"}
         or (m_bits is not None and stored != (m_bits, k_hashes))
     ):
         build_bloom_index(spark, table_path, columns, idx, m_bits, k_hashes)
@@ -444,11 +445,15 @@ def refresh_bloom_index(
     # one job reads both reconcile inputs (indexed column set + indexed
     # file set) — this runs in every commit's maintenance slot, so each
     # saved driver-synchronized job is paid back per commit
-    sets = stats.agg(
-        F.collect_set("col").alias("cols"),
-        F.collect_set(_FILE).alias("files"),
-    ).collect()[0]
-    if set(sets["cols"]) != set(columns):
+    try:
+        sets = stats.agg(
+            F.collect_set("col").alias("cols"),
+            F.collect_set(_FILE).alias("files"),
+        ).collect()[0]
+    except Exception as exc:  # torn part files under valid params
+        warn_fallback(idx, "unreadable", exc)
+        sets = None
+    if sets is None or set(sets["cols"]) != set(columns):
         build_bloom_index(spark, table_path, columns, idx, m_bits, k_hashes)
         return (len(live), 0)
     m_bits, k_hashes = stored

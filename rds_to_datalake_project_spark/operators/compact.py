@@ -471,7 +471,7 @@ def attach_auto_compact(
     the compaction commit's own maintenance pass from recursing. It is
     registered as a hook that commits to the table, so it runs after
     the concurrent services, never beside them: its commit's nested
-    maintenance pass rewrites the zone map and the other sidecars.
+    maintenance pass rewrites the sidecars.
     """
     state = {"active": False}
 

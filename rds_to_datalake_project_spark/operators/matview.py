@@ -414,8 +414,8 @@ def _zone_pruned_rows(
     max_values: int = _MAX_PRUNE_VALUES,
 ) -> DataFrame | None:
     """Read only the base files that can hold a touched-group row, or
-    None when pruning cannot help (no zone-map sidecar over a physical
-    group column, a NULL touched value, too many touched values, or
+    None when pruning cannot help (no zone-mapped physical group
+    column, a NULL touched value, too many touched values, or
     incomparable zone types) — the caller then falls back to the full
     snapshot read.
 
@@ -423,9 +423,9 @@ def _zone_pruned_rows(
     wrong" #1): the touched-group semi-join always pruned what reached
     the AGGREGATION, but the underlying scan was corpus-sized — at
     100× with per-commit auto-refresh hooks every commit paid a full
-    fact scan. With a zone-map sidecar over a group column (the same
-    sidecar lookup/lookup_many compose), an incremental refresh now
-    opens files ∝ the touched groups' zones instead.
+    fact scan. With a zone-mapped group column (the zones
+    lookup/lookup_many compose), an incremental refresh now opens
+    files ∝ the touched groups' zones instead.
 
     Advisory and exact, same contract as KeyedTable.lookup_many: files
     the sidecar does not cover are unconditionally read, every
@@ -697,7 +697,7 @@ class _ViewSkeleton:
 
 def _attach(view, tables) -> None:
     """Enroll ``view.refresh`` in each table's post-commit maintenance
-    slot — the same advisory slot as the zone map / ANN / LSH services
+    slot — the same advisory slot as the bloom / ANN / LSH services
     (failures are isolated and surfaced by ``describe_history``; the
     view goes stale, never wrong, and the next refresh catches up).
     Whichever table commits, the refresh reads every head."""
@@ -769,7 +769,7 @@ class MaterializedView(_ViewSkeleton):
             # past this point the incremental path saves nothing anyway.
             return self._full(new)
         # Physical (non-derived) group columns prune the snapshot scan
-        # through the base's zone-map sidecar point-wise; derived
+        # through the base's zone map point-wise; derived
         # date_trunc keys prune through their source column's bucket
         # intervals. Advisory — None falls back to the full read, and
         # the semi-join below stays exact.
@@ -2373,8 +2373,8 @@ class DeltaChainMaterializedView(_SignedDeltaMergeMixin, ChainMaterializedView):
         key sets here come from change windows and their join
         neighborhoods. ``rows=None`` means the table's pristine current
         snapshot, which first gets advisory zone-map file pruning on
-        the key column (files opened ∝ the keys' zones when a sidecar
-        exists). NULL keys never equal anything, so they drop first —
+        the key column (files opened ∝ the keys' zones when it is
+        zone-mapped). NULL keys never equal anything, so they drop first —
         one would otherwise disable the zone pruning."""
         keys = keys.filter(F.col(key_col).isNotNull())
         if rows is None:

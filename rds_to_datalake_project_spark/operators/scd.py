@@ -298,7 +298,7 @@ class Scd2Store:
 
 def attach_scd2_maintenance(base, store: Scd2Store) -> None:
     """Keep the interval table fresh after every base commit — same
-    advisory post-commit slot as the matview / zone-map / ANN
+    advisory post-commit slot as the matview / bloom / ANN
     services: a failed refresh leaves a stale cursor, never a wrong
     interval, and the next refresh catches up."""
 

@@ -80,7 +80,7 @@ def attach_stats_maintenance(
     table: KeyedTable, exact_distinct: bool = False, refresh_every: int = 1
 ) -> None:
     """Post-commit hook keeping the stats sidecar fresh (same
-    failure-isolated advisory slot as the zone map). A stats build is
+    failure-isolated advisory slot as the bloom index). A stats build is
     a full scan — ``refresh_every=N`` amortizes it to every Nth
     commit; in between, consumers see the last consistent profile
     (row counts at most N commits stale, which a cost model

@@ -141,7 +141,9 @@ class _Handoff:
     all nullable, then the partition columns as strings — None until
     a commit has seen it. ``since``: every retained version from it to
     the head consists of such files, so ``read_as_of`` takes the
-    schema too (None: no version is vouched for). Keyed by the token
+    schema too (None: no version is vouched for). A retaining load
+    starts the run at 0; after a load that kept no versions, the first
+    retained commit starts it at its own version. Keyed by the token
     the commit wrote, so any later commit, from any handle or process,
     retires the record."""
 
@@ -184,9 +186,14 @@ def handed_off_schema(ent: dict | None, version: int | None = None):
     return rec.schema
 
 
-def _drop_plans(path: str) -> None:
+def _drop_plans(path: str, keep_token: str | None = None) -> None:
+    """Drop the table's plan-cache slot, unless it belongs to
+    ``keep_token``."""
+    key = _norm_table_path(path)
     with _PLAN_CACHE_LOCK:
-        _PLAN_CACHE.pop(_norm_table_path(path), None)
+        ent = _PLAN_CACHE.get(key)
+        if ent is not None and (keep_token is None or ent["token"] != keep_token):
+            del _PLAN_CACHE[key]
 
 
 def invalidate_plan_cache(path: str | None = None) -> None:
@@ -207,31 +214,43 @@ def _invalidates(fn):
     call returns — success OR failure (a raise half-way through a
     vacuum/publish may already have moved files). A handed-off schema
     survives: it names the commit token it describes, and every
-    engine mutation of the live files writes a new token."""
+    engine mutation of the live files writes a new token.
+
+    On success, a slot keyed on the token this call wrote survives
+    too: the token is the last step of the call's live-tree mutation,
+    so what the commit's own services resolved under it (the live set
+    the first read after the commit needs) still describes the table."""
 
     @functools.wraps(fn)
     def wrapper(self, *a, **k):
+        before = self._written_token
+        done = False
         try:
-            return fn(self, *a, **k)
+            out = fn(self, *a, **k)
+            done = True
+            return out
         finally:
-            _drop_plans(self.path)
+            wrote = self._written_token
+            _drop_plans(self.path, wrote if done and wrote != before else None)
 
     return wrapper
 
 
 def resolve_cache_entry(spark, path: str) -> dict | None:
     """The table's read-plan cache slot: analyzed read frames,
-    ``zonemap._resolve_table``'s (full, live) result — the mergeSchema
-    footer sweep + listing every zoned probe, matview refresh step and
-    reconcile pays (~100-500 ms of driver wall each) — and sidecar
-    memos. Fill it through ``cache_fill``.
+    ``zonemap._resolve_table``'s (full, live) result — the listing
+    every zoned probe, matview refresh step and sidecar reconcile pays
+    (~100-500 ms of driver wall each) — the zone map's column list and
+    per-file footer zones, and the bloom sidecar memo. Fill it through
+    ``cache_fill``. The commit that wrote the token keeps what its own
+    services filled (``_invalidates``), so the first read after it
+    lists nothing again.
 
     ``ent["handoff"]`` carries the schema the commit that wrote this
     token handed off (``_Handoff``; None when it handed off nothing):
     ``read``, ``read_as_of`` and ``zonemap._resolve_table`` read with
-    it and run no inference job. It outlives the slot's frames — the
-    commit's own ``@_invalidates`` drops those on return, and the next
-    slot for the same token picks the record up again.
+    it and run no inference job. It outlives the slot's frames, so a
+    slot rebuilt for the same token picks the record up again.
 
     Eligible ONLY for local paths whose commit token EXISTS: the token
     is rewritten as the LAST metadata step of every live-tree mutation
@@ -273,8 +292,8 @@ def resolve_cache_entry(spark, path: str) -> dict | None:
 def cache_fill(ent: dict | None, slot, build):
     """``ent["frames"][slot]``, built by ``build()`` on a miss —
     SINGLE-FLIGHT: post-commit services run concurrently and often
-    want the same slot (the zone-map and bloom reconciles both resolve
-    the table), so the first caller builds under that slot's lock and
+    want the same slot (the bloom reconcile and the view refresh both
+    resolve the table), so the first caller builds under that slot's lock and
     the others wait for its result instead of paying the footer job
     and listing again. Builds of different slots never wait for each
     other. ``ent=None`` (an ineligible table) just builds."""
@@ -354,6 +373,8 @@ class KeyedTable:
     # Subclasses that RESOLVE the .meta/_CLONE marker (operators/
     # clone.ClonedTable) set True; plain handles refuse clone paths.
     _CLONE_AWARE = False
+    # The last commit token this handle wrote (see _invalidates).
+    _written_token: str | None = None
 
     def __init__(
         self,
@@ -378,15 +399,14 @@ class KeyedTable:
         if changes_feed_dir and not retain_versions:
             raise ValueError("changes_feed_dir requires retain_versions > 0")
         self.changes_feed_dir = changes_feed_dir
-        # Optional per-file min/max skipping index (operators/zonemap),
-        # maintained incrementally after every publish — the Hudi/Delta
-        # "table services" analog. Advisory: reads stay correct if
-        # maintenance never ran (unindexed files are always scanned).
+        # Columns whose per-file min/max (read from the parquet
+        # footers, operators/zonemap) prune zoned reads; each commit
+        # lists them in the table's zone-map column list. Advisory:
+        # files without a zone are always scanned.
         self.zonemap_columns = list(zonemap_columns or [])
-        # Post-commit maintenance hooks (table services beyond the
-        # zone map — e.g. operators/ann_index.attach_ann_maintenance).
-        # Each runs after every successful commit, in the same
-        # advisory slot as the zone-map reconcile.
+        # Post-commit maintenance hooks (table services — e.g. the
+        # bloom index, operators/ann_index.attach_ann_maintenance).
+        # Each runs after every successful commit, in an advisory slot.
         self._maintenance_hooks: list = []
         # The most recent commit's post-commit service failures (see
         # _run_maintenance) — [] after a clean run.
@@ -1174,9 +1194,9 @@ class KeyedTable:
             # against the snapshot it actually published over.
             self._write_ready_flag(staging, base_token=self.commit_token())
             self._fault("flag_created")
-            token = self._publish_under_lock(staging)
+            token, version = self._publish_under_lock(staging)
             if written is not None:
-                self._hand_off_written(token, base_token, written)
+                self._hand_off_written(token, base_token, written, version)
         self._run_maintenance()
         return True
 
@@ -1186,11 +1206,14 @@ class KeyedTable:
         remote tables keep no plan cache)."""
         return type(self) is KeyedTable and fsio.is_local(self.path)
 
-    def _hand_off_written(self, token: str, base_token, written) -> None:
+    def _hand_off_written(self, token: str, base_token, written, version) -> None:
         """Record that every live file now carries ``written`` — true
         when the commit replaced the whole file set (unpartitioned), or
         when every file was already alike (the record of ``base_token``
-        says so) and the commit wrote its files the same way."""
+        says so) and the commit wrote its files the same way. The
+        vouched run of retained versions carries on from the base
+        record's, or starts at ``version``, the one this commit
+        published: its files are exactly the live ones."""
         if not self._hands_off():
             return
         base = _handoff_for(self.spark, self.path, base_token)
@@ -1202,9 +1225,10 @@ class KeyedTable:
             [T.StructField(f.name, f.dataType, True, f.metadata) for f in written.fields]
             + [T.StructField(c, T.StringType(), True) for c in self.partition_cols]
         )
+        since = base.since if base else None
         _hand_off(
             self.path,
-            _Handoff(token, self.spark, schema, base.since if base else None),
+            _Handoff(token, self.spark, schema, version if since is None else since),
         )
 
     def _data_schema(self, schema):
@@ -1389,7 +1413,7 @@ class KeyedTable:
         return rolled
 
     @_invalidates
-    def _publish_under_lock(self, staging: str) -> None:
+    def _publish_under_lock(self, staging: str) -> tuple[str, int | None]:
         """Swap a publish-ready staging dir into the live tree.
 
         Idempotent and resumable: each partition swap renames the live
@@ -1404,10 +1428,11 @@ class KeyedTable:
         maintenance is the CALLER's job, outside the mutex: it is
         advisory, and matview auto-refresh hooks can be arbitrarily
         expensive — the serialized section stays metadata renames +
-        the changes-feed append. Returns the new commit token, the one
+        the changes-feed append. Returns the new commit token — the one
         token that says the live file set changed: the read-plan cache
         (and the live set every zoned read takes from it) is keyed on
-        it.
+        it — and the version this commit published (None on an
+        unretained table).
         """
         rec = commitlog.read(self._fs, commitlog.staged_path(staging))
         version = rec.version if self.retain_versions else None
@@ -1508,15 +1533,15 @@ class KeyedTable:
             # publish, so retired copies can never grow unbounded
             # behind a caller who forgets to vacuum.
             self.vacuum_versions(keep_last=self.retain_versions)
-        return token
+        return token, version
 
     def add_maintenance_hook(self, fn, commits_to_table: bool = False) -> None:
         """Register ``fn(table)`` to run after every successful commit
         (post-publish, outside the crash-critical span — a failure
         leaves a stale-but-advisory service, never a bad table). The
         engine's extension point for derived table services: the SQ8
-        ANN index attaches here (operators/ann_index.py), the same
-        slot the built-in zone-map reconcile occupies.
+        ANN index attaches here (operators/ann_index.py), as does the
+        bloom index.
 
         Services run CONCURRENTLY with each other (see
         ``_run_maintenance``), so a hook must write only its own output
@@ -1529,7 +1554,11 @@ class KeyedTable:
         self._maintenance_hooks.append((fn, commits_to_table))
 
     def _run_maintenance(self) -> None:
-        """Run the zone-map reconcile plus every registered hook.
+        """Run every registered hook (the table services), after
+        listing ``zonemap_columns`` in the zone-map column list when it
+        does not list them yet — a metadata write, isolated like a
+        service and reported as ``zonemap``: zones come from the data
+        files' footers, so the zone map has no service of its own.
 
         CONCURRENT: the services read the committed table and each
         write only their own output, so they all start at once (one
@@ -1546,8 +1575,8 @@ class KeyedTable:
         refresh safe (the service goes stale-but-advisory and
         consumers fall back / rebuild); isolation extends that to a
         *raising* one. Failures are logged, kept on
-        ``last_maintenance_errors`` in REGISTRATION order (the
-        zone map first), persisted under ``.meta/_MAINT_ERRORS`` and
+        ``last_maintenance_errors`` in REGISTRATION order, persisted
+        under ``.meta/_MAINT_ERRORS`` and
         surfaced by ``describe_history()``. Mirrors the reference's
         contract that a hive_sync failure never corrupts the committed
         Hudi write (glue_jobs/initial_load.py:168-183 — sync is
@@ -1556,8 +1585,6 @@ class KeyedTable:
             (getattr(fn, "__name__", repr(fn)), fn, alone)
             for fn, alone in self._maintenance_hooks
         ]
-        if self.zonemap_columns:
-            services.insert(0, ("zonemap", KeyedTable._maintain_zonemap, False))
 
         def isolated(service) -> dict | None:
             hook_name, fn, _alone = service
@@ -1574,10 +1601,18 @@ class KeyedTable:
                 return {"hook": hook_name, "error": f"{type(exc).__name__}: {exc}"}
             return None
 
+        from rds_to_datalake_project_spark.operators import zonemap as _zm
+
+        def zone_columns(t):
+            _zm._add_columns(t.spark, t.path, t.zonemap_columns)
+
+        outcomes = (
+            [isolated(("zonemap", zone_columns, True))] if self.zonemap_columns else []
+        )
         concurrent = iter(
             pmap(self.spark, isolated, [sv for sv in services if not sv[2]])
         )
-        outcomes = [isolated(sv) if sv[2] else next(concurrent) for sv in services]
+        outcomes += [isolated(sv) if sv[2] else next(concurrent) for sv in services]
         failures = [f for f in outcomes if f]
         self.last_maintenance_errors = failures
         self._persist_maint_errors(failures)
@@ -1604,11 +1639,6 @@ class KeyedTable:
             return json.loads(raw)
         except ValueError:
             return None
-
-    def _maintain_zonemap(self) -> None:
-        from rds_to_datalake_project_spark.operators.zonemap import refresh_zonemap
-
-        refresh_zonemap(self.spark, self.path, self.zonemap_columns)
 
     # -- multi-writer safety (optimistic concurrency) -------------------------
     #
@@ -1653,6 +1683,7 @@ class KeyedTable:
     def _write_commit_token(self) -> str:
         token = uuid.uuid4().hex
         self._fs.publish_text(f"{self.path}/{_TOKEN_FILE}", token)
+        self._written_token = token
         return token
 
     def _try_lock_create(self, holder: str) -> bool:
@@ -1739,9 +1770,9 @@ class KeyedTable:
         RANGE cut (O(1) files on a key-clustered layout) intersected
         with the bloom's MEMBERSHIP cut, which is what survives on
         unclustered layouts where every file's key range spans the
-        table. Both sidecars are held in a driver memo keyed on the
-        commit token and on each sidecar's file listing
-        (zonemap.sidecar_memo), so a warm lookup runs one Spark job,
+        table. The zones and the bloom sidecar are held in driver memos
+        keyed on the commit token (the bloom's also on its file listing,
+        zonemap.sidecar_memo), so a warm lookup runs one Spark job,
         the data read: the probe's bit positions fold into a local
         relation evaluated on the driver. A table with no bloom
         sidecar takes the zone-pruned :meth:`read_where` route. Both
@@ -2774,7 +2805,7 @@ class KeyedTable:
            persisted BEFORE the deletes, so later publishes cannot
            re-materialize expired batches.
 
-        Attached sidecar services (zone map, bloom, ANN, LSH) refresh
+        Attached sidecar services (bloom, ANN, LSH) refresh
         with the delete commit and derive from live data only, so the
         purged rows leave them in the same pass. Returns rows purged.
         """

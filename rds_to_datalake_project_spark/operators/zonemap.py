@@ -1,62 +1,69 @@
 """Zone maps — per-file min/max statistics for scan-time file skipping.
 
-What Delta/Iceberg keep in their transaction-log / manifest stats
-(SURVEY.md §4 "Upsert physical strategy": "file-skipping by min/max
-stats"), re-expressed for the engine's plain-parquet lake tables: a
-tiny parquet sidecar under ``<table>/.zonemap`` holding one row per
-data file with min / max / row count for the indexed columns. A read
-with a range or point predicate consults the sidecar and hands Spark
-the exact list of files whose [min, max] zones intersect the
-predicate — files the index proves out of range are never opened.
-Parquet row-group stats still prune WITHIN each opened file; the zone
-map prunes the file SET, which at 100 TB is the difference between
-touching ~800k file footers and reading a sub-megabyte index. The
-payoff compounds with the clustering passes (operators/compact.py
-``cluster_by``: Hilbert / Z-order range repartition): clustered files
-own narrow value ranges, so zones are tight and most files drop out.
+What Delta/Iceberg keep with each file's log entry (SURVEY.md §4:
+"file-skipping by min/max stats"), read here from the parquet footer
+every data file already carries. A range or point read hands Spark only
+the files whose [min, max] zones intersect the predicate; parquet
+row-group stats still prune within each opened file. Clustering
+(operators/compact.py ``cluster_by``) makes zones tight.
 
-Correctness stance — the index is ADVISORY:
+- Which columns are zone-mapped is table metadata: a JSON list at
+  ``<table>/.zonemap/_COLUMNS``, written by ``build_zonemap`` and by a
+  KeyedTable whose ``zonemap_columns=`` it does not list yet (no Spark
+  job), read once per commit token. A legacy ``.zonemap`` sidecar
+  without the list takes its columns from its ``min_*`` fields.
+  Predicates on other columns prune nothing.
+- A driver-side footer cache keyed on (path, size, mtime), behind a
+  lock and a size bound, is filled by ``pyarrow.parquet.read_metadata``
+  for files it has not seen; row groups fold into one zone per file.
+  No commit maintains anything: a file's stats are written with it.
+- Zone values are what Spark's ``min``/``max`` collect returns:
+  strings, ints, longs and doubles as stored (NaN is a double's max, as
+  in Spark's order), decimals from unscaled integer and scale, dates
+  and ``TIMESTAMP_MICROS`` timestamps (the session default, see
+  session.get_spark) via ``fromInternal``. A hive partition column's
+  zone is its path value. ``tests/test_zonemap_footers.py`` pins each
+  type against Spark's own per-file aggregates.
 
-- The live file set and the full-table schema always come from the
-  table itself (_resolve_table, resolved once per commit token); the
-  sidecar only says which of those files a predicate can skip. Files
-  present on disk but absent from the index are ALWAYS read, so a
-  stale or partial index (crash mid-build, files appended since)
-  degrades to reading more files, never to row loss. Spark part-file
-  names are globally unique (task UUIDs), so an index row can never
-  describe a *different* file of the same name.
-- A missing sidecar costs one existence check; one that exists but
-  cannot be read logs a warning and the read scans every live file.
-- Pruning drops a file only when the predicate interval provably
-  misses [min, max]. An all-null zone (min/max NULL) is droppable for
-  range predicates: a comparison with NULL is never true.
-- Range reads evaluate bounds by Spark expressions over the stats
-  frame, so type coercion matches the main scan's semantics exactly.
-  Point probes planned on the driver (lookup, lookup_many, matview
-  recompute scans) use zone_overlaps, which follows Spark's ordering
-  (NaN largest) and keeps a file whenever Python and Spark could
-  disagree (mismatched types, a comparison that raises).
+ADVISORY, so every read is exactly the full-scan filter:
 
-The build is one column-pruned distributed aggregation (only the
-indexed columns are read) grouped by ``input_file_name()`` — no data
-rows ever reach the driver; the collect is one row per pruned-in
-file, the same driver-side footprint as Delta's log replay.
+- The live file set and full schema come from the table itself
+  (_resolve_table, once per commit token); zones only say which of
+  those files a predicate can skip.
+- A file has no zone on a column, and is always read, when a row group
+  lacks statistics, when the type is not one of the above (float,
+  INT96, boolean, binary, nested ...), when its footer is unreadable
+  (one warning per file) or on a scheme other than local or ``file:``.
+- A column that is all NULL in a file, or missing from a file older
+  than the schema evolution that added it, has the zone (None, None),
+  which no range matches: a comparison with NULL is never true.
+- Range reads evaluate bounds by Spark expressions over a local frame
+  of the zones (its collect runs no job), so coercion matches the main
+  scan's. Driver-planned point probes (lookup, lookup_many, matview
+  recompute scans) use zone_overlaps, which follows Spark's order and
+  keeps a file wherever Python and Spark could disagree.
 """
 
 from __future__ import annotations
 
+import datetime
+import json
 import logging
 import math
 import os
+import re
 import threading
-from urllib.parse import urlparse
+from decimal import Decimal
+from urllib.parse import unquote, urlparse
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from rds_to_datalake_project_spark import fsio
 
 _FILE = "file_uri"
+_COLUMNS = "_COLUMNS"
 
 # Diagnostics: CUMULATIVE zoned-read pruning verdicts since
 # reset_prune_stats() — what bench.py reports as the index's
@@ -86,10 +93,10 @@ def _record_prune(stats: dict, files_total: int, files_read: int) -> None:
 
 
 def warn_fallback(idx: str, what: str, exc: Exception) -> None:
-    """One visible warning for a sidecar a probe cannot use."""
+    """One visible warning for index metadata a probe cannot use."""
     msg = str(exc)
     logging.getLogger(__name__).warning(
-        "sidecar %s %s (%s: %s) — reads fall back to full scans",
+        "%s %s (%s: %s) — reads fall back to full scans",
         idx,
         what,
         type(exc).__name__,
@@ -97,18 +104,17 @@ def warn_fallback(idx: str, what: str, exc: Exception) -> None:
     )
 
 
-def read_sidecar(
-    spark: SparkSession, idx: str, schema: str | None = None
-) -> DataFrame | None:
-    """The parquet sidecar at ``idx`` as a frame, or None when there is
-    no readable one. A missing sidecar — every un-indexed table — costs
-    one existence check and no Spark read; one that exists but cannot
-    be read logs a warning (warn_fallback). Either way the caller falls
-    back to a full scan (or a rebuild), so the result stays exact."""
+def read_sidecar(spark: SparkSession, idx: str, schema: str) -> DataFrame | None:
+    """The parquet sidecar at ``idx`` in its fixed layout ``schema``, or
+    None when there is no readable one. A missing sidecar — every
+    un-indexed table — costs one existence check and no Spark read; one
+    that exists but cannot be listed logs a warning (warn_fallback).
+    Either way the caller falls back to a full scan (or a rebuild), so
+    the result stays exact."""
     if not fsio.fs_for(spark, idx).exists(idx):
         return None
     try:
-        return (spark.read.schema(schema) if schema else spark.read).parquet(idx)
+        return spark.read.schema(schema).parquet(idx)
     except Exception as exc:
         warn_fallback(idx, "unreadable", exc)
         return None
@@ -124,45 +130,322 @@ def _norm(uri: str) -> str:
     return parsed.path if parsed.scheme else uri
 
 
+def _local_file(uri: str) -> str | None:
+    """The OS path of a plain or ``file:`` path, None on other schemes."""
+    parsed = urlparse(uri)
+    if not parsed.scheme:
+        return uri
+    return unquote(parsed.path) if parsed.scheme == "file" else None
+
+
+# -- the zone-mapped column list --------------------------------------------
+
+
+def _read_columns(spark: SparkSession, idx: str) -> list[str]:
+    """The recorded column list; a legacy sidecar's ``min_*`` columns;
+    else none."""
+    txt = fsio.read_text(spark, f"{idx}/{_COLUMNS}")
+    if txt is not None:
+        try:
+            return [str(c) for c in json.loads(txt)]
+        except (ValueError, TypeError) as exc:
+            warn_fallback(idx, "column list unreadable", exc)
+            return []
+    local = _local_file(idx)
+    if local is None or not os.path.isdir(local):
+        return []
+    import pyarrow.parquet as pq
+
+    try:
+        part = min(
+            n for n in os.listdir(local)
+            if n.endswith(".parquet") and not n.startswith((".", "_"))
+        )
+        names = pq.read_schema(os.path.join(local, part)).names
+    except Exception as exc:
+        warn_fallback(idx, "unreadable", exc)
+        return []
+    return [n[4:] for n in names if n.startswith("min_") and f"max_{n[4:]}" in names]
+
+
+def zoned_columns(
+    spark: SparkSession, table_path: str, index_dir: str | None = None
+) -> list[str]:
+    """The table's zone-mapped columns, read once per commit token
+    (upsert.resolve_cache_entry)."""
+    from rds_to_datalake_project_spark.operators.upsert import (
+        cache_fill,
+        resolve_cache_entry,
+    )
+
+    idx = index_dir or _index_dir(table_path)
+    ent = resolve_cache_entry(spark, table_path)
+    return cache_fill(ent, ("zcolumns", idx), lambda: _read_columns(spark, idx))
+
+
+def _write_columns(
+    spark: SparkSession, table_path: str, idx: str, columns: list[str]
+) -> None:
+    """Replace the sidecar directory by the column list alone (legacy
+    part files describe nothing any more) and forget the memoized list."""
+    from rds_to_datalake_project_spark.operators.upsert import (
+        resolve_cache_entry,
+    )
+
+    fs = fsio.fs_for(spark, idx)
+    fs.delete(idx, True)
+    fs.publish_text(f"{idx}/{_COLUMNS}", json.dumps(columns))
+    ent = resolve_cache_entry(spark, table_path)
+    if ent is not None:
+        ent["frames"].pop(("zcolumns", idx), None)
+
+
 def build_zonemap(
     spark: SparkSession,
     table_path: str,
     columns: list[str],
     index_dir: str | None = None,
 ) -> None:
-    """(Re)build the zone-map sidecar for ``columns``.
+    """Zone-map exactly ``columns``: record them as the table's column
+    list, replacing an earlier list or a legacy sidecar. Runs no Spark
+    job — the zones are the data files' own footer statistics."""
+    _write_columns(spark, table_path, index_dir or _index_dir(table_path), list(columns))
 
-    One distributed scan reading only the indexed columns; output is
-    one row per data file: ``file_uri, n_rows, min_<c>, max_<c> ...``.
-    Written with overwrite into a dot-dir, which every table reader
-    skips, so the index never shadows table data.
-    """
-    # Only the conf + the frame — no file-map here (the inputFiles()
-    # enumeration _resolve_table does would be a wasted full listing
-    # on every index build).
-    spark.conf.set(
-        "spark.sql.sources.partitionColumnTypeInference.enabled", "false"
+
+def _add_columns(spark, table_path: str, columns, index_dir=None) -> list[str]:
+    """Make sure the column list includes ``columns``; returns the ones
+    it added."""
+    idx = index_dir or _index_dir(table_path)
+    have = zoned_columns(spark, table_path, idx)
+    added = [c for c in dict.fromkeys(columns) if c not in have]
+    if added:
+        _write_columns(spark, table_path, idx, have + added)
+    return added
+
+
+def refresh_zonemap(
+    spark: SparkSession, table_path: str, columns: list[str], index_dir: str | None = None
+) -> list[str]:
+    """``_add_columns``, by its old name. New files carry their own
+    footer stats, so no commit calls it: a KeyedTable with
+    ``zonemap_columns=`` lists its columns itself."""
+    return _add_columns(spark, table_path, columns, index_dir)
+
+
+# -- the footer cache ---------------------------------------------------------
+
+# {(local path, size, mtime_ns): (num_rows, {lower-cased column: zone})
+#  or None when the footer is unreadable}. A zone is (min, max), (None,
+# None) when all NULL, or None for no zone; a column the file lacks is
+# absent (Spark reads it as NULL). Cleared whole at the bound.
+_FOOTERS: dict = {}
+_FOOTERS_MAX = 65536
+_FOOTERS_LOCK = threading.Lock()
+
+# The Python type of every covered Spark type's values; the footer
+# values of any other type never prune.
+_ZONE_TYPES = {
+    T.StringType: str,
+    T.IntegerType: int,
+    T.LongType: int,
+    T.DoubleType: float,
+    T.DecimalType: Decimal,
+    T.DateType: datetime.date,
+    T.TimestampType: datetime.datetime,
+}
+
+
+def _converter(col):
+    """``raw footer statistic -> value as Spark collects it`` for one
+    parquet leaf column, or None when its type is not covered."""
+    phys, logical = col.physical_type, col.logical_type.type
+    if phys == "BYTE_ARRAY" and logical == "STRING":
+        return lambda raw: raw.decode("utf-8")
+    if phys in ("INT32", "INT64") and logical == "NONE":
+        return int
+    if phys == "DOUBLE" and logical == "NONE":
+        return float
+    if logical == "DECIMAL" and phys in ("INT32", "INT64", "FIXED_LEN_BYTE_ARRAY"):
+        scale = col.scale
+
+        def decimal(raw):
+            if isinstance(raw, bytes):
+                raw = int.from_bytes(raw, "big", signed=True)
+            return Decimal(f"{raw}E-{scale}")
+
+        return decimal
+    if phys == "INT32" and logical == "DATE":
+        return T.DateType().fromInternal
+    if phys == "INT64" and logical == "TIMESTAMP":
+        unit = json.loads(col.logical_type.to_json())
+        if unit.get("isAdjustedToUTC") and unit.get("timeUnit") == "microseconds":
+            return T.TimestampType().fromInternal
+    return None
+
+
+def _column_zone(md, i: int, convert):
+    """One column's zone folded over every row group of a footer."""
+    if convert is None:
+        return None
+    lo = hi = None
+    for g in range(md.num_row_groups):
+        group = md.row_group(g)
+        st = group.column(i).statistics
+        if st is None:
+            return None
+        if not st.has_min_max:
+            if st.has_null_count and st.null_count == group.num_rows:
+                continue  # all NULL in this group
+            return None
+        a, b = convert(st.min_raw), convert(st.max_raw)
+        lo = a if lo is None or _spark_order(a) < _spark_order(lo) else lo
+        hi = b if hi is None or _spark_order(b) > _spark_order(hi) else hi
+    return (lo, hi)
+
+
+def _read_footer(local: str) -> tuple[int, dict]:
+    """Zones of every top-level primitive column of one file (names
+    that collide case-insensitively get none)."""
+    import pyarrow.parquet as pq
+
+    md = pq.read_metadata(local)
+    top = set(md.schema.to_arrow_schema().names)
+    zones: dict = {}
+    for i in range(md.num_columns):
+        col = md.schema.column(i)
+        if col.path in top:
+            name = col.path.lower()
+            zones[name] = None if name in zones else _column_zone(md, i, _converter(col))
+    return md.num_rows, zones
+
+
+def _footer(uri: str):
+    """``(num_rows, zones)`` of one data file from the cache, or None
+    when its footer cannot be read here."""
+    local = _local_file(uri)
+    if local is None:
+        return None
+    try:
+        st = os.stat(local)
+    except OSError:
+        return None
+    key = (local, st.st_size, st.st_mtime_ns)
+    with _FOOTERS_LOCK:
+        if key in _FOOTERS:
+            return _FOOTERS[key]
+    try:
+        facts = _read_footer(local)
+    except Exception as exc:
+        warn_fallback(local, "footer unreadable", exc)
+        facts = None
+    with _FOOTERS_LOCK:
+        if len(_FOOTERS) >= _FOOTERS_MAX:
+            _FOOTERS.clear()
+        _FOOTERS[key] = facts
+    return facts
+
+
+def _file_facts(spark: SparkSession, table_path: str, live: dict) -> dict:
+    """``{normalized path: (num_rows, zones) | None}`` for every live
+    file, memoized per commit token."""
+    from rds_to_datalake_project_spark.operators.upsert import (
+        cache_fill,
+        resolve_cache_entry,
     )
-    df = spark.read.option("mergeSchema", "true").parquet(table_path)
-    aggs = [F.count(F.lit(1)).alias("n_rows")]
-    for c in columns:
-        aggs.append(F.min(c).alias(f"min_{c}"))
-        aggs.append(F.max(c).alias(f"max_{c}"))
-    stats = (
-        df.select(*columns)
-        .withColumn(_FILE, F.input_file_name())
-        .groupBy(_FILE)
-        .agg(*aggs)
+
+    return cache_fill(
+        resolve_cache_entry(spark, table_path),
+        "zfacts",
+        lambda: {p: _footer(orig) for p, orig in live.items()},
     )
-    # A handful of KB: one output file keeps the read side a single
-    # footer fetch.
-    stats.coalesce(1).write.mode("overwrite").parquet(
-        index_dir or _index_dir(table_path)
+
+
+def _unescape(v: str) -> str:
+    """Spark's partition-path unescaping (%XX → the character)."""
+    return re.sub("%([0-9A-Fa-f]{2})", lambda m: chr(int(m.group(1), 16)), v)
+
+
+def _partition_values(base: str, uri: str) -> dict:
+    """The hive ``k=v`` directory values between ``base`` and a file."""
+    local = _local_file(uri) or _norm(uri)
+    if not local.startswith(base + "/"):
+        return {}
+    out = {}
+    for seg in local[len(base) + 1:].split("/")[:-1]:
+        k, eq, v = seg.partition("=")
+        if eq:
+            out[k] = None if v == "__HIVE_DEFAULT_PARTITION__" else _unescape(v)
+    return out
+
+
+def _column_zones(spark: SparkSession, table_path: str, full, live: dict, col: str) -> dict:
+    """``{normalized path: (min, max)}`` of the live files with a zone
+    on ``col``, memoized per commit token."""
+    from rds_to_datalake_project_spark.operators.upsert import (
+        cache_fill,
+        resolve_cache_entry,
     )
+
+    def build():
+        if col not in full.columns:
+            return {}
+        dtype = full.schema[col].dataType
+        want = _ZONE_TYPES.get(type(dtype))
+        if want is None or getattr(dtype, "collation", "UTF8_BINARY") != "UTF8_BINARY":
+            return {}
+        facts = _file_facts(spark, table_path, live)
+        base = (_local_file(table_path) or _norm(table_path)).rstrip("/")
+        out = {}
+        for p, orig in live.items():
+            if facts.get(p) is None:
+                continue
+            part = _partition_values(base, orig)
+            if col in part:
+                zone = (part[col], part[col])
+            else:
+                zone = facts[p][1].get(col.lower(), (None, None))
+            if zone is None:
+                continue
+            if zone[0] is not None and not (type(zone[0]) is want and type(zone[1]) is want):
+                continue
+            out[p] = zone
+        return out
+
+    return cache_fill(resolve_cache_entry(spark, table_path), ("zone", col), build)
+
+
+def _frame(spark: SparkSession, rows: list, schema: T.StructType) -> DataFrame:
+    """local_frame over zone rows. Zone timestamps are naive local
+    times, as ``fromInternal`` returns them; the frame needs instants."""
+    from rds_to_datalake_project_spark.functions.localrel import local_frame
+
+    def instant(v):
+        if isinstance(v, datetime.datetime) and v.tzinfo is None:
+            return v.astimezone(datetime.timezone.utc)
+        return v
+
+    return local_frame(spark, [tuple(map(instant, r)) for r in rows], schema)
 
 
 def zonemap_stats(spark: SparkSession, table_path: str, index_dir: str | None = None) -> DataFrame:
-    return spark.read.parquet(index_dir or _index_dir(table_path))
+    """The zones as a frame in the old sidecar's layout: one row per
+    live file with a readable footer — ``file_uri, n_rows`` and
+    ``min_<c>, max_<c>`` per zone-mapped column (NULL where the file
+    has no zone on ``c`` or only NULLs). Collecting it runs no job."""
+    full, live = _resolve_table(spark, table_path)
+    cols = [c for c in zoned_columns(spark, table_path, index_dir) if c in full.columns]
+    facts = _file_facts(spark, table_path, live)
+    zones = {c: _column_zones(spark, table_path, full, live, c) for c in cols}
+    fields = [T.StructField(_FILE, T.StringType()), T.StructField("n_rows", T.LongType())]
+    for c in cols:
+        dtype = full.schema[c].dataType
+        fields += [T.StructField(f"min_{c}", dtype), T.StructField(f"max_{c}", dtype)]
+    rows = [
+        (orig, facts[p][0], *[v for c in cols for v in zones[c].get(p, (None, None))])
+        for p, orig in sorted(live.items())
+        if facts.get(p) is not None
+    ]
+    return _frame(spark, rows, T.StructType(fields))
 
 
 def _zone_intersects(col: str, lo, hi) -> F.Column:
@@ -181,20 +464,19 @@ def _zone_intersects(col: str, lo, hi) -> F.Column:
 def _resolve_table(spark: SparkSession, table_path: str):
     """One listing+schema resolution of the table: the ONE source of
     the live file set and full schema for every zoned read, count and
-    reconcile (a second resolution would double the metadata cost the
-    index exists to avoid). Partition values must round-trip as the
-    strings the layout encodes — mirror KeyedTable.read().
+    sidecar reconcile (a second resolution would double the metadata
+    cost the zones exist to avoid). Partition values must round-trip
+    as the strings the layout encodes — mirror KeyedTable.read().
 
     Memoized per (path, commit token) in the KeyedTable read-plan
     cache: the token is rewritten as the last metadata step of every
     live-tree mutation BEFORE any maintenance/probe can observe the
     new tree, so a hit always describes the current committed
     snapshot; token-less and non-local paths resolve fresh every call
-    (see upsert.resolve_cache_entry). Concurrent callers — the zone-map
-    and bloom reconciles of one commit — share one resolution
-    (upsert.cache_fill). A schema the last commit handed off replaces
-    the footer sweep. Metadata only — the frame still reads its
-    parquet files on every action."""
+    (see upsert.resolve_cache_entry). Concurrent callers — a commit's
+    services — share one resolution (upsert.cache_fill). A schema the
+    last commit handed off replaces the footer sweep. Metadata only —
+    the frame still reads its parquet files on every action."""
     from rds_to_datalake_project_spark.operators.upsert import (
         cache_fill,
         handed_off_schema,
@@ -220,25 +502,18 @@ def _resolve_table(spark: SparkSession, table_path: str):
 
 
 def sidecar_memo(spark: SparkSession, table_path: str, idx: str, load):
-    """Driver-held copy of a small sidecar's collected contents:
-    ``load()``'s result, reused across probes until the sidecar
-    changes, or None when it cannot be memoized (the caller then runs
-    its in-Spark path).
+    """Driver-held copy of a small sidecar's collected contents (the
+    bloom index's words): ``load()``'s result, reused across probes
+    until the sidecar changes, or None when it cannot be memoized (the
+    caller then runs its in-Spark path).
 
-    The memo lives in the table's ``resolve_cache_entry`` slot, so it
-    has the plan cache's eligibility (local, token-bearing tables) and
-    is dropped on every commit-token change. Inside the slot it is
-    keyed on the sidecar directory's listing — name, length and mtime
-    of every non-hidden file in it (part files and markers such as the
-    bloom's ``_PARAMS``): maintenance hooks rewrite a sidecar AFTER the
-    token bump, and every ``mode("overwrite")`` writes fresh part-file
-    names, so a rewritten sidecar never serves from a stale entry.
-    Only a sidecar whose on-disk size is within
-    ``spark.sql.autoBroadcastJoinThreshold`` — Spark's own bound on
-    what is small enough to collect and ship — is memoized; larger
-    ones stay on the in-Spark path. A failing load is logged and
-    memoized as None for that listing (one warning, not one per
-    probe)."""
+    The memo lives in the table's ``resolve_cache_entry`` slot (local,
+    token-bearing tables; dropped on every commit-token change), keyed
+    on the sidecar directory's listing — name, length and mtime of each
+    non-hidden file — because services rewrite a sidecar AFTER the
+    token bump. Only sidecars within
+    ``spark.sql.autoBroadcastJoinThreshold`` are memoized. A failing
+    load is logged and memoized as None for that listing."""
     from rds_to_datalake_project_spark.operators.upsert import (
         resolve_cache_entry,
     )
@@ -326,26 +601,35 @@ def _plan_zoned_read(
     """Shared planner: ``(files_to_read, n_skipped, full)``.
 
     The live set and the full-table schema come from _resolve_table
-    (one resolution per commit token); ONE collect of ``(file, kept)``
-    pairs resolves the whole index — the kept flag and the indexed set
-    come from the same pass."""
+    (one resolution per commit token). Each predicate on a zone-mapped
+    column collects ``(file, kept)`` pairs from a local frame of that
+    column's zones; a file is skipped when any of them rules it out."""
     full, live = _resolved or _resolve_table(spark, table_path)
-    stats = read_sidecar(spark, index_dir or _index_dir(table_path))
-    if stats is None:
-        return sorted(live.values()), 0, full  # no index → full scan
+    cols = zoned_columns(spark, table_path, index_dir)
+    if not cols:
+        return sorted(live.values()), 0, full  # no zone map → full scan
 
-    cond = F.lit(True)
+    out: set = set()
     for col, (lo, hi) in predicates.items():
-        if f"min_{col}" in stats.columns and f"max_{col}" in stats.columns:
-            cond = cond & _zone_intersects(col, lo, hi)
-    rows = stats.select(F.col(_FILE), cond.alias("__kept")).collect()
-    indexed = {_norm(r[0]) for r in rows}
-    kept = {_norm(r[0]) for r in rows if r[1]}
-    files = [
-        orig
-        for path, orig in sorted(live.items())
-        if path not in indexed or path in kept
-    ]
+        if col not in cols:
+            continue
+        zones = _column_zones(spark, table_path, full, live, col)
+        if not zones:
+            continue
+        dtype = full.schema[col].dataType
+        schema = T.StructType([
+            T.StructField(_FILE, T.StringType()),
+            T.StructField(f"min_{col}", dtype),
+            T.StructField(f"max_{col}", dtype),
+        ])
+        try:
+            stats = _frame(spark, [(p, *z) for p, z in zones.items()], schema)
+            rows = stats.select(F.col(_FILE), _zone_intersects(col, lo, hi)).collect()
+        except Exception as exc:
+            warn_fallback(_index_dir(table_path), f"zones of {col} unusable", exc)
+            continue
+        out.update(r[0] for r in rows if not r[1])
+    files = [orig for path, orig in sorted(live.items()) if path not in out]
     _record_prune(LAST_PRUNE, len(live), len(files))
     return files, len(live) - len(files), full
 
@@ -359,12 +643,12 @@ def prune_files(
 ) -> tuple[list[str], int]:
     """Resolve the file list for a zoned read.
 
-    Returns ``(files_to_read, n_skipped)``. Files not covered by the
-    index are unconditionally included, and predicates on columns the
-    index does not cover contribute NO pruning (advisory contract —
-    the residual filter still applies them); indexed files are
-    included iff every covered predicate interval intersects their
-    zone. Paths come back in Spark-readable form.
+    Returns ``(files_to_read, n_skipped)``. Files without a zone are
+    unconditionally included, and predicates on columns that are not
+    zone-mapped contribute NO pruning (advisory contract — the
+    residual filter still applies them); other files are included iff
+    every covered predicate interval intersects their zone. Paths come
+    back in Spark-readable form.
     """
     files, skipped, _full = _plan_zoned_read(
         spark, table_path, predicates, index_dir, _resolved
@@ -379,35 +663,17 @@ def zone_intervals(
     index_dir: str | None = None,
 ) -> dict | None:
     """Per-file ``{normalized path: (min, max)}`` zones for ``col``,
-    or None when the index (or the column's zones) is missing. ONE
-    sidecar read; batched point-lookup planners
-    (KeyedTable.lookup_many) evaluate many point predicates against
-    it driver-side instead of re-aggregating the sidecar per key.
-    (None, None) zones mean the file holds only NULLs in ``col`` —
-    skippable for equality/range probes, same as _zone_intersects.
-    Test a zone with zone_overlaps. On a memo-eligible table the
-    collected zones of every indexed column are kept in the driver
-    (see sidecar_memo), so repeat probes read no sidecar at all."""
-    idx = index_dir or _index_dir(table_path)
-    zones = sidecar_memo(spark, table_path, idx, lambda: _load_zones(spark, idx))
-    if zones is None:
-        zones = _load_zones(spark, idx)
-    return zones.get(col)
-
-
-def _load_zones(spark: SparkSession, idx: str) -> dict:
-    """``{col: {normalized path: (min, max)}}`` for every indexed
-    column, from one collect of the sidecar; empty without one."""
-    stats = read_sidecar(spark, idx)
-    if stats is None:
-        return {}
-    names = set(stats.columns)
-    cols = [c[4:] for c in names if c.startswith("min_") and f"max_{c[4:]}" in names]
-    rows = stats.collect() if cols else []
-    return {
-        c: {_norm(r[_FILE]): (r[f"min_{c}"], r[f"max_{c}"]) for r in rows}
-        for c in cols
-    }
+    or None when ``col`` is not zone-mapped. Batched point-lookup
+    planners (KeyedTable.lookup_many) evaluate many point predicates
+    against it driver-side. (None, None) zones mean the file holds
+    only NULLs in ``col`` — skippable for equality/range probes, same
+    as _zone_intersects; files without a zone are absent. Test a zone
+    with zone_overlaps. Memoized per commit token, so repeat probes
+    read no footer and run no Spark job."""
+    if col not in zoned_columns(spark, table_path, index_dir):
+        return None
+    full, live = _resolve_table(spark, table_path)
+    return _column_zones(spark, table_path, full, live, col)
 
 
 def pruned_read(
@@ -420,7 +686,7 @@ def pruned_read(
     (lo, hi) inclusive bounds, None = unbounded), opening only files
     whose zones can match. The residual predicate is still applied —
     zones over-approximate — so the result is EXACTLY the full-scan
-    filter, independent of index state."""
+    filter, independent of zone state."""
     residual = F.lit(True)
     for col, (lo, hi) in predicates.items():
         if lo is not None:
@@ -450,101 +716,27 @@ def pruned_read(
     return mask_deleted(spark, table_path, reader.parquet(*files)).filter(residual)
 
 
-def refresh_zonemap(
-    spark: SparkSession,
-    table_path: str,
-    columns: list[str],
-    index_dir: str | None = None,
-) -> tuple[int, int]:
-    """Incrementally reconcile the index with the live file set.
-
-    Returns ``(n_added, n_dropped)``. Index rows for files no longer
-    live are dropped; files the index has never seen are scanned
-    (ONLY those files, column-pruned) and appended — so the
-    post-upsert maintenance cost is proportional to the touched
-    files, not the table. A column-set change or a missing or
-    unreadable index falls back to a full build; an emptied table
-    drops the index. Correctness never depends on this running
-    (advisory contract) — it restores pruning EFFECTIVENESS after the
-    live set changes.
-    """
-    idx = index_dir or _index_dir(table_path)
-    try:
-        full, live = _resolve_table(spark, table_path)
-    except Exception:
-        live = {}
-    if not live:
-        # emptied table: no files to describe
-        stats = read_sidecar(spark, idx)
-        n = stats.count() if stats is not None else 0
-        fsio.fs_for(spark, idx).delete(idx, True)
-        return (0, n)
-    stats = read_sidecar(spark, idx)
-    want = (
-        {_FILE, "n_rows"}
-        | {f"min_{c}" for c in columns}
-        | {f"max_{c}" for c in columns}
-    )
-    if stats is None or set(stats.columns) != want:
-        build_zonemap(spark, table_path, columns, idx)
-        return (len(live), 0)
-
-    indexed = {_norm(r[0]): r[0] for r in stats.select(_FILE).collect()}
-    new = [orig for p, orig in sorted(live.items()) if p not in indexed]
-    stale = [orig for p, orig in sorted(indexed.items()) if p not in live]
-    if not new and not stale:
-        return (0, 0)  # index already matches the live set
-    kept = stats.filter(~F.col(_FILE).isin(stale)) if stale else stats
-    if new:
-        aggs = [F.count(F.lit(1)).alias("n_rows")]
-        for c in columns:
-            aggs.append(F.min(c).alias(f"min_{c}"))
-            aggs.append(F.max(c).alias(f"max_{c}"))
-        # basePath: an indexed column may BE a hive partition column —
-        # reading leaf files without it would record all-NULL zones
-        # and pruned_read would then skip live matches (row loss).
-        fresh = (
-            spark.read.schema(full.schema)
-            .option("basePath", table_path)
-            .parquet(*new)
-            .select(*columns)
-            .withColumn(_FILE, F.input_file_name())
-            .groupBy(_FILE)
-            .agg(*aggs)
-        )
-        kept = kept.unionByName(fresh.select(*stats.columns))
-    # The new index is derived from the old one lazily — materialize
-    # before overwriting the directory it reads from.
-    out = kept.localCheckpoint(eager=True)
-    out.coalesce(1).write.mode("overwrite").parquet(idx)
-    return (len(new), len(stale))
-
-
-def fast_count(spark: SparkSession, table_path: str, index_dir: str | None = None) -> int:
+def fast_count(spark: SparkSession, table_path: str) -> int:
     """Metadata-backed row count (Delta's SELECT COUNT(*) shortcut):
-    indexed live files are counted from the sidecar's ``n_rows`` —
-    zero data reads — and only files the index has never seen are
-    scanned. Exact under the advisory contract: stale index rows
-    (files gone) are ignored via the live-set intersection, unindexed
-    files fall back to a real (column-less, footer-only) count. The
-    live set is _resolve_table's, one resolution per commit token.
-    Committed deletion vectors mask rows the file counts still hold,
-    so a table with any counts its masked live read instead."""
+    live files are counted from their footers' ``num_rows`` — zero
+    data reads — and only files whose footer cannot be read here are
+    scanned (a column-less, footer-only Spark count). The live set is
+    _resolve_table's, one resolution per commit token. Committed
+    deletion vectors mask rows the file counts still hold, so a table
+    with any counts its masked live read instead."""
     from rds_to_datalake_project_spark.operators import deletevectors as dv
 
     full, live = _resolve_table(spark, table_path)
     if dv.has_vectors(spark, table_path):
         return dv.mask_deleted(spark, table_path, full).count()
-    stats = read_sidecar(spark, index_dir or _index_dir(table_path))
-    rows = stats.select(_FILE, "n_rows").collect() if stats is not None else []
-    indexed = {_norm(r[0]): r[1] for r in rows}
-    total = sum(n for p, n in indexed.items() if p in live)
-    unindexed = [orig for p, orig in live.items() if p not in indexed]
-    if unindexed:
+    facts = _file_facts(spark, table_path, live)
+    total = sum(f[0] for f in facts.values() if f is not None)
+    unread = [orig for p, orig in live.items() if facts.get(p) is None]
+    if unread:
         total += (
             spark.read.schema(full.schema)
             .option("basePath", table_path)
-            .parquet(*unindexed)
+            .parquet(*unread)
             .count()
         )
     return int(total)

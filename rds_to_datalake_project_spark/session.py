@@ -95,6 +95,11 @@ def get_spark(
         # the UTC session, not TIMESTAMP_NTZ: NTZ breaks unix_micros &
         # friends, and UTC-instant semantics match the DuckDB oracle.
         "spark.sql.parquet.inferTimestampNTZ.enabled": "false",
+        # Timestamps as INT64 microseconds, not Spark's INT96 default:
+        # INT96 footers carry no min/max, and zone pruning reads the
+        # footers (operators/zonemap). Older INT96 files stay readable;
+        # they are never pruned on a timestamp column.
+        "spark.sql.parquet.outputTimestampType": "TIMESTAMP_MICROS",
         # Local mode = driver JVM is the only executor: PySpark's 1g
         # driver-memory default GC-thrashes a multi-query session long
         # before data size matters (heavy lifecycle rows measured 3-6x

@@ -144,11 +144,10 @@ def test_auto_compact_runs_alone_and_leaves_the_zone_map_synced(
     spark, tmp_path, monkeypatch
 ):
     """Auto-compaction commits to the table, so it must start only
-    after the zone-map reconcile and every other service of the outer
-    pass have finished. Its own commit's maintenance pass then leaves
-    a zone map that is stamped synced and describes exactly the
-    post-compaction live files."""
-    spans: dict[str, list] = {"zonemap": [], "slow": [], "compact": []}
+    after every other service of the outer pass has finished. The zone
+    map needs no service: after the compaction commit its zones (the
+    live files' footers) describe exactly the post-compaction files."""
+    spans: dict[str, list] = {"slow": [], "compact": []}
 
     def timed(name, fn):
         def run(*a, **k):
@@ -160,7 +159,6 @@ def test_auto_compact_runs_alone_and_leaves_the_zone_map_synced(
 
         return run
 
-    monkeypatch.setattr(zm, "refresh_zonemap", timed("zonemap", zm.refresh_zonemap))
     monkeypatch.setattr(
         compact_mod, "compact_partitions", timed("compact", compact_mod.compact_partitions)
     )
@@ -184,9 +182,8 @@ def test_auto_compact_runs_alone_and_leaves_the_zone_map_synced(
     compact_start = spans["compact"][0][0]
     # the outer pass's services all ended before the compaction began;
     # the compaction commit's nested pass ran them again inside it
-    assert spans["zonemap"][0][1] <= compact_start
     assert spans["slow"][0][1] <= compact_start
-    assert len(spans["zonemap"]) == len(spans["slow"]) == 2
+    assert len(spans["slow"]) == 2
     jan = os.path.join(path, "create_year=2024", "create_month=01")
     assert len([f for f in os.listdir(jan) if f.endswith(".parquet")]) == 1
     assert t.read().count() == 130

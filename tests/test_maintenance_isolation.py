@@ -85,17 +85,17 @@ def test_raising_hook_does_not_fail_initial_load(spark, tmp_path):
 
 
 def test_zonemap_failure_is_isolated_too(spark, tmp_path, monkeypatch):
-    """The built-in zone-map reconcile is a service like any other: a
-    refresh failure must not fail the commit, and registered hooks
-    must still run after it."""
+    """The zone-map column-list write is isolated like a service: a
+    failure must not fail the commit, registered hooks must still run
+    after it, and it is reported as ``zonemap``."""
     import rds_to_datalake_project_spark.operators.zonemap as zm
 
     ran = []
 
     def boom_refresh(*a, **k):
-        raise RuntimeError("zonemap refresh died")
+        raise RuntimeError("zone-map column list not written")
 
-    monkeypatch.setattr(zm, "refresh_zonemap", boom_refresh)
+    monkeypatch.setattr(zm, "_add_columns", boom_refresh)
     t = KeyedTable(
         spark,
         str(tmp_path / "tt"),

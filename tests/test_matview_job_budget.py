@@ -8,9 +8,14 @@ as a failure rather than as drift in a benchmark.
 Jobs are counted as the delta of the scheduler's global job id around
 ``refresh()`` or a commit. Pool threads (``session.pmap``) keep the
 caller's job group, but the delta counts every job whatever its group.
+The ``serve``- and ``trickle``-shaped commits also pin their py4j round
+trips (``_py4j_calls``): a driver-side step that adds JVM calls shows
+up there before it shows up as wall time.
 """
 
 from __future__ import annotations
+
+import threading
 
 import pytest
 from pyspark.sql import functions as F
@@ -24,6 +29,39 @@ from rds_to_datalake_project_spark.schema import TableSpec
 
 FACT = "f_id long, fk long, g string, amount long, fv long"
 DIM = "d_id long, gname string, dv long"
+
+
+def _py4j_calls(fn):
+    """``(py4j round trips, fn())``, counting every thread's
+    ``GatewayClient.send_command`` except object releases (``m\\nd\\n``),
+    which the Python garbage collector drives and which therefore vary
+    from run to run."""
+    from py4j.java_gateway import GatewayClient
+
+    real = GatewayClient.send_command
+    calls = []
+    lock = threading.Lock()
+
+    def counting(self, command, *a, **k):
+        if not command.startswith("m\nd\n"):
+            with lock:
+                calls.append(1)
+        return real(self, command, *a, **k)
+
+    GatewayClient.send_command = counting
+    try:
+        out = fn()
+    finally:
+        GatewayClient.send_command = real
+    return len(calls), out
+
+
+def _commit_cost(spark, t, batch) -> tuple[int, int]:
+    """``(Spark jobs, py4j round trips)`` of one ``upsert``."""
+    sched = spark.sparkContext._jsc.sc().dagScheduler()
+    j0 = sched.nextJobId()
+    calls, _ = _py4j_calls(lambda: t.upsert(batch, delete_mode="apply"))
+    return sched.nextJobId() - j0, calls
 
 
 def _refresh_jobs(spark, view) -> tuple[int, dict]:
@@ -191,34 +229,41 @@ def _serve_batch(spark, r: int):
     return spark.createDataFrame(ups + dels + ins, SERVE_COLS + ", Op string")
 
 
-def test_serve_commit_job_budget(spark, tmp_path):
-    """A commit of the ``serve`` workload's shape — a zone map and a
-    bloom index on ``id`` and an AUTO DELTA view over the table, all
-    maintained after a 500-row CDC batch — runs at most 22 Spark jobs
-    once warm: the commit core plus its three post-commit services,
-    which run concurrently on threads that keep the caller's job
-    group. It took 36 before the commit handed its read schema to the
-    reads after it and the view's small store merged on the driver."""
+# (Spark jobs, py4j round trips) of one warm commit. The round trips
+# were measured at 2,146-2,148 (serve) and 816 (trickle) on local[8];
+# the serve count's two-call spread between warm commits, which run
+# their services concurrently, is not traced to a cause.
+SERVE_BUDGET = (16, 2150)
+TRICKLE_BUDGET = (6, 816)
+
+
+def _serve_commit(spark, tmp_path, plain_load: bool) -> tuple[int, int]:
+    """The cost of one warm ``serve``-shaped commit. ``plain_load``
+    loads the table as perfbench does: through a handle that keeps no
+    versions, with the zone map and the bloom index built afterwards."""
     from rds_to_datalake_project_spark.operators.bloomfilter import (
         attach_bloom_maintenance,
+        build_bloom_index,
     )
+    from rds_to_datalake_project_spark.operators.zonemap import build_zonemap
     from rds_to_datalake_project_spark.sql import run_query
 
     path = str(tmp_path / "serve")
     spec = TableSpec("jb_serve", partition_granularity="day")
+    rows = spark.createDataFrame([_serve_row(i, 0) for i in range(4000)], SERVE_COLS)
+    if plain_load:
+        KeyedTable(spark, path, spec).initial_load(rows)
+        build_zonemap(spark, path, ["id"])
+        build_bloom_index(spark, path, ["id"])
     t = KeyedTable(spark, path, spec, retain_versions=2, zonemap_columns=["id"])
-    t.initial_load(spark.createDataFrame(
-        [_serve_row(i, 0) for i in range(4000)], SERVE_COLS
-    ))
+    if not plain_load:
+        t.initial_load(rows)
     attach_bloom_maintenance(t, ["id"])
     t.register("jb_serve")
     run_query(spark, SERVE_VIEW, tables={"jb_serve": t})
     try:
         t.upsert(_serve_batch(spark, 1), delete_mode="apply")  # warm-up
-        sched = spark.sparkContext._jsc.sc().dagScheduler()
-        j0 = sched.nextJobId()
-        t.upsert(_serve_batch(spark, 2), delete_mode="apply")
-        jobs = sched.nextJobId() - j0
+        cost = _commit_cost(spark, t, _serve_batch(spark, 2))
         assert t.last_maintenance_errors == []
         view = run_query(spark, "SELECT entity, is_credit, total, n FROM jb_serve_mv")
         direct = t.read().groupBy("entity", "is_credit").agg(
@@ -227,7 +272,29 @@ def test_serve_commit_job_budget(spark, tmp_path):
         assert {tuple(r) for r in view.collect()} == {tuple(r) for r in direct.collect()}
     finally:
         run_query(spark, "DROP MATERIALIZED VIEW jb_serve_mv")
-    assert jobs <= 22, jobs
+    return cost
+
+
+def test_serve_commit_job_budget(spark, tmp_path):
+    """A commit of the ``serve`` workload's shape — a zone map and a
+    bloom index on ``id`` and an AUTO DELTA view over the table, all
+    maintained after a 500-row CDC batch — runs at most 16 Spark jobs
+    once warm: the commit core plus its two post-commit services,
+    which run concurrently on threads that keep the caller's job
+    group. It took 36 before the commit handed its read schema to the
+    reads after it and the view's small store merged on the driver,
+    and 22 while the zone map was a sidecar rebuilt by every commit."""
+    cost = _serve_commit(spark, tmp_path, plain_load=False)
+    assert all(got <= cap for got, cap in zip(cost, SERVE_BUDGET)), cost
+
+
+def test_serve_commit_job_budget_plain_load(spark, tmp_path):
+    """The same commit on a table loaded the way perfbench loads it —
+    through a handle that keeps no versions — holds the same budget:
+    the first retaining commit vouches for its own version, so the
+    view's change scan infers no schema either."""
+    cost = _serve_commit(spark, tmp_path, plain_load=True)
+    assert all(got <= cap for got, cap in zip(cost, SERVE_BUDGET)), cost
 
 
 def _trickle_batch(spark, r: int):
@@ -251,10 +318,6 @@ def test_trickle_commit_job_budget(spark, tmp_path):
         [_serve_row(i, 0) for i in range(4000)], SERVE_COLS
     ))
     t.upsert(_trickle_batch(spark, 1), delete_mode="apply")  # warm-up
-    batch = _trickle_batch(spark, 2)
-    sched = spark.sparkContext._jsc.sc().dagScheduler()
-    j0 = sched.nextJobId()
-    t.upsert(batch, delete_mode="apply")
-    jobs = sched.nextJobId() - j0
+    cost = _commit_cost(spark, t, _trickle_batch(spark, 2))
     assert t.read().count() == 4000 - 100 + 2000
-    assert jobs <= 6, jobs
+    assert all(got <= cap for got, cap in zip(cost, TRICKLE_BUDGET)), cost

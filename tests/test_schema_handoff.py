@@ -139,3 +139,36 @@ def test_every_commit_kind_reads_like_inference(spark, tmp_path, kind):
     _upsert_same(spark, t, 7)
     assert _handed_off(t)
     _check(t)
+
+
+def test_plain_load_then_retained_commits_vouch_their_versions(
+    spark, tmp_path, monkeypatch
+):
+    """A load through a handle that keeps no versions records no
+    vouched version; the first commit through a retaining handle starts
+    the run at the version it publishes, so ``table_changes`` over the
+    next two versions reads both endpoints with no mergeSchema read."""
+    from pyspark.sql.readwriter import DataFrameReader
+
+    spec = TableSpec("handoff", partition_granularity="day")
+    path = str(tmp_path / "plain")
+    KeyedTable(spark, path, spec).initial_load(_frame(spark, range(20), 0))
+    t = KeyedTable(spark, path, spec, retain_versions=2)
+    _upsert_same(spark, t, 1)
+    _upsert_same(spark, t, 2)
+    a, b = t.readable_versions()[-2:]
+
+    merged = []
+    real = DataFrameReader.option
+
+    def spy(self, key, value):
+        if key == "mergeSchema":
+            merged.append(value)
+        return real(self, key, value)
+
+    monkeypatch.setattr(DataFrameReader, "option", spy)
+    got = _rows(t.table_changes(a, b, include_preimage=True))
+    assert merged == []
+    monkeypatch.undo()
+    assert got == _rows(_inferred_changes(t, a, b))
+    _check(t)

@@ -184,20 +184,26 @@ def test_keyed_table_maintains_zonemap_across_upserts(spark, tmp_path):
 
 
 def test_refresh_zonemap_incremental_counts(spark, sf_dir, tmp_path):
+    """refresh_zonemap only keeps the column list: it adds the columns
+    the list lacks and reports them. Files appended afterwards carry
+    their own footer zones, with no refresh."""
     path = str(tmp_path / "orders")
     _write_clustered(spark, sf_dir, path, n_files=4)
     from rds_to_datalake_project_spark.operators.zonemap import refresh_zonemap
 
-    added, dropped = refresh_zonemap(spark, path, ["o_orderdate"])
-    assert (added, dropped) == (4, 0)  # missing index → full build
-    assert refresh_zonemap(spark, path, ["o_orderdate"]) == (0, 0)  # no-op
+    assert refresh_zonemap(spark, path, ["o_orderdate"]) == ["o_orderdate"]
+    assert zonemap_stats(spark, path).count() == 4
+    assert refresh_zonemap(spark, path, ["o_orderdate"]) == []  # no-op
     load_table(spark, sf_dir, "orders").limit(5).coalesce(1).write.mode(
         "append"
     ).parquet(path)
-    assert refresh_zonemap(spark, path, ["o_orderdate"]) == (1, 0)
-    # column-set change → full rebuild
-    added, dropped = refresh_zonemap(spark, path, ["o_orderdate", "o_totalprice"])
-    assert added == 5
+    stats = zonemap_stats(spark, path)
+    assert stats.count() == 5
+    assert stats.filter(F.col("min_o_orderdate").isNull()).count() == 0
+    # a column the list lacks is added; the others stay
+    assert refresh_zonemap(spark, path, ["o_orderdate", "o_totalprice"]) == [
+        "o_totalprice"
+    ]
     stats = zonemap_stats(spark, path)
     assert "min_o_totalprice" in stats.columns and stats.count() == 5
 
@@ -332,18 +338,22 @@ def test_indexless_table_reads_no_sidecar(spark, tmp_path, monkeypatch):
     assert [p for p in read_paths if ".zonemap" in p or ".bloomindex" in p] == []
 
 
-def test_corrupt_zonemap_warns_once_and_reads_exact(spark, sf_dir, tmp_path, caplog):
-    """A zone-map sidecar that exists but cannot be read degrades
-    visibly: one warning, and the read is the exact full filter."""
+def test_corrupt_zonemap_warns_once_and_reads_exact(
+    spark, sf_dir, tmp_path, caplog, monkeypatch
+):
+    """Zone-map metadata that cannot be read degrades visibly and
+    exactly: a legacy sidecar that is not parquet warns once per read
+    and the read scans every file; a data file whose footer cannot be
+    read warns once, has no zone, and is always read."""
     import logging
     import os
     import shutil
 
+    from rds_to_datalake_project_spark.operators import zonemap as zm
+
     path = str(tmp_path / "orders")
     _write_clustered(spark, sf_dir, path, n_files=4)
-    build_zonemap(spark, path, ["o_orderdate"])
     idx = os.path.join(path, ".zonemap")
-    shutil.rmtree(idx)
     os.makedirs(idx)
     with open(os.path.join(idx, "part-junk.parquet"), "w") as f:
         f.write("not parquet")
@@ -351,6 +361,27 @@ def test_corrupt_zonemap_warns_once_and_reads_exact(spark, sf_dir, tmp_path, cap
         got = pruned_read(spark, path, PRED).count()
     assert got == _expected(spark, sf_dir)
     warned = [r for r in caplog.records if ".zonemap" in r.getMessage()]
+    assert len(warned) == 1
+    assert prune_files(spark, path, PRED)[1] == 0
+
+    build_zonemap(spark, path, ["o_orderdate"])
+    files = sorted(spark.read.parquet(path).inputFiles())
+    bad = zm._local_file(files[0])
+    real = zm._read_footer
+
+    def torn(local):
+        if local == bad:
+            raise OSError("torn footer")
+        return real(local)
+
+    monkeypatch.setattr(zm, "_read_footer", torn)
+    caplog.clear()
+    with caplog.at_level(logging.WARNING):
+        for _ in range(2):
+            out = pruned_read(spark, path, {"o_orderdate": ("2300-01-01", None)})
+            assert out.count() == 0
+            assert {zm._local_file(f) for f in out.inputFiles()} == {bad}
+    warned = [r for r in caplog.records if bad in r.getMessage()]
     assert len(warned) == 1
 
 
@@ -632,6 +663,13 @@ def test_bloom_refresh_survives_corrupted_sidecar(spark, sf_dir, tmp_path):
     added, dropped = refresh_bloom_index(spark, path, ["o_orderkey"])
     assert added >= 1 and dropped == 0
     assert bloom_pruned_read(spark, path, "o_orderkey", [key]).count() == 1
+    # torn part files under a valid _PARAMS rebuild too
+    for name in os.listdir(idx):
+        if name.endswith(".parquet"):
+            with open(os.path.join(idx, name), "w") as f:
+                f.write("not parquet")
+    assert refresh_bloom_index(spark, path, ["o_orderkey"]) == (added, 0)
+    assert bloom_pruned_read(spark, path, "o_orderkey", [key]).count() == 1
 
 
 def test_bloom_build_is_single_scan_for_multi_column(spark, sf_dir):
@@ -837,11 +875,11 @@ def test_bloom_probe_empty_and_absent_values(spark, sf_dir, tmp_path):
 # -- driver-held sidecar memo (zonemap.sidecar_memo) -------------------------
 
 
-def _indexed_table(spark, path, n=400, **kw):
+def _indexed_table(spark, path, n=400, bloom=True, **kw):
     """A committed (token-bearing) unpartitioned table whose commits
-    maintain a zone map and a bloom index on ``id``; string ids hash
-    across files, so every zone spans the key range and the bloom does
-    the pruning."""
+    maintain a zone map and (with ``bloom``) a bloom index on ``id``;
+    string ids hash across files, so every zone spans the key range
+    and the bloom does the pruning."""
     from rds_to_datalake_project_spark.operators.bloomfilter import (
         attach_bloom_maintenance,
     )
@@ -851,7 +889,8 @@ def _indexed_table(spark, path, n=400, **kw):
     spec = TableSpec("memo", record_key=("id",), precombine_key="update_at",
                      partition_granularity=None)
     t = KeyedTable(spark, str(path), spec, zonemap_columns=["id"], **kw)
-    attach_bloom_maintenance(t, ["id"])
+    if bloom:
+        attach_bloom_maintenance(t, ["id"])
     with _uncoalesced(spark):
         t.initial_load(_kv_rows(spark, range(n), "v0"))
     assert len(t.read().inputFiles()) > 1
@@ -1037,3 +1076,76 @@ def test_memo_path_matches_in_spark_aggregation(spark, tmp_path, deletes):
     assert len(covered) > 1 and all(survives[k] for k in keys[:100])
     # k12 is masked by the vector delete; absent-3 never existed
     assert (lookups[0] == []) == deletes and lookups[3] == []
+
+
+def test_first_lookup_after_a_commit_runs_one_job(spark, tmp_path):
+    """On a zone-mapped table with no bloom index, the first lookup
+    after an upsert runs one Spark job, the data read: the live set is
+    listed with the handed-off schema, the zones come from the new
+    files' footers and the range test collects a local relation."""
+    from rds_to_datalake_project_spark.operators import zonemap as zm
+
+    t = _indexed_table(spark, tmp_path / "t", bloom=False)
+    with _uncoalesced(spark):
+        t.upsert(_kv_rows(spark, range(400, 420), "v1"))
+    zm.reset_prune_stats()
+    assert _jobs(spark, lambda: t.lookup("k410").collect()) == 1
+    assert zm.LAST_PRUNE["probes"] == 1  # the zones were consulted
+    assert _rows(t.lookup("k410")) == [("k410", "v1")]
+
+
+def test_commit_keeps_the_resolution_its_services_built(spark, tmp_path, monkeypatch):
+    """The bloom reconcile resolves the table under the token its
+    commit wrote; the commit's own invalidation keeps that resolution,
+    so the first read after the commit lists nothing again."""
+    from rds_to_datalake_project_spark.operators import upsert as up
+
+    t = _indexed_table(spark, tmp_path / "t")
+    builds = []
+    real = up.cache_fill
+
+    def counting(ent, slot, build):
+        def counted():
+            if slot == "zresolve":
+                builds.append(slot)
+            return build()
+
+        return real(ent, slot, counted)
+
+    monkeypatch.setattr(up, "cache_fill", counting)
+    with _uncoalesced(spark):
+        t.upsert(_kv_rows(spark, range(400, 420), "v1"))
+    assert t.last_maintenance_errors == []
+    assert t.read_where({"id": ("k405", "k405")}).count() == 1
+    assert len(builds) == 1
+
+
+def test_zone_map_is_a_column_list_and_reads_legacy_sidecars(spark, tmp_path):
+    """Commits write no zone-map part file, only the column list; a
+    legacy sidecar without the list takes its columns from its
+    ``min_*`` fields, and its zones still come from the footers."""
+    import json
+    import os
+
+    from rds_to_datalake_project_spark.operators import zonemap as zm
+
+    t = _indexed_table(spark, tmp_path / "t", bloom=False)
+    with _uncoalesced(spark):
+        t.upsert(_kv_rows(spark, range(400, 420), "v1"))
+    idx = os.path.join(t.path, ".zonemap")
+    assert os.listdir(idx) == ["_COLUMNS"]
+    with open(os.path.join(idx, "_COLUMNS")) as f:
+        assert json.load(f) == ["id"]
+
+    path = str(tmp_path / "legacy")
+    _kv_rows(spark, range(0, 60), "v0").coalesce(1).write.parquet(path)
+    _kv_rows(spark, range(60, 99), "v0").coalesce(1).write.mode("append").parquet(path)
+    spark.createDataFrame(
+        [("f", 1, 1, 5, "a", "b", 1, 1)],
+        "file_uri string, n_rows long, min_score long, max_score long, "
+        "min_id string, max_id string, min_x long, extra long",
+    ).coalesce(1).write.parquet(os.path.join(path, ".zonemap"))
+    assert sorted(zm.zoned_columns(spark, path)) == ["id", "score"]
+    files, skipped = zm.prune_files(spark, path, {"score": (70, 80)})
+    assert (len(files), skipped) == (1, 1)
+    assert pruned_read(spark, path, {"score": (70, 80)}).count() == 11
