@@ -16,17 +16,34 @@ positions explode to ``(file, word_idx, bit mask)`` and one
 state, no UDF, cost one shuffle keyed by (file, word). The sidecar
 stores ``file, col, word_idx, bits`` rows (m/64 longs per file·col).
 
+APPEND-ONLY GENERATIONS. The sidecar is a set of parquet parts named
+by the JSON manifest ``<index>/_GENERATIONS``: ``{"cols": [...],
+"gens": [{"parts": {name: byte length}, "files": [normalized data
+paths]}]}``, beside the ``(m, k)`` marker ``_PARAMS``. A build writes
+generation 0 (its parts, every live file). A reconcile works in
+proportion to the commit, as Delta keeps per-file facts beside the
+files a commit adds and removes: it writes ONE new part holding the
+filters of only the files no generation indexes, drops retired files
+from the manifest (a generation with no live file is dead), publishes
+the manifest and deletes dead parts and orphans. It reads no sidecar
+data except to fold the live generations into one when they exceed
+``sidecar.DEFAULT_COMPACT_THRESHOLD``. Parts appear by atomic rename
+from a dot-named staging dir, so a probe sees all of a file's words
+or none; a file with no words is uncovered and always read, and words
+of retired files are never tested (probes test live files only).
+
 Probing hashes the VALUES through the same Spark expressions and
 keeps files where EVERY bit of at least one probed value is present.
 A sidecar within ``spark.sql.autoBroadcastJoinThreshold`` on a
-memo-eligible table is held in the driver as ``{file: {word_idx:
-bits}}`` plus its ``(m, k)`` (zonemap.sidecar_memo: dropped on every
-commit-token change, keyed on the sidecar's file listing so a
-rewrite never serves stale words), and the bits are tested there;
-the probe's positions come from a job-free local relation, so a warm
-probe runs no Spark job. A larger sidecar (or a remote / token-less
-table) keeps one aggregation over the sidecar against the broadcast
-probe. The advisory contract matches the zone map's: files not covered by the index are
+memo-eligible table is read by pyarrow into the driver as ``{file:
+{word_idx: bits}}`` plus its ``(m, k)`` (zonemap.sidecar_memo: dropped
+on every commit-token change, keyed on the sidecar's file listing so a
+rewrite never serves stale words), and the bits are tested there; the
+probe's positions come from a job-free local relation, so a probe —
+the first after a commit included — runs no Spark job. A larger
+sidecar (or a remote / token-less table) keeps one aggregation over
+the manifest's named parts against the broadcast probe. The advisory
+contract matches the zone map's: files not covered by the index are
 always read, the residual filter always applies, so the result is
 EXACTLY the full-scan filter regardless of index state; only I/O
 differs. False positives cost a read, never correctness.
@@ -35,18 +52,24 @@ differs. False positives cost a read, never correctness.
 from __future__ import annotations
 
 import json
+import os
+import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from rds_to_datalake_project_spark import fsio
-from rds_to_datalake_project_spark.operators.sidecar import read_params
+from rds_to_datalake_project_spark.operators.sidecar import (
+    DEFAULT_COMPACT_THRESHOLD,
+    read_params,
+)
 from rds_to_datalake_project_spark.operators.zonemap import (
     _PRUNE_LOCK,
+    _local_file,
     _norm,
     _record_prune,
     _resolve_table,
-    read_sidecar,
+    fast_count,
     sidecar_memo,
     warn_fallback,
 )
@@ -55,6 +78,10 @@ _FILE = "__file"
 # Fixed sidecar layout (what _filter_rows emits): supplying it to the
 # probe read skips per-probe parquet schema inference.
 _SIDECAR_SCHEMA = f"{_FILE} string, col string, word_idx int, bits bigint"
+_GENERATIONS = "_GENERATIONS"
+# Spark writes a generation here, under the sidecar; the dot keeps the
+# half-written dir out of probes and of the memo's listing key.
+_STAGING = ".gen-"
 # Auto-sizing targets (build_bloom_index m_bits=None): ~10 bits per
 # key with 2x slack for file-size skew keeps the false-positive rate
 # ~1e-3 at the AVERAGE file and <~1% at a 2x-overfull one. A fixed m
@@ -143,25 +170,31 @@ def build_bloom_index(
     m_bits: int | None = None,
     k_hashes: int = K_HASHES_DEFAULT,
 ) -> int:
-    """Build per-file bloom filters for ``columns``. Returns the
-    number of (file, col, word) rows written. One table scan and one
-    shuffle regardless of how many columns are indexed.
+    """Build per-file bloom filters for ``columns`` as generation 0:
+    the sidecar is overwritten with one table scan and one shuffle
+    regardless of how many columns are indexed, then ``_PARAMS`` and
+    the manifest (every live file) are published. Returns the number
+    of (file, col, word) rows written, from the parts' footers.
 
     ``m_bits=None`` (default) sizes the filter from the table itself
-    (parquet-metadata row count / live file count — no data read);
-    pass an explicit value to pin it. Probes always use the stored
-    ``_PARAMS``, so differently-sized generations never mix."""
+    (``zonemap.fast_count``: footer row counts / live file count — no
+    data read); pass an explicit value to pin it. Probes always use the
+    stored ``_PARAMS``, so differently-sized generations never mix."""
     idx = index_dir or _index_dir(table_path)
     full, live = _resolve_table(spark, table_path)
     if m_bits is None:
-        m_bits = _auto_m_bits(full.count(), len(live))
+        m_bits = _auto_m_bits(fast_count(spark, table_path), len(live))
     base = full.select(*columns).withColumn(_FILE, F.input_file_name())
-    out = _filter_rows(base, columns, m_bits, k_hashes).localCheckpoint(
-        eager=True
-    )
-    out.write.mode("overwrite").parquet(idx)
+    _filter_rows(base, columns, m_bits, k_hashes).write.mode("overwrite").parquet(idx)
+    fs = fsio.fs_for(spark, idx)
+    parts = {
+        name: size
+        for name, size in _listing(fs, idx).items()
+        if _is_part(name)
+    }
     _write_mk(spark, idx, m_bits, k_hashes)
-    return out.count()
+    _publish_manifest(fs, idx, columns, [{"parts": parts, "files": sorted(live)}])
+    return _part_rows(spark, idx, sorted(parts))
 
 
 def _write_mk(spark: SparkSession, idx: str, m_bits: int, k: int) -> None:
@@ -180,6 +213,98 @@ def _stored_mk(spark: SparkSession, idx: str) -> tuple[int, int] | None:
         return int(params["m_bits"]), int(params["k"])
     except (TypeError, KeyError, ValueError):
         return None
+
+
+# -- the generation manifest ------------------------------------------------
+
+
+def _fault(point: str) -> None:
+    """Crash-injection seam between the reconcile's filesystem steps
+    (tests patch it to raise); a no-op."""
+
+
+def _is_part(name: str) -> bool:
+    return name.endswith(".parquet") and not name.startswith((".", "_"))
+
+
+def _listing(fs, idx: str) -> dict[str, int] | None:
+    """``{name: byte length}`` of the sidecar dir's entries, or None
+    when it cannot be listed (no index)."""
+    try:
+        return {st.getPath().getName(): st.getLen() for st in fs.listStatus(idx)}
+    except Exception:
+        return None
+
+
+def _manifest(fs, idx: str) -> dict | None:
+    """The ``_GENERATIONS`` manifest, or None when it is missing or not
+    the JSON a build or reconcile writes (a sidecar written before
+    generations existed has none: no readable index, rebuilt once)."""
+    txt = fs.read_text(f"{idx}/{_GENERATIONS}")
+    if txt is None:
+        return None
+    try:
+        raw = json.loads(txt)
+        return {
+            "cols": [str(c) for c in raw["cols"]],
+            "gens": [
+                {
+                    "parts": {str(n): int(size) for n, size in g["parts"].items()},
+                    "files": [str(f) for f in g["files"]],
+                }
+                for g in raw["gens"]
+            ],
+        }
+    except (ValueError, TypeError, KeyError, AttributeError):
+        return None
+
+
+def _publish_manifest(fs, idx: str, columns: list[str], gens: list[dict]) -> None:
+    fs.publish_text(
+        f"{idx}/{_GENERATIONS}", json.dumps({"cols": list(columns), "gens": gens})
+    )
+
+
+def _part_paths(idx: str, man: dict) -> list[str]:
+    return [f"{idx}/{name}" for g in man["gens"] for name in sorted(g["parts"])]
+
+
+def _part_rows(spark: SparkSession, idx: str, names: list[str]) -> int:
+    """Rows in the named parts: their footers' ``num_rows`` on a local
+    sidecar, one Spark count elsewhere."""
+    local = _local_file(idx)
+    if local is not None:
+        import pyarrow.parquet as pq
+
+        return sum(
+            pq.read_metadata(os.path.join(local, n)).num_rows for n in names
+        )
+    return (
+        spark.read.schema(_SIDECAR_SCHEMA)
+        .parquet(*[f"{idx}/{n}" for n in names])
+        .count()
+    )
+
+
+def _write_generation(spark: SparkSession, fs, idx: str, rows: DataFrame) -> dict:
+    """Write ``rows`` as new parts: Spark writes them into a dot-named
+    staging dir under the sidecar, each part is renamed into the
+    sidecar as ``g<uuid>[-i].parquet`` and the staging dir is dropped.
+    Returns ``{name: byte length}`` for the manifest."""
+    tag = uuid.uuid4().hex
+    stage = f"{idx}/{_STAGING}{tag}"
+    rows.write.parquet(stage)
+    staged = sorted(
+        (name, size) for name, size in _listing(fs, stage).items() if _is_part(name)
+    )
+    parts = {}
+    for i, (name, size) in enumerate(staged):
+        dst = f"g{tag}.parquet" if len(staged) == 1 else f"g{tag}-{i}.parquet"
+        if not fs.rename(f"{stage}/{name}", f"{idx}/{dst}"):
+            raise IOError(f"rename {stage}/{name} -> {idx}/{dst} failed")
+        parts[dst] = size
+    fs.delete(stage, True)
+    return parts
 
 
 def bloom_prune_files(
@@ -291,16 +416,42 @@ def _probe_positions(spark, order: list, dtype, m_bits: int, k: int) -> list:
 
 def _load_words(spark: SparkSession, idx: str):
     """``((m, k), {col: {normalized path: {word_idx: bits}}})`` from
-    one collect of the sidecar (the driver memo's contents), or None
-    without readable params."""
+    the manifest's parts, read on the driver by pyarrow (the memo only
+    serves local sidecars within the broadcast threshold), or None
+    without readable params and manifest."""
+    import pyarrow.parquet as pq
+
     mk = _stored_mk(spark, idx)
-    if mk is None:
+    man = _manifest(fsio.fs_for(spark, idx), idx) if mk else None
+    if man is None:
         return None
     words: dict = {}
-    for f, c, w, b in spark.read.schema(_SIDECAR_SCHEMA).parquet(idx).collect():
-        per_file = words.setdefault(c, {}).setdefault(_norm(f), {})
-        per_file[w] = per_file.get(w, 0) | b
+    norm: dict = {}
+    names = [_FILE, "col", "word_idx", "bits"]
+    for part in _part_paths(idx, man):
+        tbl = pq.ParquetFile(part).read(columns=names)
+        for f, c, w, b in zip(*(tbl.column(n).to_pylist() for n in names)):
+            p = norm.get(f)
+            if p is None:
+                p = norm[f] = _norm(f)
+            per_file = words.setdefault(c, {}).setdefault(p, {})
+            per_file[w] = per_file.get(w, 0) | b
     return mk, words
+
+
+def _sidecar_frame(spark: SparkSession, idx: str) -> DataFrame | None:
+    """The in-Spark probe's read of the sidecar: the manifest's parts,
+    named — Spark treats the dot-named root as a hidden path — or None
+    without a manifest naming a part."""
+    man = _manifest(fsio.fs_for(spark, idx), idx)
+    parts = _part_paths(idx, man) if man is not None else []
+    if not parts:
+        return None
+    try:
+        return spark.read.schema(_SIDECAR_SCHEMA).parquet(*parts)
+    except Exception as exc:
+        warn_fallback(idx, "unreadable", exc)
+        return None
 
 
 def bloom_value_survivors(
@@ -348,9 +499,9 @@ def bloom_value_survivors(
         }
         return set(files), survives
     # A table with no bloom index (the common un-indexed case) costs
-    # nothing here beyond the params read and an existence check.
+    # nothing here beyond the params read.
     mk = _stored_mk(spark, idx)
-    sidecar = read_sidecar(spark, idx, _SIDECAR_SCHEMA) if mk else None
+    sidecar = _sidecar_frame(spark, idx) if mk else None
     if sidecar is None:
         return None, {}  # no readable index → callers full-scan
     m_bits, k = mk
@@ -419,66 +570,99 @@ def refresh_bloom_index(
     m_bits: int | None = None,
     k_hashes: int = K_HASHES_DEFAULT,
 ) -> tuple[int, int]:
-    """Reconcile the bloom sidecar with the live file set,
-    incrementally: filter rows for files no longer live are dropped,
-    files the index has never seen are scanned (ONLY those files) and
-    their filters appended. Returns
-    ``(files_added, files_dropped)``. Column-set/parameter changes and
-    a missing index fall back to a full build; cost is otherwise ∝
-    files touched since the last reconcile. ``m_bits=None`` adopts
-    the index's STORED size for appended filters (a refresh must
-    never silently re-size a generation — mixed sizes can't probe);
-    an explicit mismatching value forces the rebuild."""
+    """Reconcile the bloom sidecar with the live file set by appending
+    a generation: cost ∝ the files changed since the last reconcile,
+    and no sidecar read. Returns ``(files_added, files_dropped)``.
+
+    1. One listing of the sidecar. It rebuilds (a full build) when
+       ``_PARAMS`` or the manifest is missing or unreadable, the
+       manifest's columns differ from ``columns``, an explicit
+       ``m_bits`` differs from the stored one, or a manifest part is
+       missing or has another length (torn). ``m_bits=None`` adopts the
+       STORED size — a refresh never silently re-sizes the index, since
+       mixed sizes cannot probe.
+    2. Retired files leave the manifest; a generation with no live file
+       left is dead.
+    3. The live files no generation indexes are scanned (only those)
+       into one new part (``_write_generation``).
+    4. Past ``sidecar.DEFAULT_COMPACT_THRESHOLD`` live generations, they
+       fold into one, keeping only live files' rows: the one path that
+       reads the sidecar.
+    5. The manifest is published.
+    6. Parts the manifest does not name — dead or folded generations,
+       orphans of a crashed reconcile — and stale staging dirs are
+       deleted.
+
+    A crash anywhere leaves a manifest that names only complete parts:
+    probes stay exact and the next reconcile redoes the work and
+    removes the orphans."""
     idx = index_dir or _index_dir(table_path)
     full, live = _resolve_table(spark, table_path)
-    # Read with the fixed layout (no inference job): a sidecar in any
-    # other layout has no JSON _PARAMS, so it rebuilds below.
-    stats = read_sidecar(spark, idx, _SIDECAR_SCHEMA)
-    stored = _stored_mk(spark, idx)
+    fs = fsio.fs_for(spark, idx)
+    listing = _listing(fs, idx)
+    stored = _stored_mk(spark, idx) if listing is not None else None
+    man = _manifest(fs, idx) if stored is not None else None
     if (
-        stats is None
-        or stored is None
+        man is None
+        or set(man["cols"]) != set(columns)
         or (m_bits is not None and stored != (m_bits, k_hashes))
+        or any(
+            listing.get(name) != size
+            for g in man["gens"]
+            for name, size in g["parts"].items()
+        )
     ):
         build_bloom_index(spark, table_path, columns, idx, m_bits, k_hashes)
         return (len(live), 0)
-    # one job reads both reconcile inputs (indexed column set + indexed
-    # file set) — this runs in every commit's maintenance slot, so each
-    # saved driver-synchronized job is paid back per commit
-    try:
-        sets = stats.agg(
-            F.collect_set("col").alias("cols"),
-            F.collect_set(_FILE).alias("files"),
-        ).collect()[0]
-    except Exception as exc:  # torn part files under valid params
-        warn_fallback(idx, "unreadable", exc)
-        sets = None
-    if sets is None or set(sets["cols"]) != set(columns):
-        build_bloom_index(spark, table_path, columns, idx, m_bits, k_hashes)
-        return (len(live), 0)
     m_bits, k_hashes = stored
-    indexed = {_norm(p): p for p in sets["files"]}
-    new = [orig for p, orig in sorted(live.items()) if p not in indexed]
-    stale = [orig for p, orig in sorted(indexed.items()) if p not in live]
-    if not new and not stale:
-        return (0, 0)
-    kept = stats.filter(~F.col(_FILE).isin(stale)) if stale else stats
-    if new:
-        base = (
-            spark.read.option("basePath", table_path)
-            .schema(full.schema)
-            .parquet(*new)
-            .select(*columns)
-            .withColumn(_FILE, F.input_file_name())
-        )
-        # one scan of the NEW files covers every indexed column
-        kept = kept.unionByName(
-            _filter_rows(base, columns, m_bits, k_hashes)
-        )
-    out = kept.localCheckpoint(eager=True)  # derived from the dir it replaces
-    out.write.mode("overwrite").parquet(idx)
-    _write_mk(spark, idx, m_bits, k_hashes)
-    return (len(new), len(stale))
+    gens, dropped = [], 0
+    for g in man["gens"]:
+        files = [f for f in g["files"] if f in live]
+        dropped += len(g["files"]) - len(files)
+        if files:
+            gens.append({"parts": g["parts"], "files": files})
+    indexed = {f for g in gens for f in g["files"]}
+    new = [p for p in sorted(live) if p not in indexed]
+    written: list[str] = []
+    if new or dropped:
+        if new:
+            base = (
+                spark.read.option("basePath", table_path)
+                .schema(full.schema)
+                .parquet(*[live[p] for p in new])
+                .select(*columns)
+                .withColumn(_FILE, F.input_file_name())
+            )
+            # one scan of the NEW files covers every indexed column
+            rows = _filter_rows(base, columns, m_bits, k_hashes).coalesce(1)
+            parts = _write_generation(spark, fs, idx, rows)
+            written += parts
+            gens.append({"parts": parts, "files": new})
+            _fault("generation_renamed")
+        if len(gens) > DEFAULT_COMPACT_THRESHOLD:
+            gens = [_fold(spark, fs, idx, gens, live)]
+        _publish_manifest(fs, idx, columns, gens)
+        _fault("manifest_published")
+    named = {name for g in gens for name in g["parts"]}
+    for name in [*listing, *written]:
+        if (_is_part(name) and name not in named) or name.startswith(_STAGING):
+            fs.delete(f"{idx}/{name}", True)
+    return (len(new), dropped)
+
+
+def _fold(spark: SparkSession, fs, idx: str, gens: list[dict], live: dict) -> dict:
+    """One generation holding the live files' rows of every generation
+    in ``gens``, written beside them (the manifest publish retires the
+    old parts)."""
+    files = sorted({f for g in gens for f in g["files"]})
+    rows = (
+        spark.read.schema(_SIDECAR_SCHEMA)
+        .parquet(*_part_paths(idx, {"gens": gens}))
+        .filter(F.col(_FILE).isin([live[f] for f in files]))
+    )
+    out = {"parts": _write_generation(spark, fs, idx, rows), "files": files}
+    _fault("fold_written")
+    return out
 
 
 def attach_bloom_maintenance(

@@ -41,7 +41,10 @@ TWO STRATEGIES on top of it:
   replay-idempotent.
 
 Scale notes: the change scan is two metadata snapshot reads + one
-co-partitioned full-outer join (table_changes' contract); touched key
+co-partitioned full-outer join (table_changes' contract) — or, for a
+single-table count/sum/avg delta view over integral or decimal values,
+the same two reads folded as signed images with no join
+(:class:`DeltaMaterializedView`'s image diff); touched key
 sets are broadcast into semi joins so base scans prune to affected
 groups before their one aggregation shuffle; the view store reuses
 the KeyedTable merge (partition-pruned, crash-safe publish). The
@@ -51,7 +54,7 @@ count(DISTINCT) aux store, no min/max — merges on the driver: the
 grouped window is collected once, the store's rows are read from its
 parquet files, and the whole new store is published as one file
 (``_SignedDeltaMergeMixin._merge_on_driver``; a 16-row serve store
-refreshes in 5 Spark jobs where the Spark merge takes 12). Every other
+refreshes in 3 Spark jobs where the Spark merge takes 12). Every other
 store merges in Spark, pruned to the touched groups or buckets
 (``_merge_and_publish``).
 """
@@ -62,6 +65,7 @@ import contextvars
 import logging
 import math
 import threading
+from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -71,7 +75,11 @@ from rds_to_datalake_project_spark import fsio
 from rds_to_datalake_project_spark.fsio import read_text as _read_small
 from rds_to_datalake_project_spark.fsio import write_text as _write_small
 from rds_to_datalake_project_spark.functions.localrel import local_frame
-from rds_to_datalake_project_spark.operators.upsert import KeyedTable
+from rds_to_datalake_project_spark.operators.upsert import (
+    KeyedTable,
+    handed_off_schema,
+    resolve_cache_entry,
+)
 from rds_to_datalake_project_spark.schema import TableSpec
 from rds_to_datalake_project_spark.session import pmap
 
@@ -1108,6 +1116,7 @@ class _SignedDeltaMergeMixin:
         if len(self.tables) > 1:
             _require_disjoint_columns(self.tables)
         self._init_aux_stores()
+        self._ref_memo = None  # (base schemas, store schema): _stored_schema
 
     def _nn(self, c: str) -> str:
         return f"__nn_{c}"
@@ -1490,17 +1499,33 @@ class _SignedDeltaMergeMixin:
             aux.upsert(batch, delete_mode="apply")
         return delta
 
-    def _fold_delta(self, contrib: DataFrame, sign, new) -> dict:
+    def _fold_delta(
+        self, contrib: DataFrame, sign, new, ref=None, drop_unchanged=False
+    ) -> dict:
         """Group a signed contribution frame (derived group keys
         attached; each row's sign is ``sign``) into the per-group delta,
         fold in the count(DISTINCT) transitions, merge into the store
         and publish the cursor ``new`` — or degrade to a full rebuild
         when a window or repair set outgrows ``max_broadcast_keys``.
-        A small store merges on the driver (``_merge_on_driver``)."""
+        A small store merges on the driver (``_merge_on_driver``).
+
+        ``ref``: the store's schema when the caller has it
+        (:meth:`_stored_schema`). ``drop_unchanged`` drops groups whose
+        every signed sum and count is 0 before anything is collected or
+        merged — the image diff's unchanged rows cancel there, so its
+        merge stays ∝ the groups that changed (sum/count/avg views
+        only: no extremum or DISTINCT column to look at)."""
         grouped = contrib.groupBy(*self.group_cols).agg(
             *self._delta_window_agg_cols(sign)
         )
-        ref = self._stored_schema()
+        if drop_unchanged:
+            changed = [
+                F.coalesce(F.col(c), F.lit(0)) != 0
+                for c in grouped.columns
+                if c.startswith(("__d_", "__dnn_"))
+            ]
+            grouped = grouped.filter(reduce(lambda a, b: a | b, changed))
+        ref = ref or self._stored_schema()
         small = self._small_store(ref)
         if small is not None:
             rows = grouped.collect()
@@ -1558,10 +1583,22 @@ class _SignedDeltaMergeMixin:
 
     def _stored_schema(self) -> T.StructType:
         """The store's column names and types: the full-aggregate plan's
-        schema (analysis only — the base reads run no job)."""
-        return self._aggregate(
+        schema (analysis only — the base reads run no job). It depends
+        on the bases' schemas alone, so it is kept per the schemas their
+        last commits handed off (``upsert.handed_off_schema``); a base
+        without one is analyzed every time."""
+        bases = tuple(
+            handed_off_schema(resolve_cache_entry(self.spark, t.path))
+            for t in self.tables
+        )
+        if self._ref_memo is not None and self._ref_memo[0] == bases:
+            return self._ref_memo[1]
+        ref = self._aggregate(
             self._joined([t.read().limit(0) for t in self.tables]), 0
         ).schema
+        if None not in bases:
+            self._ref_memo = (bases, ref)
+        return ref
 
     def _small_store(self, ref: T.StructType):
         """``(commit token, live files)`` of a store the driver merge may
@@ -1887,6 +1924,23 @@ class DeltaMaterializedView(_SignedDeltaMergeMixin, MaterializedView):
     endpoint-state contract (net change per key, insert+delete cancel)
     makes the signed merge exact across multi-commit windows.
 
+    IMAGE DIFF. A view whose columns are all count, sum and avg, with
+    every sum (and avg's hidden sum) stored as an integral or decimal
+    type, skips ``table_changes``' full-outer key join: the refresh
+    folds −1 × the touched partitions as of the cursor and +1 × them as
+    of the head (the same two ``read_as_of(v, _only_rels=touched)``
+    endpoint reads; whole tables when the reach is unknown — an
+    unpartitioned table, a vector commit without its reach list). As in
+    the counting algorithm for view maintenance (Gupta, Mumick &
+    Subrahmanian, SIGMOD 1993), count and sum need only signed row
+    images, not a key-matched diff: an unchanged row's two images
+    cancel arithmetically, and groups whose signed sums and counts are
+    all 0 are dropped before the merge. The other views keep
+    ``table_changes``: floating-point sums would drift in the last ulps
+    on groups that did not change, every unchanged row would look like
+    a removed min/max and trigger a repair, and DISTINCT aggregates'
+    aux stores would churn through partition-sized transitions.
+
     SQL NULL semantics are preserved: each sum carries a hidden
     non-null contribution count and renders NULL when it reaches zero
     (SUM over an empty/all-NULL group is NULL, not 0); a hidden live
@@ -1907,10 +1961,41 @@ class DeltaMaterializedView(_SignedDeltaMergeMixin, MaterializedView):
             # a prior delta apply crashed between the store upsert and
             # the cursor write — state unknown, rebuild from snapshot
             return self._full(new)
+        ref = self._stored_schema()
+        if self._takes_image_diff(ref):
+            base = self.base
+            touched = base._touched_rels_between(cur[0], new[0])
+            pre, post = (
+                base.read_as_of(v, _only_rels=touched) for v in (cur[0], new[0])
+            )
+            images = pre.withColumn("_change_type", F.lit("delete")).unionByName(
+                post.withColumn("_change_type", F.lit("insert")),
+                allowMissingColumns=True,
+            )
+            return self._fold_delta(
+                self._joined([images]), _image_sign(), new, ref, drop_unchanged=True
+            )
         ch = self._joined(
             [self.base.table_changes(cur[0], new[0], include_preimage=True)]
         )
-        return self._fold_delta(ch, _image_sign(), new)
+        return self._fold_delta(ch, _image_sign(), new, ref)
+
+    def _takes_image_diff(self, ref: T.StructType) -> bool:
+        """Whether a refresh folds the touched partitions' endpoint
+        images instead of ``table_changes``: only count, sum and avg
+        columns, every sum (an avg's hidden one too) stored as an
+        integral or decimal type, so the images of unchanged rows cancel
+        exactly."""
+        exact = (T.ByteType, T.ShortType, T.IntegerType, T.LongType, T.DecimalType)
+        for c, (kind, _inner) in self._parsed.items():
+            if kind == "count":
+                continue
+            if kind not in ("sum", "avg"):
+                return False
+            stored = self._sm(c) if kind == "avg" else c
+            if not isinstance(ref[stored].dataType, exact):
+                return False
+        return True
 
 
 # --- N-table chain/star join views --------------------------------------------

@@ -1772,9 +1772,10 @@ class KeyedTable:
         unclustered layouts where every file's key range spans the
         table. The zones and the bloom sidecar are held in driver memos
         keyed on the commit token (the bloom's also on its file listing,
-        zonemap.sidecar_memo), so a warm lookup runs one Spark job,
-        the data read: the probe's bit positions fold into a local
-        relation evaluated on the driver. A table with no bloom
+        zonemap.sidecar_memo; both load from parquet footers and parts
+        on the driver), so a lookup — the first after a commit included
+        — runs one Spark job, the data read: the probe's bit positions
+        fold into a local relation evaluated on the driver. A table with no bloom
         sidecar takes the zone-pruned :meth:`read_where` route. Both
         indexes are advisory, so the result is exactly the full-scan
         filter. Composite keys: filter the result on the remaining key
@@ -2193,15 +2194,22 @@ class KeyedTable:
         else:
             # Unpartitioned: the swap unit is the whole file set, so
             # ``.retired/v{j}`` of the first commit after ``version``
-            # holds the COMPLETE table at ``version`` (every replaced
-            # file parked there — see ``_swap_unpartitioned``); no
-            # file there = the table was empty.
-            root = f"{self.path}/.retired/v{later[0].version}"
-            has_files = self._fs.exists(root) and any(
-                not st.getPath().getName().startswith((".", "_"))
-                for st in self._fs.listStatus(root)
-            )
-            groups = {root: [root] if has_files else []}
+            # that swapped it holds the COMPLETE table at ``version``
+            # (every replaced file parked there — see
+            # ``_swap_unpartitioned``); no file there = the table was
+            # empty. Vector commits swap nothing (they mask rows and
+            # append files, both undone below), so with none but them
+            # after ``version`` the live files hold it.
+            swap = next((r for r in later if not r.dv_target), None)
+            if swap is None:
+                groups = {self.path: [self.path]}
+            else:
+                root = f"{self.path}/.retired/v{swap.version}"
+                has_files = self._fs.exists(root) and any(
+                    not st.getPath().getName().startswith((".", "_"))
+                    for st in self._fs.listStatus(root)
+                )
+                groups = {root: [root] if has_files else []}
         from rds_to_datalake_project_spark.operators.deletevectors import (
             has_vectors,
             with_provenance,

@@ -104,22 +104,6 @@ def warn_fallback(idx: str, what: str, exc: Exception) -> None:
     )
 
 
-def read_sidecar(spark: SparkSession, idx: str, schema: str) -> DataFrame | None:
-    """The parquet sidecar at ``idx`` in its fixed layout ``schema``, or
-    None when there is no readable one. A missing sidecar — every
-    un-indexed table — costs one existence check and no Spark read; one
-    that exists but cannot be listed logs a warning (warn_fallback).
-    Either way the caller falls back to a full scan (or a rebuild), so
-    the result stays exact."""
-    if not fsio.fs_for(spark, idx).exists(idx):
-        return None
-    try:
-        return spark.read.schema(schema).parquet(idx)
-    except Exception as exc:
-        warn_fallback(idx, "unreadable", exc)
-        return None
-
-
 def _index_dir(table_path: str) -> str:
     return f"{table_path.rstrip('/')}/.zonemap"
 

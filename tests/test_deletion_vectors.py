@@ -162,6 +162,27 @@ def test_snapshot_reads_and_cdc_across_vector_commits(spark, tmp_path):
     assert tc2.filter(F.col("_change_type") == "insert").count() == 3
 
 
+def test_unpartitioned_snapshots_across_vector_commits(spark, tmp_path):
+    """On an unpartitioned table a vector commit parks no file under
+    ``.retired``: the snapshot before it is the live files without its
+    mask (and without a MOR update's appended file), and the change feed
+    across it holds only what it changed."""
+    t = KeyedTable(
+        spark, str(tmp_path / "t"), _spec("dv_flat_h"), deletion_vectors=True,
+        retain_versions=5,
+    )
+    t.initial_load(_rows(spark))
+    t.upsert(_rows(spark, ver="v1").filter(F.col("id") < 3))  # v1 (swap)
+    t.delete_where("id >= 30")  # v2 (vector)
+    t.update_where("id = 5", {"amount": "amount + 100"})  # v3 (MOR)
+    assert t.read_as_of(1).count() == 40
+    assert t.read_as_of(2).count() == 30
+    assert t.read_as_of(2).filter(F.col("amount") >= 100).count() == 0
+    assert t.read_as_of(3).filter(F.col("amount") >= 100).count() == 1
+    tc = t.table_changes(1, 3)
+    assert sorted(r._change_type for r in tc.collect()) == ["delete"] * 10 + ["update"]
+
+
 def test_materialize_folds_only_affected_partitions(spark, tmp_path):
     t = _partitioned(spark, tmp_path / "t", retain_versions=5)
     t.initial_load(_rows(spark))
